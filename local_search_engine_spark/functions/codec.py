@@ -74,6 +74,48 @@ def encode_vb_sliced(values, run_starts) -> list[bytes]:
     return [buf[int(s) : int(e)] for s, e in zip(byte_starts, byte_ends)]
 
 
+def encode_runs(pdf, span: int):
+    """The shared (term, block) run encoder of the postings and
+    positional builds. pdf: one (term_bucket, part_id) group of
+    per-posting rows (term, doc_id, tf, ...).
+
+    Sorts by (term, doc_id), cuts a run at every change of term or
+    block_id = doc_id // span, and encodes each run's in-block doc-id
+    deltas and tfs as varbytes. Returns (sorted pdf, run_starts,
+    run_ends, cols): cols holds the common output columns in schema
+    order; callers append their own per-run columns."""
+    pdf = pdf.sort_values(["term", "doc_id"])
+    terms = pdf["term"].to_numpy()
+    doc_ids = pdf["doc_id"].to_numpy(np.int64)
+    tfs = pdf["tf"].to_numpy(np.int64)
+    block_ids = doc_ids // span
+    n = doc_ids.size
+    new_run = np.empty(n, dtype=bool)
+    new_run[0] = True
+    new_run[1:] = (terms[1:] != terms[:-1]) | (block_ids[1:] != block_ids[:-1])
+    run_starts = np.flatnonzero(new_run)
+    run_ends = np.append(run_starts[1:], n)
+    # first-of-run is offset from the block base; the rest are
+    # consecutive diffs (diffs across run boundaries are overwritten
+    # before the uint64 cast, so no negative wraparound)
+    deltas = np.empty(n, dtype=np.int64)
+    deltas[0] = 0
+    deltas[1:] = np.diff(doc_ids)
+    deltas[run_starts] = doc_ids[run_starts] - block_ids[run_starts] * span
+    cols = {
+        "term": terms[run_starts],
+        "term_bucket": int(pdf["term_bucket"].iloc[0]),
+        "part_id": int(pdf["part_id"].iloc[0]),
+        "block_id": block_ids[run_starts],
+        "n": (run_ends - run_starts).astype(np.int32),
+        "first_doc_id": doc_ids[run_starts],
+        "last_doc_id": doc_ids[run_ends - 1],
+        "doc_ids_vb": encode_vb_sliced(deltas.astype(np.uint64), run_starts),
+        "tfs_vb": encode_vb_sliced(tfs.astype(np.uint64), run_starts),
+    }
+    return pdf, run_starts, run_ends, cols
+
+
 def decode_vb(buf: bytes) -> np.ndarray:
     """Vectorized varbyte decode → uint64 array."""
     b = np.frombuffer(buf, dtype=np.uint8)

@@ -72,11 +72,6 @@ def h60_col(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def h60_sql(expr: str) -> str:
-    """Same hash as h60_col, as DuckDB SQL over a string expression."""
-    return f"(('0x' || substr(md5({expr}), 1, 15))::bigint)"
-
-
 def h60_py(s: str) -> int:
     """Python twin of h60_col (hashlib only) — used by the Arrow simhash
     text kernel so tokenize+hash+pack run in ONE pass per doc."""

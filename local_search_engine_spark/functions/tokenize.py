@@ -14,10 +14,10 @@ deterministic rule, shared verbatim with the pure-Python oracle:
 
 Three implementations with identical semantics (tests assert equality):
   tokenize_py    — pure Python (oracle + driver-side query tokenization)
-  tokenize_expr  — Spark built-in expressions (JVM-side, WholeStageCodegen;
-                   the DEFAULT index-time path — no Python in the hot loop)
-  tokenize_udf   — Arrow-vectorized pandas UDF (north_star names this
-                   path; kept as the extension point for tokenizers that
+  tokenize_expr  — Spark built-in expressions (JVM-side; used by the
+                   text-statistics and dedup operators)
+  tokenize_udf   — Arrow-vectorized pandas UDF (the index-build path;
+                   also the extension point for tokenizers that
                    built-ins can't express, e.g. BPE)
 """
 
@@ -49,8 +49,8 @@ def tokenize_py(text: str) -> list[str]:
 def tokenize_expr(col):
     """Built-in-expression tokenizer: Column[string] → Column[array<string>].
 
-    Entirely JVM-side (split/lower/filter are codegen'd) — the fast path
-    for index builds; no serialization to Python workers.
+    Entirely JVM-side (split/lower/filter), no serialization to Python
+    workers.
     """
     from pyspark.sql import functions as F
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from .. import BM25_B, BM25_EPSILON, BM25_K1
-from ..functions.tokenize import tokenize_expr, tokenize_udf
+from ..functions.tokenize import tokenize_udf
 
 
 # Broadcast the doc_id table when the corpus has at most this many rows
@@ -173,18 +173,15 @@ def with_doc_ids(corpus, partitions: int | None = None):
 def tokenized_docs(
     docs,
     text_col: str = "content",
-    use_pandas_udf: bool = True,
     tokenizer=None,
 ):
-    """Add tokens + doc_len. Default path (r06) is the Arrow-batched
-    pandas UDF: the expression tokenizer's filter lambda is an
-    INTERPRETED higher-order function and downstream in-row consumers
-    re-reference the whole split tree, measuring 2.5 s for a 50 k-doc
-    tokenize pass vs 0.75 s through the kernel (which is also a
-    substitution barrier, so tokens materialize exactly once). The two
-    paths are token-identical (tests/test_tokenizer.py asserts it);
-    pass use_pandas_udf=False for the pure-JVM fallback where Arrow is
-    unavailable.
+    """Add tokens + doc_len through the Arrow-batched pandas UDF: the
+    expression tokenizer's filter lambda is an INTERPRETED higher-order
+    function and downstream in-row consumers re-reference the whole
+    split tree, measuring 2.5 s for a 50 k-doc tokenize pass vs 0.75 s
+    through the kernel (which is also a substitution barrier, so tokens
+    materialize exactly once). Both tokenizers are token-identical
+    (tests/test_tokenizer.py asserts it).
 
     tokenizer: optional Column→Column analyzer override (e.g.
     functions.tokenize.tokenize_code_expr for camelCase/snake_case
@@ -195,10 +192,8 @@ def tokenized_docs(
 
     if tokenizer is not None:
         tok = tokenizer(F.col(text_col))
-    elif use_pandas_udf:
-        tok = tokenize_udf()(F.col(text_col))
     else:
-        tok = tokenize_expr(F.col(text_col))
+        tok = tokenize_udf()(F.col(text_col))
     return docs.withColumn("tokens", tok).withColumn("doc_len", F.size("tokens"))
 
 
@@ -330,7 +325,6 @@ def build_index_from(
     docs_with_id,
     text_col: str = "content",
     params: BM25Params | None = None,
-    use_pandas_udf: bool = True,
     cache: bool = True,
     tf_impl: str = "auto",
     tokenizer=None,
@@ -368,7 +362,6 @@ def build_index_from(
     tok = tokenized_docs(
         tok_in,
         text_col=text_col,
-        use_pandas_udf=use_pandas_udf,
         tokenizer=tokenizer,
     )
     tf = term_frequencies(tok, impl=tf_impl)
@@ -529,7 +522,6 @@ def build_index_fields(
 def build_index(
     corpus,
     params: BM25Params | None = None,
-    use_pandas_udf: bool = True,
     cache: bool = True,
     tf_impl: str = "auto",
 ) -> InvertedIndex:
@@ -541,7 +533,6 @@ def build_index(
         with_doc_ids(corpus),
         text_col="content",
         params=params,
-        use_pandas_udf=use_pandas_udf,
         cache=cache,
         tf_impl=tf_impl,
     )

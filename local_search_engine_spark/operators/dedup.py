@@ -455,27 +455,6 @@ def minhash_wide(
     return base.select("doc_id", *sigs)
 
 
-def minhash_signatures(
-    docs,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    shingle_sets=None,
-):
-    """(doc_id, perm, sig): tall MinHash signature rows, perm in
-    0..N_PERMS-1 — a posexplode of minhash_wide's per-doc row (the tall
-    shape is presentation; all signature work happens in-row, wide)."""
-    from pyspark.sql import functions as F
-
-    wide = minhash_wide(docs, text_col, id_col, n, shingle_sets=shingle_sets)
-    return wide.select(
-        "doc_id",
-        F.posexplode(F.array(*[F.col(f"s{p}") for p in range(N_PERMS)])).alias(
-            "perm", "sig"
-        ),
-    )
-
-
 def bucket_pairs(grouped, ids_col: str = "ids"):
     """(a, b) candidate pairs from a bucketed (…, ids array) DataFrame —
     all i<j pairs generated INSIDE the array with JVM expressions

@@ -8,6 +8,10 @@ fusion.results_by_source); collapsing goes further and changes WHICH
 results are returned: at most `cap` hits per group (repo / host / site)
 survive into the final top-k, so one boilerplate-heavy repository
 cannot monopolize the result page.
+
+Collapsing is pure DataFrame windows. Batch MMR runs its greedy kernel
+once per query through plans/layout.group_in_partitions (one shuffle on
+qid, one mapInPandas), so queries rerank in parallel.
 """
 
 from __future__ import annotations
@@ -122,11 +126,11 @@ def mmr_rerank_batch(
 ):
     """Distributed MMR over a BATCH of queries: candidates
     (qid, doc_id, score) — each query's already-cut top-n — join their
-    embeddings, then ONE applyInPandas per qid runs the greedy numpy
-    kernel. MMR is inherently sequential WITHIN a query, so the right
-    distribution axis is ACROSS queries: n queries rerank in parallel,
-    each group is top-n-bounded (~10^2 rows) so no group can exceed a
-    task. Returns (qid, rank, doc_id, mmr_score ordering implied by
+    embeddings, then group_in_partitions on qid runs the greedy numpy
+    kernel once per query. MMR is inherently sequential WITHIN a query,
+    so the right distribution axis is ACROSS queries: n queries rerank
+    in parallel, each group is top-n-bounded (~10^2 rows) so no group
+    can exceed a task. Returns (qid, rank, doc_id, mmr_score ordering implied by
     rank). Cosine similarity over the embedding columns; ties broken by
     ascending doc_id (the engine rule, matching mmr_rerank_py).
 
@@ -137,6 +141,8 @@ def mmr_rerank_batch(
     every oracle-gated score in this engine uses)."""
     import pandas as pd
     from pyspark.sql import functions as F
+
+    from ..plans.layout import group_in_partitions
 
     joined = candidates.join(
         embeddings.select(
@@ -182,6 +188,6 @@ def mmr_rerank_batch(
             }
         )
 
-    return joined.groupBy("qid").applyInPandas(
-        rerank, "qid long, rank int, doc_id long"
+    return group_in_partitions(
+        joined, ["qid"], rerank, "qid long, rank int, doc_id long"
     )

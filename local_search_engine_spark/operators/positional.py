@@ -26,7 +26,8 @@ per-task work for hot terms, term_bucket is the Parquet partition
 column so a phrase's scan prunes to ≤ |unique terms| bucket
 directories, and query-time work is one bucket-pruned scan → one
 shuffle on part_id → per-shard numpy intersection → global top-k
-(TakeOrderedAndProject).
+(TakeOrderedAndProject). Build, query and compaction all deliver their
+per-group work through plans/layout.group_in_partitions.
 
 Phrase matching per shard is FULLY vectorized — no per-candidate-doc
 Python loop: occurrences of the phrase [t0..t_{L-1}] are the
@@ -103,10 +104,10 @@ def build_positional_postings(
          Arrow seam — batch-vectorized (one encode_vb_sliced call per
          Arrow batch), never per-row Python encode. Pre-encoding here
          means the shuffle moves compressed bytes, not int arrays.
-      2. groupBy(term_bucket, part_id).applyInPandas → identical run
-         detection to the base encoder; pos_vb per run is a plain byte
-         concatenation because per-posting streams are self-delimiting
-         (tf = value count).
+      2. group_in_partitions on (term_bucket, part_id) → the shared
+         run encoder (functions/codec.encode_runs); pos_vb per run is a
+         plain byte concatenation because per-posting streams are
+         self-delimiting (tf = value count).
 
     One shuffle total, bounded per-task work for hot terms (doc-range
     sharding), term_bucket ready for partitionBy on persist.
@@ -167,7 +168,7 @@ def build_positional_postings(
                 }
             )
 
-    from ..plans.layout import widen_for_kernel
+    from ..plans.layout import group_in_partitions, widen_for_kernel
 
     per_posting = widen_for_kernel(docs.select(id_col, text_col)).mapInPandas(
         extract, "doc_id long, term string, tf long, posting_pos_vb binary"
@@ -178,45 +179,23 @@ def build_positional_postings(
         "term_bucket", F.pmod(h32_col(F.col("term")), F.lit(n_buckets)).cast("int")
     )
 
-    def encode_partition(batches):
-        # one Arrow round trip per partition instead of per
-        # (term_bucket, part_id) group — same delivery rewrite as
-        # operators/postings.py; per-group bytes identical
-        # (_encode_pos_group is unchanged and shared with compaction)
-        import pandas as pd
-
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        allp = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        outs = [
-            _encode_pos_group(grp, span)
-            for _, grp in allp.groupby(["term_bucket", "part_id"], sort=False)
-        ]
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-
-    return keyed.repartition("term_bucket", "part_id").mapInPandas(
-        encode_partition, POS_POSTINGS_SCHEMA
+    return group_in_partitions(
+        keyed,
+        ["term_bucket", "part_id"],
+        lambda pdf: _encode_pos_group(pdf, span),
+        POS_POSTINGS_SCHEMA,
     )
 
 
 def _encode_pos_group(pdf, span: int):
-    """Canonical (term_bucket, part_id) run encoder over per-posting
-    rows (term, doc_id, tf, posting_pos_vb) — shared by the build path
+    """(term_bucket, part_id) group of per-posting rows (term, doc_id,
+    tf, posting_pos_vb) → positional runs — shared by the build path
     and compaction, so a compacted index is BYTE-identical to a fresh
     build's encoding of the same postings."""
     import pandas as pd
 
-    from ..functions.codec import encode_vb_sliced
+    from ..functions.codec import encode_runs
 
-    cols = [
-        "term", "term_bucket", "part_id", "block_id", "n",
-        "first_doc_id", "last_doc_id", "doc_ids_vb", "tfs_vb", "pos_vb",
-    ]
-    if pdf.empty:
-        return pd.DataFrame(columns=cols)
-    pdf = pdf.sort_values(["term", "doc_id"])
     # composite phrase keys are doc_id·2^32 + pos in (u)int64 — ids
     # must fit 31 bits for the proximity path's signed arithmetic.
     # Dense engine ids (operators.build.with_doc_ids) always do;
@@ -231,8 +210,7 @@ def _encode_pos_group(pdf, span: int):
             "the corpus with dense ids (operators.build.with_doc_ids) "
             "before indexing"
         )
-    bucket = int(pdf["term_bucket"].iloc[0])
-    part = int(pdf["part_id"].iloc[0])
+    pdf, starts, ends, cols = encode_runs(pdf, span)
     terms = pdf["term"].to_numpy()
     doc_ids = pdf["doc_id"].to_numpy(np.int64)
     # duplicate (term, doc_id) rows mean the SAME doc was indexed twice
@@ -240,47 +218,15 @@ def _encode_pos_group(pdf, span: int):
     # dropDuplicates). Duplicate composite keys violate the phrase
     # kernel's intersect1d(assume_unique=True) and double phrase_tf —
     # fail the build loudly, as with the id-range guard above.
-    if doc_ids.size > 1 and (
-        (terms[1:] == terms[:-1]) & (doc_ids[1:] == doc_ids[:-1])
-    ).any():
+    if ((terms[1:] == terms[:-1]) & (doc_ids[1:] == doc_ids[:-1])).any():
         raise ValueError(
             "duplicate doc_id in positional postings (the same document "
             "indexed more than once) — dedup the corpus on doc_id "
             "before indexing (e.g. dropDuplicates(['doc_id']))"
         )
-    tfs = pdf["tf"].to_numpy(np.int64)
     pos_bytes = pdf["posting_pos_vb"].to_numpy(object)
-    block_ids = doc_ids // span
-    n = doc_ids.size
-    new_run = np.empty(n, dtype=bool)
-    new_run[0] = True
-    new_run[1:] = (terms[1:] != terms[:-1]) | (block_ids[1:] != block_ids[:-1])
-    run_starts = np.flatnonzero(new_run)
-    run_ends = np.append(run_starts[1:], n)
-    deltas = np.empty(n, dtype=np.int64)
-    deltas[0] = 0
-    deltas[1:] = np.diff(doc_ids)
-    deltas[run_starts] = doc_ids[run_starts] - block_ids[run_starts] * span
-    doc_vbs = encode_vb_sliced(deltas.astype(np.uint64), run_starts)
-    tf_vbs = encode_vb_sliced(tfs.astype(np.uint64), run_starts)
-    pos_vbs = [
-        b"".join(pos_bytes[s:e]) for s, e in zip(run_starts, run_ends)
-    ]
-    return pd.DataFrame(
-        {
-            "term": terms[run_starts],
-            "term_bucket": bucket,
-            "part_id": part,
-            "block_id": block_ids[run_starts],
-            "n": (run_ends - run_starts).astype(np.int32),
-            "first_doc_id": doc_ids[run_starts],
-            "last_doc_id": doc_ids[run_ends - 1],
-            "doc_ids_vb": doc_vbs,
-            "tfs_vb": tf_vbs,
-            "pos_vb": pos_vbs,
-        },
-        columns=cols,
-    )
+    cols["pos_vb"] = [b"".join(pos_bytes[s:e]) for s, e in zip(starts, ends)]
+    return pd.DataFrame(cols)
 
 
 def persist_positional_postings(
@@ -414,7 +360,8 @@ def compact_positional_postings(spark, path: str) -> dict:
     corpus (row-identical runs, test-pinned), with one parquet file
     set per bucket.
 
-    One shuffle (the groupBy), O(index) work, zero corpus reads.
+    One shuffle (group_in_partitions on (term_bucket, part_id)),
+    O(index) work, zero corpus reads.
     Swap protocol is the IVF-retrain one: write <path>.compact →
     rename away the live dir → rename the new one in → heal _meta.json
     (max_doc_id re-derived from the rewritten parquet) → drop the old
@@ -441,14 +388,12 @@ def compact_positional_postings(spark, path: str) -> dict:
     def recompact(pdf):
         import pandas as pd
 
-        if pdf.empty:
-            return _encode_pos_group(pdf, span)
+        from ..functions.codec import decode_block, encode_vb_sliced
+
         bucket = int(pdf["term_bucket"].iloc[0])
         part = int(pdf["part_id"].iloc[0])
         ids_parts, term_parts, tf_parts, delta_parts = [], [], [], []
         for row in pdf.itertuples(index=False):
-            from ..functions.codec import decode_block
-
             base = int(row.block_id) * span
             docs, tfs = decode_block(row.doc_ids_vb, row.tfs_vb, base)
             pos = decode_positions(row.pos_vb, tfs)
@@ -464,8 +409,6 @@ def compact_positional_postings(spark, path: str) -> dict:
             term_parts.append(np.full(docs.size, row.term, dtype=object))
             tf_parts.append(tfs.astype(np.int64))
             delta_parts.append(deltas)
-        from ..functions.codec import encode_vb_sliced
-
         all_tfs = np.concatenate(tf_parts)
         posting_starts = np.concatenate(([0], np.cumsum(all_tfs)[:-1])).astype(np.int64)
         pos_vbs = encode_vb_sliced(
@@ -487,8 +430,10 @@ def compact_positional_postings(spark, path: str) -> dict:
     old = path.rstrip("/") + ".old"
     shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(old, ignore_errors=True)
-    compacted = posts.groupBy("term_bucket", "part_id").applyInPandas(
-        recompact, POS_POSTINGS_SCHEMA
+    from ..plans.layout import group_in_partitions
+
+    compacted = group_in_partitions(
+        posts, ["term_bucket", "part_id"], recompact, POS_POSTINGS_SCHEMA
     )
     compacted.write.mode("overwrite").partitionBy("term_bucket").parquet(tmp)
     n_runs_after = spark.read.parquet(tmp).count()
@@ -698,14 +643,16 @@ def make_phrase_topk(
                                        matches, unranked (filter shape)
 
     Plan per call: bucket-pruned postings scan (term IN pushed; on a
-    persisted index term_bucket literals prune directories) → one
-    groupBy(part_id) shuffle → per-shard numpy phrase intersection →
-    TakeOrderedAndProject top-k. Document text is never read.
+    persisted index term_bucket literals prune directories) →
+    group_in_partitions on part_id (one shuffle) → per-shard numpy
+    phrase intersection → TakeOrderedAndProject top-k. Document text is
+    never read.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ..functions.codec import DEFAULT_BLOCK_SPAN
+    from ..plans.layout import group_in_partitions
 
     span = block_span or DEFAULT_BLOCK_SPAN
     spark = postings.sparkSession
@@ -750,14 +697,6 @@ def make_phrase_topk(
         def match_fn(pdf):
             import pandas as pd
 
-            if pdf.empty:
-                return pd.DataFrame(
-                    {
-                        "phrase_id": pd.Series(dtype="int32"),
-                        "doc_id": pd.Series(dtype="int64"),
-                        count_col: pd.Series(dtype="int64"),
-                    }
-                )
             runs_by_term = _shard_term_runs(pdf)
             decoded_cache: dict = {}
             out_p, out_d, out_c = [], [], []
@@ -804,11 +743,8 @@ def make_phrase_topk(
                 }
             )
 
-        return (
-            _scan(all_terms, stems=tuple(s for s in stem_of.values() if s))
-            .groupBy("part_id")
-            .applyInPandas(match_fn, out_schema)
-        )
+        scan = _scan(all_terms, stems=tuple(s for s in stem_of.values() if s))
+        return group_in_partitions(scan, ["part_id"], match_fn, out_schema)
 
     def query_set(phrases, window: int | None = None):
         """All phrases in ONE plan (one scan, one shuffle), same

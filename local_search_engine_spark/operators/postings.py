@@ -20,9 +20,9 @@ Physical layout — designed for 10^12-doc scale:
     time as idf⁺ · qtf · (k1+1)·max_tf / (max_tf + k1·(1−b+b·min_dl/
     avgdl)) — a true bound because the BM25 contribution is increasing
     in tf and decreasing in doc_len. Baking the score itself into the
-    block (the earlier design) couples every block to the GLOBAL idf /
-    avgdl: one appended batch changes N, df and avgdl and silently
-    invalidates every block's bound. With doc-local metadata a block
+    block would couple every block to the GLOBAL idf / avgdl: one
+    appended batch changes N, df and avgdl and silently invalidates
+    every block's bound. With doc-local metadata a block
     depends only on its own shard's (doc_id, tf, doc_len), so
     incremental maintenance can skip untouched shards soundly
     (plans/checkpoint.update semantics), at the cost of a marginally
@@ -30,6 +30,9 @@ Physical layout — designed for 10^12-doc scale:
 
   * Per-shard doc_len arrays are packed once per shard (int32 binary),
     NOT per posting — query-time scoring looks norms up locally.
+
+  * Both outputs are built by plans/layout.group_in_partitions: the
+    postings grouped on (term_bucket, part_id), shard_meta on part_id.
 
 Schema:
   postings:     term, term_bucket, part_id, block_id, n, first_doc_id,
@@ -64,20 +67,21 @@ def build_postings(
 ):
     """index: operators.build.InvertedIndex → (postings DF, shard_meta DF).
 
-    Plan: tf ⋈ doc_len → one shuffle on (term_bucket, part_id) via
-    applyInPandas → per-group numpy block encode. No idf join: block
-    metadata is idf/avgdl-free by design (see module docstring), so the
-    encode touches ONLY shard-local inputs — which both removes a
-    vocabulary-sized join from the build's hot path and makes per-shard
-    incremental re-encoding sound. The doc_len join is left to AQE
-    (broadcast when actually small)."""
+    Plan: tf ⋈ doc_len → group_in_partitions on (term_bucket, part_id)
+    (one shuffle, one sort, one mapInPandas) → per-group numpy block
+    encode. No idf join: block metadata is idf/avgdl-free by design
+    (see module docstring), so the encode touches ONLY shard-local
+    inputs — which both removes a vocabulary-sized join from the
+    build's hot path and makes per-shard incremental re-encoding sound.
+    The doc_len join is left to AQE (broadcast when actually small).
+    shard_meta is one group_in_partitions on part_id over the docs."""
     from pyspark.sql import functions as F
 
     from ..functions.codec import DEFAULT_BLOCK_SPAN
+    from ..functions.hashing import h32_col
+    from ..plans.layout import group_in_partitions
 
     span = block_span or DEFAULT_BLOCK_SPAN
-
-    from ..functions.hashing import h32_col
 
     # bucket hash is the PORTABLE h32 (md5-derived) — its driver-side
     # twin h32_py lets the query path derive bucket literals for
@@ -89,130 +93,49 @@ def build_postings(
 
     def encode_group(pdf):
         """One call per (term_bucket, part_id) — NOT per term. Grouping by
-        term would mean one Arrow slice + pandas frame + Python call per
-        vocabulary word (~ms each: pure fan-out overhead at millions of
-        terms). Instead each call gets a whole bucket-shard and encodes
-        every (term, block) run with vectorized run-boundary numpy; the
-        only per-output-row Python is a bytes slice."""
+        term would mean one pandas frame + Python call per vocabulary
+        word (pure fan-out overhead at millions of terms). Instead each
+        call gets a whole bucket-shard and encodes every (term, block)
+        run with vectorized run-boundary numpy; the only per-output-row
+        Python is a bytes slice."""
         import numpy as np
         import pandas as pd
 
-        from ..functions.codec import encode_vb_sliced
+        from ..functions.codec import encode_runs
 
-        cols = [
-            "term",
-            "term_bucket",
-            "part_id",
-            "block_id",
-            "n",
-            "first_doc_id",
-            "last_doc_id",
-            "doc_ids_vb",
-            "tfs_vb",
-            "block_max_tf",
-            "block_min_dl",
-        ]
-        if pdf.empty:
-            return pd.DataFrame(columns=cols)
-        pdf = pdf.sort_values(["term", "doc_id"])
-        bucket = int(pdf["term_bucket"].iloc[0])
-        part = int(pdf["part_id"].iloc[0])
-        terms = pdf["term"].to_numpy()
-        doc_ids = pdf["doc_id"].to_numpy(np.int64)
+        pdf, starts, _, cols = encode_runs(pdf, span)
         tfs = pdf["tf"].to_numpy(np.int64)
         dls = pdf["doc_len"].to_numpy(np.int64)
-        block_ids = doc_ids // span
-        n = doc_ids.size
-        # run = maximal span of equal (term, block_id) — one output row each
-        new_run = np.empty(n, dtype=bool)
-        new_run[0] = True
-        new_run[1:] = (terms[1:] != terms[:-1]) | (block_ids[1:] != block_ids[:-1])
-        run_starts = np.flatnonzero(new_run)
-        run_ends = np.append(run_starts[1:], n)
-        # in-block deltas: first-of-run is offset from the block base; the
-        # rest are consecutive diffs (diffs across run boundaries are
-        # overwritten before the uint64 cast, so no negative wraparound)
-        deltas = np.empty(n, dtype=np.int64)
-        deltas[0] = 0
-        deltas[1:] = np.diff(doc_ids)
-        deltas[run_starts] = doc_ids[run_starts] - block_ids[run_starts] * span
-        doc_vbs = encode_vb_sliced(deltas.astype(np.uint64), run_starts)
-        tf_vbs = encode_vb_sliced(tfs.astype(np.uint64), run_starts)
-        return pd.DataFrame(
-            {
-                "term": terms[run_starts],
-                "term_bucket": bucket,
-                "part_id": part,
-                "block_id": block_ids[run_starts],
-                "n": (run_ends - run_starts).astype(np.int32),
-                "first_doc_id": doc_ids[run_starts],
-                "last_doc_id": doc_ids[run_ends - 1],
-                "doc_ids_vb": doc_vbs,
-                "tfs_vb": tf_vbs,
-                "block_max_tf": np.maximum.reduceat(tfs, run_starts).astype(
-                    np.int32
-                ),
-                "block_min_dl": np.minimum.reduceat(dls, run_starts).astype(
-                    np.int32
-                ),
-            },
-            columns=cols,
-        )
+        cols["block_max_tf"] = np.maximum.reduceat(tfs, starts).astype(np.int32)
+        cols["block_min_dl"] = np.minimum.reduceat(dls, starts).astype(np.int32)
+        return pd.DataFrame(cols)
 
-    def encode_partition(batches):
-        """One hash repartition colocates each (term_bucket, part_id)
-        group; the kernel groups a partition's rows in pandas and runs
-        the per-group encoder — byte-identical output rows, but ONE
-        Arrow round trip per partition instead of per group (the
-        grouped-map machinery measured ~1 s of pure overhead for the
-        ~2 000 bucket-shard groups at sf1.0 — same finding as the WAND
-        delivery rewrite)."""
-        import pandas as pd
-
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        allp = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        outs = [
-            encode_group(grp)
-            for _, grp in allp.groupby(["term_bucket", "part_id"], sort=False)
-        ]
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-
-    postings = joined.repartition("term_bucket", "part_id").mapInPandas(
-        encode_partition, POSTINGS_SCHEMA
+    postings = group_in_partitions(
+        joined, ["term_bucket", "part_id"], encode_group, POSTINGS_SCHEMA
     )
 
-    def pack_partition(batches):
+    def pack_group(pdf):
         import numpy as np
         import pandas as pd
 
         from ..functions.codec import pack_i32
 
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        allp = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        rows = []
-        for pid, grp in allp.groupby("part_id", sort=False):
-            grp = grp.sort_values("doc_id")
-            rows.append(
-                (
-                    int(pid),
-                    int(grp["doc_id"].iloc[0]),
-                    len(grp),
-                    pack_i32(grp["doc_len"].to_numpy(np.int32)),
-                )
-            )
-        yield pd.DataFrame(
-            rows, columns=["part_id", "first_doc_id", "n_docs", "doc_lens"]
+        pdf = pdf.sort_values("doc_id")
+        return pd.DataFrame(
+            {
+                "part_id": pdf["part_id"].iloc[:1].to_numpy(),
+                "first_doc_id": pdf["doc_id"].iloc[:1].to_numpy(),
+                "n_docs": np.int32(len(pdf)),
+                "doc_lens": [pack_i32(pdf["doc_len"].to_numpy(np.int32))],
+            }
         )
 
-    shard_meta = (
-        index.docs.select("doc_id", "doc_len")
-        .withColumn("part_id", (F.col("doc_id") / F.lit(docs_per_shard)).cast("long"))
-        .repartition("part_id")
-        .mapInPandas(pack_partition, SHARD_META_SCHEMA)
+    shard_meta = group_in_partitions(
+        index.docs.select("doc_id", "doc_len").withColumn(
+            "part_id", (F.col("doc_id") / F.lit(docs_per_shard)).cast("long")
+        ),
+        ["part_id"],
+        pack_group,
+        SHARD_META_SCHEMA,
     )
     return postings, shard_meta

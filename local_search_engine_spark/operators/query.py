@@ -39,16 +39,6 @@ from ..functions.tokenize import tokenize_py
 from .build import InvertedIndex
 
 
-def query_terms_df(spark, query: str):
-    """Tokenize the query driver-side (it is tiny) into (term, qtf)."""
-    counts = sorted(Counter(tokenize_py(query)).items())
-    if not counts:
-        return spark.createDataFrame([], "term string, qtf int")
-    return spark.createDataFrame(
-        [(t, int(c)) for t, c in counts], "term string, qtf int"
-    )
-
-
 def contribution_col(k1: float, b: float, avgdl: float):
     """BM25 per-(doc, term) contribution as a built-in expression."""
     from pyspark.sql import functions as F

@@ -8,10 +8,6 @@ top-k:
   * cosine_topk        — exact brute force, pure built-in expressions
                          (zip_with/aggregate fold, JVM codegen); the
                          correctness baseline.
-  * cosine_topk_pandas — exact brute force via an Arrow-batched numpy
-                         matmul pandas UDF; the throughput path (one
-                         BLAS gemv per batch instead of per-element
-                         expression eval).
   * srp_lsh_buckets /
     srp_lsh_topk       — signed-random-projection LSH bucketing; the
                          scale path (candidates from matching buckets
@@ -55,8 +51,7 @@ def _cosine_expr(query_vec):
     janino emits one huge method that trips HotSpot's
     DontCompileHugeMethods limit, so the "codegen'd" expression runs as
     un-JIT-ed bytecode. The fold's per-element interpreter overhead is
-    the cheaper of the two; the true fast path for bulk cosine is
-    cosine_topk_pandas (numpy matmul)."""
+    the cheaper of the two."""
     from pyspark.sql import functions as F
 
     qcol = F.array(*[F.lit(float(x)) for x in query_vec])
@@ -103,33 +98,6 @@ def cosine_topk(embeddings, query_vec, k: int, id_col: str = "vec_id", vec_col: 
     if exclude_id is not None:
         s = s.filter(F.col("id") != exclude_id)
     top = s.orderBy(F.desc("cosine"), F.asc("id")).limit(k)
-    w = Window.orderBy(F.desc("cosine"), F.asc("id"))
-    return top.withColumn("rank", F.row_number().over(w)).select("rank", "id", "cosine")
-
-
-def cosine_topk_pandas(embeddings, query_vec, k: int, id_col: str = "vec_id", vec_col: str = "embedding"):
-    """Same result as cosine_topk via a vectorized numpy matmul pandas
-    UDF — the 100 TB throughput path (Arrow batch → one gemv)."""
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    import numpy as np
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
-
-    def score_batches(it):
-        for pdf in it:
-            m = np.vstack(pdf[vec_col].map(lambda a: np.asarray(a, dtype=np.float64)).to_numpy())
-            dots = m @ q
-            norms = np.sqrt((m * m).sum(axis=1))
-            yield pd.DataFrame({"id": pdf[id_col], "cosine": dots / (norms * qn)})
-
-    scored = embeddings.select(id_col, vec_col).mapInPandas(
-        score_batches, "id long, cosine double"
-    )
-    top = scored.orderBy(F.desc("cosine"), F.asc("id")).limit(k)
     w = Window.orderBy(F.desc("cosine"), F.asc("id"))
     return top.withColumn("rank", F.row_number().over(w)).select("rank", "id", "cosine")
 

@@ -21,14 +21,12 @@ asserts bit-equality), because
 
 Physical plan: postings ⋈ broadcast(query idf) [term filter pushed to
 the Parquet scan; term_bucket prunes partitions on a persisted index]
-→ union with the shard_meta rows (meta tagged by a null term — the
-meta blob moves ONCE per shard, like the cogroup it replaces, never
-once per posting row) → one hash repartition on part_id → mapInPandas
-(numpy decode + WAND + per-shard k-heap; r06 — the former
-groupBy.cogroup.applyInPandas delivery measured 1.6 s of pure
-machinery for 250 tiny shard groups at sf1.0, vs 0.6 s for this shape)
-→ global orderBy/limit (planned as TakeOrderedAndProject — a
-distributed k-heap, no full sort). Exactly one shuffle after the scan.
+→ union with the shard_meta rows (meta tagged by a null term, so the
+doc_lens blob moves ONCE per shard, never once per posting row) →
+group_in_partitions on part_id (hash exchange → sort → one
+mapInPandas; numpy decode + WAND + per-shard k-heap per shard group) →
+global orderBy/limit (planned as TakeOrderedAndProject — a distributed
+k-heap, no full sort). Exactly one shuffle after the scan.
 """
 
 from __future__ import annotations
@@ -46,10 +44,10 @@ _POST_COLS = [
 def _tagged_union(matched, shard_meta):
     """posts rows + meta rows in ONE relation keyed by part_id: meta
     rows carry (first_doc_id, doc_lens) with term null; posting rows
-    carry null meta columns. Hash-repartitioned by part_id so a
-    partition holds every row of each of its shards — the colocation
-    the per-shard kernel needs — while the ~docs_per_shard·4-byte
-    doc_lens blob is shipped exactly once per shard."""
+    carry null meta columns. Grouped on part_id, each shard group then
+    holds every row the per-shard kernel needs, while the
+    ~docs_per_shard·4-byte doc_lens blob is shipped exactly once per
+    shard."""
     from pyspark.sql import functions as F
 
     posts = matched.select(
@@ -69,31 +67,86 @@ def _tagged_union(matched, shard_meta):
         F.col("first_doc_id").alias("_shard_first"),
         F.col("doc_lens").alias("_shard_lens"),
     )
-    return posts.unionByName(meta).repartition("part_id")
+    return posts.unionByName(meta)
 
 
-def _split_shards(batches):
-    """Accumulate a partition's batches and yield (posts_pdf, first_doc,
-    doc_lens_bytes) per shard present with BOTH posts and meta — the
-    same per-key semantics as the cogroup this replaces (one-sided keys
-    produce nothing)."""
-    import pandas as pd
+def _split_shard(group):
+    """One part_id group → (posts_pdf sorted by (block_id, term),
+    first_doc, doc_lens_bytes), or None when the shard has no meta row
+    or no postings (a one-sided shard scores nothing)."""
+    is_meta = group["term"].isna().to_numpy()
+    if is_meta.all() or not is_meta.any():
+        return None
+    meta = group[is_meta].iloc[0]
+    posts = group[~is_meta].sort_values(["block_id", "term"])
+    return posts, int(meta["_shard_first"]), meta["_shard_lens"]
 
-    parts = [pdf for pdf in batches if len(pdf)]
-    if not parts:
-        return
-    allp = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-    is_meta = allp["term"].isna()
-    meta = allp[is_meta]
-    posts = allp[~is_meta]
-    if meta.empty or posts.empty:
-        return
-    meta_first = dict(zip(meta["part_id"], meta["_shard_first"]))
-    meta_lens = dict(zip(meta["part_id"], meta["_shard_lens"]))
-    for pid, posts_pdf in posts.groupby("part_id", sort=True):
-        if pid not in meta_first:
-            continue
-        yield posts_pdf, int(meta_first[pid]), meta_lens[pid]
+
+def _wand_shard(shard, rows, qw, ub, k, prune, span, k1, b_, avgdl):
+    """Exact block-max WAND over one shard for one query → (doc_ids,
+    scores) of the shard's top-k, unordered.
+
+    shard: _split_shard output; rows: the query's posting rows in
+    (block_id, term) order; qw / ub: per-row query weight and block
+    upper bound. Contributions are added per doc in ascending term
+    order with the brute-force path's expression shape, so scores are
+    bit-identical to it (test_wand)."""
+    import numpy as np
+
+    from local_search_engine_spark.functions.codec import decode_block, unpack_i32
+
+    posts, first_doc, lens_bytes = shard
+    doc_lens = unpack_i32(lens_bytes).astype(np.float64)
+    bid_a = posts["block_id"].to_numpy(np.int64)[rows]
+    dvb_a = posts["doc_ids_vb"].to_numpy()[rows]
+    tvb_a = posts["tfs_vb"].to_numpy()[rows]
+    idf_a = posts["idf"].to_numpy(np.float64)[rows]
+    scores = np.zeros(doc_lens.size, dtype=np.float64)
+    touched = np.zeros(doc_lens.size, dtype=bool)
+    # running top-k as parallel numpy arrays: θ only matters at WINDOW
+    # boundaries (a surviving window is always scored in full), so the
+    # top-k is merged once per surviving window (one vectorized merge +
+    # lexsort) — the same (score DESC, doc_id ASC) selection as a
+    # per-doc heap.
+    topk_s = np.empty(0, dtype=np.float64)
+    topk_d = np.empty(0, dtype=np.int64)
+    theta = -np.inf
+    starts = np.flatnonzero(np.concatenate(([True], bid_a[1:] != bid_a[:-1])))
+    ends = np.append(starts[1:], bid_a.size)
+    for s_i, e_i in zip(starts, ends):
+        if prune and topk_s.size == k and float(ub[s_i:e_i].sum()) <= theta:
+            continue  # window cannot beat the k-th best
+        base = int(bid_a[s_i]) * span
+        for i in range(s_i, e_i):
+            d, tf = decode_block(dvb_a[i], tvb_a[i], base)
+            off = d - first_doc
+            dl = doc_lens[off]
+            tfd = tf.astype(np.float64)
+            contrib = (
+                idf_a[i]
+                * qw[i]
+                * tfd
+                * (k1 + 1.0)
+                / (tfd + k1 * (1.0 - b_ + b_ * dl / avgdl))
+            )
+            scores[off] += contrib
+            touched[off] = True
+        lo = max(base - first_doc, 0)
+        hi = min(base + span - first_doc, doc_lens.size)
+        offs = np.flatnonzero(touched[lo:hi]) + lo
+        if offs.size:
+            cand_s = np.concatenate((topk_s, scores[offs]))
+            cand_d = np.concatenate((topk_d, offs + first_doc))
+            touched[offs] = False
+            scores[offs] = 0.0
+            if cand_s.size > k:
+                sel = np.lexsort((cand_d, -cand_s))[:k]
+                topk_s, topk_d = cand_s[sel], cand_d[sel]
+            else:
+                topk_s, topk_d = cand_s, cand_d
+            if topk_s.size == k:
+                theta = float(topk_s.min())
+    return topk_d, topk_s
 
 
 def make_wand_topk(index, postings, shard_meta, block_span: int | None = None, n_buckets: int | None = None):
@@ -110,6 +163,7 @@ def make_wand_topk(index, postings, shard_meta, block_span: int | None = None, n
     from pyspark.sql import functions as F
 
     from ..functions.codec import DEFAULT_BLOCK_SPAN
+    from ..plans.layout import group_in_partitions
 
     span = block_span or DEFAULT_BLOCK_SPAN
     k1, b_, avgdl = index.params.k1, index.params.b, index.avgdl
@@ -132,113 +186,36 @@ def make_wand_topk(index, postings, shard_meta, block_span: int | None = None, n
             F.broadcast(idf_small.filter(F.col("term").isin(terms))), "term"
         )
 
-        def score_fn(batches):
+        def score_fn(group):
             import numpy as np
             import pandas as pd
 
-            from local_search_engine_spark.functions.codec import (
-                decode_block,
-                unpack_i32,
+            shard = _split_shard(group)
+            if shard is None:
+                return pd.DataFrame()
+            posts = shard[0]
+            # per-block upper bound from the idf-free metadata:
+            # idf⁺·qtf·(k1+1)·max_tf / (max_tf + k1·(1−b+b·min_dl/avgdl))
+            # — true bound (BM25 contribution increases in tf,
+            # decreases in dl); idf clamped at 0 because a doc NOT
+            # containing a negatively-scored term would otherwise
+            # exceed the "bound" (negative floored idf is legal when
+            # avg_idf < 0)
+            qw = np.array([float(qtf[t]) for t in posts["term"]], dtype=np.float64)
+            mt = posts["block_max_tf"].to_numpy(np.float64)
+            md = posts["block_min_dl"].to_numpy(np.float64)
+            idfp = np.maximum(posts["idf"].to_numpy(np.float64), 0.0)
+            ub = idfp * qw * mt * (k1 + 1.0) / (mt + k1 * (1.0 - b_ + b_ * md / avgdl))
+            d, sc = _wand_shard(
+                shard, slice(None), qw, ub, k, prune, span, k1, b_, avgdl
             )
+            return pd.DataFrame({"doc_id": d, "score": sc})
 
-            qw = {t: float(c) for t, c in qtf.items()}
-            out_d_all: list = []
-            out_s_all: list = []
-            for posts_pdf, first_doc, lens_bytes in _split_shards(batches):
-                doc_lens = unpack_i32(lens_bytes).astype(np.float64)
-                posts_pdf = posts_pdf.sort_values(["block_id", "term"])
-                # columnar extraction ONCE per shard, then pure numpy
-                # block slicing (r06 — the pandas groupby/itertuples
-                # machinery cost more per small shard group than the
-                # decode+score work; guide §4.2). Float arithmetic order
-                # is unchanged everywhere — bit-identical (test_wand).
-                bid_a = posts_pdf["block_id"].to_numpy(np.int64)
-                term_a = posts_pdf["term"].to_numpy()
-                dvb_a = posts_pdf["doc_ids_vb"].to_numpy()
-                tvb_a = posts_pdf["tfs_vb"].to_numpy()
-                idf_a = posts_pdf["idf"].to_numpy(np.float64)
-                # per-block upper bound from the idf-free metadata:
-                # idf⁺·qtf·(k1+1)·max_tf / (max_tf + k1·(1−b+b·min_dl/avgdl))
-                # — true bound (BM25 contribution increases in tf,
-                # decreases in dl); idf clamped at 0 because a doc NOT
-                # containing a negatively-scored term would otherwise
-                # exceed the "bound" (negative floored idf is legal when
-                # avg_idf < 0)
-                _mt = posts_pdf["block_max_tf"].to_numpy(np.float64)
-                _md = posts_pdf["block_min_dl"].to_numpy(np.float64)
-                _idfp = np.maximum(idf_a, 0.0)
-                _qwv = np.array([qw[t] for t in term_a], dtype=np.float64)
-                _ub = (
-                    _idfp
-                    * _qwv
-                    * _mt
-                    * (k1 + 1.0)
-                    / (_mt + k1 * (1.0 - b_ + b_ * _md / avgdl))
-                )
-                scores = np.zeros(doc_lens.size, dtype=np.float64)
-                touched = np.zeros(doc_lens.size, dtype=bool)
-                # running top-k as parallel numpy arrays (r05, VERDICT
-                # #7): θ only matters at WINDOW boundaries (a surviving
-                # window is always scored in full), so the per-touched-
-                # doc Python heap pushes collapse into one vectorized
-                # merge + lexsort per surviving window — same
-                # (score DESC, doc_id ASC) selection, bit-identical.
-                topk_s = np.empty(0, dtype=np.float64)
-                topk_d = np.empty(0, dtype=np.int64)
-                theta = -np.inf
-
-                starts = np.flatnonzero(
-                    np.concatenate(([True], bid_a[1:] != bid_a[:-1]))
-                )
-                ends = np.append(starts[1:], bid_a.size)
-                for s_i, e_i in zip(starts, ends):
-                    if prune and topk_s.size == k:
-                        ub = float(_ub[s_i:e_i].sum())
-                        if ub <= theta:
-                            continue  # window cannot beat the k-th best
-                    base = int(bid_a[s_i]) * span
-                    for i in range(s_i, e_i):
-                        d, tf = decode_block(dvb_a[i], tvb_a[i], base)
-                        off = d - first_doc
-                        dl = doc_lens[off]
-                        tfd = tf.astype(np.float64)
-                        contrib = (
-                            idf_a[i]
-                            * _qwv[i]
-                            * tfd
-                            * (k1 + 1.0)
-                            / (tfd + k1 * (1.0 - b_ + b_ * dl / avgdl))
-                        )
-                        scores[off] += contrib
-                        touched[off] = True
-                    lo = max(base - first_doc, 0)
-                    hi = min(base + span - first_doc, doc_lens.size)
-                    offs = np.flatnonzero(touched[lo:hi]) + lo
-                    if offs.size:
-                        cand_s = np.concatenate((topk_s, scores[offs]))
-                        cand_d = np.concatenate((topk_d, offs + first_doc))
-                        touched[offs] = False
-                        scores[offs] = 0.0
-                        if cand_s.size > k:
-                            sel = np.lexsort((cand_d, -cand_s))[:k]
-                            topk_s, topk_d = cand_s[sel], cand_d[sel]
-                        else:
-                            topk_s, topk_d = cand_s, cand_d
-                        if topk_s.size == k:
-                            theta = float(topk_s.min())
-
-                order = np.lexsort((topk_d, -topk_s))
-                out_d_all.extend(topk_d[order].tolist())
-                out_s_all.extend(topk_s[order].tolist())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_d_all, dtype="int64"),
-                    "score": pd.Series(out_s_all, dtype="float64"),
-                }
-            )
-
-        per_shard = _tagged_union(matched, shard_meta).mapInPandas(
-            score_fn, "doc_id long, score double"
+        per_shard = group_in_partitions(
+            _tagged_union(matched, shard_meta),
+            ["part_id"],
+            score_fn,
+            "doc_id long, score double",
         )
         topk = per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
@@ -278,107 +255,43 @@ def make_wand_topk(index, postings, shard_meta, block_span: int | None = None, n
             F.broadcast(idf_small.filter(F.col("term").isin(all_terms))), "term"
         )
 
-        def score_set_fn(batches):
+        def score_set_fn(group):
             import numpy as np
             import pandas as pd
 
-            from local_search_engine_spark.functions.codec import (
-                decode_block,
-                unpack_i32,
-            )
-
+            shard = _split_shard(group)
+            if shard is None:
+                return pd.DataFrame()
+            posts = shard[0]
+            # a term factorization so each query's row subset is an
+            # int-code isin, not a per-query string isin
+            codes, uniques = pd.factorize(posts["term"])
+            term_list = list(uniques)
+            # query-independent part of the block bound (score_fn) —
+            # computed once per shard, scaled by each query's qtf
+            mt = posts["block_max_tf"].to_numpy(np.float64)
+            md = posts["block_min_dl"].to_numpy(np.float64)
+            idfp = np.maximum(posts["idf"].to_numpy(np.float64), 0.0)
+            ub1 = idfp * mt * (k1 + 1.0) / (mt + k1 * (1.0 - b_ + b_ * md / avgdl))
             out_q: list = []
             out_d: list = []
             out_s: list = []
-            for posts_pdf, first_doc, lens_bytes in _split_shards(batches):
-                doc_lens = unpack_i32(lens_bytes).astype(np.float64)
-                posts_pdf = posts_pdf.sort_values(["block_id", "term"])
-                # columnar extraction once per shard (see score_fn) + a
-                # term factorization so each query's row subset is an
-                # int-code isin, not a per-query string isin
-                bid_a = posts_pdf["block_id"].to_numpy(np.int64)
-                dvb_a = posts_pdf["doc_ids_vb"].to_numpy()
-                tvb_a = posts_pdf["tfs_vb"].to_numpy()
-                idf_a = posts_pdf["idf"].to_numpy(np.float64)
-                codes, uniques = pd.factorize(posts_pdf["term"])
-                term_list = list(uniques)
-                # query-independent part of the block bound (score_fn) —
-                # computed once per shard, scaled by each query's qtf
-                _mt = posts_pdf["block_max_tf"].to_numpy(np.float64)
-                _md = posts_pdf["block_min_dl"].to_numpy(np.float64)
-                _idfp = np.maximum(idf_a, 0.0)
-                _ub1 = (
-                    _idfp
-                    * _mt
-                    * (k1 + 1.0)
-                    / (_mt + k1 * (1.0 - b_ + b_ * _md / avgdl))
+            for qid, qtf, k in qspecs:
+                pres = [ci for ci, t in enumerate(term_list) if t in qtf]
+                if not pres:
+                    continue
+                idxs = np.flatnonzero(np.isin(codes, pres))
+                qw = np.array(
+                    [float(qtf[term_list[codes[i]]]) for i in idxs],
+                    dtype=np.float64,
                 )
-                for qid, qtf, k in qspecs:
-                    pres = np.array(
-                        [ci for ci, t in enumerate(term_list) if t in qtf],
-                        dtype=np.int64,
-                    )
-                    if pres.size == 0:
-                        continue
-                    idxs = np.flatnonzero(np.isin(codes, pres))
-                    if idxs.size == 0:
-                        continue
-                    qw_vals = np.array(
-                        [float(qtf[term_list[codes[i]]]) for i in idxs],
-                        dtype=np.float64,
-                    )
-                    ub_vals = _ub1[idxs] * qw_vals
-                    sub_bid = bid_a[idxs]
-                    scores = np.zeros(doc_lens.size, dtype=np.float64)
-                    touched = np.zeros(doc_lens.size, dtype=bool)
-                    # vectorized window merge — same scheme as score_fn
-                    topk_s = np.empty(0, dtype=np.float64)
-                    topk_d = np.empty(0, dtype=np.int64)
-                    theta = -np.inf
-                    starts = np.flatnonzero(
-                        np.concatenate(([True], sub_bid[1:] != sub_bid[:-1]))
-                    )
-                    ends = np.append(starts[1:], sub_bid.size)
-                    for s_i, e_i in zip(starts, ends):
-                        if prune and topk_s.size == k:
-                            ub = float(ub_vals[s_i:e_i].sum())
-                            if ub <= theta:
-                                continue
-                        base = int(sub_bid[s_i]) * span
-                        for j in range(s_i, e_i):
-                            i = idxs[j]
-                            d, tf = decode_block(dvb_a[i], tvb_a[i], base)
-                            off = d - first_doc
-                            dl = doc_lens[off]
-                            tfd = tf.astype(np.float64)
-                            contrib = (
-                                idf_a[i]
-                                * qw_vals[j]
-                                * tfd
-                                * (k1 + 1.0)
-                                / (tfd + k1 * (1.0 - b_ + b_ * dl / avgdl))
-                            )
-                            scores[off] += contrib
-                            touched[off] = True
-                        lo = max(base - first_doc, 0)
-                        hi = min(base + span - first_doc, doc_lens.size)
-                        offs = np.flatnonzero(touched[lo:hi]) + lo
-                        if offs.size:
-                            cand_s = np.concatenate((topk_s, scores[offs]))
-                            cand_d = np.concatenate((topk_d, offs + first_doc))
-                            touched[offs] = False
-                            scores[offs] = 0.0
-                            if cand_s.size > k:
-                                sel = np.lexsort((cand_d, -cand_s))[:k]
-                                topk_s, topk_d = cand_s[sel], cand_d[sel]
-                            else:
-                                topk_s, topk_d = cand_s, cand_d
-                            if topk_s.size == k:
-                                theta = float(topk_s.min())
-                    out_q.extend([qid] * topk_s.size)
-                    out_d.extend(topk_d.tolist())
-                    out_s.extend(topk_s.tolist())
-            yield pd.DataFrame(
+                d, sc = _wand_shard(
+                    shard, idxs, qw, ub1[idxs] * qw, k, prune, span, k1, b_, avgdl
+                )
+                out_q.extend([qid] * d.size)
+                out_d.extend(d.tolist())
+                out_s.extend(sc.tolist())
+            return pd.DataFrame(
                 {
                     "query_id": pd.Series(out_q, dtype="int32"),
                     "doc_id": pd.Series(out_d, dtype="int64"),
@@ -386,8 +299,11 @@ def make_wand_topk(index, postings, shard_meta, block_span: int | None = None, n
                 }
             )
 
-        per_shard = _tagged_union(matched, shard_meta).mapInPandas(
-            score_set_fn, "query_id int, doc_id long, score double"
+        per_shard = group_in_partitions(
+            _tagged_union(matched, shard_meta),
+            ["part_id"],
+            score_set_fn,
+            "query_id int, doc_id long, score double",
         )
         kmap = F.element_at(
             F.map_from_arrays(

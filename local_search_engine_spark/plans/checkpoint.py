@@ -135,22 +135,32 @@ def build_persisted_index(
     os.makedirs(index_dir, exist_ok=True)
     man = Manifest(index_dir)
     run_id = uuid.uuid4().hex[:12]
-    fp, content_fp = corpus_fingerprint(corpus, params, text_col=text_col)
+    _, content_fp = corpus_fingerprint(corpus, params, text_col=text_col)
     probe_layout = (
         f"dps={docs_per_shard};span={span};nb={n_buckets};ng={n_groups};"
         "analyzer=default"
     )
     probe_fp = f"{content_fp};{probe_layout}"
+    side_units = ("docs", "tf", "idf", "shard_meta")
+
+    def have(unit: str, fpr: str) -> bool:
+        # a unit counts as done only while its data directory exists:
+        # a MANIFEST entry must never vouch for deleted data
+        return man.done(unit, fpr) and os.path.isdir(os.path.join(index_dir, unit))
+
     # whole-build fast path: a build previously COMPLETED over exactly
     # this (keys, content, params, layout) — one scan-agg proves nothing
     # changed, so skip even the id-assignment jobs. Partial builds
     # (only_groups) never mark this unit.
-    if man.done("resume_probe", probe_fp):
+    if man.done("resume_probe", probe_fp) and all(
+        os.path.isdir(os.path.join(index_dir, u))
+        for u in (*side_units, *(f"postings/group={g}" for g in range(n_groups)))
+    ):
         return man
 
     def stage(unit: str, fn, fingerprint: str | None = None):
-        fpr = fingerprint or fp
-        if man.done(unit, fpr):
+        fpr = fingerprint or content_fp
+        if have(unit, fpr):
             return False
         t0 = time.time()
         metrics = fn() or {}
@@ -197,8 +207,8 @@ def build_persisted_index(
         gfp.setdefault(g, f"n=0;h=0;{layout}")
 
     group_ids = list(only_groups) if only_groups is not None else list(range(n_groups))
-    if all(man.done(u, fp) for u in ("docs", "tf", "idf", "shard_meta")) and all(
-        man.done(f"postings/group={g}", gfp[g]) for g in group_ids
+    if all(have(u, content_fp) for u in side_units) and all(
+        have(f"postings/group={g}", gfp[g]) for g in group_ids
     ):
         if only_groups is None:
             # upgrade older manifests: certify the completed build so
@@ -274,9 +284,11 @@ def build_persisted_index(
     # that only adds new doc ranges, every untouched group is a manifest
     # HIT and only groups containing changed shards re-encode — the
     # incremental-maintenance path. (The cheap side tables — docs / tf /
-    # idf / stats / shard_meta — stay keyed on the global fingerprint:
-    # idf and stats genuinely change with every append; on Iceberg these
-    # become MERGE-maintained table updates instead of rewrites.)
+    # idf / stats / shard_meta — are keyed on the global CONTENT
+    # fingerprint: idf and stats genuinely change with every append, and
+    # a content-only edit under unchanged keys changes tf/idf/doc_len;
+    # on Iceberg these become MERGE-maintained table updates instead of
+    # rewrites.)
     # "analyzer=default" is part of the fingerprint key ON PURPOSE even
     # though build_persisted_index only builds with the pinned default
     # tokenizer today: if a tokenizer option (already supported by
@@ -286,7 +298,7 @@ def build_persisted_index(
     # postings groups (r03 ADVICE). Group fingerprints were computed
     # up-front (from the tokenize-free id projection) for the resume
     # probe; the values are identical to the old idx.docs derivation.
-    groups = [g for g in group_ids if not man.done(f"postings/group={g}", gfp[g])]
+    groups = [g for g in group_ids if not have(f"postings/group={g}", gfp[g])]
     group_rows: dict[int, int] = {}
     if groups:
         # materialize the encode stage once; group writes just filter it

@@ -165,3 +165,47 @@ def test_resume_probe_fast_path_and_content_staleness(spark, tmp_path):
         and man3[u]["fingerprint"] != man1[u]["fingerprint"]
         for u in man3
     )
+    # the side tables follow the content: the new term is in tf/idf, and
+    # docs/tf/idf equal a fresh build of the edited corpus
+    idx, _, _, _ = load_index(spark, d)
+    assert idx.tf.filter(F.col("term") == "zzznewterm").count() == 1
+    assert idx.idf.filter(F.col("term") == "zzznewterm").count() == 1
+    fresh = str(tmp_path / "fresh")
+    build_persisted_index(spark, changed, fresh, **KW)
+    for t in ("docs", "tf", "idf"):
+        assert _table(spark, d, t) == _table(spark, fresh, t), t
+    assert json.load(open(os.path.join(d, "stats.json"))) == json.load(
+        open(os.path.join(fresh, "stats.json"))
+    )
+
+
+def _table(spark, d, name):
+    return sorted(map(tuple, spark.read.parquet(os.path.join(d, name)).collect()))
+
+
+def test_deleted_side_table_is_rebuilt(spark, tmp_path):
+    """A MANIFEST entry must not vouch for data that is gone: after tf/
+    is deleted, the next build misses the fast path, rebuilds tf, and
+    WAND answers stay rank-identical."""
+    import shutil
+
+    corpus = gen_corpus_spark(spark, N_DOCS, partitions=8)
+    d = str(tmp_path / "idx")
+    build_persisted_index(spark, corpus, d, **KW)
+    tf_before = _table(spark, d, "tf")
+
+    def answers():
+        idx, postings, shard_meta, stats = load_index(spark, d)
+        wand = make_wand_topk(idx, postings, shard_meta, block_span=stats["block_span"])
+        return [
+            [(r["rank"], r["doc_id"], r["score"]) for r in wand(text, k).collect()]
+            for _, text, k in query_set(N_DOCS)[:5]
+        ]
+
+    want = answers()
+    shutil.rmtree(os.path.join(d, "tf"))
+    man = build_persisted_index(spark, corpus, d, **KW)
+    assert os.path.isdir(os.path.join(d, "tf"))
+    assert _table(spark, d, "tf") == tf_before
+    assert man.data["units"]["tf"]["run_id"] != man.data["units"]["docs"]["run_id"]
+    assert answers() == want
