@@ -870,7 +870,7 @@ BOOL_SPECS = [
     # position. Also runs through the percolator (mode='boolperc').
     (17, '"fast sc*" AND NOT merge'),
     (18, '"merge gro*" OR "spark window"'),
-    # minimum-should-match groups (r05d, Lucene `(a b c)~N`): engine =
+    # minimum-should-match groups (r05d, Lucene `(a OR b OR c)~N`): engine =
     # codegen'd count-of-matched-clauses ≥ n over the leaf bitmask;
     # oracle = UNION ALL + HAVING count ≥ n — independent counters.
     # (this language's implicit operator is AND, so msm groups list

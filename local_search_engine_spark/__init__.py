@@ -17,6 +17,12 @@ Package layout (SURVEY.md §7.6):
   streaming/  incremental index-merge (batch) + streaming ingest demo
 """
 
+from .session import install_zip_refresh_check
+
+# every Python worker that unpickles an engine kernel imports this
+# package first, so the per-task import-cache refresh is cut there too
+install_zip_refresh_check()
+
 __version__ = "0.1.0"
 
 BM25_K1 = 1.2

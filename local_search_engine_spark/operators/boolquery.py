@@ -82,6 +82,7 @@ from collections import Counter
 from dataclasses import dataclass
 
 from ..functions.tokenize import tokenize_py
+from ..plans.layout import local_rows
 
 # --------------------------------------------------------------------------
 # AST
@@ -223,18 +224,19 @@ class Or:
 
 @dataclass(frozen=True)
 class AtLeast:
-    """Minimum-should-match group — `(a b c)~2` (the classic Lucene
-    query parser's `~N` suffix on a parenthesized group, Elasticsearch
-    `minimum_should_match`). Matches docs satisfying at least n of the
-    children. The group's top-level OR disjuncts are the countable
-    clauses (`(a OR b OR c)~2` counts a, b, c separately; a group that
-    is not an OR is a single clause). Folds: n≤0 → match-all,
-    n=1 → Or, n=len(children) → And, n>len(children) → match-none —
-    so a surviving AtLeast always has 1 < n < len(children). Rank-time
-    the children contribute to the positive multiset exactly as Or
-    children do; matching-wise it compiles to a codegen'd
-    count-of-matched-clauses ≥ n over the per-doc leaf bitmask (never
-    a combinatorial OR-of-ANDs expansion)."""
+    """Minimum-should-match group — `(a OR b OR c)~2` (the classic
+    Lucene query parser's `~N` suffix on a parenthesized group,
+    Elasticsearch `minimum_should_match`). Matches docs satisfying at
+    least n of the children. The group's top-level OR disjuncts are the
+    countable clauses, so the clauses must be joined by OR: adjacent
+    atoms are an implicit AND here (not Lucene's default OR), which
+    makes `(a b c)` ONE clause and `(a b c)~2` fold to match-none.
+    Folds: n≤0 → match-all, n=1 → Or, n=len(children) → And,
+    n>len(children) → match-none — so a surviving AtLeast always has
+    1 < n < len(children). Rank-time the children contribute to the
+    positive multiset exactly as Or children do; matching-wise it
+    compiles to a codegen'd count-of-matched-clauses ≥ n over the
+    per-doc leaf bitmask (never a combinatorial OR-of-ANDs expansion)."""
 
     children: tuple
     n: int
@@ -416,8 +418,10 @@ def parse_query(text: str):
             if peek() != ")":
                 raise BoolQuerySyntaxError("unbalanced '('")
             i += 1
-            # `(a b c)~2` — minimum-should-match on the group (classic
-            # Lucene parser). The `~N` may carry a boost (`(a b)~2^3`):
+            # `(a OR b OR c)~2` — minimum-should-match on the group
+            # (classic Lucene parser); the clauses are the group's OR
+            # disjuncts, so `(a b c)~2` (implicit AND: one clause) is
+            # match-none. The `~N` may carry a boost (`(a OR b)~2^3`):
             # the lexer already split that into word `~2` + boost 3,
             # so not_expr applies the boost after this returns.
             if peek() == "word" and re.fullmatch(r"~\d+", toks[i][1]):
@@ -850,8 +854,8 @@ def _fuzzy_expand(index, fuzzy_leaves) -> list:
             for v in delete_variants_py(s, d)
         }
     )
-    q = spark.createDataFrame(
-        qrows, "leaf_id int, stem string, max_d int, vkey string"
+    q = local_rows(
+        spark, qrows, "leaf_id int, stem string, max_d int, vkey string"
     )
     lens = [(len(s), d) for _, s, d in fuzzy_leaves]
     lo = min(n - d for n, d in lens)
@@ -969,7 +973,7 @@ def _leaf_hits(index, node, phrase_query, regex_query=None):
             )
         )
     if term_leaves:
-        lt = spark.createDataFrame(term_leaves, "leaf_id int, term string")
+        lt = local_rows(spark, term_leaves, "leaf_id int, term string")
         # explicit term IN (...) BEFORE the broadcast join: the join
         # alone does not reach the scan, the In filter does (pushes to
         # Parquet; prunes row groups on a term-sorted persisted tf).
@@ -1005,7 +1009,7 @@ def _leaf_hits(index, node, phrase_query, regex_query=None):
             )
         )
     if not parts:
-        return leaves, spark.createDataFrame([], "leaf_id int, doc_id long")
+        return leaves, local_rows(spark, [], "leaf_id int, doc_id long")
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
@@ -1061,7 +1065,7 @@ def matches(index, query: str, phrase_query=None, regex_query=None):
     node = parse_query(query) if isinstance(query, str) else query
     spark = index.tf.sparkSession
     if isinstance(node, Bool) and not node.value:
-        return spark.createDataFrame([], "doc_id long, n_hits int")
+        return local_rows(spark, [], "doc_id long, n_hits int")
     leaves, leaf_df = _leaf_hits(index, node, phrase_query, regex_query)
     hits = leaf_df.groupBy("doc_id").agg(F.collect_set("leaf_id").alias("hits"))
     if satisfiable_all_false(node):

@@ -13,6 +13,8 @@ split → explode → trim/length filter → substring containment.
 
 from __future__ import annotations
 
+from ..plans.layout import local_rows
+
 DEFAULT_MAX_RESULTS = 5  # reference max_context_length (answer_generator.py:40)
 DEFAULT_MIN_PHRASE_LEN = 21  # reference: len(phrase.strip()) > 20
 
@@ -77,8 +79,8 @@ def answer_confidence(
     ).first()
     n_results = int(rrow["n"] or 0)
     if n_results == 0:
-        return spark.createDataFrame(
-            [(0, 0, 0.0, 0.0, 0.0, 0.0)],
+        return local_rows(
+            spark, [(0, 0, 0.0, 0.0, 0.0, 0.0)],
             "n_results int, n_citations int, citation_coverage double, "
             "result_scores double, citation_scores double, confidence double",
         )
@@ -88,8 +90,8 @@ def answer_confidence(
     citation_scores = float(crow["avg_s"] or 0.0) if n_cit else 0.0
     conf = 0.4 * coverage + 0.3 * result_scores + 0.3 * citation_scores
     conf = min(max(conf, 0.0), 1.0)
-    return spark.createDataFrame(
-        [(n_results, n_cit, coverage, result_scores, citation_scores, conf)],
+    return local_rows(
+        spark, [(n_results, n_cit, coverage, result_scores, citation_scores, conf)],
         "n_results int, n_citations int, citation_coverage double, "
         "result_scores double, citation_scores double, confidence double",
     )

@@ -923,10 +923,10 @@ def _cosine_pairs_udf():
     float order, so cosines are bit-identical (the fold's leading
     `0.0 +` can only flip a zero's sign, which `dots + 0.0` restores).
     Null/length-mismatched rows yield NULL exactly like the null-padding
-    zip_with; a 0/0 norm yields NaN, as the expression did. (Only a null
-    COMPONENT inside an equal-length pair differs: Arrow hands it to the
-    kernel as NaN, so the pair surfaces with a NaN cosine instead of
-    null — generated embedding tables contain no null components.)"""
+    zip_with. A zero norm or a null component (Arrow hands it to the
+    kernel as NaN) makes a NaN cosine, which the object Series carries
+    to Spark as NULL; _cosine_passes drops NaN as well, so neither can
+    pass a threshold."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -967,6 +967,15 @@ def _cosine_pairs_udf():
         "va": pd.Series, "vb": pd.Series, "return": pd.Series
     }
     return pandas_udf(_kernel, "double")
+
+
+def _cosine_passes(cos, threshold: float):
+    """cos >= threshold for a defined cosine. Spark orders NaN above
+    every double, so a bare `>=` would keep the NaN of a zero-norm or
+    NaN-component pair at any threshold."""
+    from pyspark.sql import functions as F
+
+    return (cos >= threshold) & ~F.isnan(cos)
 
 
 def embedding_neardup_lsh_pairs(
@@ -1038,7 +1047,7 @@ def embedding_neardup_lsh_pairs(
         cand.join(va, "a")
         .join(vb, "b")
         .withColumn("cosine", cos(F.col("va"), F.col("vb")))
-        .filter(F.col("cosine") >= threshold)
+        .filter(_cosine_passes(F.col("cosine"), threshold))
         .select("a", "b", "cosine")
     )
 
@@ -1066,10 +1075,14 @@ def embedding_neardup_pairs(embeddings, id_col: str = "vec_id", vec_col: str = "
     norm = lambda c: F.sqrt(  # noqa: E731
         F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
     )
+    # try_divide: a zero-norm vector has no cosine (NULL) instead of
+    # failing the whole job with DIVIDE_BY_ZERO under ANSI mode
     return (
         a.join(b, F.col("a") < F.col("b"))
-        .withColumn("cosine", dot / (norm(F.col("va")) * norm(F.col("vb"))))
-        .filter(F.col("cosine") >= threshold)
+        .withColumn(
+            "cosine", F.try_divide(dot, norm(F.col("va")) * norm(F.col("vb")))
+        )
+        .filter(_cosine_passes(F.col("cosine"), threshold))
         .select("a", "b", "cosine")
     )
 

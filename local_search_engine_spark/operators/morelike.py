@@ -29,6 +29,8 @@ plan grows with corpus size except the postings actually scanned.
 
 from __future__ import annotations
 
+from ..plans.layout import local_rows
+
 __all__ = ["interesting_terms", "more_like_this"]
 
 
@@ -75,7 +77,7 @@ def more_like_this(index, doc_id: int, k: int, max_query_terms: int = 25,
     )
     spark = index.tf.sparkSession
     if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
+        return local_rows(spark, [], "rank int, doc_id long, score double")
     scored = score_terms(index, {t: 1 for t, _, _, _ in terms}).filter(
         F.col("doc_id") != int(doc_id)
     )

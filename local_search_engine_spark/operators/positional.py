@@ -49,6 +49,7 @@ from typing import Callable
 import numpy as np
 
 from ..functions.tokenize import tokenize_py
+from ..plans.layout import local_rows
 
 POS_POSTINGS_SCHEMA = (
     "term string, term_bucket int, part_id long, block_id long, n int, "
@@ -758,8 +759,8 @@ def make_phrase_topk(
         count_col = "phrase_tf" if window is None else "n_anchors"
         out_schema = f"phrase_id int, doc_id long, {count_col} long"
         if not specs:
-            return spark.createDataFrame(
-                [], f"phrase_id int, rank int, doc_id long, {count_col} long"
+            return local_rows(
+                spark, [], f"phrase_id int, rank int, doc_id long, {count_col} long"
             )
         per_shard = _per_shard_matches(specs, window, count_col, out_schema)
         kmap = F.element_at(
@@ -792,7 +793,7 @@ def make_phrase_topk(
         q_terms = tokenizer(text)
         count_col = "phrase_tf" if window is None else "n_anchors"
         if not q_terms:
-            return spark.createDataFrame([], f"doc_id long, {count_col} long")
+            return local_rows(spark, [], f"doc_id long, {count_col} long")
         per_shard = _per_shard_matches(
             [(0, q_terms, None)],
             window,
@@ -827,8 +828,8 @@ def make_phrase_topk(
                 if stem:
                     stem_of[int(pid)] = stem
         if not specs:
-            return spark.createDataFrame(
-                [], "phrase_id int, doc_id long, phrase_tf long"
+            return local_rows(
+                spark, [], "phrase_id int, doc_id long, phrase_tf long"
             )
         return _per_shard_matches(
             specs,

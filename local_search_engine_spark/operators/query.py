@@ -36,6 +36,7 @@ from __future__ import annotations
 from collections import Counter
 
 from ..functions.tokenize import tokenize_py
+from ..plans.layout import local_rows
 from .build import InvertedIndex
 
 
@@ -67,9 +68,9 @@ def score_terms(index: InvertedIndex, term_counts: dict):
     spark = index.tf.sparkSession
     counts = sorted(term_counts.items())
     if not counts:
-        return spark.createDataFrame([], "doc_id long, score double")
-    qt = spark.createDataFrame(
-        [(t, float(c)) for t, c in counts], "term string, qtf double"
+        return local_rows(spark, [], "doc_id long, score double")
+    qt = local_rows(
+        spark, [(t, float(c)) for t, c in counts], "term string, qtf double"
     )
     terms = [t for t, _ in counts]
     # broadcast only the QUERY TERMS' idf rows — never the full idf
@@ -132,10 +133,10 @@ def run_query_set(index: InvertedIndex, queries: list[tuple[int, str, int]]):
         for term, qtf in sorted(Counter(tokenize_py(text)).items()):
             rows.append((int(qid), term, int(qtf), int(k)))
     if not rows:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, doc_id long, score double"
+        return local_rows(
+            spark, [], "query_id int, rank int, doc_id long, score double"
         )
-    qt = spark.createDataFrame(rows, "query_id int, term string, qtf int, k int")
+    qt = local_rows(spark, rows, "query_id int, term string, qtf int, k int")
     all_terms = sorted({t for _, t, _, _ in rows})
     idf_q = index.idf.select("term", "idf").filter(F.col("term").isin(all_terms))
     joined = (
@@ -196,10 +197,10 @@ def explain_score(index: InvertedIndex, query, doc_id):
         "idf double, doc_len double, contribution double"
     )
     if not term_counts or not ids:
-        return spark.createDataFrame([], empty)
+        return local_rows(spark, [], empty)
     terms = sorted(term_counts)
-    qt = spark.createDataFrame(
-        [(t, float(term_counts[t])) for t in terms], "term string, qtf double"
+    qt = local_rows(
+        spark, [(t, float(term_counts[t])) for t in terms], "term string, qtf double"
     )
     idf_q = index.idf.select("term", "df", "idf").filter(F.col("term").isin(terms))
     joined = (

@@ -25,6 +25,8 @@ array expression (transform over sequence), no Python.
 
 from __future__ import annotations
 
+from ..plans.layout import local_rows
+
 
 def _delete_variants(col):
     """Column[string] -> Column[array<string>]: the term plus every
@@ -84,11 +86,11 @@ def correct_tokens(vocab, tokens: list[str], max_d: int = 1):
     spark = vocab.sparkSession
     toks = sorted(set(tokens))
     if not toks:
-        return spark.createDataFrame(
-            [], "token string, corrected string, distance int, df long, matched boolean"
+        return local_rows(
+            spark, [], "token string, corrected string, distance int, df long, matched boolean"
         )
     qrows = [(t, v) for t in toks for v in delete_variants_py(t, max_d)]
-    q = spark.createDataFrame(qrows, "token string, vkey string").distinct()
+    q = local_rows(spark, qrows, "token string, vkey string").distinct()
 
     # length pushdown BEFORE the |term|^max_d variant expansion:
     # lev(t, v) <= d forces |len(t) - len(v)| <= d, so only vocabulary
@@ -132,7 +134,7 @@ def correct_tokens(vocab, tokens: list[str], max_d: int = 1):
             F.lit(True).alias("matched"),
         )
     )
-    all_toks = spark.createDataFrame([(t,) for t in toks], "token string")
+    all_toks = local_rows(spark, [(t,) for t in toks], "token string")
     return all_toks.join(best, "token", "left").select(
         "token",
         F.coalesce("corrected", F.col("token")).alias("corrected"),

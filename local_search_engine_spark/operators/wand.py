@@ -34,6 +34,7 @@ from __future__ import annotations
 from collections import Counter
 
 from ..functions.tokenize import tokenize_py
+from ..plans.layout import local_rows
 
 _POST_COLS = [
     "part_id", "term", "block_id", "block_max_tf", "block_min_dl",
@@ -173,7 +174,7 @@ def make_wand_topk(index, postings, shard_meta, block_span: int | None = None, n
     def query(text: str, k: int, prune: bool = True):
         qtf = dict(sorted(Counter(tokenize_py(text)).items()))
         if not qtf or k <= 0:
-            return spark.createDataFrame([], "rank int, doc_id long, score double")
+            return local_rows(spark, [], "rank int, doc_id long, score double")
         terms = list(qtf)
         scan = postings
         if n_buckets and "term_bucket" in postings.columns:
@@ -241,8 +242,8 @@ def make_wand_topk(index, postings, shard_meta, block_span: int | None = None, n
             if qtf and k > 0:
                 qspecs.append((int(qid), qtf, int(k)))
         if not qspecs:
-            return spark.createDataFrame(
-                [], "query_id int, rank int, doc_id long, score double"
+            return local_rows(
+                spark, [], "query_id int, rank int, doc_id long, score double"
             )
         all_terms = sorted({t for _, qtf, _ in qspecs for t in qtf})
         scan = postings

@@ -28,6 +28,13 @@ pay an Arrow round trip per group (measured ~1 s per ~2 000 groups);
 concatenating the whole partition before a pandas groupby would make
 task memory scale with the partition. Here a task holds at most the
 largest group plus one batch.
+
+`local_rows` is the engine's one way to turn driver-built rows (query
+terms, leaf tables, empty answers) into a DataFrame: an Arrow table
+planned as a LocalTableScan. A Python-list `createDataFrame` would
+plan a Scan ExistingRDD that runs defaultParallelism Python tasks even
+for zero rows; the Arrow leaf runs none, and an empty one lets the
+optimizer fold the plan above it away.
 """
 
 from __future__ import annotations
@@ -134,3 +141,24 @@ def group_in_partitions(df, keys, fn, schema):
         .sortWithinPartitions(*keys)
         .mapInPandas(kernel, schema)
     )
+
+
+def local_rows(spark, rows, schema):
+    """DataFrame of exactly `schema` (a DDL string or a StructType)
+    holding `rows` (tuples in schema order; may be empty; array and
+    struct columns allowed), built driver-side as a pyarrow Table so
+    its plan leaf is a LocalTableScan — no Python task, no job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = [
+        pa.array([r[i] for r in rows], type=field.type)
+        for i, field in enumerate(arrow_schema)
+    ]
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -11,6 +11,48 @@ import os
 import shutil
 import tempfile
 
+# archive path -> (st_mtime_ns, st_size) at its last directory read
+_zip_read_stat: dict = {}
+
+
+def install_zip_refresh_check() -> None:
+    """Make `zipimporter.invalidate_caches` re-read an archive only when
+    its (st_mtime_ns, st_size) differs from the last read.
+
+    pyspark's worker calls `importlib.invalidate_caches()` before every
+    task, and the stock zipimporter answers by re-reading its whole
+    archive directory: once per cached importer, and every imported
+    pyspark sub-package has its own importer on pyspark.zip, next to
+    the spark-core jar and the shipped engine zip. On CPython 3.11 that
+    re-read cost every Python task 0.18-0.29 s (4-vCPU box) before user
+    code started. An archive that was
+    rewritten (new mtime or size) is still re-read, so a module added
+    to it stays importable. Idempotent; the package __init__ calls it,
+    so every worker that unpickles an engine kernel gets it."""
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if getattr(cls.invalidate_caches, "__module__", None) == __name__:
+        return
+    refresh = cls.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is not None and _zip_read_stat.get(self.archive) == stamp:
+            # unchanged since the last read: share that read's directory
+            files = zipimport._zip_directory_cache.get(self.archive)
+            if files is not None:
+                self._files = files
+                return
+        refresh(self)
+        _zip_read_stat[self.archive] = stamp
+
+    cls.invalidate_caches = invalidate_caches
+
 
 def ship_package(spark) -> None:
     """Ship this package to executors — the local-mode equivalent of

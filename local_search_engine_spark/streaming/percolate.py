@@ -44,6 +44,7 @@ from __future__ import annotations
 from typing import Callable
 
 from ..functions.tokenize import tokenize_py
+from ..plans.layout import local_rows
 
 _DOC_SHIFT = 2**32  # composite key: doc_idx * 2^32 + position
 
@@ -155,7 +156,7 @@ def percolate(
     specs = _tokenize_specs(phrases, tokenizer)
     spark = docs.sparkSession
     if not specs:
-        return spark.createDataFrame([], _out_schema(docs, id_col))
+        return local_rows(spark, [], _out_schema(docs, id_col))
     from ..plans.layout import widen_for_kernel
 
     return widen_for_kernel(docs.select(id_col, text_col)).mapInPandas(
@@ -484,7 +485,7 @@ def percolate_bool(
     )
     spark = docs.sparkSession
     if not standing:
-        return spark.createDataFrame([], out_schema)
+        return local_rows(spark, [], out_schema)
     cols = [id_col, text_col, *field_cols]
     from ..plans.layout import widen_for_kernel
 

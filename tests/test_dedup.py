@@ -91,6 +91,35 @@ def test_embedding_lsh_pairs_subset_and_bucket_exact(spark):
     assert lsh, "no same-bucket pairs above threshold — vacuous"
 
 
+def test_undefined_cosines_never_pass(spark):
+    """A zero vector, a null component and a NaN component have no
+    cosine with anything. Spark orders NaN above every double, so such
+    a pair must be dropped explicitly, even at threshold -1; the
+    brute-force path must not fail on the zero norm either."""
+    import math
+
+    nan = float("nan")
+    emb = spark.createDataFrame(
+        [
+            (1, [0.0, 0.0, 0.0]),
+            (2, [1.0, None, 0.0]),
+            (3, [1.0, nan, 0.0]),
+            (4, [1.0, 0.5, 0.0]),
+            (5, [1.0, 0.4, 0.1]),
+            (6, [-1.0, 0.2, 0.3]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    defined = {(4, 5), (4, 6), (5, 6)}
+    brute = D.embedding_neardup_pairs(emb, threshold=-1.0).collect()
+    assert {(r["a"], r["b"]) for r in brute} == defined
+    lsh = D.embedding_neardup_lsh_pairs(
+        emb, dim=3, threshold=-1.0, bits=1
+    ).collect()
+    assert {(r["a"], r["b"]) for r in lsh} <= defined
+    assert not any(math.isnan(r["cosine"]) for r in brute + lsh)
+
+
 def test_minhash_lsh_metrics_observed(spark):
     from pyspark.sql import functions as F
 
