@@ -37,8 +37,9 @@ verify scan via make_regex_matcher — constant-score).
 Spark-first compilation — the whole query is THREE narrow stages and
 ONE shuffle, regardless of how many leaves it has:
 
-  1. every TERM leaf in one plan: broadcast (leaf_id, term) ⋈ index.tf
-     (the `term IN (...)` filter pushes into the Parquet scan);
+  1. every TERM leaf in one plan: one index.tf scan (the `term IN
+     (...)` filter pushes into the Parquet scan), each row tagged with
+     its leaf ids by a `map(term → leaf ids)` literal;
   2. every PHRASE leaf in one plan: positional matches_set — one
      bucket-pruned postings scan + one part_id shuffle for the whole
      phrase set (operators/positional.py);
@@ -68,10 +69,12 @@ that prunes to nothing matches everything restricted by what remains
 
 Ranking: topk() scores the boolean survivors by BM25 over the
 POSITIVE leaves' token multiset (terms + phrase constituents; leaves
-under an odd number of NOTs contribute nothing), reusing
-operators/query.score_terms — so `"fast scan" AND NOT merge` ranks
-exactly like the free-text query `fast scan` restricted to the
-boolean doc set. Docs matching only by NOT (no positive token)
+under an odd number of NOTs contribute nothing) with the expression
+and term-ordered fold of operators/query.score_terms — so `"fast
+scan" AND NOT merge` ranks exactly like the free-text query `fast
+scan` restricted to the boolean doc set. The ranking terms ride the
+term-leaf tf scan, so the leaf-hit set and the score come out of the
+ONE doc_id aggregate. Docs matching only by NOT (no positive token)
 score 0.0 and tie-break by doc_id.
 """
 
@@ -82,7 +85,7 @@ from collections import Counter
 from dataclasses import dataclass
 
 from ..functions.tokenize import tokenize_py
-from ..plans.layout import local_rows
+from ..plans.layout import local_rows, sql_in, sql_lit
 
 # --------------------------------------------------------------------------
 # AST
@@ -845,17 +848,18 @@ def _fuzzy_expand(index, fuzzy_leaves) -> list:
 
     from .spell import _variants, delete_variants_py
 
-    spark = index.idf.sparkSession
     max_d = max(d for _, _, d in fuzzy_leaves)
-    qrows = sorted(
-        {
-            (i, s, d, v)
-            for i, s, d in fuzzy_leaves
-            for v in delete_variants_py(s, d)
-        }
-    )
-    q = local_rows(
-        spark, qrows, "leaf_id int, stem string, max_d int, vkey string"
+    # deletion variant → the (leaf_id, stem, max_d) specs producing it,
+    # as a map literal read per vocabulary variant
+    by_vkey: dict = {}
+    for i, s, d in sorted(set(fuzzy_leaves)):
+        for v in sorted(set(delete_variants_py(s, d))):
+            by_vkey.setdefault(v, []).append(
+                f"named_struct('leaf_id', {sql_lit(i)}, 'stem', {sql_lit(s)}, "
+                f"'max_d', {sql_lit(d)})"
+            )
+    specs = ", ".join(
+        f"{sql_lit(v)}, array({', '.join(rows)})" for v, rows in sorted(by_vkey.items())
     )
     lens = [(len(s), d) for _, s, d in fuzzy_leaves]
     lo = min(n - d for n, d in lens)
@@ -864,7 +868,8 @@ def _fuzzy_expand(index, fuzzy_leaves) -> list:
         "term", F.explode(_variants(F.col("term"), max_d)).alias("vkey")
     )
     cand = (
-        vkeys.join(F.broadcast(q), "vkey")
+        vkeys.filter(sql_in("vkey", sorted(by_vkey)))
+        .selectExpr("term", f"inline(element_at(map({specs}), vkey))")
         .select("leaf_id", "stem", "max_d", "term")
         .distinct()
         .filter(F.levenshtein("term", "stem") <= F.col("max_d"))
@@ -891,10 +896,19 @@ def make_regex_matcher(content, text_col: str = "content", trigram=None):
     return matcher
 
 
-def _leaf_hits(index, node, phrase_query, regex_query=None):
-    """(leaf_id int, doc_id long) for every leaf — terms in ONE tf scan,
-    phrases in ONE positional plan. Returns (leaves, DataFrame)."""
+_NO_SCORE = "CAST(NULL AS STRUCT<term: STRING, contrib: DOUBLE>)"
+
+
+def _leaf_hits(index, node, phrase_query, regex_query=None, counts=None):
+    """(leaf_id int, doc_id long, sc struct<term, contrib>) rows: one
+    per (leaf, matching doc) — terms in ONE tf scan, phrases in ONE
+    positional plan — plus, when `counts` (term → BM25 weight) is
+    given, the BM25 contribution of each (doc, weighted term) in `sc`,
+    carried by the SAME tf scan (a weighted term that is no leaf rides
+    with a null leaf_id). Returns (leaves, DataFrame)."""
     from pyspark.sql import functions as F
+
+    from .query import SCORE_STRUCT, contribution_sql
 
     spark = index.tf.sparkSession
     leaves = collect_leaves(node)
@@ -944,7 +958,7 @@ def _leaf_hits(index, node, phrase_query, regex_query=None):
         )
         parts.append(
             index.docs.filter(any_pred).select(
-                F.explode(tagged).alias("leaf_id"), "doc_id"
+                F.explode(tagged).alias("leaf_id"), "doc_id", F.expr(_NO_SCORE).alias("sc")
             )
         )
     if prefix_leaves:
@@ -969,19 +983,42 @@ def _leaf_hits(index, node, phrase_query, regex_query=None):
         )
         parts.append(
             index.tf.filter(any_pred).select(
-                F.explode(tagged).alias("leaf_id"), "doc_id"
+                F.explode(tagged).alias("leaf_id"), "doc_id", F.expr(_NO_SCORE).alias("sc")
             )
         )
-    if term_leaves:
-        lt = local_rows(spark, term_leaves, "leaf_id int, term string")
-        # explicit term IN (...) BEFORE the broadcast join: the join
-        # alone does not reach the scan, the In filter does (pushes to
-        # Parquet; prunes row groups on a term-sorted persisted tf).
-        # tf is unique per (doc_id, term): no distinct needed.
-        tf = index.tf.filter(
-            F.col("term").isin(sorted({t for _, t in term_leaves}))
+    if term_leaves or counts:
+        # ONE tf scan for every term leaf and weighted term: the term IN
+        # (...) filter pushes to Parquet (prunes row groups on a
+        # term-sorted persisted tf), a map(term → leaf ids) literal tags
+        # each row. tf is unique per (doc_id, term): no distinct needed.
+        leaf_ids: dict = {}
+        for i, t in sorted(term_leaves):
+            leaf_ids.setdefault(t, []).append(i)
+        tf = index.tf.filter(sql_in("term", sorted(set(leaf_ids) | set(counts or ()))))
+        sc = _NO_SCORE
+        if counts:
+            weights = sql_lit({t: float(w) for t, w in sorted(counts.items())})
+            idf_q = index.idf.select("term", "idf").filter(sql_in("term", sorted(counts)))
+            tf = tf.join(F.broadcast(idf_q), "term", "left").join(
+                index.docs.select("doc_id", "doc_len"), "doc_id"
+            )
+            contrib = contribution_sql(
+                index.params.k1, index.params.b, index.avgdl,
+                f"element_at({weights}, term)",
+            )
+            # the contribution rides on the first of the row's leaf ids
+            # only, so the fold sees each (doc, term) exactly once
+            sc = (
+                "CASE WHEN idf IS NOT NULL AND coalesce(pos, 0) = 0 THEN "
+                f"{SCORE_STRUCT.format(contrib)} END"
+            )
+        tags = (
+            f"element_at({sql_lit(leaf_ids)}, term)" if leaf_ids else "CAST(NULL AS ARRAY<INT>)"
         )
-        parts.append(tf.join(F.broadcast(lt), "term").select("leaf_id", "doc_id"))
+        parts.append(
+            tf.selectExpr("*", f"posexplode_outer({tags}) AS (pos, leaf_id)")
+            .selectExpr("leaf_id", "doc_id", f"{sc} AS sc")
+        )
     if regex_leaves:
         if regex_query is None:
             raise ValueError(
@@ -993,8 +1030,8 @@ def _leaf_hits(index, node, phrase_query, regex_query=None):
         # index, so the scan is the candidate set, not the corpus)
         for i, pat in regex_leaves:
             parts.append(
-                regex_query(pat).select(
-                    F.lit(i).cast("int").alias("leaf_id"), "doc_id"
+                regex_query(pat).selectExpr(
+                    f"CAST({i} AS INT) AS leaf_id", "doc_id", f"{_NO_SCORE} AS sc"
                 )
             )
     if phrase_leaves:
@@ -1004,52 +1041,45 @@ def _leaf_hits(index, node, phrase_query, regex_query=None):
                 "was provided (pass phrase_query=make_phrase_topk(...))"
             )
         parts.append(
-            phrase_query.matches_set(phrase_leaves).select(
-                F.col("phrase_id").alias("leaf_id"), "doc_id"
+            phrase_query.matches_set(phrase_leaves).selectExpr(
+                "phrase_id AS leaf_id", "doc_id", f"{_NO_SCORE} AS sc"
             )
         )
     if not parts:
-        return leaves, local_rows(spark, [], "leaf_id int, doc_id long")
+        return leaves, local_rows(
+            spark, [], "leaf_id int, doc_id long, sc struct<term: string, contrib: double>"
+        )
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
     return leaves, df
 
 
-def _expr_col(node, hits_col):
-    """The AST as a pure built-in boolean Column over the matched-leaf
-    set (leaf_id indices into collect_leaves order)."""
-    from pyspark.sql import functions as F
-
+def _expr_sql(node) -> str:
+    """The AST as a pure built-in boolean SQL expression over the
+    matched-leaf set column `hits` (leaf_id indices into collect_leaves
+    order)."""
     leaves = collect_leaves(node)
     idx_of = {leaf: i for i, leaf in enumerate(leaves)}
 
     def walk(n):
         if isinstance(n, Bool):
-            return F.lit(n.value)
+            return "true" if n.value else "false"
         if isinstance(n, (Term, Phrase, Near, PhrasePrefix, Prefix, Fuzzy, Field, Regex)):
-            return F.array_contains(hits_col, idx_of[n])
+            return f"array_contains(hits, {idx_of[n]})"
         if isinstance(n, Boost):  # matching-transparent
             return walk(n.child)
         if isinstance(n, Not):
-            return ~walk(n.child)
+            return f"(NOT {walk(n.child)})"
         if isinstance(n, And):
-            out = walk(n.children[0])
-            for c in n.children[1:]:
-                out = out & walk(c)
-            return out
+            return "(" + " AND ".join(map(walk, n.children)) + ")"
         if isinstance(n, Or):
-            out = walk(n.children[0])
-            for c in n.children[1:]:
-                out = out | walk(c)
-            return out
+            return "(" + " OR ".join(map(walk, n.children)) + ")"
         if isinstance(n, AtLeast):
             # count of matched clauses ≥ n — one codegen'd integer sum,
             # never an OR-of-ANDs expansion (C(len, n) clauses)
-            cnt = walk(n.children[0]).cast("int")
-            for c in n.children[1:]:
-                cnt = cnt + walk(c).cast("int")
-            return cnt >= n.n
+            cnt = " + ".join(f"CAST({walk(c)} AS INT)" for c in n.children)
+            return f"(({cnt}) >= {n.n})"
         raise TypeError(f"unknown node {n!r}")
 
     return walk(node)
@@ -1060,32 +1090,44 @@ def matches(index, query: str, phrase_query=None, regex_query=None):
     DataFrame(doc_id long, n_hits int) where n_hits = number of
     distinct leaves (any polarity) occurring in the doc. Unranked,
     uncapped; feeds joins or topk()."""
+    node = parse_query(query) if isinstance(query, str) else query
+    if isinstance(node, Bool) and not node.value:
+        return local_rows(index.tf.sparkSession, [], "doc_id long, n_hits int")
+    return _survivors(index, node, phrase_query, regex_query).selectExpr(
+        "doc_id", "CAST(size(hits) AS INT) AS n_hits"
+    )
+
+
+def _survivors(index, node, phrase_query, regex_query, counts=None):
+    """(doc_id, hits, score) of every doc satisfying `node`: ONE
+    groupBy(doc_id) over _leaf_hits yields the matched-leaf set and the
+    BM25 score over `counts` (contributions folded in ascending term
+    order, 0.0 for a doc without weighted terms)."""
     from pyspark.sql import functions as F
 
-    node = parse_query(query) if isinstance(query, str) else query
-    spark = index.tf.sparkSession
-    if isinstance(node, Bool) and not node.value:
-        return local_rows(spark, [], "doc_id long, n_hits int")
-    leaves, leaf_df = _leaf_hits(index, node, phrase_query, regex_query)
-    hits = leaf_df.groupBy("doc_id").agg(F.collect_set("leaf_id").alias("hits"))
+    from .query import SCORE_FOLD
+
+    _, leaf_df = _leaf_hits(index, node, phrase_query, regex_query, counts)
+    hits = leaf_df.groupBy("doc_id").agg(
+        F.expr("collect_set(leaf_id)").alias("hits"),
+        F.expr(SCORE_FOLD).alias("score"),
+    )
     if satisfiable_all_false(node):
         # non-restrictive (NOT-dominated) query: range over the full
         # doc universe; docs with no leaf hit carry the empty set
         universe = index.docs.select("doc_id")
-        hits = universe.join(hits, "doc_id", "left").select(
+        hits = universe.join(hits, "doc_id", "left").selectExpr(
             "doc_id",
-            F.coalesce("hits", F.array().cast("array<int>")).alias("hits"),
+            "coalesce(hits, CAST(array() AS ARRAY<INT>)) AS hits",
+            "coalesce(score, 0.0D) AS score",
         )
-    cond = _expr_col(node, F.col("hits"))
-    return hits.filter(cond).select(
-        "doc_id", F.size("hits").cast("int").alias("n_hits")
-    )
+    return hits.filter(_expr_sql(node))
 
 
 def topk(index, query: str, k: int, phrase_query=None, regex_query=None,
          sort_by=None, search_after=None):
     """Boolean filter + BM25 rank: top-k of the boolean survivors scored
-    by score_terms over the positive-leaf token multiset (module doc).
+    as score_terms scores the positive-leaf token multiset (module doc).
     DataFrame(rank int, doc_id long, score double) — score rounded to
     6dp BEFORE ranking (the engine-wide rounded-rank rule).
 
@@ -1108,11 +1150,9 @@ def topk(index, query: str, k: int, phrase_query=None, regex_query=None,
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from .query import score_terms
-
     node = parse_query(query) if isinstance(query, str) else query
-    survivors = matches(index, node, phrase_query=phrase_query, regex_query=regex_query)
     if sort_by is not None:
+        survivors = matches(index, node, phrase_query=phrase_query, regex_query=regex_query)
         col, asc = sort_by
         dtypes = dict(index.docs.dtypes)
         numeric = ("tinyint", "smallint", "int", "bigint", "float", "double")
@@ -1141,27 +1181,23 @@ def topk(index, query: str, k: int, phrase_query=None, regex_query=None,
         return top.withColumn("rank", F.row_number().over(w)).select(
             "rank", "doc_id", F.col(col).cast("double").alias("score")
         )
-    counts = positive_token_counts(node)
-    if counts:
-        scores = score_terms(index, dict(counts))
-        scored = survivors.join(scores, "doc_id", "left").select(
-            "doc_id", F.coalesce("score", F.lit(0.0)).alias("score")
-        )
-    else:
-        scored = survivors.select("doc_id", F.lit(0.0).alias("score"))
+    if isinstance(node, Bool) and not node.value:
+        return local_rows(index.tf.sparkSession, [], "rank int, doc_id long, score double")
+    # the boolean filter and the BM25 score of the positive tokens in
+    # ONE aggregate (the ranking terms ride the leaf tf scan)
+    scored = _survivors(
+        index, node, phrase_query, regex_query, dict(positive_token_counts(node))
+    ).selectExpr("doc_id", "round(score, 6) AS score")
     # limit-BEFORE-rank (engine-wide shape): orderBy().limit(k) plans as
     # TakeOrderedAndProject (a distributed k-heap); the rank window then
     # sees ≤ k rows, never the full survivor domain
     order = [F.desc("score"), F.asc("doc_id")]
-    scored = scored.withColumn("score", F.round("score", 6))
     if search_after is not None:
         av, ad = search_after
         scored = scored.filter(
             (F.col("score") < av)
             | ((F.col("score") == av) & (F.col("doc_id") > ad))
         )
-    top = scored.orderBy(*order).limit(k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        "rank", "doc_id", "score"
+    return scored.orderBy(*order).limit(k).selectExpr(
+        "row_number() OVER (ORDER BY score DESC, doc_id) AS rank", "doc_id", "score"
     )

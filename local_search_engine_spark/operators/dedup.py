@@ -481,6 +481,54 @@ def bucket_pairs(grouped, ids_col: str = "ids"):
     )
 
 
+def _observe_buckets(buckets, max_bucket_size: int, metrics: dict):
+    """Observe the LSH bucket counters of `buckets` (rows with an `ids`
+    array) into metrics["observation"]: {n_buckets, dropped_buckets,
+    dropped_pairs_ub, max_bucket_size_seen}. Returns the zero-row
+    carrier of the observation, which the caller unions into its result
+    with _carry.
+
+    The observation cannot sit on the bucket rows of the pair path:
+    when no candidate pair survives, AQE replaces every join above the
+    empty pair stage with an empty relation, the CollectMetrics node
+    inside is dropped from the executed plan, and the Observation then
+    completes with a 0-length row. The carrier reads the bucket rows
+    through a filter no row passes but the optimizer cannot prove
+    empty, so the node stays in the final plan whatever the result
+    size. Its price is a few more small stages in the main action, paid
+    only when metrics are requested."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    observed = buckets.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.sum(
+            F.when(F.size("ids") > max_bucket_size, 1).otherwise(0)
+        ).alias("dropped_buckets"),
+        F.sum(
+            F.when(
+                F.size("ids") > max_bucket_size,
+                F.size("ids").cast("long") * (F.size("ids") - 1) / 2,
+            ).otherwise(F.lit(0))
+        ).alias("dropped_pairs_ub"),
+        F.max(F.size("ids")).alias("max_bucket_size_seen"),
+    )
+    metrics["observation"] = obs
+    return observed.filter(F.size("ids") < 0)
+
+
+def _carry(result, carrier):
+    """result ∪ the zero rows of an observation carrier (unchanged rows
+    and column types); `result` itself when there is no carrier."""
+    if carrier is None:
+        return result
+    return result.unionByName(
+        carrier.selectExpr(*[f"CAST(0 AS {t}) AS {c}" for c, t in result.dtypes])
+    )
+
+
 def minhash_lsh_pairs(
     docs,
     text_col: str = "text",
@@ -530,9 +578,10 @@ def minhash_lsh_pairs(
     the drop is OBSERVED, not silent: pass metrics={} and, after any
     action on the result, metrics["observation"].get returns
     {n_buckets, dropped_buckets, dropped_pairs_ub, max_bucket_size_seen}
-    (Spark Observation — collected during the main action, zero extra
-    jobs). Returns (a, b, jaccard) with jaccard >= threshold, verified
-    exactly against the shingle sets.
+    (Spark Observation collected by the main action — no extra action;
+    the counters ride a zero-row branch of the result, see
+    _observe_buckets). Returns (a, b, jaccard) with jaccard >= threshold,
+    verified exactly against the shingle sets.
 
     Shuffle audit (the 100 TB shape): the ONLY corpus-sized shuffle is
     the (band, band_key) bucket groupBy of 4 short rows per doc.
@@ -598,25 +647,7 @@ def minhash_lsh_pairs(
     sized = banded.groupBy("band", "band_key").agg(
         F.collect_list("doc_id").alias("ids")
     )
-    if metrics is not None:
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        sized = sized.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum(
-                F.when(F.size("ids") > max_bucket_size, 1).otherwise(0)
-            ).alias("dropped_buckets"),
-            F.sum(
-                F.when(
-                    F.size("ids") > max_bucket_size,
-                    F.size("ids").cast("long") * (F.size("ids") - 1) / 2,
-                ).otherwise(F.lit(0))
-            ).alias("dropped_pairs_ub"),
-            F.max(F.size("ids")).alias("max_bucket_size_seen"),
-        )
-        metrics["observation"] = obs
+    carrier = None if metrics is None else _observe_buckets(sized, max_bucket_size, metrics)
     capped = sized.filter(F.size("ids") <= max_bucket_size)
     cand = bucket_pairs(capped)
     # exact verification against the SAME cached shingle-set arrays,
@@ -638,7 +669,7 @@ def minhash_lsh_pairs(
         .select("a", "b", "jaccard")
     )
     if not collapse_exact or not expand_exact:
-        return verified
+        return _carry(verified, carrier)
     # expand rep-space pairs back to member pairs. Cross-group: every
     # (x ∈ grp(a), y ∈ grp(b)) pair carries the reps' jaccard (identical
     # shingle sets ⇒ identical score). Intra-group: jaccard 1.0 by
@@ -658,7 +689,7 @@ def minhash_lsh_pairs(
         )
     )
     if threshold > 1.0:
-        return cross
+        return _carry(cross, carrier)
     shingled_reps = sets.select(F.col("doc_id").alias("rep"))
     # SALTED intra-group pair fan-out (guide §2.5): a g-member identical
     # group is ONE join key, so the un-salted self-join put all g(g-1)/2
@@ -687,7 +718,7 @@ def minhash_lsh_pairs(
             F.lit(1.0).alias("jaccard"),
         )
     )
-    return cross.unionByName(intra)
+    return _carry(cross.unionByName(intra), carrier)
 
 
 def simhash_signatures(
@@ -1009,25 +1040,7 @@ def embedding_neardup_lsh_pairs(
 
     buckets = srp_lsh_buckets(embeddings, dim, bits, id_col, vec_col)
     grouped = buckets.groupBy("bucket").agg(F.collect_list("id").alias("ids"))
-    if metrics is not None:
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        grouped = grouped.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum(
-                F.when(F.size("ids") > max_bucket_size, 1).otherwise(0)
-            ).alias("dropped_buckets"),
-            F.sum(
-                F.when(
-                    F.size("ids") > max_bucket_size,
-                    F.size("ids").cast("long") * (F.size("ids") - 1) / 2,
-                ).otherwise(F.lit(0))
-            ).alias("dropped_pairs_ub"),
-            F.max(F.size("ids")).alias("max_bucket_size_seen"),
-        )
-        metrics["observation"] = obs
+    carrier = None if metrics is None else _observe_buckets(grouped, max_bucket_size, metrics)
     capped = grouped.filter(F.size("ids") <= max_bucket_size)
     cand = bucket_pairs(capped)
     v = embeddings.select(
@@ -1043,13 +1056,14 @@ def embedding_neardup_lsh_pairs(
     # test-pinned); asNondeterministic keeps the threshold filter from
     # duplicating the kernel (guide §4.4).
     cos = _cosine_pairs_udf().asNondeterministic()
-    return (
+    verified = (
         cand.join(va, "a")
         .join(vb, "b")
         .withColumn("cosine", cos(F.col("va"), F.col("vb")))
         .filter(_cosine_passes(F.col("cosine"), threshold))
         .select("a", "b", "cosine")
     )
+    return _carry(verified, carrier)
 
 
 def embedding_neardup_pairs(embeddings, id_col: str = "vec_id", vec_col: str = "embedding", threshold: float = 0.95):

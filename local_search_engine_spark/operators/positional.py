@@ -468,49 +468,63 @@ def _shard_term_runs(posts_pdf):
     }
 
 
-def _arrays_for(runs_by_term, q_terms, span: int, decoded_cache: dict):
-    """Per query term: (docs, pos) flat pairs restricted to CANDIDATE
-    blocks — block-skipping: blocks are doc-range aligned across terms,
-    so a doc containing every phrase term carries postings for each of
-    them in the SAME block_id; the candidate set is the intersection of
-    the terms' block_id sets and all other runs skip decode entirely
-    (a hot term like `def` in a phrase with a rare term decodes only
-    the rare term's blocks). Decoded runs are memoized per
-    (term, block_id, first_doc) across phrases sharing a shard.
-    Returns None when some term is absent from the shard."""
-    from ..functions.codec import decode_block
-
-    uniq = list(dict.fromkeys(q_terms))
-    for t in uniq:
-        if t not in runs_by_term:
-            return None
+def _candidate_blocks(runs_by_term, terms):
+    """Block ids where every term in `terms` has a run — blocks are
+    doc-range aligned across terms, so a doc containing every term
+    carries postings for each of them in the SAME block_id. None when
+    `terms` is empty, some term is absent from the shard or the
+    intersection is empty."""
     allowed = None
-    for t in uniq:
-        blocks = set(runs_by_term[t]["block_id"].tolist())
+    for t in dict.fromkeys(terms):
+        runs = runs_by_term.get(t)
+        if runs is None:
+            return None
+        blocks = set(runs["block_id"].tolist())
         allowed = blocks if allowed is None else (allowed & blocks)
         if not allowed:
             return None
-    out = {}
-    for t in uniq:
-        doc_parts, pos_parts = [], []
-        for row in runs_by_term[t].itertuples(index=False):
-            if int(row.block_id) not in allowed:
-                continue
-            key = (t, int(row.block_id), int(row.first_doc_id))
-            hit = decoded_cache.get(key)
-            if hit is None:
-                d, tf = decode_block(
-                    row.doc_ids_vb, row.tfs_vb, int(row.block_id) * span
-                )
-                hit = (np.repeat(d, tf), decode_positions(row.pos_vb, tf))
-                decoded_cache[key] = hit
-            doc_parts.append(hit[0])
-            pos_parts.append(hit[1])
-        out[t] = (
-            np.concatenate(doc_parts) if doc_parts else np.empty(0, np.int64),
-            np.concatenate(pos_parts) if pos_parts else np.empty(0, np.int64),
-        )
-    return out
+    return allowed
+
+
+def _decoded_runs(term, runs, span: int, decoded_cache: dict, allowed=None):
+    """Yield the flat (docs, pos) pairs of each of `term`'s runs whose
+    block id is in `allowed` (every run when None). Decoded runs are
+    memoized per (term, block_id, first_doc) across the phrases sharing
+    a shard."""
+    from ..functions.codec import decode_block
+
+    for row in runs.itertuples(index=False):
+        if allowed is not None and int(row.block_id) not in allowed:
+            continue
+        key = (term, int(row.block_id), int(row.first_doc_id))
+        hit = decoded_cache.get(key)
+        if hit is None:
+            d, tf = decode_block(row.doc_ids_vb, row.tfs_vb, int(row.block_id) * span)
+            hit = (np.repeat(d, tf), decode_positions(row.pos_vb, tf))
+            decoded_cache[key] = hit
+        yield hit
+
+
+def _concat_pairs(pairs):
+    return np.concatenate([d for d, _ in pairs]), np.concatenate([p for _, p in pairs])
+
+
+def _arrays_for(runs_by_term, q_terms, span: int, decoded_cache: dict):
+    """Per query term: (docs, pos) flat pairs restricted to CANDIDATE
+    blocks (_candidate_blocks) — block-skipping: all other runs skip
+    decode entirely (a hot term like `def` in a phrase with a rare term
+    decodes only the rare term's blocks). Returns None when some term
+    is absent from the shard; {} for no terms."""
+    uniq = list(dict.fromkeys(q_terms))
+    if not uniq:
+        return {}
+    allowed = _candidate_blocks(runs_by_term, uniq)
+    if allowed is None:
+        return None
+    return {
+        t: _concat_pairs(list(_decoded_runs(t, runs_by_term[t], span, decoded_cache, allowed)))
+        for t in uniq
+    }
 
 
 def _prefix_union_arrays(runs_by_term, stem: str, span: int, decoded_cache, allowed=None):
@@ -520,28 +534,13 @@ def _prefix_union_arrays(runs_by_term, stem: str, span: int, decoded_cache, allo
     postings there). (doc, pos) pairs are unique across distinct terms
     (one token per position), so the sorted union is intersect-safe.
     Returns None when no shard term matches the stem."""
-    from ..functions.codec import decode_block
-
-    doc_parts, pos_parts = [], []
-    for t, runs in runs_by_term.items():
-        if not t.startswith(stem):
-            continue
-        for row in runs.itertuples(index=False):
-            if allowed is not None and int(row.block_id) not in allowed:
-                continue
-            key = (t, int(row.block_id), int(row.first_doc_id))
-            hit = decoded_cache.get(key)
-            if hit is None:
-                d, tf = decode_block(
-                    row.doc_ids_vb, row.tfs_vb, int(row.block_id) * span
-                )
-                hit = (np.repeat(d, tf), decode_positions(row.pos_vb, tf))
-                decoded_cache[key] = hit
-            doc_parts.append(hit[0])
-            pos_parts.append(hit[1])
-    if not doc_parts:
-        return None
-    return np.concatenate(doc_parts), np.concatenate(pos_parts)
+    pairs = [
+        hit
+        for t, runs in runs_by_term.items()
+        if t.startswith(stem)
+        for hit in _decoded_runs(t, runs, span, decoded_cache, allowed)
+    ]
+    return _concat_pairs(pairs) if pairs else None
 
 
 def phrase_prefix_occurrences(
@@ -646,35 +645,38 @@ def make_phrase_topk(
     Plan per call: bucket-pruned postings scan (term IN pushed; on a
     persisted index term_bucket literals prune directories) →
     group_in_partitions on part_id (one shuffle) → per-shard numpy
-    phrase intersection → TakeOrderedAndProject top-k. Document text is
-    never read.
+    phrase intersection → TakeOrderedAndProject top-k (query/near: the
+    rank window then sees ≤ k rows and needs no shuffle of its own).
+    Document text is never read.
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ..functions.codec import DEFAULT_BLOCK_SPAN
-    from ..plans.layout import group_in_partitions
+    from ..plans.layout import group_in_partitions, sql_in, sql_lit
 
     span = block_span or DEFAULT_BLOCK_SPAN
     spark = postings.sparkSession
+    bucketed = bool(n_buckets) and "term_bucket" in postings.columns
+    # the scan projection, built once per binding: the columns the
+    # per-shard matcher reads (+ term_bucket for the pruning filter)
+    projected = postings.select(
+        "part_id", "term", "block_id", "first_doc_id", "doc_ids_vb",
+        "tfs_vb", "pos_vb", *(["term_bucket"] if bucketed else []),
+    )
 
     def _scan(all_terms: list[str], stems: tuple = ()):
-        scan = postings
-        if n_buckets and "term_bucket" in postings.columns and not stems:
-            from ..functions.hashing import h32_py
-
-            buckets = sorted({h32_py(t) % n_buckets for t in all_terms})
-            scan = scan.filter(F.col("term_bucket").isin(buckets))
-        pred = None
-        if all_terms:
-            pred = F.col("term").isin(sorted(set(all_terms)))
+        preds = [sql_in("term", sorted(set(all_terms)))] if all_terms else []
         # an open prefix cannot bucket-prune (h32 buckets don't preserve
         # prefixes) — the StringStartsWith still pushes to Parquet and
         # prunes row groups on the term-sorted persisted layout
-        for s in sorted(set(stems)):
-            p = F.col("term").startswith(s)
-            pred = p if pred is None else (pred | p)
-        return scan.filter(pred)
+        preds += [f"startswith(term, {sql_lit(s)})" for s in sorted(set(stems))]
+        pred = " OR ".join(preds)
+        if bucketed and not stems:
+            from ..functions.hashing import h32_py
+
+            buckets = sorted({h32_py(t) % n_buckets for t in all_terms})
+            pred = f"{sql_in('term_bucket', buckets)} AND {pred}"
+        return projected.filter(pred)
 
     def _per_shard_matches(specs, window, count_col, out_schema, stem_of=None):
         """(phrase_id, doc_id, count) per shard — specs carry k=None for
@@ -709,14 +711,11 @@ def make_phrase_topk(
                 stem = stem_of.get(pid)
                 if stem is not None:
                     # phrase-prefix: restrict the prefix union to the
-                    # exact head's candidate blocks (same doc-range
-                    # alignment argument as _arrays_for)
-                    allowed = None
-                    for t in dict.fromkeys(q_terms):
-                        blocks = set(runs_by_term[t]["block_id"].tolist())
-                        allowed = blocks if allowed is None else allowed & blocks
+                    # exact head's candidate blocks (None — no
+                    # restriction — for an empty head)
                     pre = _prefix_union_arrays(
-                        runs_by_term, stem, span, decoded_cache, allowed
+                        runs_by_term, stem, span, decoded_cache,
+                        _candidate_blocks(runs_by_term, q_terms),
                     )
                     if pre is None:
                         continue
@@ -763,27 +762,41 @@ def make_phrase_topk(
                 spark, [], f"phrase_id int, rank int, doc_id long, {count_col} long"
             )
         per_shard = _per_shard_matches(specs, window, count_col, out_schema)
-        kmap = F.element_at(
-            F.map_from_arrays(
-                F.array(*[F.lit(p) for p, _, _ in specs]),
-                F.array(*[F.lit(k) for _, _, k in specs]),
-            ),
-            F.col("phrase_id"),
+        kmap = sql_lit({p: k for p, _, k in specs})
+        return per_shard.selectExpr(
+            "phrase_id",
+            f"row_number() OVER (PARTITION BY phrase_id "
+            f"ORDER BY {count_col} DESC, doc_id) AS rank",
+            "doc_id",
+            count_col,
+        ).filter(f"rank <= element_at({kmap}, phrase_id)")
+
+    def _top(text: str, k: int, window: int | None):
+        """One phrase's top-k as a k-heap: orderBy().limit(k) plans as
+        TakeOrderedAndProject, so the rank window sees ≤ k rows on one
+        partition — no shuffle for it (query_set's per-phrase window
+        needs one)."""
+        count_col = "phrase_tf" if window is None else "n_anchors"
+        q_terms, k = tokenizer(text), int(k)
+        if not q_terms or k <= 0:
+            return local_rows(spark, [], f"rank int, doc_id long, {count_col} long")
+        per_shard = _per_shard_matches(
+            [(0, q_terms, k)],
+            window,
+            count_col,
+            f"phrase_id int, doc_id long, {count_col} long",
         )
-        w = Window.partitionBy("phrase_id").orderBy(
-            F.desc(count_col), F.asc("doc_id")
-        )
-        return (
-            per_shard.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= kmap)
-            .select("phrase_id", "rank", "doc_id", count_col)
+        return per_shard.orderBy(F.desc(count_col), F.asc("doc_id")).limit(k).selectExpr(
+            f"row_number() OVER (ORDER BY {count_col} DESC, doc_id) AS rank",
+            "doc_id",
+            count_col,
         )
 
     def query(text: str, k: int):
-        return query_set([(0, text, k)]).drop("phrase_id")
+        return _top(text, k, None)
 
     def near(text: str, k: int, window: int):
-        return query_set([(0, text, k)], window=window).drop("phrase_id")
+        return _top(text, k, window)
 
     def matches(text: str, window: int | None = None):
         """EVERY matching doc, unranked and uncapped — the must-contain

@@ -3,14 +3,16 @@
 Replaces the reference's per-document bm25.get_scores loop + np.argsort
 top-k (reference retriever.py:363-415) with one broadcast equi-join plan:
 
-  tf ⋈ broadcast(query_terms) ⋈ broadcast(idf ⋉ query_terms) ⋈ doc_len
+  tf[term IN (...)] → exchange(doc_id) ⋈ broadcast(idf[term IN (...)]) ⋈ doc_len
 
 Only the QUERY TERMS' idf rows are broadcast — never the full idf table
 (the vocabulary can be millions of terms; the `term IN (...)` filter
-also pushes into the idf scan when the index is read from Parquet).
+pushes into both scans when the index is read from Parquet). The
+per-query weights ride in the plan as a `map(term → qtf)` literal read
+with element_at (plans/layout.sql_lit), not as a joined table.
     → per-(doc,term) contribution expression (pure built-ins, codegen'd)
-    → groupBy(doc_id): deterministic ordered fold of contributions
-    → filter(score > 0) → orderBy(score DESC, doc_id ASC) → limit(k)
+    → groupBy(doc_id) (no second exchange): deterministic ordered fold
+    → orderBy(score DESC, doc_id ASC) → limit(k)
 
 Semantics pinned to rank_bm25 BM25Okapi (invoked by the reference at
 preprocessing.py:513):
@@ -36,24 +38,46 @@ from __future__ import annotations
 from collections import Counter
 
 from ..functions.tokenize import tokenize_py
-from ..plans.layout import local_rows
+from ..plans.layout import local_rows, sql_in, sql_lit
 from .build import InvertedIndex
 
 
-def contribution_col(k1: float, b: float, avgdl: float):
-    """BM25 per-(doc, term) contribution as a built-in expression."""
-    from pyspark.sql import functions as F
+# the per-doc score over (term, contrib) structs `sc`: contributions
+# folded in ascending term order (nulls are skipped by collect_list)
+SCORE_FOLD = "aggregate(sort_array(collect_list(sc)), 0.0D, (acc, x) -> acc + x.contrib)"
+SCORE_STRUCT = "named_struct('term', term, 'contrib', {})"
 
-    tf = F.col("tf").cast("double")
-    norm = tf + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avgdl)
+
+def contribution_sql(k1: float, b: float, avgdl: float, qtf: str = "qtf") -> str:
+    """BM25 per-(doc, term) contribution as one SQL expression over the
+    columns idf, tf and doc_len; `qtf` is the SQL of the query weight.
+    Left-associative products in this order, constants folded
+    driver-side — the association every scorer and oracle shares, so
+    scores reproduce bit-for-bit."""
+    tf = "CAST(tf AS DOUBLE)"
+    norm = (
+        f"{tf} + {sql_lit(float(k1))} * ({sql_lit(1.0 - b)} + "
+        f"{sql_lit(float(b))} * doc_len / {sql_lit(float(avgdl))})"
     )
-    return F.col("idf") * F.col("qtf") * tf * F.lit(k1 + 1.0) / norm
+    return f"idf * {qtf} * {tf} * {sql_lit(k1 + 1.0)} / ({norm})"
 
 
 def score_all(index: InvertedIndex, query: str):
     """(doc_id, score) for every doc matching ≥1 query term."""
     return score_terms(index, dict(Counter(tokenize_py(query))))
+
+
+def _with_lookups(index: InvertedIndex, tf_rows, pred: str, idf_cols=("term", "idf")):
+    """tf_rows ⋈ broadcast(idf rows passing `pred`) ⋈ doc_len. Callers
+    put their aggregate's exchange on tf_rows first: the lookups then
+    join after it, so the idf broadcast (and a broadcast doc_len side)
+    run beside the tf map stage, not before it — one stage round less."""
+    from pyspark.sql import functions as F
+
+    idf_q = index.idf.select(*idf_cols).filter(pred)
+    return tf_rows.join(F.broadcast(idf_q), "term").join(
+        index.docs.select("doc_id", "doc_len"), "doc_id"
+    )
 
 
 def score_terms(index: InvertedIndex, term_counts: dict):
@@ -65,40 +89,22 @@ def score_terms(index: InvertedIndex, term_counts: dict):
     bit-identically whether carried as int or double."""
     from pyspark.sql import functions as F
 
-    spark = index.tf.sparkSession
     counts = sorted(term_counts.items())
     if not counts:
-        return local_rows(spark, [], "doc_id long, score double")
-    qt = local_rows(
-        spark, [(t, float(c)) for t, c in counts], "term string, qtf double"
-    )
-    terms = [t for t, _ in counts]
-    # broadcast only the QUERY TERMS' idf rows — never the full idf
-    # table (the vocabulary can be millions of terms; the term IN (...)
-    # filter also pushes into the idf scan)
-    idf_q = index.idf.select("term", "idf").filter(F.col("term").isin(terms))
-    joined = (
-        index.tf.join(F.broadcast(qt), "term")
-        .join(F.broadcast(idf_q), "term")
-        .join(index.docs.select("doc_id", "doc_len"), "doc_id")
-    )
-    contrib = contribution_col(index.params.k1, index.params.b, index.avgdl)
-    per_term = joined.select("doc_id", "term", contrib.alias("contrib"))
+        return local_rows(index.tf.sparkSession, [], "doc_id long, score double")
+    qtf = f"element_at({sql_lit({t: float(c) for t, c in counts})}, term)"
+    pred = sql_in("term", [t for t, _ in counts])
+    joined = _with_lookups(index, index.tf.filter(pred).repartition("doc_id"), pred)
+    contrib = contribution_sql(index.params.k1, index.params.b, index.avgdl, qtf)
+    per_term = joined.selectExpr("doc_id", SCORE_STRUCT.format(contrib) + " AS sc")
     # Deterministic summation order: fold contributions in ascending term
     # order (exact ties between identical docs survive float addition).
-    return per_term.groupBy("doc_id").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        ).alias("score")
-    )
+    return per_term.groupBy("doc_id").agg(F.expr(SCORE_FOLD).alias("score"))
 
 
 def topk(index: InvertedIndex, query: str, k: int, with_doc_cols: bool = False):
     """T2/T3: global top-k — Spark plans orderBy+limit as per-partition
     TakeOrderedAndProject (a distributed k-heap), no full sort."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     scores = (
@@ -106,9 +112,8 @@ def topk(index: InvertedIndex, query: str, k: int, with_doc_cols: bool = False):
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    out = scores.withColumn("rank", F.row_number().over(w)).select(
-        "rank", "doc_id", "score"
+    out = scores.selectExpr(
+        "row_number() OVER (ORDER BY score DESC, doc_id) AS rank", "doc_id", "score"
     )
     if with_doc_cols:
         out = out.join(index.docs.select("doc_id", "repo", "path"), "doc_id").select(
@@ -118,49 +123,51 @@ def topk(index: InvertedIndex, query: str, k: int, with_doc_cols: bool = False):
 
 
 def run_query_set(index: InvertedIndex, queries: list[tuple[int, str, int]]):
-    """All fixture queries in ONE Spark plan: union of per-query broadcast
-    term tables → single join against tf → per-query window top-k.
+    """All fixture queries in ONE Spark plan: one tf scan over the union
+    of the query terms, each row fanned out to the queries holding its
+    term (a `map(term → array(struct(query_id, qtf, k)))` literal,
+    inlined) → one exchange on query_id → per-query fold and window
+    top-k. A query's scored docs meet in one partition for its rank
+    window anyway; its (doc, term) rows now meet there one step earlier.
 
     This is the batch-evaluation path the bench harness uses — it avoids
     one driver round-trip per query and lets AQE share the tf scan.
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    spark = index.tf.sparkSession
-    rows = []
+    by_term: dict = {}
     for qid, text, k in queries:
         for term, qtf in sorted(Counter(tokenize_py(text)).items()):
-            rows.append((int(qid), term, int(qtf), int(k)))
-    if not rows:
+            by_term.setdefault(term, []).append(
+                f"named_struct('query_id', {sql_lit(int(qid))}, "
+                f"'qtf', {sql_lit(int(qtf))}, 'k', {sql_lit(int(k))})"
+            )
+    if not by_term:
         return local_rows(
-            spark, [], "query_id int, rank int, doc_id long, score double"
+            index.tf.sparkSession, [], "query_id int, rank int, doc_id long, score double"
         )
-    qt = local_rows(spark, rows, "query_id int, term string, qtf int, k int")
-    all_terms = sorted({t for _, t, _, _ in rows})
-    idf_q = index.idf.select("term", "idf").filter(F.col("term").isin(all_terms))
-    joined = (
-        index.tf.join(F.broadcast(qt), "term")
-        .join(F.broadcast(idf_q), "term")
-        .join(index.docs.select("doc_id", "doc_len"), "doc_id")
+    fan_out = ", ".join(
+        f"{sql_lit(t)}, array({', '.join(qs)})" for t, qs in sorted(by_term.items())
     )
-    contrib = contribution_col(index.params.k1, index.params.b, index.avgdl)
-    per_term = joined.select(
-        "query_id", "k", "doc_id", "term", contrib.alias("contrib")
+    pred = sql_in("term", sorted(by_term))
+    # one exchange on query_id serves both the per-(query, doc) fold and
+    # the per-query rank window
+    fanned = index.tf.filter(pred).selectExpr(
+        "*", f"inline(element_at(map({fan_out}), term))"
     )
+    joined = _with_lookups(index, fanned.repartition("query_id"), pred)
+    contrib = contribution_sql(index.params.k1, index.params.b, index.avgdl)
+    per_term = joined.selectExpr("query_id", "k", "doc_id", SCORE_STRUCT.format(contrib) + " AS sc")
     scores = per_term.groupBy("query_id", "k", "doc_id").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        ).alias("score")
+        F.expr(SCORE_FOLD).alias("score")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return scores.selectExpr(
+        "query_id",
+        "row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank",
+        "doc_id",
+        "score",
+        "k",
+    ).filter("rank <= k").select("query_id", "rank", "doc_id", "score")
 
 
 def explain_score(index: InvertedIndex, query, doc_id):
@@ -177,11 +184,9 @@ def explain_score(index: InvertedIndex, query, doc_id):
     domain); per doc, sum(contribution) in ascending term order equals
     the score_terms score bit-exactly (the engine's summation rule).
 
-    Plan: the doc_id IN filter pushes into the tf scan, the ≤|query|
-    idf rows broadcast — ONE job for the whole page, output
+    Plan: the doc_id IN and term IN filters push into the tf scan, the
+    ≤|query| idf rows broadcast — ONE job for the whole page, output
     O(|docs| · |query terms|), nothing corpus-sized moves."""
-    from pyspark.sql import functions as F
-
     if isinstance(query, str):
         term_counts = dict(Counter(tokenize_py(query)))
     else:
@@ -191,34 +196,29 @@ def explain_score(index: InvertedIndex, query, doc_id):
         if isinstance(doc_id, int)
         else [int(x) for x in doc_id]
     )
-    spark = index.tf.sparkSession
     empty = (
         "doc_id long, term string, qtf double, tf double, df bigint, "
         "idf double, doc_len double, contribution double"
     )
     if not term_counts or not ids:
-        return local_rows(spark, [], empty)
+        return local_rows(index.tf.sparkSession, [], empty)
     terms = sorted(term_counts)
-    qt = local_rows(
-        spark, [(t, float(term_counts[t])) for t in terms], "term string, qtf double"
+    qtf = f"element_at({sql_lit({t: float(term_counts[t]) for t in terms})}, term)"
+    pred = sql_in("term", terms)
+    joined = _with_lookups(
+        index, index.tf.filter(f"{sql_in('doc_id', ids)} AND {pred}"), pred,
+        ("term", "df", "idf"),
     )
-    idf_q = index.idf.select("term", "df", "idf").filter(F.col("term").isin(terms))
-    joined = (
-        index.tf.filter(F.col("doc_id").isin(ids))
-        .join(F.broadcast(qt), "term")
-        .join(F.broadcast(idf_q), "term")
-        .join(index.docs.select("doc_id", "doc_len"), "doc_id")
-    )
-    contrib = contribution_col(index.params.k1, index.params.b, index.avgdl)
-    return joined.select(
+    contrib = contribution_sql(index.params.k1, index.params.b, index.avgdl, qtf)
+    return joined.selectExpr(
         "doc_id",
         "term",
-        F.col("qtf").cast("double").alias("qtf"),
-        F.col("tf").cast("double").alias("tf"),
-        F.col("df").cast("long").alias("df"),
-        F.col("idf").cast("double").alias("idf"),
-        F.col("doc_len").cast("double").alias("doc_len"),
-        contrib.alias("contribution"),
+        f"CAST({qtf} AS DOUBLE) AS qtf",
+        "CAST(tf AS DOUBLE) AS tf",
+        "CAST(df AS BIGINT) AS df",
+        "CAST(idf AS DOUBLE) AS idf",
+        "CAST(doc_len AS DOUBLE) AS doc_len",
+        f"{contrib} AS contribution",
     )
 
 

@@ -19,14 +19,17 @@ asserts bit-equality), because
     same expression shape, left-associative) as the brute-force path
     and the oracle, so floats reproduce bit-for-bit.
 
-Physical plan: postings ⋈ broadcast(query idf) [term filter pushed to
-the Parquet scan; term_bucket prunes partitions on a persisted index]
-→ union with the shard_meta rows (meta tagged by a null term, so the
-doc_lens blob moves ONCE per shard, never once per posting row) →
-group_in_partitions on part_id (hash exchange → sort → one
+Physical plan: postings [term filter pushed to the Parquet scan;
+term_bucket prunes partitions on a persisted index] → union with the
+shard_meta rows (meta tagged by a null term, so the doc_lens blob moves
+ONCE per shard, never once per posting row) → group_in_partitions on
+part_id (hash exchange → broadcast(query idf) lookup → sort → one
 mapInPandas; numpy decode + WAND + per-shard k-heap per shard group) →
 global orderBy/limit (planned as TakeOrderedAndProject — a distributed
-k-heap, no full sort). Exactly one shuffle after the scan.
+k-heap, no full sort). Exactly one shuffle after the scan; the idf
+broadcast joins after it, so its stage runs beside the postings map
+stage, not before it. Both sides of the union are projected once per
+binding; a query adds only its filter string and its kernel.
 """
 
 from __future__ import annotations
@@ -36,39 +39,10 @@ from collections import Counter
 from ..functions.tokenize import tokenize_py
 from ..plans.layout import local_rows
 
-_POST_COLS = [
+_POST_COLS = (
     "part_id", "term", "block_id", "block_max_tf", "block_min_dl",
-    "doc_ids_vb", "tfs_vb", "idf",
-]
-
-
-def _tagged_union(matched, shard_meta):
-    """posts rows + meta rows in ONE relation keyed by part_id: meta
-    rows carry (first_doc_id, doc_lens) with term null; posting rows
-    carry null meta columns. Grouped on part_id, each shard group then
-    holds every row the per-shard kernel needs, while the
-    ~docs_per_shard·4-byte doc_lens blob is shipped exactly once per
-    shard."""
-    from pyspark.sql import functions as F
-
-    posts = matched.select(
-        *_POST_COLS,
-        F.lit(None).cast("long").alias("_shard_first"),
-        F.lit(None).cast("binary").alias("_shard_lens"),
-    )
-    meta = shard_meta.select(
-        "part_id",
-        F.lit(None).cast("string").alias("term"),
-        F.lit(None).cast("long").alias("block_id"),
-        F.lit(None).cast("int").alias("block_max_tf"),
-        F.lit(None).cast("int").alias("block_min_dl"),
-        F.lit(None).cast("binary").alias("doc_ids_vb"),
-        F.lit(None).cast("binary").alias("tfs_vb"),
-        F.lit(None).cast("double").alias("idf"),
-        F.col("first_doc_id").alias("_shard_first"),
-        F.col("doc_lens").alias("_shard_lens"),
-    )
-    return posts.unionByName(meta)
+    "doc_ids_vb", "tfs_vb",
+)
 
 
 def _split_shard(group):
@@ -160,32 +134,62 @@ def make_wand_topk(index, postings, shard_meta, block_span: int | None = None, n
     hash, no Spark job) so the Parquet scan prunes whole bucket
     directories instead of reading the full index.
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ..functions.codec import DEFAULT_BLOCK_SPAN
-    from ..plans.layout import group_in_partitions
+    from ..plans.layout import group_in_partitions, sql_in, sql_lit
 
     span = block_span or DEFAULT_BLOCK_SPAN
     k1, b_, avgdl = index.params.k1, index.params.b, index.avgdl
     spark = postings.sparkSession
+    bucketed = bool(n_buckets) and "term_bucket" in postings.columns
+    # query-independent sub-plans, built once per binding: the idf
+    # lookup projection and both sides of the tagged union — posting
+    # rows carry null shard columns, shard rows (first_doc_id,
+    # doc_lens) a null term, so grouped on part_id each shard group
+    # holds every row the per-shard kernel needs while the
+    # ~docs_per_shard·4-byte doc_lens blob moves once per shard
     idf_small = index.idf.select("term", "idf")
+    tail = ["term_bucket"] if bucketed else []
+    posts = postings.selectExpr(
+        *_POST_COLS, *tail,
+        "CAST(NULL AS BIGINT) AS _shard_first",
+        "CAST(NULL AS BINARY) AS _shard_lens",
+    )
+    meta = shard_meta.selectExpr(
+        "part_id",
+        "CAST(NULL AS STRING) AS term",
+        "CAST(NULL AS BIGINT) AS block_id",
+        "CAST(NULL AS INT) AS block_max_tf",
+        "CAST(NULL AS INT) AS block_min_dl",
+        "CAST(NULL AS BINARY) AS doc_ids_vb",
+        "CAST(NULL AS BINARY) AS tfs_vb",
+        *["CAST(NULL AS INT) AS term_bucket"] * bucketed,
+        "first_doc_id AS _shard_first",
+        "doc_lens AS _shard_lens",
+    )
+    order = [F.desc("score"), F.asc("doc_id")]
+
+    def shard_rows(terms, fn, schema):
+        """group_in_partitions over the query's posting rows + every
+        shard row, the query's idf rows joined after the exchange."""
+        pred = sql_in("term", terms)
+        lookup = idf_small.filter(pred)
+        if bucketed:
+            from ..functions.hashing import h32_py
+
+            # bucket literals computed driver-side (hashlib) — zero jobs
+            buckets = sorted({h32_py(t) % n_buckets for t in terms})
+            pred = f"{sql_in('term_bucket', buckets)} AND {pred}"
+        return group_in_partitions(
+            posts.filter(pred).union(meta), ["part_id"], fn, schema,
+            lookup=(lookup, "term"),
+        )
 
     def query(text: str, k: int, prune: bool = True):
         qtf = dict(sorted(Counter(tokenize_py(text)).items()))
         if not qtf or k <= 0:
             return local_rows(spark, [], "rank int, doc_id long, score double")
-        terms = list(qtf)
-        scan = postings
-        if n_buckets and "term_bucket" in postings.columns:
-            from ..functions.hashing import h32_py
-
-            # bucket literals computed driver-side (hashlib) — zero jobs
-            buckets = sorted({h32_py(t) % n_buckets for t in terms})
-            scan = scan.filter(F.col("term_bucket").isin(buckets))
-        matched = scan.filter(F.col("term").isin(terms)).join(
-            F.broadcast(idf_small.filter(F.col("term").isin(terms))), "term"
-        )
 
         def score_fn(group):
             import numpy as np
@@ -212,16 +216,11 @@ def make_wand_topk(index, postings, shard_meta, block_span: int | None = None, n
             )
             return pd.DataFrame({"doc_id": d, "score": sc})
 
-        per_shard = group_in_partitions(
-            _tagged_union(matched, shard_meta),
-            ["part_id"],
-            score_fn,
-            "doc_id long, score double",
-        )
-        topk = per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.withColumn("rank", F.row_number().over(w)).select(
-            "rank", "doc_id", "score"
+        per_shard = shard_rows(list(qtf), score_fn, "doc_id long, score double")
+        return per_shard.orderBy(*order).limit(k).selectExpr(
+            "row_number() OVER (ORDER BY score DESC, doc_id) AS rank",
+            "doc_id",
+            "score",
         )
 
     def query_set(queries, prune: bool = True):
@@ -246,15 +245,6 @@ def make_wand_topk(index, postings, shard_meta, block_span: int | None = None, n
                 spark, [], "query_id int, rank int, doc_id long, score double"
             )
         all_terms = sorted({t for _, qtf, _ in qspecs for t in qtf})
-        scan = postings
-        if n_buckets and "term_bucket" in postings.columns:
-            from ..functions.hashing import h32_py
-
-            buckets = sorted({h32_py(t) % n_buckets for t in all_terms})
-            scan = scan.filter(F.col("term_bucket").isin(buckets))
-        matched = scan.filter(F.col("term").isin(all_terms)).join(
-            F.broadcast(idf_small.filter(F.col("term").isin(all_terms))), "term"
-        )
 
         def score_set_fn(group):
             import numpy as np
@@ -300,25 +290,17 @@ def make_wand_topk(index, postings, shard_meta, block_span: int | None = None, n
                 }
             )
 
-        per_shard = group_in_partitions(
-            _tagged_union(matched, shard_meta),
-            ["part_id"],
-            score_set_fn,
-            "query_id int, doc_id long, score double",
+        per_shard = shard_rows(
+            all_terms, score_set_fn, "query_id int, doc_id long, score double"
         )
-        kmap = F.element_at(
-            F.map_from_arrays(
-                F.array(*[F.lit(q) for q, _, _ in qspecs]),
-                F.array(*[F.lit(k) for _, _, k in qspecs]),
-            ),
-            F.col("query_id"),
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        return (
-            per_shard.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= kmap)
-            .select("query_id", "rank", "doc_id", "score")
-        )
+        kmap = sql_lit({q: k for q, _, k in qspecs})
+        return per_shard.selectExpr(
+            "query_id",
+            "row_number() OVER (PARTITION BY query_id "
+            "ORDER BY score DESC, doc_id) AS rank",
+            "doc_id",
+            "score",
+        ).filter(f"rank <= element_at({kmap}, query_id)")
 
     query.query_set = query_set
     return query

@@ -29,12 +29,20 @@ concatenating the whole partition before a pandas groupby would make
 task memory scale with the partition. Here a task holds at most the
 largest group plus one batch.
 
-`local_rows` is the engine's one way to turn driver-built rows (query
-terms, leaf tables, empty answers) into a DataFrame: an Arrow table
-planned as a LocalTableScan. A Python-list `createDataFrame` would
-plan a Scan ExistingRDD that runs defaultParallelism Python tasks even
-for zero rows; the Arrow leaf runs none, and an empty one lets the
-optimizer fold the plan above it away.
+`local_rows` is the engine's one way to turn driver-built rows (empty
+answers, small fixed tables) into a DataFrame: an Arrow table planned as
+a LocalTableScan. A Python-list `createDataFrame` would plan a Scan
+ExistingRDD that runs defaultParallelism Python tasks even for zero
+rows; the Arrow leaf runs none, and an empty one lets the optimizer fold
+the plan above it away.
+
+`sql_lit` is the engine's one way to put a per-query constant (query
+terms, bucket ids, qtf/boost weights, leaf ids, per-query k) into a
+plan: SQL text the analyzer parses back to exactly that value. A query
+filter is then one `filter(str)` call and a term -> weight table is one
+`map(...)` literal read with element_at — one JVM round trip each,
+where a Column built literal by literal costs one per literal, and a
+driver-built table costs a LocalTableScan plus a broadcast join.
 """
 
 from __future__ import annotations
@@ -121,7 +129,7 @@ def iter_groups(batches, keys, fn):
         yield from run([concat(pending)])
 
 
-def group_in_partitions(df, keys, fn, schema):
+def group_in_partitions(df, keys, fn, schema, lookup=None):
     """Run fn(group_pdf) → pandas frame once per distinct `keys` value
     of `df`; returns the outputs as a DataFrame of `schema`.
 
@@ -130,17 +138,73 @@ def group_in_partitions(df, keys, fn, schema):
     plans, without the per-group Arrow round trip. Each group reaches
     fn whole and exactly once (see iter_groups). Key columns must be
     non-null: a null integer key arrives as NaN, which never compares
-    equal, so its rows would split into one-row groups."""
+    equal, so its rows would split into one-row groups.
+
+    lookup=(table, on): a small table (unique `on`, non-null other
+    columns) whose columns are added to every row of `df` by a
+    broadcast join placed AFTER the exchange, so its broadcast runs as a
+    sibling stage of the map stage that feeds the exchange instead of
+    before it. Inner-join semantics for rows with a non-null `on` (no
+    match → row dropped); rows whose `on` is null pass through with null
+    lookup columns (the tagged side of a union, e.g. WAND's shard
+    rows)."""
     keys = list(keys)
 
     def kernel(batches):
         return iter_groups(batches, keys, fn)
 
-    return (
-        df.repartition(*keys)
-        .sortWithinPartitions(*keys)
-        .mapInPandas(kernel, schema)
-    )
+    out = df.repartition(*keys)
+    if lookup is not None:
+        from pyspark.sql import functions as F
+
+        table, on = lookup
+        value = next(c for c in table.columns if c != on)
+        out = out.join(F.broadcast(table), on, "left").filter(
+            f"{on} IS NULL OR {value} IS NOT NULL"
+        )
+    return out.sortWithinPartitions(*keys).mapInPandas(kernel, schema)
+
+
+def sql_lit(value) -> str:
+    """SQL text that Spark's analyzer parses back to exactly `value`.
+
+    str → a quoted literal (backslash and quote escaped; every other
+    character verbatim); bool → true/false; int → INT, or BIGINT (`L`)
+    outside the 32-bit range; float → a DOUBLE literal from repr, which
+    round-trips bit-exactly (±inf and NaN as casts); None → NULL;
+    list/tuple → array(...); dict → map(...) in iteration order."""
+    import math
+    import numbers
+
+    if value is None:
+        return "NULL"
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, numbers.Integral):
+        v = int(value)
+        return str(v) if -(2**31) <= v < 2**31 else f"{v}L"
+    if isinstance(value, numbers.Real):
+        v = float(value)
+        if math.isfinite(v):
+            return f"{v!r}D"
+        word = {"inf": "Infinity", "-inf": "-Infinity", "nan": "NaN"}[repr(v)]
+        return f"CAST('{word}' AS DOUBLE)"
+    if isinstance(value, (list, tuple)):
+        return "array(" + ", ".join(map(sql_lit, value)) + ")"
+    if isinstance(value, dict):
+        return "map(" + ", ".join(
+            f"{sql_lit(k)}, {sql_lit(v)}" for k, v in value.items()
+        ) + ")"
+    raise TypeError(f"no SQL literal for {type(value).__name__}")
+
+
+def sql_in(column: str, values) -> str:
+    """`column IN (v1, v2, ...)` over sql_lit literals — a predicate
+    Spark pushes into Parquet scans (partition pruning on a partition
+    column). `values` must be non-empty."""
+    return f"{column} IN ({', '.join(map(sql_lit, values))})"
 
 
 def local_rows(spark, rows, schema):

@@ -5,8 +5,8 @@
 - embedding_neardup_lsh_pairs returns a subset of the brute-force pairs
   and is exact WITHIN buckets;
 - minhash_lsh_pairs / embedding_neardup_lsh_pairs surface dropped-bucket
-  metrics through a Spark Observation (no silent caps), with zero extra
-  jobs;
+  metrics through a Spark Observation (no silent caps), read by the main
+  action — also when no candidate pair survives;
 - minhash_lsh_pairs candidate generation never cross-joins.
 """
 
@@ -143,6 +143,36 @@ def test_minhash_lsh_metrics_observed(spark):
     # at least one bucket must overflow — the metric actually fires
     assert got["dropped_buckets"] > 0
     assert got["dropped_pairs_ub"] > 0
+
+
+def test_lsh_metrics_arrive_when_no_pair_survives(spark):
+    """A duplicate group collapsed to one representative leaves no
+    candidate pair, so AQE empties every join above the pair stage; the
+    bucket counters must still arrive after collect(), and observing
+    must not change the rows."""
+    import random
+
+    text = "merge the shard index before the table scan runs again"
+    docs = spark.createDataFrame(
+        [(i, text) for i in range(6)] + [(6, "an unrelated line of text here")],
+        "doc_id long, text string",
+    )
+    m: dict = {}
+    rows = D.minhash_lsh_pairs(docs, expand_exact=False, metrics=m).collect()
+    assert rows == D.minhash_lsh_pairs(docs, expand_exact=False).collect() == []
+    got = m["observation"].get
+    assert got["n_buckets"] > 0 and got["max_bucket_size_seen"] >= 1, got
+
+    rng = random.Random(3)
+    emb = spark.createDataFrame(
+        [(i, [rng.random() for _ in range(4)]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    m = {}
+    rows = D.embedding_neardup_lsh_pairs(emb, dim=4, bits=2, threshold=1.5, metrics=m).collect()
+    assert rows == []
+    got = m["observation"].get
+    assert got["n_buckets"] > 0, got
 
 
 def test_exact_dedup_keep_verdicts(spark):

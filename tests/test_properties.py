@@ -302,3 +302,67 @@ def test_code_tokenizer_twins_property(spark):
         assert got == tokenize_code_py(text), repr(text)
 
     check()
+
+
+# ---------------------------------------------------------------------------
+# plans/layout.sql_lit: per-query constants written as SQL text must come
+# back from Spark's analyzer exactly — strings character for character,
+# doubles bit for bit.
+# ---------------------------------------------------------------------------
+
+_NASTY = ["", "x') OR ('1'='1", "a'b", "back\\slash", "\\'", "new\nline", "ü中", "\x00", "\\u0041"]
+
+
+def _analyzed(spark, values):
+    from local_search_engine_spark.plans.layout import sql_lit
+
+    row = spark.range(1).selectExpr(
+        *[f"{sql_lit(v)} AS c{i}" for i, v in enumerate(values)]
+    ).first()
+    return [row[f"c{i}"] for i in range(len(values))]
+
+
+@given(st.lists(st.one_of(st.text(max_size=30), st.sampled_from(_NASTY)), min_size=1, max_size=6))
+@settings(max_examples=40, deadline=None)
+def test_sql_lit_strings_roundtrip_through_analyzer(spark, values):
+    assert _analyzed(spark, values) == values
+
+
+@given(st.lists(st.floats(allow_nan=False), min_size=1, max_size=6))
+@settings(max_examples=40, deadline=None)
+def test_sql_lit_doubles_roundtrip_bit_exact(spark, values):
+    import struct
+
+    got = _analyzed(spark, values)
+    assert [struct.pack("<d", v) for v in got] == [struct.pack("<d", v) for v in values]
+
+
+def test_sql_lit_known_constants_and_containers(spark):
+    import math
+    import struct
+
+    from local_search_engine_spark.operators.build import build_index_from
+    from local_search_engine_spark.plans.layout import sql_in, sql_lit
+
+    docs = spark.createDataFrame(
+        [(0, "table scan merge"), (1, "scan io io"), (2, "merge shard table fast")],
+        "doc_id long, text string",
+    )
+    idx = build_index_from(docs, text_col="text", cache=False)
+    p = idx.params
+    doubles = [1.0, 2.5, 1 / 3, -0.0, p.k1, p.b, idx.avgdl, p.k1 + 1.0, 1.0 - p.b]
+    got = _analyzed(spark, doubles)
+    assert [struct.pack("<d", v) for v in got] == [struct.pack("<d", float(v)) for v in doubles]
+    inf, ninf, nan = _analyzed(spark, [math.inf, -math.inf, math.nan])
+    assert inf == math.inf and ninf == -math.inf and math.isnan(nan)
+    assert _analyzed(spark, [0, 2**31 - 1, 2**31, -(2**40), True, None]) == [
+        0, 2**31 - 1, 2**31, -(2**40), True, None,
+    ]
+    quoted, slashed = "it's", "a\\b"
+    weights = {quoted: 1.0, slashed: 1 / 3}
+    row = spark.range(1).selectExpr(
+        f"element_at({sql_lit(weights)}, {sql_lit(quoted)}) AS w",
+        f"{sql_lit(['x', 'y'])} AS arr",
+        f"{sql_in(sql_lit(slashed), [slashed, 'z'])} AS hit",
+    ).first()
+    assert (row["w"], row["arr"], row["hit"]) == (1.0, ["x", "y"], True)

@@ -113,3 +113,40 @@ def test_create_dataframe_lint_is_live(tmp_path):
     ops.mkdir()
     (ops / "x.py").write_text('def f(spark):\n    return spark.createDataFrame([], "a int")\n')
     assert create_dataframe_sites(str(tmp_path)) == [(os.path.join("operators", "x.py"), 2)]
+
+
+QUERY_MODULES = tuple(
+    os.path.join("operators", f"{m}.py") for m in ("wand", "positional", "query", "boolquery")
+)
+
+
+def column_isin_sites(pkg_dir=PKG_DIR, files=QUERY_MODULES):
+    """(file, line) of every Column `.isin(` call in the query operators.
+    Their per-query constants go through plans/layout.sql_lit /
+    sql_in — one filter string per query, where a Column `isin` costs a
+    JVM round trip per value. numpy's `np.isin(` is not a Column call."""
+    import re
+
+    call = re.compile(r"(?<!np)\.isin\(")
+    sites = []
+    for rel in files:
+        with open(os.path.join(pkg_dir, rel)) as f:
+            for no, line in enumerate(f, 1):
+                if call.search(line):
+                    sites.append((rel, no))
+    return sites
+
+
+def test_query_constants_go_through_sql_literals():
+    assert column_isin_sites() == []
+
+
+def test_column_isin_lint_is_live(tmp_path):
+    ops = tmp_path / "operators"
+    ops.mkdir()
+    for rel in QUERY_MODULES:
+        (tmp_path / rel).write_text("import numpy as np\nkeep = np.isin(a, b)\n")
+    (tmp_path / QUERY_MODULES[0]).write_text(
+        'import numpy as np\nkeep = np.isin(a, b)\ndf = df.filter(F.col("term").isin(terms))\n'
+    )
+    assert column_isin_sites(str(tmp_path)) == [(QUERY_MODULES[0], 3)]
