@@ -3,5 +3,4 @@ from .tokenize import (  # noqa: F401
     TOKEN_SPLIT_RE,
     tokenize_expr,
     tokenize_py,
-    tokenize_udf,
 )

@@ -12,17 +12,19 @@ deterministic rule, shared verbatim with the pure-Python oracle:
   (mirrors reference tokenizer.py:69-70) unless in the preserve-list of
   short tech terms (mirrors reference tokenizer.py:29-33).
 
-Three implementations with identical semantics (tests assert equality):
-  tokenize_py    — pure Python (oracle + driver-side query tokenization)
-  tokenize_expr  — Spark built-in expressions (JVM-side; used by the
-                   text-statistics and dedup operators)
-  tokenize_udf   — Arrow-vectorized pandas UDF (the index-build path;
-                   also the extension point for tokenizers that
-                   built-ins can't express, e.g. BPE)
+Two forms with identical semantics (tests assert equality):
+  tokenize_py    — pure Python: the oracle, and the engine's analyzer at
+                   both index time (operators/build.term_frequencies'
+                   kernel) and query time
+  tokenize_expr  — Spark built-in expressions (JVM-side; the text-
+                   statistics and dedup operators use it)
+
+An analyzer is any `Callable[[str], list[str]]` (tokenize_py, or the
+opt-in code analyzer tokenize_code_py below): the index builders,
+positional postings and percolate all take one, and the caller scores
+with the same callable on the query side.
 """
 
-# NOTE: no `from __future__ import annotations` here — PySpark resolves
-# pandas_udf type hints at definition time and stringified hints break it.
 import re
 
 # Reference keeps short tech terms verbatim (tokenizer.py:29-33); all are
@@ -36,7 +38,8 @@ _SPLIT = re.compile(TOKEN_SPLIT_RE)
 
 
 def tokenize_py(text: str) -> list[str]:
-    """Pure-Python tokenizer — the oracle's and the query-side's."""
+    """Pure-Python tokenizer — the oracle, and the default analyzer at
+    index time and query time."""
     if not text:
         return []
     return [
@@ -62,20 +65,6 @@ def tokenize_expr(col):
     )
 
 
-def tokenize_udf():
-    """Arrow-vectorized pandas UDF with semantics identical to
-    tokenize_py/tokenize_expr (asserted in tests/test_tokenizer.py)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _tok(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: tokenize_py(x) if x is not None else [])
-
-    return _tok
-
-
 # --- code-aware identifier subtokenization (opt-in analyzer) ---------------
 #
 # The pinned engine tokenizer treats `mergeShards` / `merge_shards` as
@@ -84,8 +73,9 @@ def tokenize_udf():
 # opt-in analyzer emits, per identifier, the lowercased full token plus
 # its camelCase/snake_case/digit-boundary parts (only when the
 # identifier actually compounds; plain words are not double-counted).
-# Standard technique (Lucene-style word-delimiter filtering). py/expr
-# twins with asserted-identical semantics, same as the base tokenizer.
+# Standard technique (Lucene-style word-delimiter filtering). Pass
+# tokenize_code_py as `tokenizer=` to the index build and tokenize the
+# query with it too.
 
 _CAMEL_RUN = re.compile(r"([A-Z]+)([A-Z][a-z])")   # HTTPServer -> HTTP Server
 _CAMEL_LOW = re.compile(r"([a-z0-9])([A-Z])")       # mergeShards -> merge Shards
@@ -127,34 +117,3 @@ def tokenize_code_py(text: str) -> list[str]:
             out.extend(subs)
     return out
 
-
-def tokenize_code_expr(col):
-    """JVM-expression twin of tokenize_code_py (codegen'd; asserted
-    identical in tests/test_tokenizer.py)."""
-    from pyspark.sql import functions as F
-
-    raw = F.filter(F.split(col, r"[^A-Za-z0-9_]+"), lambda t: t != "")
-    preserve = [F.lit(t) for t in sorted(PRESERVE_TERMS)]
-
-    def keep(t):
-        return (F.length(t) >= MIN_TOKEN_LEN) | t.isin(*preserve)
-
-    def expand(t):
-        spaced = F.regexp_replace(t, r"([A-Z]+)([A-Z][a-z])", r"$1 $2")
-        spaced = F.regexp_replace(spaced, r"([a-z0-9])([A-Z])", r"$1 $2")
-        spaced = F.regexp_replace(spaced, r"([A-Za-z])([0-9])", r"$1 $2")
-        spaced = F.regexp_replace(spaced, r"([0-9])([A-Za-z])", r"$1 $2")
-        spaced = F.regexp_replace(spaced, r"_", " ")
-        subs = F.filter(
-            F.split(F.lower(spaced), r" +"), lambda p: (p != "") & keep(p)
-        )
-        low = F.lower(t)
-        full = F.when(keep(low), F.array(low)).otherwise(
-            F.array().cast("array<string>")
-        )
-        compound = (F.size(subs) > 1) | (
-            (F.size(subs) == 1) & (F.element_at(subs, 1) != low)
-        )
-        return F.when(compound, F.concat(full, subs)).otherwise(full)
-
-    return F.flatten(F.transform(raw, expand))

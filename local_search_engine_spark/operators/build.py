@@ -6,15 +6,16 @@ reference computes IDF within each file only and then merges scores from
 different files as if comparable (SURVEY.md §4.1 defect 5); the north
 rule pins a global inverted index with global df/idf/avgdl.
 
-Dataflow (every step is built-in Catalyst territory — partial+final hash
+Dataflow (one Python kernel for the analyzer, then built-in Catalyst
 aggregation, broadcast joins, pushdown, AQE):
 
   corpus (repo,path,commit,lang,content)
-    → docs      doc_id, content_sha256, tokens, doc_len
-    → tf        (doc_id, term) → tf                 [one shuffle on (doc_id,term)]
+    → tf        (doc_id, term) → tf                 [one mapInPandas, no shuffle]
+    → docs      doc_id, content_sha256, doc_len     [doc_len = sum(tf) per doc]
     → dfreq     term → df                           [map-side partial agg]
     → stats     n_docs, avgdl                       [tiny agg, collected]
-    → idf       two-pass epsilon floor (needs global avg of raw idf)
+    → idf       two-pass epsilon floor (needs the global mean of raw idf,
+                summed exactly so it does not depend on partition layout)
 
 BM25Okapi semantics reproduced exactly (SURVEY.md §2.10):
   idf_raw(t) = ln(N - df + 0.5) - ln(df + 0.5)
@@ -24,9 +25,10 @@ BM25Okapi semantics reproduced exactly (SURVEY.md §2.10):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Callable
 
 from .. import BM25_B, BM25_EPSILON, BM25_K1
-from ..functions.tokenize import tokenize_udf
+from ..functions.tokenize import tokenize_py
 
 
 # Broadcast the doc_id table when the corpus has at most this many rows
@@ -170,124 +172,58 @@ def with_doc_ids(corpus, partitions: int | None = None):
     )
 
 
-def tokenized_docs(
+def term_frequencies(
     docs,
     text_col: str = "content",
-    tokenizer=None,
+    tokenizer: Callable[[str], list[str]] = tokenize_py,
 ):
-    """Add tokens + doc_len through the Arrow-batched pandas UDF: the
-    expression tokenizer's filter lambda is an INTERPRETED higher-order
-    function and downstream in-row consumers re-reference the whole
-    split tree, measuring 2.5 s for a 50 k-doc tokenize pass vs 0.75 s
-    through the kernel (which is also a substitution barrier, so tokens
-    materialize exactly once). Both tokenizers are token-identical
-    (tests/test_tokenizer.py asserts it).
+    """Per-doc term frequencies (doc_id, term, tf) — the analyzer's one
+    index-time path, the same `Callable[[str], list[str]]` contract as
+    positional postings, percolate and the query side.
 
-    tokenizer: optional Column→Column analyzer override (e.g.
-    functions.tokenize.tokenize_code_expr for camelCase/snake_case
-    subtoken indexing). The caller owns query-side consistency: score
-    the index built with analyzer X using X's python twin (the pinned
-    default tokenizer remains the oracle-gated contract)."""
-    from pyspark.sql import functions as F
+    One mapInPandas kernel: per doc, tokenizer(text) → Counter → one row
+    per distinct term, in ascending term order (code point order, which
+    is Spark's string order), so a doc's rows and the written parquet do
+    not depend on the analyzer's token order. A doc with null text or no tokens emits
+    no row. No token array is materialized, nothing is exchanged, and
+    the output stays clustered by doc_id in input order. Measured (4
+    vCPU, 20 k docs, median of 8): 0.42 s on local[4] and 0.47 s on
+    local-cluster[2,2,1536], against 0.87 / 0.91 s for a pandas-UDF
+    tokens column counted by an array_sort run-length lambda plan and
+    0.97 / 1.02 s for the same column through explode + groupBy."""
+    from collections import Counter
 
-    if tokenizer is not None:
-        tok = tokenizer(F.col(text_col))
-    else:
-        tok = tokenize_udf()(F.col(text_col))
-    return docs.withColumn("tokens", tok).withColumn("doc_len", F.size("tokens"))
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
 
-
-def term_frequencies(tok_docs, impl: str = "auto"):
-    """A1: per-doc term frequencies, two plans:
-
-    impl='shuffle': explode(tokens) → groupBy(doc_id, term). Catalyst
-    plans partial hash agg (map-side combine on the exploded stream) →
-    shuffle on (doc_id, term) → final agg; hot terms do NOT skew this
-    shuffle because the key includes doc_id.
-
-    impl='inrow': tf never leaves the row — all of a doc's tokens are
-    already co-located, so grouping by (doc_id, term) needs no exchange
-    at all: array_sort(tokens) → run boundaries (positions where the
-    sorted stream changes) → (term, run length) structs → explode.
-    ZERO shuffle; the exploded output is still clustered by doc_id.
-
-    impl='auto' (default) picks by topology, exactly as measured:
-    single-JVM local[*] → 'inrow' (40 k-doc full build 64-67 s → 34-35 s:
-    the in-process "shuffle" still pays hash-table + row serialization
-    with no network to save, so removing it is pure win); any
-    multi-executor master → 'shuffle' (4×4-executor local-cluster
-    persisted build: shuffle 157 s vs inrow 183 s on a quiet box — the
-    interpreted sort/boundary lambdas cost more than a loopback shuffle;
-    on a real network-attached cluster the balance shifts back toward
-    'inrow', so the knob stays exposed).
-    """
-    from pyspark.sql import functions as F
-
-    if impl == "auto":
-        master = tok_docs.sparkSession.conf.get("spark.master", "")
-        # bare "local" (no brackets) is also single-JVM; "local-cluster"
-        # must stay on the shuffle path, which the bracket check ensures
-        impl = (
-            "inrow"
-            if master == "local" or master.startswith("local[")
-            else "shuffle"
-        )
-    if impl == "shuffle":
-        return (
-            tok_docs.select("doc_id", F.explode("tokens").alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").alias("tf"))
-        )
-    # materialize EACH intermediate as a real column before any lambda
-    # touches it: Catalyst does not common-subexpression-eliminate
-    # inside higher-order functions, so element_at(array_sort(x), i)
-    # re-sorts the array PER ELEMENT (measured 30x slower than the
-    # shuffle plan before this staging; ~equal after)
-    s = F.col("s")
-    n = F.size(s)
-    staged = tok_docs.select("doc_id", F.array_sort(F.col("tokens")).alias("s"))
-    starts_expr = F.filter(
-        F.sequence(F.lit(1), n),
-        lambda i: (i == 1) | (F.element_at(s, i) != F.element_at(s, i - 1)),
-    )
-    # sequence(1, 0) would generate a DESCENDING [1, 0] — guard empties
-    staged = staged.select(
-        "doc_id",
-        "s",
-        F.when(n > 0, starts_expr).otherwise(F.array().cast("array<int>")).alias(
-            "starts"
-        ),
-    )
-    ends = F.concat(
-        F.slice(F.col("starts"), 2, F.size("starts")), F.array(n + 1)
-    )
-    runs = F.zip_with(
-        F.col("starts"),
-        ends,
-        lambda a, b: F.struct(
-            F.element_at(s, a).alias("term"), (b - a).cast("long").alias("tf")
-        ),
-    )
-    # token-less doc: starts=[] but ends=[1], and zip_with null-pads the
-    # shorter side — without this guard the doc emits one spurious
-    # (term=NULL, tf=NULL) row that the shuffle plan never produces
-    runs = F.when(n > 0, runs).otherwise(
-        F.array().cast("array<struct<term:string,tf:bigint>>")
-    )
-    return staged.select("doc_id", F.explode(runs).alias("r")).select(
-        "doc_id", F.col("r.term").alias("term"), F.col("r.tf").alias("tf")
+    schema = T.StructType(
+        [
+            docs.schema["doc_id"],
+            T.StructField("term", T.StringType()),
+            T.StructField("tf", T.LongType()),
+        ]
     )
 
+    def kernel(batches):
+        for pdf in batches:
+            rows, terms, tfs = [], [], []
+            for i, text in enumerate(pdf[text_col].tolist()):
+                if text is None:
+                    continue
+                for term, n in sorted(Counter(tokenizer(text)).items()):
+                    rows.append(i)
+                    terms.append(term)
+                    tfs.append(n)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"].to_numpy()[rows],
+                    "term": terms,
+                    "tf": np.asarray(tfs, dtype=np.int64),
+                }
+            )
 
-def corpus_stats(tok_docs) -> tuple[int, float]:
-    """A3: N and avgdl — one tiny aggregate, collected to the driver
-    (these are broadcast scalars in every downstream expression)."""
-    from pyspark.sql import functions as F
-
-    row = tok_docs.agg(
-        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
-    ).first()
-    return int(row["n_docs"]), float(row["avgdl"] or 0.0)
+    return docs.select("doc_id", text_col).mapInPandas(kernel, schema)
 
 
 def doc_freqs(tf):
@@ -312,7 +248,13 @@ def idf_table(dfreq, n_docs: int, epsilon: float = BM25_EPSILON):
         F.log(F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
         - F.log(F.col("df") + F.lit(0.5)),
     )
-    avg_idf = float(raw.agg(F.avg("idf_raw")).first()[0] or 0.0)
+    # summed as DECIMAL(38,18), which is exact and associative, and
+    # divided on the driver: a double avg would depend on the partition
+    # layout's summation order
+    total, n = raw.agg(
+        F.sum(F.col("idf_raw").cast("decimal(38,18)")), F.count("*")
+    ).first()
+    avg_idf = float(total / n) if n else 0.0
     eps = epsilon * avg_idf
     idf = raw.withColumn(
         "idf",
@@ -326,45 +268,36 @@ def build_index_from(
     text_col: str = "content",
     params: BM25Params | None = None,
     cache: bool = True,
-    tf_impl: str = "auto",
-    tokenizer=None,
+    tokenizer: Callable[[str], list[str]] = tokenize_py,
 ) -> InvertedIndex:
     """Index build over ANY table that already carries a unique doc_id
     bigint column + a text column (e.g. the testdata `documents` table).
     The InvertedIndex.docs keeps every input column except the raw text
-    and tokens (column pruning — content is never carried past here).
+    (column pruning — content is never carried past here).
 
-    Tokenization happens exactly ONCE: the only consumer of the token
-    arrays is the tf aggregation. doc_len is recovered as sum(tf) per doc
-    (identical to size(tokens) by construction — tf counts every kept
-    token), and the docs side-table is a tokenize-free projection
+    Tokenization happens exactly ONCE, inside the term_frequencies
+    kernel. doc_len is recovered as sum(tf) per doc (tf counts every
+    kept token), and the docs side-table is a tokenize-free projection
     (sha256 + metadata) left-joined to it, doc_len 0 for token-less docs.
-    This matters at scale: token arrays are ~the corpus size again and
-    are never cached or re-derived; the old shape re-tokenized the
-    corpus once per downstream action."""
+
+    tokenizer: the analyzer, applied to every doc (e.g.
+    functions.tokenize.tokenize_code_py for camelCase/snake_case subtoken
+    indexing). Score the index with the SAME callable on the query side;
+    the pinned default tokenize_py is the oracle-gated contract."""
     from pyspark.sql import functions as F
 
     params = params or BM25Params()
-    # widen a thin scan before the tokenize+tf pipeline (single-row-group
-    # inputs otherwise run the whole build on 1-2 cores). Downstream
-    # float reproducibility: per-doc scores fold in pinned term order
-    # (query.score_terms), doc_len/df/tf are integers, and the sf0.001 +
-    # sf0.01 gate sweep confirms the avg_idf partial-aggregation layout
-    # shift is absorbed by the two-pass epsilon floor's rounded consumers
-    # (the driver checks correctness at exactly these SFs).
+    # widen a thin scan before the tf kernel (single-row-group inputs
+    # otherwise run the whole build on 1-2 cores). Row placement changes
+    # no result: doc_len/df/tf are integers, avgdl averages integers and
+    # idf_table sums avg_idf exactly.
     from ..plans.layout import widen_for_kernel
 
-    tok_in = widen_for_kernel(
-        docs_with_id.select(
-            "doc_id", *([text_col] if text_col != "doc_id" else [])
-        )
-    )
-    tok = tokenized_docs(
-        tok_in,
+    tf = term_frequencies(
+        widen_for_kernel(docs_with_id.select("doc_id", text_col)),
         text_col=text_col,
         tokenizer=tokenizer,
     )
-    tf = term_frequencies(tok, impl=tf_impl)
     if cache:
         tf = tf.cache()
     meta = docs_with_id
@@ -399,8 +332,7 @@ def build_index_fields(
     field_weights: dict,
     params: BM25Params | None = None,
     cache: bool = True,
-    tf_impl: str = "auto",
-    tokenizer=None,
+    tokenizer: Callable[[str], list[str]] = tokenize_py,
 ) -> InvertedIndex:
     """BM25F multi-field index (Robertson & Zaragoza's simplified BM25F;
     Elasticsearch `combined_fields`): the fields are treated as ONE
@@ -427,8 +359,8 @@ def build_index_fields(
     a code-search deployment wants (`path^3 + content` makes filename
     hits outrank body hits).
 
-    Scale shape: one tokenize + one tf aggregation PER FIELD (each the
-    same plan as the single-field build over that column), one
+    Scale shape: one tf kernel PER FIELD (each the same plan as the
+    single-field build over that column, with the same `tokenizer`), one
     unionByName (no shuffle), one (doc_id, term) groupBy — the blend
     shuffle replaces the single-field build's none, but it is keyed by
     (doc_id, term) so hot terms do not skew it. Weights that are exact
@@ -451,9 +383,7 @@ def build_index_fields(
                 f"{sorted(docs_with_id.columns)}"
             )
     # same thin-scan widening rationale as build_index_from: the
-    # per-field tokenize+tf pipelines are the cost, and the sf0.001/
-    # sf0.01 gate sweep pins that rounded consumers absorb the
-    # avg_idf partial-layout shift
+    # per-field tf kernels are the cost
     from ..plans.layout import widen_for_kernel
 
     tok_src = widen_for_kernel(
@@ -462,8 +392,7 @@ def build_index_fields(
     blended = None
     for fcol in sorted(field_weights):
         w = float(field_weights[fcol])
-        tok = tokenized_docs(tok_src, text_col=fcol, tokenizer=tokenizer)
-        tf_f = term_frequencies(tok, impl=tf_impl).select(
+        tf_f = term_frequencies(tok_src, text_col=fcol, tokenizer=tokenizer).select(
             "doc_id", "term", (F.col("tf") * F.lit(w)).alias("wtf")
         )
         blended = tf_f if blended is None else blended.unionByName(tf_f)
@@ -523,7 +452,6 @@ def build_index(
     corpus,
     params: BM25Params | None = None,
     cache: bool = True,
-    tf_impl: str = "auto",
 ) -> InvertedIndex:
     """End-to-end logical index build over an input_hint-shaped corpus
     (repo, path, commit, lang, content): assigns the canonical doc_id,
@@ -534,5 +462,4 @@ def build_index(
         text_col="content",
         params=params,
         cache=cache,
-        tf_impl=tf_impl,
     )

@@ -119,13 +119,11 @@ class PersistedIndexState:
         batch_id; returns the commit-log entry (None if already done)."""
         from pyspark.sql import functions as F
 
-        from ..operators.build import term_frequencies, tokenized_docs
+        from ..operators.build import term_frequencies
 
         if self.committed(batch_id):
             return None
-        tok = tokenized_docs(docs_with_id, text_col=text_col)
-        # topology-auto tf (see build.term_frequencies): in-row single-JVM
-        tf = term_frequencies(tok, impl="auto").cache()
+        tf = term_frequencies(docs_with_id, text_col=text_col).cache()
         tf.write.mode("overwrite").parquet(
             os.path.join(self.dir, "tf", f"batch={batch_id}")
         )

@@ -252,3 +252,34 @@ def test_plans_use_one_mapinpandas_per_grouping(spark, tmp_path, monkeypatch):
     )
     p = _plan(mmr_rerank_batch(cands, emb, k=2))
     assert "MapInPandas" in p and "FlatMapGroupsInPandas" not in p, p
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_idf_is_bit_identical_across_layouts(spark, sf):
+    """avg_idf — and through the epsilon floor the idf table — does not
+    depend on how the corpus is partitioned: input repartition(1) vs
+    repartition(7), each under two shuffle-partition counts."""
+    import os
+    import struct
+
+    from __spark_entry__ import SF0001
+    from local_search_engine_spark.operators.build import build_index_from
+
+    path = os.path.join(os.path.dirname(SF0001), sf, "documents.parquet")
+    docs = spark.read.parquet(path).select("doc_id", "text")
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    seen = {}
+    try:
+        for parts in (1, 7):
+            for shuffle in (4, 13):
+                spark.conf.set(key, str(shuffle))
+                idx = build_index_from(docs.repartition(parts), text_col="text", cache=False)
+                idf = tuple(
+                    (r["term"], r["df"], struct.pack("<dd", r["idf_raw"], r["idf"]))
+                    for r in idx.idf.orderBy("term").collect()
+                )
+                seen[(parts, shuffle)] = (struct.pack("<d", idx.avg_idf), idf)
+    finally:
+        spark.conf.set(key, saved)
+    assert len(set(seen.values())) == 1, {k: v[0].hex() for k, v in seen.items()}

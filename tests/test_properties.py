@@ -242,66 +242,53 @@ def test_doc_id_enumeration_dense_deterministic_no_window(spark):
     assert "Exchange hashpartitioning" not in above_cache, plan
 
 
-def test_term_frequencies_inrow_equals_shuffle_and_zero_exchange(spark):
-    """The in-row run-length tf plan (build default) is value-identical
-    to the explode+groupBy shuffle plan and contains NO Exchange —
-    per-doc term counts never need to leave the row."""
+def test_term_frequencies_kernel_matches_oracle(spark):
+    """The index-time tf kernel emits, per doc and in ascending term
+    order, exactly sorted(Counter(tokenize_py(text)).items()); docs with
+    null text or no tokens emit no row; and the plan is one MapInPandas
+    over the scan — no Exchange, no token-array UDF."""
+    import re
+    from collections import Counter
+
     from pyspark.sql import functions as F
 
-    from local_search_engine_spark.operators.build import (
-        term_frequencies,
-        tokenized_docs,
-    )
+    from __spark_entry__ import SF0001
+    from local_search_engine_spark.operators.build import term_frequencies
 
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .withColumnRenamed("text", "content")
+    docs = spark.read.parquet(f"{SF0001}/documents.parquet").select(
+        F.col("doc_id").cast("long").alias("doc_id"), F.col("text").alias("content")
     )
-    # token-less docs (empty text / everything below MIN_TOKEN_LEN) must
-    # produce NO tf row on either plan — the inrow zip_with null-pad
-    # regression emitted a (doc_id, NULL, NULL) row for them
     extra = spark.createDataFrame(
-        [(-1, ""), (-2, "a b"), (-3, "zz zz yy")], "doc_id long, content string"
+        [
+            (-1, ""),
+            (-2, None),
+            (-3, "a b"),
+            (-4, "ip os io a b z9 db db"),
+            (-5, "Ümlaut straße 中文 naïve café CAFÉ zz zz yy"),
+        ],
+        "doc_id long, content string",
     )
-    docs = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "content"
-    ).unionByName(extra)
-    tok = tokenized_docs(docs)
-    a = term_frequencies(tok, impl="shuffle")
-    b = term_frequencies(tok, impl="inrow")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert b.where(F.col("term").isNull()).count() == 0
-    plan = b._jdf.queryExecution().executedPlan().toString()
+    docs = docs.unionByName(extra)
+    tf = term_frequencies(docs)
+    want = {
+        r["doc_id"]: sorted(Counter(tokenize_py(r["content"] or "")).items())
+        for r in docs.collect()
+    }
+    got: dict = {}
+    order = []
+    for r in tf.collect():
+        if not order or order[-1] != r["doc_id"]:
+            order.append(r["doc_id"])
+        got.setdefault(r["doc_id"], []).append((r["term"], r["tf"]))
+    assert len(order) == len(set(order)), "a doc's rows are not contiguous"
+    assert got == {d: w for d, w in want.items() if w}
+    assert not {-1, -2, -3} & set(got)
+    assert got[-4] == [("db", 2), ("io", 1), ("ip", 1), ("os", 1), ("z9", 1)]
+    assert len(got) > 5
+    plan = tf._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-
-
-@pytest.mark.usefixtures("spark")
-def test_code_tokenizer_twins_property(spark):
-    """Property: tokenize_code_py == tokenize_code_expr on random
-    identifier-ish text (hypothesis strategies over case transitions,
-    underscores, digits, punctuation, unicode)."""
-    from pyspark.sql import functions as F
-
-    from local_search_engine_spark.functions.tokenize import (
-        tokenize_code_expr,
-        tokenize_code_py,
-    )
-
-    code_texts = st.lists(
-        st.text(
-            alphabet=st.sampled_from(list("abXYZ_09 .(:\nüA")), max_size=24
-        ),
-        max_size=12,
-    ).map(" ".join)
-
-    @given(code_texts)
-    @settings(max_examples=60, deadline=None)
-    def check(text):
-        df = spark.createDataFrame([(text,)], "t string")
-        got = df.select(tokenize_code_expr(F.col("t")).alias("x")).first()["x"]
-        assert got == tokenize_code_py(text), repr(text)
-
-    check()
+    assert len(re.findall(r"(?<![A-Za-z])MapInPandas", plan)) == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
 
 
 # ---------------------------------------------------------------------------

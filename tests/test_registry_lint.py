@@ -150,3 +150,41 @@ def test_column_isin_lint_is_live(tmp_path):
         'import numpy as np\nkeep = np.isin(a, b)\ndf = df.filter(F.col("term").isin(terms))\n'
     )
     assert column_isin_sites(str(tmp_path)) == [(QUERY_MODULES[0], 3)]
+
+
+def master_read_sites(pkg_dir=PKG_DIR):
+    """(file, line) of every `spark.master` conf key or `.master`
+    attribute read in the package (`SparkSession.builder.master(...)` sets
+    the master; it is not a read). Plan choice must not depend on the deployment
+    string: the same corpus plans the same way on local[*],
+    local-cluster and a real cluster."""
+    import re
+
+    read = re.compile(r"spark\.master|\.master\b(?!\s*\()")
+    sites = []
+    for root, _, files in os.walk(pkg_dir):
+        for name in sorted(files):
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as f:
+                    for no, line in enumerate(f, 1):
+                        if read.search(line):
+                            sites.append((os.path.relpath(path, pkg_dir), no))
+    return sites
+
+
+def test_plans_never_read_spark_master():
+    assert master_read_sites() == []
+
+
+def test_spark_master_lint_is_live(tmp_path):
+    ops = tmp_path / "operators"
+    ops.mkdir()
+    (ops / "x.py").write_text(
+        "def f(df, sc):\n"
+        '    a = df.sparkSession.conf.get("spark.master", "")\n'
+        "    b = SparkSession.builder.master(a)\n"
+        "    return sc.master\n"
+    )
+    x = os.path.join("operators", "x.py")
+    assert master_read_sites(str(tmp_path)) == [(x, 2), (x, 4)]

@@ -1,10 +1,10 @@
-"""Tokenizer parity: the three implementations (pure Python, built-in
-expression, pandas UDF) must agree token-for-token (FIXTURES.md §4)."""
+"""Tokenizer parity: the two forms (pure Python, built-in expression)
+must agree token-for-token (FIXTURES.md §4), and an analyzer callable
+passed to the index build is the one the query side uses."""
 
 from local_search_engine_spark.functions.tokenize import (
     tokenize_expr,
     tokenize_py,
-    tokenize_udf,
 )
 from local_search_engine_spark.sources.corpus import gen_corpus_pandas
 
@@ -24,7 +24,7 @@ def test_golden_tokens():
         assert tokenize_py(text) == want, text
 
 
-def test_expr_and_udf_match_python(spark):
+def test_expr_matches_python(spark):
     pdf = gen_corpus_pandas(40)
     pdf.loc[len(pdf)] = {
         "repo": "r",
@@ -38,7 +38,6 @@ def test_expr_and_udf_match_python(spark):
         df.select(
             "path",
             tokenize_expr(df.content).alias("t_expr"),
-            tokenize_udf()(df.content).alias("t_udf"),
         )
         .orderBy("path")
         .collect()
@@ -46,36 +45,6 @@ def test_expr_and_udf_match_python(spark):
     want = {r["path"]: tokenize_py(r["content"]) for _, r in pdf.iterrows()}
     for row in got:
         assert list(row["t_expr"]) == want[row["path"]]
-        assert list(row["t_udf"]) == want[row["path"]]
-
-
-def test_code_tokenizer_py_expr_identical(spark):
-    """The opt-in code analyzer's py/expr twins agree token-for-token
-    on identifier-heavy fixtures (camelCase, UPPER runs, snake_case,
-    digit boundaries, preserve-list shorts, unicode punctuation)."""
-    from pyspark.sql import functions as F
-
-    from local_search_engine_spark.functions.tokenize import (
-        tokenize_code_expr,
-        tokenize_code_py,
-    )
-
-    texts = [
-        "def mergeShards2Fast(a_b, HTTPServer): return AI",
-        "snake_case_name camelCase XMLHttpRequest v2Parser",
-        "plain words only",
-        "",
-        "__dunder__ _private x y",
-        "getIPAddress os.path.join DB2Admin",
-        "ümlaut-split mixedÜmlaut",
-    ]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
-    got = {
-        r["i"]: r["toks"]
-        for r in df.select("i", tokenize_code_expr(F.col("t")).alias("toks")).collect()
-    }
-    for i, t in enumerate(texts):
-        assert got[i] == tokenize_code_py(t), (i, t, got[i], tokenize_code_py(t))
 
 
 def test_code_tokenizer_finds_subtokens():
@@ -88,36 +57,56 @@ def test_code_tokenizer_finds_subtokens():
     assert tokenize_code_py("merge merge").count("merge") == 2
 
 
-def test_code_analyzer_end_to_end_search(spark):
-    """Index built with the code analyzer: query 'merge' (tokenized with
-    the SAME analyzer's python twin) finds the camelCase-only doc that
-    the default analyzer cannot see."""
+def _code_docs(spark):
+    return spark.createDataFrame(
+        [
+            (0, "class ShardMerger:\n  def mergeShards(self): pass", "shard_merger.py"),
+            (1, "unrelated zebra module", "zebra.py"),
+            (2, "plain merge function here", "util.py"),
+        ],
+        "doc_id long, text string, path string",
+    )
+
+
+def _hits(idx, tokenizer, query="merge"):
     from collections import Counter
 
-    from local_search_engine_spark.functions.tokenize import (
-        tokenize_code_expr,
-        tokenize_code_py,
-    )
-    from local_search_engine_spark.operators.build import build_index_from
     from local_search_engine_spark.operators.query import score_terms
 
-    docs = spark.createDataFrame(
-        [
-            (0, "class ShardMerger:\n  def mergeShards(self): pass"),
-            (1, "unrelated zebra module"),
-            (2, "plain merge function here"),
-        ],
-        "doc_id long, text string",
-    )
+    counts = dict(sorted(Counter(tokenizer(query)).items()))
+    return {r["doc_id"] for r in score_terms(idx, counts).collect()}
 
-    def hits(tokenizer, tokenize_query):
-        idx = build_index_from(
-            docs, text_col="text", cache=False, tokenizer=tokenizer
+
+def test_code_analyzer_end_to_end_search(spark):
+    """Index built with the code analyzer: query 'merge' (tokenized with
+    the SAME callable) finds the camelCase-only doc that the default
+    analyzer cannot see."""
+    from local_search_engine_spark.functions.tokenize import tokenize_code_py
+    from local_search_engine_spark.operators.build import build_index_from
+
+    docs = _code_docs(spark)
+
+    def hits(tokenizer):
+        idx = build_index_from(docs, text_col="text", cache=False, tokenizer=tokenizer)
+        return _hits(idx, tokenizer)
+
+    assert hits(tokenize_py) == {2}
+    assert hits(tokenize_code_py) == {0, 2}
+
+
+def test_code_analyzer_bm25f_search(spark):
+    """The same analyzer contract through the BM25F build: every field
+    is tokenized with the callable, so the camelCase doc is found."""
+    from local_search_engine_spark.functions.tokenize import tokenize_code_py
+    from local_search_engine_spark.operators.build import build_index_fields
+
+    docs = _code_docs(spark)
+
+    def hits(tokenizer):
+        idx = build_index_fields(
+            docs, {"text": 1.0, "path": 2.0}, cache=False, tokenizer=tokenizer
         )
-        counts = dict(sorted(Counter(tokenize_query("merge")).items()))
-        return {r["doc_id"] for r in score_terms(idx, counts).collect()}
+        return _hits(idx, tokenizer)
 
-    from local_search_engine_spark.functions.tokenize import tokenize_py
-
-    assert hits(None, tokenize_py) == {2}
-    assert hits(tokenize_code_expr, tokenize_code_py) == {0, 2}
+    assert hits(tokenize_py) == {2}
+    assert hits(tokenize_code_py) == {0, 2}
