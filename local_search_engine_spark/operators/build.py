@@ -90,6 +90,11 @@ def with_doc_ids(corpus, partitions: int | None = None):
     round trip of the content column was the whole cost, and it
     anti-scaled; the keys-only JVM rank is also what survives 10^12
     files — the persisted rank state is keys, not corpus.)
+
+    Returns (the corpus with doc_id + content_sha256, the persisted key
+    table). Every action over the first re-reads the second, so the
+    caller unpersists the key table once those actions have run or
+    their results are cached.
     """
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
@@ -167,9 +172,8 @@ def with_doc_ids(corpus, partitions: int | None = None):
     # the same cost class as the range shuffle, and cluster-scalable.
     if acc <= BROADCAST_IDS_MAX_ROWS:
         ids = F.broadcast(ids)
-    return corpus.withColumn("content_sha256", F.sha2(F.col("content"), 256)).join(
-        ids, key
-    )
+    out = corpus.withColumn("content_sha256", F.sha2(F.col("content"), 256))
+    return out.join(ids, key), k
 
 
 def term_frequencies(
@@ -263,30 +267,23 @@ def idf_table(dfreq, n_docs: int, epsilon: float = BM25_EPSILON):
     return idf, avg_idf
 
 
-def build_index_from(
+def index_tables(
     docs_with_id,
     text_col: str = "content",
-    params: BM25Params | None = None,
     cache: bool = True,
     tokenizer: Callable[[str], list[str]] = tokenize_py,
-) -> InvertedIndex:
-    """Index build over ANY table that already carries a unique doc_id
-    bigint column + a text column (e.g. the testdata `documents` table).
-    The InvertedIndex.docs keeps every input column except the raw text
-    (column pruning — content is never carried past here).
+):
+    """The (tf, docs) tables of build_index_from, planned but not run:
+    no Spark job starts here. With cache=True both are cached, so the
+    first action that reads them runs the tf kernel and every later
+    reader (idf, postings, the persisted writes) shares that one run.
 
     Tokenization happens exactly ONCE, inside the term_frequencies
     kernel. doc_len is recovered as sum(tf) per doc (tf counts every
     kept token), and the docs side-table is a tokenize-free projection
-    (sha256 + metadata) left-joined to it, doc_len 0 for token-less docs.
-
-    tokenizer: the analyzer, applied to every doc (e.g.
-    functions.tokenize.tokenize_code_py for camelCase/snake_case subtoken
-    indexing). Score the index with the SAME callable on the query side;
-    the pinned default tokenize_py is the oracle-gated contract."""
+    (sha256 + metadata) left-joined to it, doc_len 0 for token-less docs."""
     from pyspark.sql import functions as F
 
-    params = params or BM25Params()
     # widen a thin scan before the tf kernel (single-row-group inputs
     # otherwise run the whole build on 1-2 cores). Row placement changes
     # no result: doc_len/df/tf are integers, avgdl averages integers and
@@ -311,6 +308,32 @@ def build_index_from(
     )
     if cache:
         docs = docs.cache()
+    return tf, docs
+
+
+def build_index_from(
+    docs_with_id,
+    text_col: str = "content",
+    params: BM25Params | None = None,
+    cache: bool = True,
+    tokenizer: Callable[[str], list[str]] = tokenize_py,
+) -> InvertedIndex:
+    """Index build over ANY table that already carries a unique doc_id
+    bigint column + a text column (e.g. the testdata `documents` table).
+    The InvertedIndex.docs keeps every input column except the raw text
+    (column pruning — content is never carried past here).
+
+    index_tables plans tf and docs; this adds the collected scalars
+    (n_docs, avgdl, avg_idf) and the idf table.
+
+    tokenizer: the analyzer, applied to every doc (e.g.
+    functions.tokenize.tokenize_code_py for camelCase/snake_case subtoken
+    indexing). Score the index with the SAME callable on the query side;
+    the pinned default tokenize_py is the oracle-gated contract."""
+    from pyspark.sql import functions as F
+
+    params = params or BM25Params()
+    tf, docs = index_tables(docs_with_id, text_col, cache, tokenizer)
     row = docs.agg(F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")).first()
     n_docs, avgdl = int(row["n_docs"]), float(row["avgdl"] or 0.0)
     idf, avg_idf = idf_table(doc_freqs(tf), n_docs, params.epsilon)
@@ -457,9 +480,11 @@ def build_index(
     (repo, path, commit, lang, content): assigns the canonical doc_id,
     then delegates. The compressed block-max postings layer is added by
     operators/postings.py on top of this."""
-    return build_index_from(
-        with_doc_ids(corpus),
-        text_col="content",
-        params=params,
-        cache=cache,
-    )
+    ids, keys = with_doc_ids(corpus)
+    idx = build_index_from(ids, text_col="content", params=params, cache=cache)
+    if cache:
+        # the n_docs aggregate has filled the docs and tf caches, and
+        # idf reads tf: nothing reads the key table again. An uncached
+        # index re-reads it on every action, so it stays persisted.
+        keys.unpersist()
+    return idx

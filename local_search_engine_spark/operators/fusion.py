@@ -33,9 +33,12 @@ def rrf_fuse(dense, sparse, k_fusion: int = 50, w_dense: float = 0.5, w_sparse: 
     reference's default rank len(results)+1 (retriever.py:450-453).
     Tie-break (score DESC, id ASC), pinned as everywhere in the engine.
 
+    An id listed more than once on a side keeps its best (lowest) rank
+    there, and the side's size counts distinct ids.
+
     The per-side sizes are unbounded-window counts over the JOINED
-    relation (ranked inputs carry unique ids and non-null ranks, so
-    count(rank_side) over the full-outer join == that side's row count)
+    relation (after the per-id min, count(rank_side) over the
+    full-outer join == that side's distinct id count)
     — still one Spark job with zero driver actions, and each leg's
     pipeline now appears in the plan exactly ONCE. The previous 1x1
     scalar-aggregate crossJoin referenced every leg twice (size agg +
@@ -49,8 +52,11 @@ def rrf_fuse(dense, sparse, k_fusion: int = 50, w_dense: float = 0.5, w_sparse: 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    d = dense.select(F.col("id"), F.col("rank").alias("rank_d"))
-    s = sparse.select(F.col("id"), F.col("rank").alias("rank_s"))
+    # an id listed twice on one side keeps its best rank there, so it is
+    # fused once and counts once toward that side's default rank; the
+    # aggregate is keyed on id, so its exchange is the one the join needs
+    d = dense.groupBy("id").agg(F.min("rank").alias("rank_d"))
+    s = sparse.groupBy("id").agg(F.min("rank").alias("rank_s"))
     w_all = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )

@@ -24,9 +24,10 @@ Physical layout — designed for 10^12-doc scale:
     appended batch changes N, df and avgdl and silently invalidates
     every block's bound. With doc-local metadata a block
     depends only on its own shard's (doc_id, tf, doc_len), so
-    incremental maintenance can skip untouched shards soundly
-    (plans/checkpoint.update semantics), at the cost of a marginally
-    looser bound (fewer skips, never wrong results).
+    incremental maintenance can skip untouched shards soundly (the
+    per-group fingerprints of plans/checkpoint.build_persisted_index),
+    at the cost of a marginally looser bound (fewer skips, never wrong
+    results).
 
   * Per-shard doc_len arrays are packed once per shard (int32 binary),
     NOT per posting — query-time scoring looks norms up locally.
@@ -65,16 +66,31 @@ def build_postings(
     block_span: int | None = None,
     n_buckets: int = DEFAULT_N_BUCKETS,
 ):
-    """index: operators.build.InvertedIndex → (postings DF, shard_meta DF).
+    """index: operators.build.InvertedIndex → (postings DF, shard_meta DF)."""
+    return (
+        posting_blocks(index.tf, index.docs, docs_per_shard, block_span, n_buckets),
+        shard_meta_table(index.docs, docs_per_shard),
+    )
+
+
+def posting_blocks(
+    tf,
+    docs,
+    docs_per_shard: int = DEFAULT_DOCS_PER_SHARD,
+    block_span: int | None = None,
+    n_buckets: int = DEFAULT_N_BUCKETS,
+):
+    """tf (doc_id, term, tf) + docs (doc_id, doc_len) → postings DF.
 
     Plan: tf ⋈ doc_len → group_in_partitions on (term_bucket, part_id)
     (one shuffle, one sort, one mapInPandas) → per-group numpy block
     encode. No idf join: block metadata is idf/avgdl-free by design
     (see module docstring), so the encode touches ONLY shard-local
     inputs — which both removes a vocabulary-sized join from the
-    build's hot path and makes per-shard incremental re-encoding sound.
-    The doc_len join is left to AQE (broadcast when actually small).
-    shard_meta is one group_in_partitions on part_id over the docs."""
+    build's hot path and makes per-shard incremental re-encoding sound:
+    tf and docs filtered to some shards encode exactly those shards'
+    blocks. The doc_len join is left to AQE (broadcast when actually
+    small)."""
     from pyspark.sql import functions as F
 
     from ..functions.codec import DEFAULT_BLOCK_SPAN
@@ -86,10 +102,10 @@ def build_postings(
     # bucket hash is the PORTABLE h32 (md5-derived) — its driver-side
     # twin h32_py lets the query path derive bucket literals for
     # partition pruning without running a Spark job per query
-    tf = index.tf.withColumn(
+    tf = tf.withColumn(
         "part_id", (F.col("doc_id") / F.lit(docs_per_shard)).cast("long")
     ).withColumn("term_bucket", F.pmod(h32_col(F.col("term")), F.lit(n_buckets)).cast("int"))
-    joined = tf.join(index.docs.select("doc_id", "doc_len"), "doc_id")
+    joined = tf.join(docs.select("doc_id", "doc_len"), "doc_id")
 
     def encode_group(pdf):
         """One call per (term_bucket, part_id) — NOT per term. Grouping by
@@ -110,9 +126,17 @@ def build_postings(
         cols["block_min_dl"] = np.minimum.reduceat(dls, starts).astype(np.int32)
         return pd.DataFrame(cols)
 
-    postings = group_in_partitions(
+    return group_in_partitions(
         joined, ["term_bucket", "part_id"], encode_group, POSTINGS_SCHEMA
     )
+
+
+def shard_meta_table(docs, docs_per_shard: int = DEFAULT_DOCS_PER_SHARD):
+    """docs (doc_id, doc_len) → shard_meta DF: one group_in_partitions
+    on part_id packs each shard's doc_len array."""
+    from pyspark.sql import functions as F
+
+    from ..plans.layout import group_in_partitions
 
     def pack_group(pdf):
         import numpy as np
@@ -130,12 +154,11 @@ def build_postings(
             }
         )
 
-    shard_meta = group_in_partitions(
-        index.docs.select("doc_id", "doc_len").withColumn(
+    return group_in_partitions(
+        docs.select("doc_id", "doc_len").withColumn(
             "part_id", (F.col("doc_id") / F.lit(docs_per_shard)).cast("long")
         ),
         ["part_id"],
         pack_group,
         SHARD_META_SCHEMA,
     )
-    return postings, shard_meta

@@ -365,6 +365,7 @@ def cmd_phrase(spark, corpus, args) -> dict:
     n_buckets = 16
     docs = _with_file(corpus)
     built = False
+    keys = None  # with_doc_ids' key table, unpersisted once the answer is in
     if args.index:
         pos_dir = os.path.join(args.index, "pos")
         ids_dir = os.path.join(args.index, "pos_ids")
@@ -374,7 +375,8 @@ def cmd_phrase(spark, corpus, args) -> dict:
             with open(fp_path) as f:
                 expected = json.load(f)
         if expected != _corpus_fingerprint(docs):
-            ids = with_doc_ids(docs).select("doc_id", "file", "content")
+            ids, keys = with_doc_ids(docs)
+            ids = ids.select("doc_id", "file", "content")
             persist_positional_postings(
                 build_positional_postings(
                     ids, text_col="content", n_buckets=n_buckets
@@ -387,7 +389,8 @@ def cmd_phrase(spark, corpus, args) -> dict:
         postings = load_positional_postings(spark, pos_dir)
         idmap = spark.read.parquet(ids_dir)
     else:
-        ids = with_doc_ids(docs).select("doc_id", "file", "content")
+        ids, keys = with_doc_ids(docs)
+        ids = ids.select("doc_id", "file", "content")
         postings = build_positional_postings(
             ids, text_col="content", n_buckets=n_buckets
         )
@@ -406,6 +409,8 @@ def cmd_phrase(spark, corpus, args) -> dict:
         .select("rank", "file", count_col)
         .collect()
     )
+    if keys is not None:
+        keys.unpersist()
     return {
         "cmd": "phrase",
         "query": args.query,

@@ -53,6 +53,24 @@ def test_rrf_fuse_builds_and_runs_as_one_plan(spark):
     assert rows[3]["rank_d"] == 4
 
 
+def test_rrf_fuse_duplicate_id_keeps_best_rank(spark):
+    """An id listed twice on one side is fused once, at its best rank
+    there, and counts once toward that side's default rank; the per-id
+    min adds no exchange (it reuses the join's partitioning on id)."""
+    import re
+
+    dense = spark.createDataFrame([(1, 1), (2, 2), (1, 3)], "id long, rank int")
+    sparse = spark.createDataFrame([(2, 1), (3, 2)], "id long, rank int")
+    fused = rrf_fuse(dense, sparse)
+    rows = [(r["fused_rank"], r["id"], r["rank_d"], r["rank_s"]) for r in fused.collect()]
+    assert rows == [(1, 2, 2, 1), (2, 1, 1, 3), (3, 3, 3, 2)]
+    scores = {r["id"]: r["rrf_score"] for r in fused.collect()}
+    assert scores[3] == 0.5 / (50 + 3) + 0.5 / (50 + 2)
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    shuffles = re.findall(r"(?<!Broadcast)Exchange (\w+)", plan.split("Initial Plan")[0])
+    assert sorted(shuffles) == ["SinglePartition", "hashpartitioning", "hashpartitioning"], plan
+
+
 def test_score_combine_builds_and_runs_as_one_plan(spark):
     dense = spark.createDataFrame([(1, 4.0), (2, 2.0)], "id long, score double")
     sparse = spark.createDataFrame([(2, 10.0), (3, 5.0)], "id long, score double")

@@ -223,7 +223,7 @@ def test_doc_id_enumeration_dense_deterministic_no_window(spark):
     from local_search_engine_spark.sources.corpus import gen_corpus_spark
 
     corpus = gen_corpus_spark(spark, 300)
-    ids = with_doc_ids(corpus)
+    ids, keys = with_doc_ids(corpus)
     rows = ids.select("repo", "path", "commit", "doc_id").collect()
     expect = sorted(rows, key=lambda r: (r["repo"], r["path"], r["commit"]))
     assert [r["doc_id"] for r in expect] == list(range(len(rows)))
@@ -240,6 +240,7 @@ def test_doc_id_enumeration_dense_deterministic_no_window(spark):
     # range shuffle is below the InMemoryTableScan and does not re-plan
     above_cache = plan.split("InMemoryTableScan")[0]
     assert "Exchange hashpartitioning" not in above_cache, plan
+    keys.unpersist()
 
 
 def test_term_frequencies_kernel_matches_oracle(spark):

@@ -1,4 +1,5 @@
-"""Plan shape and job count of the interactive query plans.
+"""Plan shape and job count of the interactive query plans, and the
+job budget of loading and refreshing a persisted index.
 
 Per-query constants are SQL literals (no LocalTableScan term tables),
 WAND's idf broadcast joins after the shard exchange (so it is no child
@@ -10,6 +11,7 @@ and its BM25 score in one aggregate.
 from __future__ import annotations
 
 import re
+import uuid
 
 import pytest
 
@@ -39,16 +41,21 @@ def _subtrees(plan: str, pattern):
     return out
 
 
-def _jobs_of(spark, df):
-    """Collect df under a fresh job group; (rows, number of jobs)."""
+def _jobs_during(spark, fn):
+    """Run fn() under a fresh job group; (its result, number of jobs)."""
     sc = spark.sparkContext
-    group = f"query-plans-{id(df)}"
+    group = f"query-plans-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        rows = df.collect()
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs_of(spark, df):
+    """Collect df under a fresh job group; (rows, number of jobs)."""
+    return _jobs_during(spark, df.collect)
 
 
 @pytest.fixture(scope="module")
@@ -151,3 +158,40 @@ def test_job_counts(spark, indexes):
     for df in (phrases("table scan", 5), phrases.near("table scan", 5, 3)):
         rows, jobs = _jobs_of(spark, df)
         assert rows and jobs <= 2, jobs
+
+
+def test_load_and_refresh_job_budget(spark, tmp_path):
+    """load_index reads stored schemas, so it runs no job; rebuilding
+    after a one-file content edit stays within 38 jobs (the id prelude
+    plus one concurrent wave) and re-encodes exactly one postings group."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from local_search_engine_spark.plans.checkpoint import build_persisted_index, load_index
+    from local_search_engine_spark.sources.corpus import gen_corpus_spark
+
+    def units():
+        with open(os.path.join(d, "_manifest.json")) as f:
+            return {u: v["run_id"] for u, v in json.load(f)["units"].items()}
+
+    corpus = gen_corpus_spark(spark, 100, partitions=4)
+    d = str(tmp_path / "idx")
+    layout = dict(docs_per_shard=16, block_span=8, n_buckets=8, n_groups=4)
+    build_persisted_index(spark, corpus, d, **layout)
+    _, jobs = _jobs_during(spark, lambda: load_index(spark, d))
+    assert jobs == 0, jobs
+
+    path = corpus.first()["path"]
+    edited = corpus.withColumn(
+        "content",
+        F.when(F.col("path") == path, F.concat(F.col("content"), F.lit(" zzzedit")))
+        .otherwise(F.col("content")),
+    )
+    before = units()
+    _, jobs = _jobs_during(spark, lambda: build_persisted_index(spark, edited, d, **layout))
+    after = units()
+    assert jobs <= 38, jobs
+    regrouped = [u for u in after if u.startswith("postings/") and after[u] != before[u]]
+    assert len(regrouped) == 1, regrouped

@@ -135,52 +135,109 @@ def test_loaded_index_rank_identity(spark, tmp_path):
 def test_resume_probe_fast_path_and_content_staleness(spark, tmp_path):
     """A completed build certifies itself with a content-inclusive
     fingerprint ('resume_probe'): the next identical invocation returns
-    after ONE scan-agg with no new manifest activity. Changing a row's
-    CONTENT (same keys) must miss the fast path and re-encode the
-    changed shard's group — the no-silent-staleness contract."""
+    after ONE scan-agg with no new manifest activity. Every later edit
+    misses the fast path, and the refreshed index equals a cold build
+    of the edited corpus table for table — the no-silent-staleness
+    contract: a content edit (re-encodes the changed shard's group), a
+    commit-only edit (docs follow; no postings group re-encodes), an
+    insert that shifts every later doc id, and a delete."""
     from pyspark.sql import functions as F
 
     corpus = gen_corpus_spark(spark, N_DOCS, partitions=8)
     d = str(tmp_path / "idx")
     build_persisted_index(spark, corpus, d, **KW)
-    man1 = json.load(open(os.path.join(d, "_manifest.json")))["units"]
+    man1 = _units(d)
     assert "resume_probe" in man1, sorted(man1)
     # identical re-run: fast path — zero units re-marked
     build_persisted_index(spark, corpus, d, **KW)
-    man2 = json.load(open(os.path.join(d, "_manifest.json")))["units"]
-    assert man2 == man1
-    # content-only change (keys identical): fast path must MISS and the
-    # affected postings group must be rebuilt with a new fingerprint
-    changed = corpus.withColumn(
+    assert _units(d) == man1
+
+    first = corpus.orderBy("repo", "path", "commit").first()
+    edited = corpus.withColumn(
         "content",
-        F.when(F.col("path") == corpus.first()["path"],
+        F.when(F.col("path") == first["path"],
                F.concat(F.col("content"), F.lit(" zzznewterm")))
         .otherwise(F.col("content")),
     )
-    build_persisted_index(spark, changed, d, **KW)
-    man3 = json.load(open(os.path.join(d, "_manifest.json")))["units"]
-    assert man3["resume_probe"]["fingerprint"] != man1["resume_probe"]["fingerprint"]
-    assert any(
-        u.startswith("postings/group=")
-        and man3[u]["fingerprint"] != man1[u]["fingerprint"]
-        for u in man3
+    recommitted = edited.withColumn(
+        "commit",
+        F.when(F.col("path") == first["path"], F.lit("ffffffff"))
+        .otherwise(F.col("commit")),
     )
-    # the side tables follow the content: the new term is in tf/idf, and
-    # docs/tf/idf equal a fresh build of the edited corpus
+    # sorts right after the first key, so every later doc id shifts
+    row = first.asDict()
+    row.update(path=first["path"] + "0", content="inserted zzzinsert table")
+    inserted = recommitted.unionByName(spark.createDataFrame([row], corpus.schema))
+    deleted = inserted.filter(F.col("path") != first["path"])
+
+    steps = [
+        ("content", edited), ("commit", recommitted),
+        ("insert", inserted), ("delete", deleted),
+    ]
+    for i, (name, version) in enumerate(steps):
+        before = _units(d)
+        build_persisted_index(spark, version, d, **KW)
+        after = _units(d)
+        assert after["resume_probe"]["fingerprint"] != before["resume_probe"]["fingerprint"], name
+        regrouped = [
+            u for u in after
+            if u.startswith("postings/group=") and after[u]["run_id"] != before[u]["run_id"]
+        ]
+        if name == "commit":
+            assert regrouped == [], regrouped
+        else:
+            assert regrouped, name
+        fresh = str(tmp_path / f"fresh{i}")
+        build_persisted_index(spark, version, fresh, **KW)
+        for t in ("docs", "tf", "shard_meta"):
+            assert _table(spark, d, t) == _table(spark, fresh, t), (name, t)
+        assert _postings_content(spark, d) == _postings_content(spark, fresh), name
+        assert _idf_bits(spark, d) == _idf_bits(spark, fresh), name
+        assert _stats(d) == _stats(fresh), name
+
+    # the side tables follow the content and the keys
     idx, _, _, _ = load_index(spark, d)
-    assert idx.tf.filter(F.col("term") == "zzznewterm").count() == 1
-    assert idx.idf.filter(F.col("term") == "zzznewterm").count() == 1
-    fresh = str(tmp_path / "fresh")
-    build_persisted_index(spark, changed, fresh, **KW)
-    for t in ("docs", "tf", "idf"):
-        assert _table(spark, d, t) == _table(spark, fresh, t), t
-    assert json.load(open(os.path.join(d, "stats.json"))) == json.load(
-        open(os.path.join(fresh, "stats.json"))
+    assert idx.tf.filter(F.col("term") == "zzznewterm").count() == 0  # deleted
+    assert idx.idf.filter(F.col("term") == "zzzinsert").count() == 1
+    assert idx.docs.filter(F.col("commit") == "ffffffff").count() == 0
+
+
+def _units(d):
+    with open(os.path.join(d, "_manifest.json")) as f:
+        return json.load(f)["units"]
+
+
+def _stats(d):
+    with open(os.path.join(d, "stats.json")) as f:
+        return json.load(f)
+
+
+def _idf_bits(spark, d):
+    return sorted(
+        (r["term"], r["df"], r["idf_raw"].hex(), r["idf"].hex())
+        for r in spark.read.parquet(os.path.join(d, "idf")).collect()
     )
 
 
 def _table(spark, d, name):
     return sorted(map(tuple, spark.read.parquet(os.path.join(d, name)).collect()))
+
+
+def test_build_releases_caches_and_load_reads_stored_schemas(spark, tmp_path):
+    """build_persisted_index leaves no persisted RDD behind (the doc-id
+    key table, tf and docs are all released), and load_index reads each
+    table with a stored schema equal to the one a parquet read infers."""
+    corpus = gen_corpus_spark(spark, N_DOCS, partitions=8)
+    d = str(tmp_path / "idx")
+    jsc = spark.sparkContext._jsc
+    persisted = set(jsc.getPersistentRDDs().keySet())
+    build_persisted_index(spark, corpus, d, **KW)
+    assert set(jsc.getPersistentRDDs().keySet()) - persisted == set()
+    idx, postings, shard_meta, _ = load_index(spark, d)
+    tables = {"docs": idx.docs, "tf": idx.tf, "idf": idx.idf,
+              "postings": postings, "shard_meta": shard_meta}
+    for name, df in tables.items():
+        assert df.schema == spark.read.parquet(os.path.join(d, name)).schema, name
 
 
 def test_deleted_side_table_is_rebuilt(spark, tmp_path):
@@ -209,3 +266,31 @@ def test_deleted_side_table_is_rebuilt(spark, tmp_path):
     assert _table(spark, d, "tf") == tf_before
     assert man.data["units"]["tf"]["run_id"] != man.data["units"]["docs"]["run_id"]
     assert answers() == want
+
+
+def test_index_of_an_older_format_is_rebuilt(spark, tmp_path):
+    """An index written before stats.json recorded table schemas (no
+    format tag in its fingerprints) misses the fast path and every unit,
+    is rebuilt, and then loads."""
+    corpus = gen_corpus_spark(spark, N_DOCS, partitions=8)
+    d = str(tmp_path / "idx")
+    build_persisted_index(spark, corpus, d, **KW)
+    path = os.path.join(d, "_manifest.json")
+    with open(path) as f:
+        man = json.load(f)
+    for u in man["units"].values():
+        u["fingerprint"] = u["fingerprint"].replace(";format=2", "")
+    with open(path, "w") as f:
+        json.dump(man, f)
+    stats = _stats(d)
+    del stats["schemas"]
+    with open(os.path.join(d, "stats.json"), "w") as f:
+        json.dump(stats, f)
+
+    rebuilt = build_persisted_index(spark, corpus, d, **KW).data["units"]
+    assert {u: v["run_id"] for u, v in rebuilt.items()} == {
+        u: rebuilt["docs"]["run_id"] for u in rebuilt
+    }
+    assert set(rebuilt) == set(man["units"])
+    idx, _, _, _ = load_index(spark, d)
+    assert idx.docs.count() == N_DOCS
