@@ -13,8 +13,11 @@ On top of h32:
   * universal-hash permutations for MinHash:  (a*h + b) mod P,
     P = 2^31 - 1 (Mersenne). a,b < P and h < 2^32 so a*h < 2^62 — no
     int64 overflow in either engine.
-  * SimHash bit extraction: (h >> j) & 1 for j in 0..31.
   * polynomial rolling fingerprint: fold acc = (acc*B + h mod P) mod P.
+
+SimHash uses a wider hash, h60(s) = the first 15 md5 hex digits
+∈ [0, 2^60), and packs a 60-bit signature: bit j, for j in 0..59, is the
+majority vote of (h60(token) >> j) & 1 over the doc's tokens.
 
 The reference has no content hashing at all (nearest analogue: chunk-id
 identity, reference retriever.py:191); these power the dedup operators a
@@ -62,44 +65,23 @@ def h32_sql(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 8))::bigint)"
 
 
-def h60_col(col):
-    """Spark Column[string] -> Column[long] in [0, 2^60) — 15 md5 hex
-    chars; 60 bits is the widest md5 prefix that stays safely inside a
-    signed 64-bit long on every engine (16 hex chars can set the sign
-    bit). Used where hash WIDTH buys collision headroom (SimHash bands)."""
-    from pyspark.sql import functions as F
-
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def h60_py(s: str) -> int:
-    """Python twin of h60_col (hashlib only) — used by the Arrow simhash
-    text kernel so tokenize+hash+pack run in ONE pass per doc."""
+    """h60(s) ∈ [0, 2^60): the first 15 md5 hex digits — the widest md5
+    prefix that stays inside a signed 64-bit long on every engine.
+    Hashlib only. The reference that simhash_text_udf's memoized digest
+    slice must equal (tests/test_dedup.py's SimHash oracle test)."""
     import hashlib
 
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
-def minhash_col(h_col, perm: int):
-    """Spark: permuted hash (a*h + b) mod P for permutation index."""
-    from pyspark.sql import functions as F
-
-    a, b = MINHASH_A[perm], MINHASH_B[perm]
-    return F.pmod(F.lit(a) * h_col + F.lit(b), F.lit(MERSENNE_P))
-
-
-def minhash_sql(h_expr: str, perm: int) -> str:
-    a, b = MINHASH_A[perm], MINHASH_B[perm]
-    return f"(({a}::bigint * {h_expr} + {b}) % {MERSENNE_P})"
-
-
-def np_minhash_sigs(hh, out_dtype=None):
-    """Numpy twin of the per-row MinHash signature: given the h32 values
-    of one doc's shingle set, return the N_PERMS array_min((a*h+b)%P)
-    signature. Exact int64 arithmetic (max a*h ≈ 2^53 < 2^63) — matches
-    minhash_col / minhash_sql bit-for-bit. Vectorized: one (16, n)
-    broadcast instead of 16 interpreted Catalyst lambda passes per row
-    (the expr formulation measured 16x the scan cost at sf0.1)."""
+def np_minhash_sigs(hh):
+    """The per-row MinHash signature: given the h32 values of one doc's
+    shingle set, return the N_PERMS min((a*h+b) mod P) signature. Exact
+    int64 arithmetic (max a*h ≈ 2^53 < 2^63), so it equals the
+    plain-Python min over MINHASH_A/MINHASH_B/MERSENNE_P bit-for-bit
+    (tests/test_dedup.py's MinHash oracle test). Vectorized: one
+    (16, n) broadcast per row."""
     import numpy as np
 
     h = np.asarray(hh, dtype=np.int64)
@@ -109,11 +91,11 @@ def np_minhash_sigs(hh, out_dtype=None):
 
 
 def np_simhash_pack(hh, bits: int):
-    """Numpy twin of the per-row SimHash majority-vote pack: given the
-    h60 values of one doc's token array, return the packed `bits`-wide
-    signature long. bit_j = 1 iff 2 * (#tokens with bit j set) > n —
-    identical to the Catalyst `filter per bit` formulation but one
-    vectorized (n, bits) pass instead of `bits` interpreted array scans."""
+    """The per-row SimHash majority-vote pack: given the h60 values of
+    one doc's token array, return the packed `bits`-wide signature long.
+    bit_j = 1 iff 2 * (#tokens with bit j set) > n, in one vectorized
+    (n, bits) pass. The occurrence-stream reference for
+    np_simhash_pack_weighted and the SimHash oracle test."""
     import numpy as np
 
     arr = np.asarray(hh, dtype=np.int64)
@@ -147,7 +129,7 @@ def np_simhash_pack_weighted(hh, weights, bits: int):
 def minhash_sigs_udf():
     """Arrow-batched pandas UDF: array<long> h32 shingle hashes ->
     array<long> N_PERMS MinHash signature. The W1-pattern vectorized
-    kernel behind minhash_wide(impl='pandas')."""
+    kernel behind minhash_wide."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -174,10 +156,11 @@ _H60_MEMO_MAX = 4_000_000
 def simhash_text_udf(bits: int):
     """Arrow-batched pandas UDF: text -> packed SimHash long (null for
     token-less docs). tokenize_py + per-distinct-term h60 + the
-    tf-weighted majority-vote pack in one kernel pass — bit-identical
-    to transform(tokenize_expr, h60_col) fed through simhash_pack_udf
-    (asserted in tests), but each distinct term is md5-hashed at most
-    once per worker and the pack is one (vocab, bits) numpy pass."""
+    tf-weighted majority-vote pack in one kernel pass. Each distinct
+    term is md5-hashed at most once per worker and the pack is one
+    (vocab, bits) numpy pass. Bit-identical to np_simhash_pack over
+    [h60_py(t) for t in tokenize_py(text)] (tests/test_dedup.py's
+    SimHash oracle test); the simhash dedup gates check it end to end."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -212,18 +195,4 @@ def simhash_text_udf(bits: int):
         return s.map(one)
 
     _kernel.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(_kernel, "long")
-
-
-def simhash_pack_udf(bits: int):
-    """Arrow-batched pandas UDF: array<long> h60 token hashes -> packed
-    SimHash long. Factory (bits is closure-bound) so dedup.SIMHASH_BITS
-    stays the single source of truth for signature width."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _kernel(hh):
-        return hh.map(lambda a: np_simhash_pack(a, bits))
-
-    _kernel.__annotations__ = {"hh": pd.Series, "return": pd.Series}
     return pandas_udf(_kernel, "long")

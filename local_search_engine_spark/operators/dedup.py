@@ -3,9 +3,11 @@
 The reference has no dedup at all (closest: the per-result redundancy
 cosine check at reference retriever.py:485-517, threshold 0.85 — covered
 here by embedding_neardup_pairs). These are the first-class operators a
-100 TB corpus pipeline needs; all are pure DataFrame ops (no per-row
-Python) and every one has a SQL-expressible oracle via the portable
-md5-based hashing in functions/hashing.py.
+100 TB corpus pipeline needs. Joins, groupings and pair generation are
+DataFrame ops; the per-doc work (shingle sets, MinHash and SimHash
+signatures, cosine verification) runs in Arrow-batched Python kernels,
+one evaluation per row. Every operator has a SQL-expressible oracle via
+the portable md5-based hashing in functions/hashing.py.
 
 Scale notes (designed for a 1000-executor cluster, tested on local[32]):
   * exact_dedup: one hash-shuffle on a 16-byte digest — the canonical
@@ -16,7 +18,7 @@ Scale notes (designed for a 1000-executor cluster, tested on local[32]):
     only candidate pairs. Hot buckets (boilerplate shingles) are bounded
     by banding; a df-style cap on pathological buckets is exposed via
     max_bucket_size.
-  * simhash: per-doc signature via one explode + two aggregations;
+  * simhash: per-doc signature in one Arrow kernel, zero shuffle;
     simhash_pairs bands the signature for Hamming-neighbour candidates
     (EXACT for max_hamming < n_bands by pigeonhole).
   * embedding near-dup: embedding_neardup_lsh_pairs is the bucketed
@@ -27,8 +29,7 @@ Scale notes (designed for a 1000-executor cluster, tested on local[32]):
 
 from __future__ import annotations
 
-from ..functions.hashing import MERSENNE_P, N_PERMS, h32_col, h60_col
-from ..functions.tokenize import tokenize_expr
+from ..functions.hashing import N_PERMS, h32_col
 
 # 60-bit SimHash (15 md5 hex chars — the widest safely-signed-long md5
 # prefix): with 4 disjoint 15-bit bands the banded candidate join stays
@@ -95,10 +96,7 @@ def connected_components(pairs, max_iter: int = 20):
     one aggregate; labels are localCheckpoint()ed per round so lineage
     stays CONSTANT across iterations (the classic iterative-algorithm
     trap). The driver-side convergence check is inherent to iteration,
-    not a per-row action. For billion-edge graphs — or chain-shaped
-    components whose diameter makes propagation ruinous — use
-    connected_components_star below (same contract, O(log² n) rounds;
-    tests pin output equality).
+    not a per-row action.
     """
     from pyspark.sql import functions as F
 
@@ -139,111 +137,12 @@ def connected_components(pairs, max_iter: int = 20):
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
-def connected_components_star(pairs, max_iter: int = 50, metrics: dict | None = None):
-    """Large-star/small-star alternation — the BILLION-EDGE scale path
-    for the same (node, cluster_id) contract as connected_components
-    (public algorithm: Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14). Min-label propagation needs
-    graph-DIAMETER rounds (fine for clique-like near-dup graphs, ruinous
-    for chain-shaped components); the star alternation contracts in
-    O(log² n) rounds regardless of shape, and each round touches every
-    edge only via one groupBy(min) + one join — no per-node fan-out.
-
-      large-star: every node u emits (v, m(u)) for its LARGER
-        neighbours v, m(u) = min(N(u) ∪ {u}) — hooks big nodes onto
-        local minima without creating long chains;
-      small-star: canonicalize edges (larger → smaller); every node u
-        re-points its smaller neighbours (and itself) at its minimum
-        neighbour — flattens partial trees into stars.
-
-    Fixed point: each component is one star centred on its minimum id
-    (= the same cluster_id rule as connected_components; tests assert
-    output equality on chains, cliques, and the fixture near-dup graph).
-    Each round localCheckpoint()s so lineage stays constant, and
-    convergence (edge set unchanged) raises past max_iter rather than
-    silently truncating."""
-    from pyspark.sql import functions as F
-
-    E = (
-        pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    all_nodes = (
-        E.select(F.col("u").alias("node"))
-        .union(E.select(F.col("v").alias("node")))
-        .distinct()
-    )
-
-    def large_star(e):
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least(F.col("u"), F.col("mn")).alias("m"))
-        )
-        return (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def small_star(e):
-        canon = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        m = canon.groupBy("u").agg(F.min("v").alias("m"))
-        nbr = (
-            canon.join(m, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        self_e = m.select("u", F.col("m").alias("v"))
-        return (
-            nbr.union(self_e).filter(F.col("u") != F.col("v")).distinct()
-        )
-
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        e2 = large_star(E).localCheckpoint()
-        e3 = small_star(e2).localCheckpoint()
-        # convergence = symmetric difference empty, measured by ONE job:
-        # both sides are distinct edge sets, so a full-outer join on
-        # (u, v) with a null-side filter counts |e3 Δ E| directly (the
-        # r03 shape ran two exceptAll().count() actions per round — two
-        # full shuffles of the edge set each time)
-        sym_diff = (
-            e3.withColumn("_r", F.lit(1))
-            .join(E.withColumn("_l", F.lit(1)), ["u", "v"], "full_outer")
-            .filter(F.col("_r").isNull() | F.col("_l").isNull())
-            .count()
-        )
-        E = e3
-        if sym_diff == 0:
-            if metrics is not None:
-                metrics["rounds"] = rounds
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
-        )
-    labels = E.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
-    roots = all_nodes.join(labels, "node", "left_anti").select(
-        "node", F.col("node").alias("cluster_id")
-    )
-    return labels.union(roots)
-
-
 def _shingles_pandas_udf(n: int):
     """Arrow-batched shingle kernel: text → DISTINCT word n-gram shingles
-    in first-occurrence order (bit-identical to the expr path's
-    array_distinct ordering). One tokenize pass per doc, in C-speed
-    Python regex — immune to the Catalyst expression-duplication failure
-    mode documented on doc_shingle_sets."""
+    in first-occurrence order. One tokenize pass per doc, in C-speed
+    Python regex. tests/test_dedup.py pins it against an ordered-distinct
+    n-gram oracle over tokenize_py; the minhash dedup gates check it end
+    to end."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -273,7 +172,6 @@ def doc_shingle_sets(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    impl: str = "pandas",
 ):
     """(doc_id, shingles: array<string>) — the DISTINCT word n-gram
     shingle set per doc, built entirely WITHIN the row. ZERO shuffle —
@@ -284,71 +182,36 @@ def doc_shingle_sets(
     every MinHash consumer derive from this set.
 
     Tokenization is the engine's single tokenizer (functions/tokenize.py);
-    shingles are space-joined token n-grams.
-
-    impl: 'pandas' (default) — Arrow-batched kernel, ONE tokenize pass
-    per doc; ExtractPythonUDFs evaluates the UDF exactly once even when
-    a filter predicate over `shingles` is pushed into this projection.
-    'expr' — pure-JVM fallback / cross-impl oracle (bit-identical,
-    asserted in tests). The expr shingle tree references the tokenize
-    expression from several slices; higher-order functions are
-    INTERPRETED (no codegen) and Catalyst both re-evaluates each
-    reference and substitutes the whole tree into pushed-down predicates,
-    so at 160 k docs the expr path measured ~0.5 s/doc of regex+lambda
-    re-evaluation (found round 4 via executor jstack: every task burning
-    CPU in StringSplit under ArrayFilter inside a CaseWhen predicate).
-    The kernel path is the 100 TB shape; keep 'expr' out of hot paths.
-    To keep the expr tree as cheap as possible it is built in TWO
-    projections (tokens materialized as an attribute first — CollapseProject
-    refuses to inline a non-cheap alias referenced more than once), which
-    bounds the damage to the pushed predicate's copy.
+    shingles are space-joined token n-grams. One Arrow-batched kernel,
+    ONE tokenize pass per doc; ExtractPythonUDFs evaluates the UDF
+    exactly once even when a filter predicate over `shingles` is pushed
+    into this projection.
     """
     from pyspark.sql import functions as F
 
-    if impl == "pandas":
-        from ..plans.layout import widen_for_kernel
+    from ..plans.layout import widen_for_kernel
 
-        narrow = widen_for_kernel(
-            docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-        )
-        # asNondeterministic (guide §4.4): callers filter on
-        # size(shingles) > 0, and the optimizer pushes that filter BELOW
-        # the widening exchange, duplicating the whole tokenize+shingle
-        # kernel — once on the thin pre-widen layout. The kernel is pure;
-        # the marker only pins a single evaluation above the exchange.
-        return narrow.select(
-            "doc_id",
-            _shingles_pandas_udf(n)
-            .asNondeterministic()(F.col(text_col))
-            .alias("shingles"),
-        )
-
-    toks_df = docs.select(
-        F.col(id_col).alias("doc_id"),
-        tokenize_expr(F.col(text_col)).alias("_toks"),
+    narrow = widen_for_kernel(
+        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
     )
-    toks = F.col("_toks")
-    length = F.size(toks)
-    m = length - F.lit(n - 1)  # number of shingles when length >= n
-    acc = F.slice(toks, 1, m)
-    for k in range(1, n):
-        acc = F.zip_with(
-            acc,
-            F.slice(toks, k + 1, m),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    # guard: slice/zip on shorter-than-n docs must short-circuit to empty
-    sh = F.when(length >= n, F.array_distinct(acc)).otherwise(
-        F.array().cast("array<string>")
+    # asNondeterministic (guide §4.4): callers filter on
+    # size(shingles) > 0, and the optimizer pushes that filter BELOW
+    # the widening exchange, duplicating the whole tokenize+shingle
+    # kernel — once on the thin pre-widen layout. The kernel is pure;
+    # the marker only pins a single evaluation above the exchange.
+    return narrow.select(
+        "doc_id",
+        _shingles_pandas_udf(n)
+        .asNondeterministic()(F.col(text_col))
+        .alias("shingles"),
     )
-    return toks_df.select("doc_id", sh.alias("shingles"))
 
 
 def doc_shingles(docs, text_col: str = "text", id_col: str = "doc_id", n: int = 3):
     """(doc_id, shingle) — distinct word n-gram shingles per doc, the
     exploded (inverted-index-ready) presentation of doc_shingle_sets.
     No `.distinct()` shuffle: distinctness is established inside the row
-    by array_distinct before the explode."""
+    by the shingle kernel before the explode."""
     from pyspark.sql import functions as F
 
     return doc_shingle_sets(docs, text_col, id_col, n).select(
@@ -401,7 +264,6 @@ def minhash_wide(
     id_col: str = "doc_id",
     n: int = 3,
     shingle_sets=None,
-    impl: str = "pandas",
 ):
     """(doc_id, s0..s{N_PERMS-1}): one wide MinHash signature row per doc.
 
@@ -415,18 +277,13 @@ def minhash_wide(
     Docs with empty shingle sets (length < n) produce no signature row,
     matching the exploded formulation.
 
-    impl: 'pandas' (default — vectorized kernel; the 16 interpreted
-    Catalyst lambda passes of the expr path dominated the LSH bench) or
-    'expr' (pure-JVM fallback, bit-identical, used where Arrow is
-    unavailable and as the cross-impl test oracle).
-
     shingle_sets: optionally pass a precomputed doc_shingle_sets()
     DataFrame so callers (minhash_lsh_pairs) share one cached scan
     between signature generation and candidate verification.
     """
     from pyspark.sql import functions as F
 
-    from ..functions.hashing import MINHASH_A, MINHASH_B, minhash_sigs_udf
+    from ..functions.hashing import minhash_sigs_udf
 
     ss = (
         shingle_sets
@@ -435,24 +292,10 @@ def minhash_wide(
     )
     hashed = F.transform(F.col("shingles"), lambda s: h32_col(s))
     base = ss.filter(F.size("shingles") > 0).select("doc_id", hashed.alias("hh"))
-    if impl == "pandas":
-        sig = base.select("doc_id", minhash_sigs_udf()(F.col("hh")).alias("sig"))
-        return sig.select(
-            "doc_id", *[F.col("sig")[p].alias(f"s{p}") for p in range(N_PERMS)]
-        )
-    sigs = [
-        F.array_min(
-            F.transform(
-                F.col("hh"),
-                lambda x: F.pmod(
-                    F.lit(MINHASH_A[p]) * x + F.lit(MINHASH_B[p]),
-                    F.lit(MERSENNE_P),
-                ),
-            )
-        ).alias(f"s{p}")
-        for p in range(N_PERMS)
-    ]
-    return base.select("doc_id", *sigs)
+    sig = base.select("doc_id", minhash_sigs_udf()(F.col("hh")).alias("sig"))
+    return sig.select(
+        "doc_id", *[F.col("sig")[p].alias(f"s{p}") for p in range(N_PERMS)]
+    )
 
 
 def bucket_pairs(grouped, ids_col: str = "ids"):
@@ -721,9 +564,7 @@ def minhash_lsh_pairs(
     return _carry(cross.unionByName(intra), carrier)
 
 
-def simhash_signatures(
-    docs, text_col: str = "text", id_col: str = "doc_id", impl: str = "pandas"
-):
+def simhash_signatures(docs, text_col: str = "text", id_col: str = "doc_id"):
     """(doc_id, simhash): SIMHASH_BITS-wide SimHash over tf-weighted term
     hashes.
 
@@ -731,67 +572,34 @@ def simhash_signatures(
                    ⟺ Σ_occurrences (2*bit_j(h60(tok)) - 1) > 0
                    ⟺ 2*ones_j > n_tokens
     (tf-weighting the distinct terms IS summing over raw occurrences).
-    Computed entirely WITHIN the row: hash the token array once (JVM md5,
-    oracle-portable), then the 60-bit majority-vote pack is one
-    Arrow-batched numpy pass (hashing.np_simhash_pack). ZERO shuffle —
-    the earlier tokenize → explode → tf groupBy → 60-column bit-sum
-    groupBy shape pushed every token of the corpus through two shuffles.
-    Token-less docs yield no row (parity with the exploded formulation).
-
-    impl: 'pandas' (default) or 'expr' — the pure-Catalyst fallback packs
-    via 60 `size(filter(hh, bit j))` scans; bit-identical but ~60
-    interpreted array passes per doc (it was 30-50s of the sf0.1 bench,
-    the single worst item, before the numpy kernel).
-
-    The pandas path runs tokenize+h60+pack as ONE Arrow kernel over the
-    text column (token-less docs → null, filtered after the UDF). The
-    earlier shape — a `transform(toks, h60)` projection under a
-    `size(hh) > 0` filter — paid the whole interpreted md5-per-token
-    tree TWICE per row: predicate pushdown substitutes the alias into
-    the filter condition (same Catalyst failure mode documented on
-    doc_shingle_sets; a Python UDF is a substitution barrier, so the
-    kernel output is computed exactly once).
+    Computed entirely WITHIN the row by ONE Arrow kernel over the text
+    column (hashing.simhash_text_udf: tokenize_py, h60 per distinct
+    term, the tf-weighted majority-vote pack). ZERO shuffle — the
+    earlier tokenize → explode → tf groupBy → 60-column bit-sum groupBy
+    shape pushed every token of the corpus through two shuffles.
+    Token-less docs give null from the kernel and no row here. The
+    kernel is a Python UDF, so a pushed-down filter cannot substitute
+    (and re-run) it: its output is computed exactly once per row.
     """
     from pyspark.sql import functions as F
 
-    if impl == "pandas":
-        from ..functions.hashing import simhash_text_udf
-        from ..plans.layout import widen_for_kernel
+    from ..functions.hashing import simhash_text_udf
+    from ..plans.layout import widen_for_kernel
 
-        narrow = widen_for_kernel(
-            docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-        )
-        # asNondeterministic (guide §4.4): the isNotNull filter below
-        # would otherwise push under the widening exchange and duplicate
-        # the kernel — one evaluation landing on the thin pre-widen
-        # layout (verified in the captured plan). Pure function; the
-        # marker only pins a single post-exchange evaluation.
-        return narrow.select(
-            "doc_id",
-            simhash_text_udf(SIMHASH_BITS)
-            .asNondeterministic()(F.col(text_col))
-            .alias("simhash"),
-        ).filter(F.col("simhash").isNotNull())
-
-    toks = tokenize_expr(F.col(text_col))
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(toks, lambda t: h60_col(t)).alias("hh"),
-    ).filter(F.size("hh") > 0)
-    n = F.size(F.col("hh"))
-    packed = None
-    for j in range(SIMHASH_BITS):
-        ones = F.size(
-            F.filter(
-                F.col("hh"),
-                lambda x: F.shiftright(x, j).bitwiseAND(F.lit(1)) == 1,
-            )
-        )
-        bit = F.when(ones * 2 > n, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        packed = bit if packed is None else packed + bit
-    return base.select("doc_id", packed.alias("simhash"))
+    narrow = widen_for_kernel(
+        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+    )
+    # asNondeterministic (guide §4.4): the isNotNull filter below
+    # would otherwise push under the widening exchange and duplicate
+    # the kernel — one evaluation landing on the thin pre-widen
+    # layout (verified in the captured plan). Pure function; the
+    # marker only pins a single post-exchange evaluation.
+    return narrow.select(
+        "doc_id",
+        simhash_text_udf(SIMHASH_BITS)
+        .asNondeterministic()(F.col(text_col))
+        .alias("simhash"),
+    ).filter(F.col("simhash").isNotNull())
 
 
 def _simhash_bucket_pairs_udf(max_hamming: int):

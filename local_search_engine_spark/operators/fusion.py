@@ -98,12 +98,16 @@ def score_combine(dense, sparse, w_dense: float = 0.5, w_sparse: float = 0.5, to
     orderBy().limit() (TakeOrderedAndProject) before the ≤topk-row rank
     window. Output: (combined_rank, id, norm_d, norm_s, combined) with
     the pinned (score DESC, id ASC) tie-break.
+
+    An id listed more than once on a side keeps its best (max) score
+    there, so it is emitted once.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    d = dense.select(F.col("id"), F.col("score").alias("score_d"))
-    s = sparse.select(F.col("id"), F.col("score").alias("score_s"))
+    # keyed on id like rrf_fuse's per-id min: the join reuses its exchange
+    d = dense.groupBy("id").agg(F.max("score").alias("score_d"))
+    s = sparse.groupBy("id").agg(F.max("score").alias("score_s"))
     w_all = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )

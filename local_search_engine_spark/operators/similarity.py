@@ -118,30 +118,13 @@ def srp_hyperplanes(dim: int, bits: int = SRP_BITS) -> list[list[float]]:
     return planes
 
 
-def _srp_bucket_expr(planes):
-    """Column expr: SRP bucket of F.col("v") — bit j = 1 iff
-    dot(v, plane_j) > 0. Pure built-in expressions (interpreted fold) —
-    kept as the reference twin of _srp_bucket_udf; an unrolled codegen
-    chain was tried and overflows janino's 64 KB method limit at
-    8 planes × 64 dims (codegen falls back to interpreted anyway)."""
-    from pyspark.sql import functions as F
-
-    bucket = F.lit(0).cast("long")
-    for j, plane in enumerate(planes):
-        pcol = F.array(*[F.lit(x) for x in plane])
-        bit = F.when(_dot(F.col("v"), pcol) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        bucket = bucket + bit.cast("long")
-    return bucket
-
-
 def _srp_bucket_udf(planes):
-    """Arrow-batched numpy twin of _srp_bucket_expr: one (batch, bits,
-    dim) broadcast multiply + np.add.accumulate along dim. ufunc
-    accumulate is STRICTLY sequential left-to-right, i.e. the exact
-    float addition order of the Catalyst fold (the fold's extra leading
-    `0.0 +` can only flip the sign of a zero dot, which `> 0` cannot
-    see) — bit-identical buckets, asserted in tests. Null/short/long
-    vectors bucket to 0 exactly like the null-padding zip_with fold."""
+    """SRP bucket of each vector — bit j = 1 iff dot(v, plane_j) > 0 —
+    as one Arrow-batched (batch, bits, dim) broadcast multiply +
+    np.add.accumulate along dim. ufunc accumulate is STRICTLY sequential
+    left-to-right, so each dot is the plain `s = 0.0; s += x*p` fold
+    bit-for-bit (tests/test_similarity.py pins the buckets against that
+    oracle). Null, too-short and too-long vectors bucket to 0."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf

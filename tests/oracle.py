@@ -1,12 +1,14 @@
-"""Pure-Python BM25 oracle — no Spark, no external deps.
+"""Pure-Python oracles — no Spark, no external deps.
 
-Stands in for the unavailable rank_bm25 package: reimplements the
+BM25Oracle stands in for the unavailable rank_bm25 package: reimplements the
 BM25Okapi semantics the reference invokes at preprocessing.py:513 /
 retriever.py:388 (formula restated in SURVEY.md §2.10), with the engine's
 pinned parameters (k1=1.2, b=0.75, epsilon=0.25 per BASELINE.json), the
 SAME tokenizer (local_search_engine_spark.functions.tokenize.tokenize_py)
 and the SAME tie-break (score DESC, doc_id ASC) and summation order
 (ascending term) — the rank-identity contract is engine vs this oracle.
+
+The functions after it are the references for the dedup and LSH kernels.
 """
 
 from __future__ import annotations
@@ -96,3 +98,80 @@ def sorted_corpus_rows(n_docs: int) -> list[dict]:
     rows = [gen_row(i) for i in range(n_docs)]
     rows.sort(key=lambda r: (r["repo"], r["path"], r["commit"]))
     return rows
+
+
+# References for the Arrow kernels in operators/dedup.py,
+# operators/similarity.py and functions/hashing.py.
+
+
+def shingle_set(text: str | None, n: int = 3) -> list[str]:
+    """Distinct space-joined word n-grams of tokenize_py(text), in
+    first-occurrence order; [] for null text or fewer than n tokens."""
+    toks = tokenize_py(text) if text is not None else []
+    seen: set = set()
+    out = []
+    for i in range(len(toks) - n + 1):
+        sh = " ".join(toks[i : i + n])
+        if sh not in seen:
+            seen.add(sh)
+            out.append(sh)
+    return out
+
+
+def minhash_signature(shingles: list[str]) -> list[int]:
+    """Per permutation p: min over the shingles of
+    (MINHASH_A[p] * h32(s) + MINHASH_B[p]) mod MERSENNE_P."""
+    from local_search_engine_spark.functions.hashing import (
+        MERSENNE_P,
+        MINHASH_A,
+        MINHASH_B,
+        h32_py,
+    )
+
+    hs = [h32_py(s) for s in shingles]
+    return [min((a * h + b) % MERSENNE_P for h in hs) for a, b in zip(MINHASH_A, MINHASH_B)]
+
+
+def simhash_signature(text: str | None, bits: int = 60) -> int | None:
+    """Majority-vote pack of h60 over the token occurrence stream; None
+    for a doc without tokens."""
+    from local_search_engine_spark.functions.hashing import h60_py, np_simhash_pack
+
+    toks = tokenize_py(text) if text is not None else []
+    if not toks:
+        return None
+    return np_simhash_pack([h60_py(t) for t in toks], bits)
+
+
+def srp_bucket(v, planes) -> int:
+    """Bit j = 1 iff the sequential fold s = 0.0; s += x * p over plane j
+    is > 0. Null vectors and vectors of the wrong length bucket to 0."""
+    if v is None or len(v) != len(planes[0]):
+        return 0
+    bucket = 0
+    for j, plane in enumerate(planes):
+        s = 0.0
+        for x, p in zip(v, plane):
+            s += x * p
+        if s > 0:
+            bucket |= 1 << j
+    return bucket
+
+
+def connected_components(pairs) -> dict:
+    """{node: min node id of its component} by union-find over (a, b)
+    edges; only nodes that appear in an edge are labelled."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}

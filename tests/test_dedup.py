@@ -7,12 +7,16 @@
 - minhash_lsh_pairs / embedding_neardup_lsh_pairs surface dropped-bucket
   metrics through a Spark Observation (no silent caps), read by the main
   action — also when no candidate pair survives;
-- minhash_lsh_pairs candidate generation never cross-joins.
+- minhash_lsh_pairs candidate generation never cross-joins;
+- the shingle, MinHash, SimHash and connected-components kernels equal
+  the plain-Python oracles in tests/oracle.py.
 """
 
 from __future__ import annotations
 
 from local_search_engine_spark.operators import dedup as D
+
+from . import oracle
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -202,11 +206,11 @@ def test_connected_components_chain_and_clique(spark):
     assert got[20] == 20 and got[21] == 20
 
 
-def test_connected_components_star_equals_propagation(spark):
-    """The large-star/small-star scale path produces the identical
-    (node, cluster_id) labelling as min-label propagation on every graph
-    shape: a long chain (the propagation worst case), a clique, an
-    isolated pair, a star, and a pseudo-random gnp-ish graph."""
+def test_connected_components_matches_union_find_oracle(spark):
+    """Min-label propagation labels every node with its component's min
+    id, as a union-find oracle does, on every graph shape: a long chain
+    (the propagation worst case), a clique, an isolated pair, a star,
+    and a pseudo-random gnp-ish graph."""
     import random
 
     cases = [
@@ -223,33 +227,11 @@ def test_connected_components_star_equals_propagation(spark):
     for pairs_py in cases:
         pairs_py = [(a, b) for a, b in pairs_py if a != b]
         pairs = spark.createDataFrame(pairs_py, "a long, b long")
-        prop = {
+        got = {
             r["node"]: r["cluster_id"]
             for r in D.connected_components(pairs, max_iter=60).collect()
         }
-        star = {
-            r["node"]: r["cluster_id"]
-            for r in D.connected_components_star(pairs).collect()
-        }
-        assert star == prop, pairs_py
-
-
-def test_connected_components_star_converges_fast_on_chain(spark):
-    """On a 41-node chain, propagation needs ~40 rounds (diameter) while
-    the star alternation converges within its O(log^2 n) budget — pin
-    that a tight round cap suffices where propagation's would raise."""
-    import pytest
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "a long, b long"
-    )
-    with pytest.raises(RuntimeError):
-        D.connected_components(chain, max_iter=5)
-    got = {
-        r["node"]: r["cluster_id"]
-        for r in D.connected_components_star(chain, max_iter=8).collect()
-    }
-    assert got == {n: 0 for n in range(41)}
+        assert got == oracle.connected_components(pairs_py), pairs_py
 
 
 def test_connected_components_raises_on_iteration_cap(spark):
@@ -423,30 +405,34 @@ def test_minhash_wide_matches_grouped_bruteforce(spark):
 
 
 def test_signature_impls_bit_identical(spark):
-    """The Arrow-batched numpy kernels (impl='pandas', the fast path) and
-    the pure-Catalyst expressions (impl='expr', the no-Arrow fallback /
-    oracle twin) must produce bit-identical signatures."""
+    """The Arrow-batched signature kernels equal their plain-Python
+    oracles bit for bit: MinHash is min((a·h32(s)+b) mod P) over the
+    oracle shingle set; SimHash is the majority-vote pack of h60 over
+    the token stream, and a token-less doc gives no row."""
+    from local_search_engine_spark.functions.hashing import N_PERMS
+
     docs = _corpus(spark, 50)
-    mw_p = {r["doc_id"]: tuple(r[c] for c in r.asDict() if c != "doc_id")
-            for r in D.minhash_wide(docs, impl="pandas").collect()}
-    mw_e = {r["doc_id"]: tuple(r[c] for c in r.asDict() if c != "doc_id")
-            for r in D.minhash_wide(docs, impl="expr").collect()}
-    assert mw_p == mw_e and len(mw_p) > 0
-    sh_p = {r["doc_id"]: r["simhash"]
-            for r in D.simhash_signatures(docs, impl="pandas").collect()}
-    sh_e = {r["doc_id"]: r["simhash"]
-            for r in D.simhash_signatures(docs, impl="expr").collect()}
-    assert sh_p == sh_e and len(sh_p) > 0
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    mw = {r["doc_id"]: [r[f"s{p}"] for p in range(N_PERMS)]
+          for r in D.minhash_wide(docs).collect()}
+    want_mw = {}
+    for d, t in texts.items():
+        sh = oracle.shingle_set(t)
+        if sh:
+            want_mw[d] = oracle.minhash_signature(sh)
+    assert mw == want_mw and len(mw) > 0
+    sim = {r["doc_id"]: r["simhash"]
+           for r in D.simhash_signatures(docs).collect()}
+    want_sim = {d: oracle.simhash_signature(t) for d, t in texts.items()}
+    assert sim == {d: h for d, h in want_sim.items() if h is not None}
+    assert len(sim) > 0
 
 
 def test_shingle_impls_bit_identical(spark):
-    """doc_shingle_sets impl='pandas' (the Arrow kernel fast path, round 4)
-    and impl='expr' (the two-projection Catalyst oracle) must agree
-    element-for-element INCLUDING order (array_distinct keeps first
-    occurrence; the kernel's dict.fromkeys must match), on hostile docs:
-    null, empty, separators-only, shorter-than-n, exactly-n, repeats."""
-    from pyspark.sql import functions as F
-
+    """doc_shingle_sets (the Arrow kernel) equals the ordered-distinct
+    n-gram oracle over tokenize_py element-for-element INCLUDING order
+    (first occurrence first), on hostile docs: null, empty,
+    separators-only, shorter-than-n, exactly-n, repeats."""
     rows = [
         (0, None),
         (1, ""),
@@ -458,19 +444,13 @@ def test_shingle_impls_bit_identical(spark):
         (7, "db io ml alpha beta gamma db io ml"),      # preserve-list terms
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    p = {r["doc_id"]: r["shingles"]
-         for r in D.doc_shingle_sets(docs, impl="pandas").collect()}
-    e = {r["doc_id"]: r["shingles"]
-         for r in D.doc_shingle_sets(docs, impl="expr").collect()}
-    assert p == e and len(p) == len(rows)
+    p = {r["doc_id"]: r["shingles"] for r in D.doc_shingle_sets(docs).collect()}
+    assert p == {d: oracle.shingle_set(t) for d, t in rows}
     assert p[6] == ["alpha beta alpha", "beta alpha beta"]  # order pinned
     corpus = _corpus(spark, 60)
-    cp = D.doc_shingle_sets(corpus, impl="pandas")
-    ce = D.doc_shingle_sets(corpus, impl="expr").withColumnRenamed(
-        "shingles", "sh2"
-    )
-    n_diff = cp.join(ce, "doc_id").filter(F.col("shingles") != F.col("sh2")).count()
-    assert n_diff == 0 and cp.count() == 60
+    cp = {r["doc_id"]: r["shingles"] for r in D.doc_shingle_sets(corpus).collect()}
+    want = {r["doc_id"]: oracle.shingle_set(r["text"]) for r in corpus.collect()}
+    assert cp == want and len(cp) == 60
 
 
 def test_benchmark_contamination_planted(spark):
@@ -512,25 +492,6 @@ def test_benchmark_contamination_broadcasts(spark):
         .toString()
     )
     assert "BroadcastHashJoin" in plan
-
-
-def test_connected_components_star_three_jobs_per_round(spark):
-    """r04: convergence is ONE symmetric-difference job (full-outer join
-    null count) instead of two exceptAll().count() actions — each round
-    is exactly 3 jobs: large-star checkpoint, small-star checkpoint, the
-    symdiff count. Setup adds the single edge-set checkpoint job. AQE is
-    toggled off inside the probe so job counts reflect actions."""
-    from tests.test_graph import _jobs_during
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(8)], "a long, b long"
-    )
-    m: dict = {}
-    jobs = _jobs_during(
-        spark, "cc-star-jobs", lambda: D.connected_components_star(chain, metrics=m)
-    )
-    assert m["rounds"] >= 2  # a chain actually iterates
-    assert len(jobs) == 1 + 3 * m["rounds"]
 
 
 def test_simhash_weighted_pack_equals_occurrence_pack():

@@ -94,6 +94,26 @@ def test_score_combine_nonpositive_max_zeroes_side(spark):
     assert rows[1]["norm_s"] == pytest.approx(1.0)
 
 
+def test_score_combine_duplicate_id_keeps_max_score(spark):
+    """An id listed twice on one side is emitted once, at its max score
+    there; the per-id max adds no exchange (it reuses the join's
+    partitioning on id)."""
+    import re
+
+    dense = spark.createDataFrame([(1, 3.0), (2, 2.0), (1, 1.0)], "id long, score double")
+    sparse = spark.createDataFrame([(2, 4.0), (3, 2.0)], "id long, score double")
+    comb = score_combine(dense, sparse)
+    rows = [(r["combined_rank"], r["id"], r["norm_d"], r["combined"]) for r in comb.collect()]
+    assert [(rank, i) for rank, i, _, _ in rows] == [(1, 2), (2, 1), (3, 3)]
+    by_id = {i: (nd, c) for _, i, nd, c in rows}
+    assert by_id[1][0] == 1.0
+    assert by_id[2][1] == pytest.approx(0.5 * 2.0 / 3.0 + 0.5)
+    assert by_id[3][1] == pytest.approx(0.25)
+    plan = comb._jdf.queryExecution().executedPlan().toString()
+    shuffles = re.findall(r"(?<!Broadcast)Exchange (\w+)", plan.split("Initial Plan")[0])
+    assert sorted(shuffles) == ["SinglePartition", "hashpartitioning", "hashpartitioning"], plan
+
+
 def _py_flexible(ts: datetime.datetime, start, end, now) -> float:
     """Direct transcription of reference retriever.py:1054-1068."""
     if start and ts < start:

@@ -188,3 +188,59 @@ def test_spark_master_lint_is_live(tmp_path):
     )
     x = os.path.join("operators", "x.py")
     assert master_read_sites(str(tmp_path)) == [(x, 2), (x, 4)]
+
+
+REPO_DIR = os.path.dirname(PKG_DIR)
+
+
+def unreferenced_package_defs(repo_dir=REPO_DIR):
+    """(file, name) of every top-level def/class in the package whose
+    name no `.py` file in the repo references: no Name, no Attribute
+    and no `from ... import` of it (strings and docstrings do not
+    count). A function only its own definition names is dead code."""
+    import ast
+
+    pkg = os.path.join(repo_dir, "local_search_engine_spark")
+    defs, used = [], set()
+    for root, dirs, files in os.walk(repo_dir):
+        dirs[:] = sorted(d for d in dirs if not d.startswith("."))
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Name):
+                    used.add(node.id)
+                elif isinstance(node, ast.Attribute):
+                    used.add(node.attr)
+                elif isinstance(node, ast.ImportFrom):
+                    used.update(a.name for a in node.names)
+            if path.startswith(pkg + os.sep):
+                rel = os.path.relpath(path, repo_dir)
+                defs.extend(
+                    (rel, node.name)
+                    for node in tree.body
+                    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                )
+    return [d for d in defs if d[1] not in used]
+
+
+def test_every_package_function_is_referenced():
+    assert unreferenced_package_defs() == []
+
+
+def test_unreferenced_function_lint_is_live(tmp_path):
+    ops = tmp_path / "local_search_engine_spark" / "operators"
+    ops.mkdir(parents=True)
+    (ops / "x.py").write_text(
+        "def used():\n    return 1\n\n\n"
+        "def by_attribute():\n    return 2\n\n\n"
+        'def dead():\n    """Only `dead` itself names dead."""\n    return used()\n'
+    )
+    (tmp_path / "caller.py").write_text(
+        "from local_search_engine_spark.operators import x\n\nx.by_attribute()\n"
+    )
+    x = os.path.join("local_search_engine_spark", "operators", "x.py")
+    assert unreferenced_package_defs(str(tmp_path)) == [(x, "dead")]

@@ -335,12 +335,14 @@ def test_filtered_by_boolean_match_set(spark):
     assert got and {r["id"] for r in got} <= allowed_ids
 
 
-def test_srp_bucket_kernel_matches_expr(spark):
+def test_srp_bucket_kernel_matches_oracle(spark):
     """_srp_bucket_udf (the Arrow np.add.accumulate kernel behind every
-    bucket call site) must match the pure-Catalyst fold expression
-    bit-for-bit, including the fold's null semantics: null, too-short
-    and too-long vectors all bucket to 0."""
+    bucket call site) must match the sequential `s += x*p` fold oracle
+    bit-for-bit, including null, too-short and too-long vectors (all
+    bucket 0) and the all-zero (sign-of-zero) edge."""
     from pyspark.sql import functions as F
+
+    from . import oracle
 
     emb = _emb(spark)
     planes = SIM.srp_hyperplanes(64, 8)
@@ -348,26 +350,20 @@ def test_srp_bucket_kernel_matches_expr(spark):
         F.col("vec_id").alias("id"),
         SIM._as_double(F.col("embedding")).alias("v"),
     )
-    both = v.select(
-        "id",
-        SIM._srp_bucket_expr(planes).alias("b_expr"),
-        SIM._srp_bucket_udf(planes)(F.col("v")).alias("b_udf"),
-    )
-    assert both.filter(F.col("b_expr") != F.col("b_udf")).count() == 0
-    assert both.count() > 0
     hostile = spark.createDataFrame(
         [
-            (0, None),
-            (1, [0.5] * 3),          # too short
-            (2, [0.5] * 70),         # too long
-            (3, [0.0] * 64),         # all-zero dots (sign-of-zero edge)
+            (-1, None),
+            (-2, [0.5] * 3),          # too short
+            (-3, [0.5] * 70),         # too long
+            (-4, [0.0] * 64),         # all-zero dots (sign-of-zero edge)
         ],
         "id long, v array<double>",
     )
-    hb = hostile.select(
-        "id",
-        SIM._srp_bucket_expr(planes).alias("b_expr"),
-        SIM._srp_bucket_udf(planes)(F.col("v")).alias("b_udf"),
-    ).collect()
-    for r in hb:
-        assert (r["b_expr"] or 0) == r["b_udf"], r
+    rows = (
+        v.unionByName(hostile)
+        .select("id", "v", SIM._srp_bucket_udf(planes)(F.col("v")).alias("b"))
+        .collect()
+    )
+    assert len({r["b"] for r in rows}) > 1  # the planes split the fixture
+    for r in rows:
+        assert r["b"] == oracle.srp_bucket(r["v"], planes), r["id"]
