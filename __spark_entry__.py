@@ -2779,17 +2779,11 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs_split singletons are exercised too."""
     from pyspark.sql import functions as F
 
-    from local_search_engine_spark.functions.tokenize import tokenize_expr
     from local_search_engine_spark.operators.packing import pack_sequences
 
-    d = (
-        _docs(spark, sf_dir)
-        .filter(F.col("doc_id") < PACK_MAX_DOCS)
-        .select(
-            "doc_id",
-            F.size(tokenize_expr(F.col("text"))).cast("long").alias("n_tokens"),
-        )
-    )
+    d = TS.token_stats(
+        _docs(spark, sf_dir).filter(F.col("doc_id") < PACK_MAX_DOCS), "text", "doc_id"
+    ).select("doc_id", F.col("n_tokens").cast("long").alias("n_tokens"))
     out = pack_sequences(d, budget=PACK_BUDGET, partitions=1)
     # doc_ids projected to a joined string: array cells crash the
     # driver's pandas-sort canonicalizer (r05, VERDICT #1)

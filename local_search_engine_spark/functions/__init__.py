@@ -1,6 +1,1 @@
-from .tokenize import (  # noqa: F401
-    PRESERVE_TERMS,
-    TOKEN_SPLIT_RE,
-    tokenize_expr,
-    tokenize_py,
-)
+from .tokenize import PRESERVE_TERMS, tokenize_py  # noqa: F401

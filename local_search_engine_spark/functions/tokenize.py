@@ -12,12 +12,10 @@ deterministic rule, shared verbatim with the pure-Python oracle:
   (mirrors reference tokenizer.py:69-70) unless in the preserve-list of
   short tech terms (mirrors reference tokenizer.py:29-33).
 
-Two forms with identical semantics (tests assert equality):
-  tokenize_py    — pure Python: the oracle, and the engine's analyzer at
-                   both index time (operators/build.term_frequencies'
-                   kernel) and query time
-  tokenize_expr  — Spark built-in expressions (JVM-side; the text-
-                   statistics and dedup operators use it)
+tokenize_py is the engine's only analyzer and its own oracle: index
+time (operators/build.term_frequencies' kernel), query time, and the
+per-doc kernels of the text-statistics and cleaning operators
+(operators/textstats.py) all call it.
 
 An analyzer is any `Callable[[str], list[str]]` (tokenize_py, or the
 opt-in code analyzer tokenize_code_py below): the index builders,
@@ -47,22 +45,6 @@ def tokenize_py(text: str) -> list[str]:
         for t in _SPLIT.split(text.lower())
         if len(t) >= MIN_TOKEN_LEN or t in PRESERVE_TERMS
     ]
-
-
-def tokenize_expr(col):
-    """Built-in-expression tokenizer: Column[string] → Column[array<string>].
-
-    Entirely JVM-side (split/lower/filter), no serialization to Python
-    workers.
-    """
-    from pyspark.sql import functions as F
-
-    toks = F.split(F.lower(col), TOKEN_SPLIT_RE)
-    preserve = [F.lit(t) for t in sorted(PRESERVE_TERMS)]
-    return F.filter(
-        toks,
-        lambda t: (F.length(t) >= MIN_TOKEN_LEN) | t.isin(*preserve),
-    )
 
 
 # --- code-aware identifier subtokenization (opt-in analyzer) ---------------

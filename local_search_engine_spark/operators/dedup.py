@@ -10,8 +10,8 @@ one evaluation per row. Every operator has a SQL-expressible oracle via
 the portable md5-based hashing in functions/hashing.py.
 
 Scale notes (designed for a 1000-executor cluster, tested on local[32]):
-  * exact_dedup: one hash-shuffle on a 16-byte digest — the canonical
-    map-side-combinable groupBy; no skew (digests are uniform).
+  * exact_dedup: one hash-shuffle on a uniform 16-byte digest;
+    exact_dedup_keep takes a window min, with no join back.
   * shingle/jaccard: the self-join on shingle is the classic quadratic
     trap; minhash_lsh_pairs is the scale path — candidate generation
     shuffles on (band_id, band_key) buckets only, and verification joins
@@ -65,21 +65,36 @@ def exact_dedup_groups(docs, text_col: str = "text", id_col: str = "doc_id"):
     )
 
 
+def text_md5(col):
+    """md5 of a text column, null text hashed as "" (the analyzer's rule)."""
+    from pyspark.sql import functions as F
+
+    return F.md5(F.coalesce(col, F.lit("")))
+
+
+def with_canonical_id(keyed, digest_col: str):
+    """`keyed` (doc_id, digest_col, ...) plus canonical_id = min(doc_id)
+    OVER (PARTITION BY digest_col): one shuffle on the uniform 16-byte
+    key and no join back. A pathological hot cluster is one window
+    group, which WindowExec spills to disk: it costs disk, not an OOM."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    return keyed.withColumn("canonical_id", F.min("doc_id").over(Window.partitionBy(digest_col)))
+
+
 def exact_dedup_keep(docs, text_col: str = "text", id_col: str = "doc_id"):
     """(doc_id, canonical_id, is_dup): the pipeline-facing dedup verdict —
     keep-min-id per content digest; `filter(~is_dup)` IS the deduped
-    corpus. One groupBy(md5).min + a hash join back on the digest (both
-    on the uniform 16-byte key; a pathological single-content hot cluster
-    skews its one key — AQE skew-join splits it). Unlike
-    exact_dedup_groups this never materializes per-group id lists, so a
-    10^7-copy boilerplate cluster costs rows, not one giant string."""
+    corpus. Unlike exact_dedup_groups this never materializes per-group
+    id lists, so a 10^7-copy boilerplate cluster costs rows, not one
+    giant string. Null text is deduplicated as ""."""
     from pyspark.sql import functions as F
 
     keyed = docs.select(
-        F.col(id_col).alias("doc_id"), F.md5(F.col(text_col)).alias("text_md5")
+        F.col(id_col).alias("doc_id"), text_md5(F.col(text_col)).alias("text_md5")
     )
-    canon = keyed.groupBy("text_md5").agg(F.min("doc_id").alias("canonical_id"))
-    return keyed.join(canon, "text_md5").select(
+    return with_canonical_id(keyed, "text_md5").select(
         "doc_id",
         "canonical_id",
         (F.col("doc_id") != F.col("canonical_id")).alias("is_dup"),
@@ -93,17 +108,19 @@ def connected_components(pairs, max_iter: int = 20):
     in graph-diameter rounds (near-dup graphs are clique-like — 1-3
     rounds in practice), capped at max_iter (raises if not converged —
     silent truncation would mislabel clusters). Each round is one join +
-    one aggregate; labels are localCheckpoint()ed per round so lineage
-    stays CONSTANT across iterations (the classic iterative-algorithm
-    trap). The driver-side convergence check is inherent to iteration,
-    not a per-row action.
+    one aggregate. The edges are localCheckpoint()ed once (no round
+    re-runs the plan behind `pairs`) and labels per round, so lineage
+    stays CONSTANT across iterations; a round's changed-label count is
+    an Observation on its eager checkpoint, not a second action.
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     edges = (
         pairs.select(F.col("a").alias("x"), F.col("b").alias("y"))
         .union(pairs.select(F.col("b").alias("x"), F.col("a").alias("y")))
         .distinct()
+        .localCheckpoint()
     )
     labels = (
         edges.select(F.col("x").alias("node"))
@@ -117,7 +134,8 @@ def connected_components(pairs, max_iter: int = 20):
             .groupBy("x")
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = (
+        obs = Observation()
+        labels = (
             labels.join(nbr_min, labels["node"] == nbr_min["x"], "left")
             .select(
                 "node",
@@ -128,11 +146,13 @@ def connected_components(pairs, max_iter: int = 20):
                     F.coalesce("nbr_label", F.col("label")) < F.col("label")
                 ).alias("_changed"),
             )
+            .observe(obs, F.count_if("_changed").alias("changed"))
+            .drop("_changed")
+            .localCheckpoint()
         )
-        new_labels = new_labels.localCheckpoint()
-        changed = new_labels.filter("_changed").count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
+        # an empty graph's plan can lose its CollectMetrics node (AQE
+        # folds the empty relation), and the observation is then empty
+        if not obs.get.get("changed"):
             return labels.select("node", F.col("label").alias("cluster_id"))
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 

@@ -5,22 +5,23 @@ prep flow a 100 TB pipeline runs before indexing/training:
     ∧  benchmark decontamination  →  keep verdict per doc, with the
     failing reason(s) visible (never a silent drop).
 
-Each signal is an existing operator (dedup.exact_dedup_keep,
-textstats.quality_scores, textstats.repetition_scores,
-dedup.benchmark_contamination); the composition is four 1:1 joins on
-the uniform doc_id key. Scale shape: the three text-derived signals are
-zero-shuffle row-local scans, exact-dedup is one digest shuffle, and
-decontamination is a broadcast probe — the joins co-partition on doc_id
-after the first exchange, so AQE plans the chain with one doc_id
-shuffle per side at most. No reference analogue (the reference indexes
-everything it is given); required by the task's training-data-pipeline
-brief.
+One pass over the docs: a JVM md5 digest, carried through one per-doc
+kernel that runs textstats' own quality_of and repetition_of, then one
+window for exact dedup (dedup.with_canonical_id). The only join left is
+decontamination's broadcast probe, made only when a benchmark is given.
+Null text is cleaned as "". No reference analogue (the reference
+indexes everything it is given); required by the task's
+training-data-pipeline brief.
 """
 
 from __future__ import annotations
 
-from .dedup import benchmark_contamination, exact_dedup_keep
-from .textstats import quality_scores, repetition_scores
+from .dedup import benchmark_contamination, text_md5, with_canonical_id
+from .textstats import REPETITION_SCHEMA, per_doc, quality_of, repetition_of, repetition_verdict
+
+
+def _clean_signals(text: str, toks: list[str]) -> tuple:
+    return quality_of(text, toks)[-1:] + repetition_of(text, toks)
 
 
 def clean_corpus(
@@ -40,21 +41,21 @@ def clean_corpus(
     (decontam_ok = true)."""
     from pyspark.sql import functions as F
 
-    dup = exact_dedup_keep(docs, text_col, id_col).select("doc_id", "is_dup")
-    # threshold the ROUNDED score: the 6-dp canonical form is the
-    # cross-engine-stable value (raw float64 sums can differ in the last
-    # ulp between engines and flip a doc sitting exactly on the floor)
-    qual = quality_scores(docs, text_col, id_col).select(
-        "doc_id", (F.round("quality", 6) >= min_quality).alias("quality_ok")
+    keyed = docs.select(
+        F.col(id_col).alias("doc_id"), text_md5(F.col(text_col)).alias("_digest"), text_col
     )
-    rep = repetition_scores(
-        docs,
-        text_col,
-        id_col,
-        max_dup_line_frac=max_dup_line_frac,
-        max_dup_ngram_frac=max_dup_ngram_frac,
-    ).select("doc_id", "repetition_pass")
-    out = dup.join(qual, "doc_id").join(rep, "doc_id")
+    signals = per_doc(
+        keyed, _clean_signals, "quality double, " + REPETITION_SCHEMA, text_col, carry=("_digest",)
+    )
+    out = with_canonical_id(signals, "_digest").select(
+        "doc_id",
+        (F.col("doc_id") != F.col("canonical_id")).alias("is_dup"),
+        # threshold the ROUNDED score: the 6-dp canonical form is the
+        # cross-engine-stable value (raw float64 sums can differ in the
+        # last ulp between engines and flip a doc sitting on the floor)
+        (F.round("quality", 6) >= min_quality).alias("quality_ok"),
+        repetition_verdict(max_dup_line_frac, max_dup_ngram_frac).alias("repetition_pass"),
+    )
     if benchmark is not None:
         dec = benchmark_contamination(
             docs,

@@ -1,19 +1,33 @@
 """Text analysis operators: language ID, quality scoring, token stats,
-document fingerprinting.
+document fingerprinting, repetition signals.
 
-The reference computes ad-hoc per-result text metrics driver-side
-(unique-word ratio reference retriever.py:754-755, keyword-match ratio
-:758-760); these lift that capability to corpus-scale DataFrame
-operators plus the standard training-data-pipeline additions (language
-ID, quality score, fingerprint). Everything is built-in expressions —
-JVM codegen, no Python in the hot path — and every operator has an
-exact SQL oracle (see __spark_entry__.py).
+The reference computes ad-hoc per-result text metrics driver-side with
+the tokenizer it indexes with (unique-word ratio reference
+retriever.py:754-755, keyword-match ratio :758-760); these lift that
+capability to corpus-scale DataFrame operators plus the standard
+training-data-pipeline additions (language ID, quality score,
+fingerprint, repetition).
+
+Every token-based operator reads the engine's one analyzer,
+functions/tokenize.tokenize_py. Each is a plain per-doc function
+`(text, tokens) -> tuple` run by `per_doc` as one mapInPandas kernel
+over the docs, row-local on the scan's partitions (no exchange), with
+one tokenize pass per doc. Null text counts as "" (tokenize_py's rule).
+6-dp rounding stays a Spark F.round over the kernel's raw double:
+Spark rounds HALF_UP on the value's decimal string, while Python's
+round is half-even on the binary value and can flip the 6th digit.
+bpe_ish_counts uses no tokenizer and stays one JVM regex. Every
+operator has an exact SQL oracle (see __spark_entry__.py).
 """
 
 from __future__ import annotations
 
-from ..functions.hashing import FINGERPRINT_B, MERSENNE_P, h32_col
-from ..functions.tokenize import tokenize_expr
+import re
+from collections import Counter
+from functools import lru_cache
+
+from ..functions.hashing import FINGERPRINT_B, MERSENNE_P, h32_py
+from ..functions.tokenize import tokenize_py
 
 # Deterministic marker lists for the n-gram/stopword language heuristic.
 # Scores are hit-counts of language-marker tokens; argmax with
@@ -29,22 +43,49 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 STOPWORDS = ("the", "a", "an", "and", "of", "to", "in", "is", "it", "on", "for")
 
+_STOPSET = frozenset(STOPWORDS)
+# the SQL oracles' parity rules: Spark trim strips U+0020 only, Java's
+# \s is ASCII [ \t\n\x0B\f\r], and the alpha count is ASCII letters
+_JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")
+_NOT_ALPHA = re.compile("[^A-Za-z]")
+# pandas dtype per kernel output type (Int64 holds a null long)
+_DTYPES = {"int": "int32", "bigint": "Int64", "double": "float64", "string": object}
+
+
+def per_doc(docs, fn, schema: str, text_col: str = "text", id_col: str = "doc_id", carry=()):
+    """(doc_id, *carry, *schema columns): fn(text, tokenize_py(text)) ->
+    one tuple per doc, in `schema` (a DDL string) order, as one
+    mapInPandas kernel. Null text is passed as ""."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    fields = T._parse_datatype_string(schema).fields
+    src = docs.select(F.col(id_col).alias("doc_id"), *carry, F.col(text_col).alias("_text"))
+    out = T.StructType(src.schema.fields[:-1] + fields)
+
+    def kernel(batches):
+        for pdf in batches:
+            texts = [t or "" for t in pdf.pop("_text").tolist()]
+            cols = list(zip(*[fn(t, tokenize_py(t)) for t in texts])) or [()] * len(fields)
+            for f, col in zip(fields, cols):
+                pdf[f.name] = pd.Series(col, index=pdf.index, dtype=_DTYPES[f.dataType.simpleString()])
+            yield pdf
+
+    return src.mapInPandas(kernel, out)
+
+
+def _token_stats_of(text: str, toks: list[str]) -> tuple:
+    trimmed = text.strip(" ")
+    n_ws = len(_JAVA_WS.split(trimmed)) if trimmed else 0
+    return len(toks), n_ws, len(set(toks)), len(text)
+
 
 def token_stats(docs, text_col: str = "text", id_col: str = "doc_id"):
     """Per-doc token accounting: regex-token count, whitespace-split
-    count, distinct terms, max term length, chars per token."""
-    from pyspark.sql import functions as F
-
-    toks = tokenize_expr(F.col(text_col))
-    ws = F.split(F.trim(F.col(text_col)), r"\s+")
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(toks).alias("n_tokens"),
-        F.when(F.length(F.trim(F.col(text_col))) == 0, F.lit(0))
-        .otherwise(F.size(ws))
-        .alias("n_ws_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_distinct"),
-        F.length(F.col(text_col)).alias("n_chars"),
+    count, distinct terms, chars (code points)."""
+    return per_doc(
+        docs, _token_stats_of, "n_tokens int, n_ws_tokens int, n_distinct int, n_chars int", text_col, id_col
     )
 
 
@@ -70,6 +111,16 @@ def bpe_ish_counts(docs, text_col: str = "text", id_col: str = "doc_id"):
     )
 
 
+def quality_of(text: str, toks: list[str]) -> tuple:
+    n = len(toks)
+    unique = len(set(toks)) / n if n else 0.0
+    stop = sum(t in _STOPSET for t in toks) / n if n else 0.0
+    alpha = len(_NOT_ALPHA.sub("", text)) / len(text) if text else 0.0
+    len_score = min(1.0, n / 100.0)
+    quality = 0.3 * unique + 0.2 * (1.0 - stop) + 0.3 * alpha + 0.2 * len_score
+    return unique, stop, alpha, len_score, quality
+
+
 def quality_scores(docs, text_col: str = "text", id_col: str = "doc_id"):
     """Per-doc quality features + a blended score in [0,1]:
       unique_ratio   = |distinct tokens| / |tokens|      (reference
@@ -78,103 +129,103 @@ def quality_scores(docs, text_col: str = "text", id_col: str = "doc_id"):
       alpha_ratio    = alphabetic chars / chars
       len_score      = min(1, n_tokens / 100)
       quality        = 0.3*unique + 0.2*(1-stop) + 0.3*alpha + 0.2*len
-    All plain expressions; rounded by the caller for cross-engine hash.
+    Raw doubles; rounded by the caller for cross-engine hash.
     """
-    from pyspark.sql import functions as F
+    return per_doc(
+        docs,
+        quality_of,
+        "unique_ratio double, stop_ratio double, alpha_ratio double, len_score double, quality double",
+        text_col,
+        id_col,
+    )
 
-    toks = tokenize_expr(F.col(text_col))
-    d = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"), toks.alias("_toks"))
-    n_tok = F.size("_toks")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_stop = F.size(F.filter("_toks", lambda t: F.array_contains(stop_arr, t)))
-    n_alpha = F.length(F.regexp_replace(F.col("_t"), "[^A-Za-z]", ""))
-    unique_ratio = F.when(n_tok > 0, F.size(F.array_distinct("_toks")) / n_tok).otherwise(F.lit(0.0))
-    stop_ratio = F.when(n_tok > 0, n_stop / n_tok).otherwise(F.lit(0.0))
-    alpha_ratio = F.when(F.length("_t") > 0, n_alpha / F.length("_t")).otherwise(F.lit(0.0))
-    len_score = F.least(F.lit(1.0), n_tok / F.lit(100.0))
-    quality = (
-        F.lit(0.3) * unique_ratio
-        + F.lit(0.2) * (F.lit(1.0) - stop_ratio)
-        + F.lit(0.3) * alpha_ratio
-        + F.lit(0.2) * len_score
-    )
-    return d.select(
-        "doc_id",
-        unique_ratio.alias("unique_ratio"),
-        stop_ratio.alias("stop_ratio"),
-        alpha_ratio.alias("alpha_ratio"),
-        len_score.alias("len_score"),
-        quality.alias("quality"),
-    )
+
+def _language_of(text: str, toks: list[str]) -> tuple:
+    counts = Counter(toks)
+    best, hits = "und", 0
+    for lang in sorted(LANG_MARKERS):  # strictly greater wins: alphabetical tie-break
+        n = sum(counts[m] for m in LANG_MARKERS[lang])
+        if n > hits:
+            best, hits = lang, n
+    return best, hits
 
 
 def language_id(docs, text_col: str = "text", id_col: str = "doc_id"):
     """(doc_id, pred_lang): marker-token hit-count argmax, alphabetical
     tie-break, 'und' when no marker hits."""
-    from pyspark.sql import functions as F
-
-    toks = tokenize_expr(F.col(text_col))
-    d = docs.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
-    scored = d
-    for lang in sorted(LANG_MARKERS):
-        markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
-        scored = scored.withColumn(
-            f"_s_{lang}", F.size(F.filter("_toks", lambda t: F.array_contains(markers, t)))
-        )
-    # argmax with alphabetical tie-break: fold over sorted langs, keep
-    # strictly-greater winner
-    best_lang = F.lit("und")
-    best_score = F.lit(0)
-    for lang in sorted(LANG_MARKERS):
-        s = F.col(f"_s_{lang}")
-        best_lang = F.when(s > best_score, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(s > best_score, s).otherwise(best_score)
-    return scored.select("doc_id", best_lang.alias("pred_lang"), best_score.alias("marker_hits"))
+    return per_doc(docs, _language_of, "pred_lang string, marker_hits int", text_col, id_col)
 
 
 def keyword_match(docs, query_tokens, text_col: str = "text", id_col: str = "doc_id"):
     """F15: keyword-match ratio (reference retriever.py:758-760) —
-    matched DISTINCT query terms / total distinct query terms, per doc.
-    Pure array expressions over the shared tokenizer."""
-    from pyspark.sql import functions as F
+    matched DISTINCT query terms / total distinct query terms, per doc."""
+    qt = frozenset(query_tokens)
 
-    from ..functions.tokenize import tokenize_expr
+    def ratio(text, toks):
+        return (len(qt.intersection(toks)) / len(qt) if qt else 0.0,)
 
-    qt = sorted(set(query_tokens))
-    if not qt:
-        return docs.select(
-            F.col(id_col).alias("doc_id"), F.lit(0.0).alias("keyword_match")
-        )
-    qarr = F.array(*[F.lit(t) for t in qt])
-    toks = tokenize_expr(F.col(text_col))
-    ratio = F.size(F.array_intersect(F.array_distinct(toks), qarr)) / F.lit(
-        float(len(qt))
-    )
-    return docs.select(
-        F.col(id_col).alias("doc_id"), ratio.cast("double").alias("keyword_match")
-    )
+    return per_doc(docs, ratio, "keyword_match double", text_col, id_col)
+
+
+@lru_cache(maxsize=1 << 16)
+def _token_hash(tok: str) -> int:
+    # a pure function of the token: a bounded cache is shared by all docs
+    return h32_py(tok) % MERSENNE_P
+
+
+def _fingerprint_of(text: str, toks: list[str]) -> tuple:
+    # acc stays below P·B + P < 2^63, so Python ints equal Spark longs
+    hashes = [_token_hash(t) for t in toks]
+    acc = 0
+    for h in hashes:
+        acc = (acc * FINGERPRINT_B + h) % MERSENNE_P
+    return acc, min(hashes, default=None)
 
 
 def doc_fingerprints(docs, text_col: str = "text", id_col: str = "doc_id"):
-    """(doc_id, fingerprint, min_shingle_hash):
-      fingerprint      = polynomial rolling hash over the token sequence:
-                         fold acc = (acc*B + (h32(tok) mod P)) mod P
-      min_shingle_hash = min over tokens of h32 (a 1-perm minhash) —
-                         cheap content identity robust to reordering.
-    Built-ins only: transform(tokens, h32) + aggregate fold.
+    """(doc_id, fingerprint, min_token_hash):
+      fingerprint    = polynomial rolling hash over the token sequence:
+                       fold acc = (acc*B + (h32(tok) mod P)) mod P
+      min_token_hash = min over tokens of h32 mod P (a 1-perm minhash) —
+                       cheap content identity robust to reordering; null
+                       for a doc with no tokens.
     """
+    return per_doc(
+        docs, _fingerprint_of, "fingerprint bigint, min_token_hash bigint", text_col, id_col
+    )
+
+
+def _dup_frac(items: list) -> float:
+    return 1.0 - len(set(items)) / len(items) if items else 0.0
+
+
+REPETITION_SCHEMA = (
+    "n_lines bigint, dup_line_frac double, dup_2gram_frac double, "
+    "dup_3gram_frac double, mean_word_len double"
+)
+
+
+def repetition_of(text: str, toks: list[str]) -> tuple:
+    lines = [s for s in (line.strip(" ") for line in text.split("\n")) if s]
+    return (
+        len(lines),
+        _dup_frac(lines),
+        _dup_frac(list(zip(toks, toks[1:]))),
+        _dup_frac(list(zip(toks, toks[1:], toks[2:]))),
+        sum(map(len, toks)) / len(toks) if toks else 0.0,
+    )
+
+
+def repetition_verdict(max_dup_line_frac: float, max_dup_ngram_frac: float):
+    """Column: the rounded raw fractions of REPETITION_SCHEMA within
+    their caps."""
     from pyspark.sql import functions as F
 
-    toks = tokenize_expr(F.col(text_col))
-    d = docs.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
-    hashes = F.transform("_toks", lambda t: F.pmod(h32_col(t), F.lit(MERSENNE_P)))
-    fp = F.aggregate(
-        hashes,
-        F.lit(0).cast("long"),
-        lambda acc, h: F.pmod(acc * FINGERPRINT_B + h, F.lit(MERSENNE_P)),
+    return (
+        (F.round("dup_line_frac", 6) <= max_dup_line_frac)
+        & (F.round("dup_2gram_frac", 6) <= max_dup_ngram_frac)
+        & (F.round("dup_3gram_frac", 6) <= max_dup_ngram_frac)
     )
-    mn = F.when(F.size("_toks") > 0, F.array_min(hashes)).otherwise(F.lit(None).cast("long"))
-    return d.select("doc_id", fp.alias("fingerprint"), mn.alias("min_token_hash"))
 
 
 def repetition_scores(
@@ -189,7 +240,8 @@ def repetition_scores(
     computed entirely WITHIN the row (zero shuffle, embarrassingly
     parallel — the same 100 TB shape as quality_scores):
 
-      n_lines, dup_line_frac   — 1 - distinct_lines/lines (blank lines
+      n_lines, dup_line_frac   — 1 - distinct_lines/lines (lines split
+                                 on \\n, trimmed of spaces, blank lines
                                  dropped; a page of repeated boilerplate
                                  lines scores high);
       dup_2gram_frac,
@@ -207,63 +259,11 @@ def repetition_scores(
     """
     from pyspark.sql import functions as F
 
-    from ..functions.tokenize import tokenize_expr
-
-    toks = tokenize_expr(F.col(text_col))
-
-    def _ngrams(n):
-        length = F.size(F.col("_toks"))
-        m = length - F.lit(n - 1)
-        acc = F.slice(F.col("_toks"), 1, m)
-        for k in range(1, n):
-            acc = F.zip_with(
-                acc,
-                F.slice(F.col("_toks"), k + 1, m),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        return F.when(length >= n, acc).otherwise(F.array().cast("array<string>"))
-
-    def _dup_frac(arr):
-        total = F.size(arr)
-        return F.when(
-            total > 0,
-            F.round(1.0 - F.size(F.array_distinct(arr)) / total, 6),
-        ).otherwise(F.lit(0.0))
-
-    lines = F.filter(
-        F.transform(F.split(F.col(text_col), "\n"), lambda s: F.trim(s)),
-        lambda s: s != "",
-    )
-    d = docs.select(
-        F.col(id_col).alias("doc_id"),
-        toks.alias("_toks"),
-        lines.alias("_lines"),
-    )
-    dup_line = _dup_frac(F.col("_lines"))
-    dup2 = _dup_frac(_ngrams(2))
-    dup3 = _dup_frac(_ngrams(3))
-    mean_len = F.when(
-        F.size("_toks") > 0,
-        F.round(
-            F.aggregate(
-                F.transform(F.col("_toks"), lambda t: F.length(t)),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            )
-            / F.size("_toks"),
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-    return d.select(
+    raw = per_doc(docs, repetition_of, REPETITION_SCHEMA, text_col, id_col)
+    rounded = ("dup_line_frac", "dup_2gram_frac", "dup_3gram_frac", "mean_word_len")
+    return raw.select(
         "doc_id",
-        F.size("_lines").cast("long").alias("n_lines"),
-        dup_line.alias("dup_line_frac"),
-        dup2.alias("dup_2gram_frac"),
-        dup3.alias("dup_3gram_frac"),
-        mean_len.alias("mean_word_len"),
-        (
-            (dup_line <= max_dup_line_frac)
-            & (dup2 <= max_dup_ngram_frac)
-            & (dup3 <= max_dup_ngram_frac)
-        ).alias("repetition_pass"),
+        "n_lines",
+        *[F.round(c, 6).alias(c) for c in rounded],
+        repetition_verdict(max_dup_line_frac, max_dup_ngram_frac).alias("repetition_pass"),
     )

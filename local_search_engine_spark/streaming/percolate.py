@@ -23,7 +23,7 @@ per-document with NO index and NO state:
     standing phrases went 13.0 s → measured in BENCH §11; the old
     kernel's match loop was 85 % of its cost).
   * Tokenization stays IN the kernel on raw text. The "obvious"
-    alternative — JVM tokenize_expr before the Arrow exchange — was
+    alternative — a JVM split tokenizer before the Arrow exchange — was
     measured 2.4× SLOWER end-to-end (31.9 s vs 13.0 s on the same
     input): shipping 33 M tokens as Arrow list<string> costs far more
     than the compiled-regex split it avoids, because every token

@@ -191,6 +191,15 @@ def test_exact_dedup_keep_verdicts(spark):
     assert rows[3]["canonical_id"] == 3 and not rows[3]["is_dup"]
 
 
+def test_exact_dedup_keep_null_text_is_empty_text(spark):
+    """Null text is deduplicated as "": no doc drops out of the verdict."""
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "x"), (4, None)], "doc_id long, text string"
+    )
+    rows = {r["doc_id"]: (r["canonical_id"], r["is_dup"]) for r in D.exact_dedup_keep(docs).collect()}
+    assert rows == {1: (1, False), 2: (1, True), 3: (3, False), 4: (1, True)}
+
+
 def test_connected_components_chain_and_clique(spark):
     """A 6-node chain (diameter 5 — forces several propagation rounds),
     a triangle, and an isolated pair."""
@@ -232,6 +241,14 @@ def test_connected_components_matches_union_find_oracle(spark):
             for r in D.connected_components(pairs, max_iter=60).collect()
         }
         assert got == oracle.connected_components(pairs_py), pairs_py
+
+
+def test_connected_components_of_no_pairs_is_empty(spark):
+    """An empty pair set converges at once to no labels: the round's
+    change count must not wait on an Observation that AQE can drop
+    together with the empty plan."""
+    pairs = spark.createDataFrame([], "a long, b long")
+    assert D.connected_components(pairs).collect() == []
 
 
 def test_connected_components_raises_on_iteration_cap(spark):

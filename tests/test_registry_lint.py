@@ -244,3 +244,69 @@ def test_unreferenced_function_lint_is_live(tmp_path):
     )
     x = os.path.join("local_search_engine_spark", "operators", "x.py")
     assert unreferenced_package_defs(str(tmp_path)) == [(x, "dead")]
+
+
+TOKENIZE_PY = os.path.join("local_search_engine_spark", "functions", "tokenize.py")
+
+
+def second_tokenizer_sites(repo_dir=REPO_DIR):
+    """(file, line) of every use of the tokenizer's split regex
+    TOKEN_SPLIT_RE in a repo `.py` file other than functions/tokenize.py,
+    and of every name of a JVM-expression tokenizer (`tokenize*_expr`)
+    anywhere: a def, an import, a Name or an Attribute. tokenize_py is
+    the engine's one analyzer; a second tokenizer built on the same
+    regex drifts from it (strings and comments do not count)."""
+    import ast
+    import re
+
+    jvm_tokenizer = re.compile(r"^tokenize\w*_expr$")
+    sites = []
+    for root, dirs, files in os.walk(repo_dir):
+        dirs[:] = sorted(d for d in dirs if not d.startswith("."))
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, repo_dir)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Name):
+                    names = [node.id]
+                elif isinstance(node, ast.Attribute):
+                    names = [node.attr]
+                elif isinstance(node, (ast.ImportFrom, ast.Import)):
+                    names = [a.name.rsplit(".", 1)[-1] for a in node.names]
+                elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    names = [node.name]
+                else:
+                    continue
+                if any(
+                    jvm_tokenizer.match(n) or (n == "TOKEN_SPLIT_RE" and rel != TOKENIZE_PY)
+                    for n in names
+                ):
+                    sites.append((rel, node.lineno))
+    return sorted(set(sites))
+
+
+def test_one_tokenizer():
+    assert second_tokenizer_sites() == []
+
+
+def test_one_tokenizer_lint_is_live(tmp_path):
+    fns = tmp_path / "local_search_engine_spark" / "functions"
+    fns.mkdir(parents=True)
+    (fns / "tokenize.py").write_text(
+        'TOKEN_SPLIT_RE = "[^a-z0-9_]+"\n\n\ndef tokenize_code_expr(col):\n    return col\n'
+    )
+    (tmp_path / "ops.py").write_text(
+        "from local_search_engine_spark.functions.tokenize import TOKEN_SPLIT_RE\n"
+        "import local_search_engine_spark.functions.tokenize as T\n"
+        "toks = T.tokenize_code_expr(col)\n"
+        "# TOKEN_SPLIT_RE in a comment is fine\n"
+    )
+    assert second_tokenizer_sites(str(tmp_path)) == [
+        (TOKENIZE_PY, 4),
+        ("ops.py", 1),
+        ("ops.py", 3),
+    ]

@@ -146,6 +146,30 @@ def test_clean_corpus_empty_and_all_dup_corpora(spark):
     assert keepers == [0]  # min-id survivor only
 
 
+def test_clean_corpus_null_text_gets_a_verdict(spark):
+    """Null text is cleaned as "": every doc keeps its verdict row, and
+    a null doc is an exact duplicate of an empty one, failing the
+    quality floor as the empty doc does."""
+    from local_search_engine_spark.operators.pipeline import clean_corpus
+
+    good = (
+        "the quick brown fox jumps over the lazy dog while many other "
+        "animals watch carefully from the tall green grass nearby today"
+    )
+    docs = spark.createDataFrame(
+        [(1, good), (2, None), (3, ""), (4, None)], "doc_id long, text string"
+    )
+    bench = spark.createDataFrame(
+        [(100, "alpha beta gamma delta epsilon")], "doc_id long, text string"
+    )
+    for b in (None, bench):
+        rows = {r["doc_id"]: r for r in clean_corpus(docs, b).collect()}
+        assert sorted(rows) == [1, 2, 3, 4]
+        assert [rows[i]["is_dup"] for i in (1, 2, 3, 4)] == [False, False, True, True]
+        assert [rows[i]["quality_ok"] for i in (1, 2, 3, 4)] == [True, False, False, False]
+        assert [rows[i]["keep"] for i in (1, 2, 3, 4)] == [True, False, False, False]
+
+
 def test_benchmark_contamination_empty_benchmark(spark):
     """An empty benchmark contaminates nothing (left join finds no
     hits); every doc still gets a verdict row."""

@@ -1,12 +1,9 @@
-"""Tokenizer parity: the two forms (pure Python, built-in expression)
-must agree token-for-token (FIXTURES.md §4), and an analyzer callable
-passed to the index build is the one the query side uses."""
+"""The engine tokenizer's golden tokens (FIXTURES.md §4), and an
+analyzer callable passed to the index build is the one the query side
+uses. The text-statistics kernels that replaced the JVM tokenizer are
+pinned bit-exact in tests/test_textstats.py."""
 
-from local_search_engine_spark.functions.tokenize import (
-    tokenize_expr,
-    tokenize_py,
-)
-from local_search_engine_spark.sources.corpus import gen_corpus_pandas
+from local_search_engine_spark.functions.tokenize import tokenize_py
 
 GOLDEN = [
     ("def foo(bar): return bar+1", ["def", "foo", "bar", "return", "bar"]),
@@ -22,29 +19,6 @@ GOLDEN = [
 def test_golden_tokens():
     for text, want in GOLDEN:
         assert tokenize_py(text) == want, text
-
-
-def test_expr_matches_python(spark):
-    pdf = gen_corpus_pandas(40)
-    pdf.loc[len(pdf)] = {
-        "repo": "r",
-        "path": "p",
-        "commit": "c",
-        "lang": "python",
-        "content": "Hello ip A b2 __x__ foo.bar(baz);",
-    }
-    df = spark.createDataFrame(pdf)
-    got = (
-        df.select(
-            "path",
-            tokenize_expr(df.content).alias("t_expr"),
-        )
-        .orderBy("path")
-        .collect()
-    )
-    want = {r["path"]: tokenize_py(r["content"]) for _, r in pdf.iterrows()}
-    for row in got:
-        assert list(row["t_expr"]) == want[row["path"]]
 
 
 def test_code_tokenizer_finds_subtokens():
