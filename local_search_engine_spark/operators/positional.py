@@ -21,6 +21,14 @@ column:
           stream (functions/tokenize.py — the same rule at index and
           query time), the standard analyzer-relative convention.
 
+On disk (persist_positional_postings), under the index path:
+
+  term_bucket=B/   the postings, bucket-partitioned parquet
+  _schema.json     their read-back schema; the commit marker
+                   (plans/store.py)
+  _meta.json       layout params + max_doc_id — advisory: appends and
+                   compaction re-derive max_doc_id from the postings
+
 Same scale story as the base index: doc-range sharding bounds the
 per-task work for hot terms, term_bucket is the Parquet partition
 column so a phrase's scan prunes to ≤ |unique terms| bucket
@@ -44,12 +52,14 @@ stream). np.intersect1d over sorted uint64 keys is the whole matcher.
 
 from __future__ import annotations
 
+import os
 from typing import Callable
 
 import numpy as np
 
 from ..functions.tokenize import tokenize_py
 from ..plans.layout import local_rows
+from ..plans.store import read_json, read_table, rows, swap_dir, write_json, write_table
 
 POS_POSTINGS_SCHEMA = (
     "term string, term_bucket int, part_id long, block_id long, n int, "
@@ -237,39 +247,34 @@ def persist_positional_postings(
     literals (driver-computed, zero jobs) prune whole directories —
     same layout contract as the persisted BM25 index and ANN files.
 
+    The postings are a plans/store.py table (`_schema.json` commits it).
     params (recommended): {'docs_per_shard', 'block_span', 'n_buckets'}
     — persisted to _meta.json (underscore-prefixed: invisible to the
     parquet file listing) together with max_doc_id, which makes the
     index APPENDABLE (append_positional_postings) and lets loaders
     recover the layout without out-of-band knowledge."""
-    import json
-    import os
+    write_table(postings, path, partition_by=("term_bucket",))
+    if params is not None:
+        _write_meta(postings.sparkSession, path, dict(params))
 
+
+def _write_meta(spark, path: str, meta: dict) -> dict:
+    """meta with max_doc_id re-derived from the postings at path (one
+    aggregate job), written atomically to path/_meta.json."""
     from pyspark.sql import functions as F
 
-    postings.write.mode("overwrite").partitionBy("term_bucket").parquet(path)
-    if params is not None:
-        written = postings.sparkSession.read.parquet(path)
-        mx = written.agg(F.max("last_doc_id").alias("m")).first()["m"]
-        meta = dict(params)
-        meta["max_doc_id"] = int(mx) if mx is not None else -1
-        with open(os.path.join(path, "_meta.json"), "w") as f:
-            json.dump(meta, f)
+    mx = read_table(spark, path).agg(F.max("last_doc_id")).first()[0]
+    meta["max_doc_id"] = int(mx) if mx is not None else -1
+    write_json(os.path.join(path, "_meta.json"), meta)
+    return meta
 
 
 def load_positional_postings(spark, path: str):
-    return spark.read.parquet(path)
+    return read_table(spark, path)
 
 
 def load_positional_meta(path: str) -> dict | None:
-    import json
-    import os
-
-    p = os.path.join(path, "_meta.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
+    return read_json(os.path.join(path, "_meta.json"), None)
 
 
 def append_positional_postings(
@@ -291,9 +296,6 @@ def append_positional_postings(
     mix layouts. Returns the updated meta. Query results over the
     appended index are bit-identical to a full rebuild
     (tests/test_positional.py pins it)."""
-    import json
-    import os
-
     from pyspark.sql import functions as F
 
     meta = load_positional_meta(path)
@@ -311,15 +313,8 @@ def append_positional_postings(
     # the tailing check and write duplicate postings (duplicate
     # composite keys break the assume_unique phrase intersects). The
     # index itself is the source of truth — heal meta from the parquet
-    # max (a footer-stats-only agg) before validating the batch.
-    stored = (
-        spark.read.parquet(path).agg(F.max("last_doc_id").alias("m")).first()["m"]
-    )
-    postings_max = int(stored) if stored is not None else -1
-    if postings_max != meta["max_doc_id"]:
-        meta["max_doc_id"] = postings_max
-        with open(os.path.join(path, "_meta.json"), "w") as f:
-            json.dump(meta, f)
+    # max before validating the batch.
+    meta = _write_meta(spark, path, meta)
     if int(lo) <= meta["max_doc_id"]:
         raise ValueError(
             f"append batch min {id_col}={lo} <= stored max_doc_id="
@@ -335,11 +330,10 @@ def append_positional_postings(
         n_buckets=meta["n_buckets"],
         tokenizer=tokenizer,
     )
-    delta.write.mode("append").partitionBy("term_bucket").parquet(path)
+    write_table(delta, path, partition_by=("term_bucket",), mode="append")
     mx = new_docs.agg(F.max(id_col).alias("m")).first()["m"]
     meta["max_doc_id"] = int(mx)
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump(meta, f)
+    write_json(os.path.join(path, "_meta.json"), meta)
     return meta
 
 
@@ -363,16 +357,13 @@ def compact_positional_postings(spark, path: str) -> dict:
 
     One shuffle (group_in_partitions on (term_bucket, part_id)),
     O(index) work, zero corpus reads.
-    Swap protocol is the IVF-retrain one: write <path>.compact →
-    rename away the live dir → rename the new one in → heal _meta.json
-    (max_doc_id re-derived from the rewritten parquet) → drop the old
-    dir. Returns {n_runs_before, n_runs_after, n_files_before,
-    n_files_after}.
+    The compacted table and its healed _meta.json (max_doc_id re-derived
+    from the rewritten parquet) are staged at <path>.compact and swapped
+    in whole (plans/store.swap_dir). Returns {n_runs_before,
+    n_runs_after, n_files_before, n_files_after}, run counts from the
+    parquet footers.
     """
     import glob
-    import json
-    import os
-    import shutil
 
     meta = load_positional_meta(path)
     if meta is None:
@@ -382,8 +373,8 @@ def compact_positional_postings(spark, path: str) -> dict:
     def count_files(p):
         return len(glob.glob(os.path.join(p, "term_bucket=*", "*.parquet")))
 
-    posts = spark.read.parquet(path)
-    n_runs_before = posts.count()
+    posts = read_table(spark, path)
+    n_runs_before = rows(path)
     n_files_before = count_files(path)
 
     def recompact(pdf):
@@ -427,31 +418,18 @@ def compact_positional_postings(spark, path: str) -> dict:
         )
         return _encode_pos_group(flat, span)
 
-    tmp = path.rstrip("/") + ".compact"
-    old = path.rstrip("/") + ".old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
     from ..plans.layout import group_in_partitions
 
+    stage = path.rstrip("/") + ".compact"
     compacted = group_in_partitions(
         posts, ["term_bucket", "part_id"], recompact, POS_POSTINGS_SCHEMA
     )
-    compacted.write.mode("overwrite").partitionBy("term_bucket").parquet(tmp)
-    n_runs_after = spark.read.parquet(tmp).count()
-    meta_bytes = json.dumps(meta)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    from pyspark.sql import functions as F
-
-    mx = spark.read.parquet(path).agg(F.max("last_doc_id").alias("m")).first()["m"]
-    meta = json.loads(meta_bytes)
-    meta["max_doc_id"] = int(mx) if mx is not None else -1
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump(meta, f)
-    shutil.rmtree(old, ignore_errors=True)
+    n_runs_after = write_table(compacted, stage, partition_by=("term_bucket",))
+    _write_meta(spark, stage, meta)
+    swap_dir(stage, path)
     return {
-        "n_runs_before": int(n_runs_before),
-        "n_runs_after": int(n_runs_after),
+        "n_runs_before": n_runs_before,
+        "n_runs_after": n_runs_after,
         "n_files_before": n_files_before,
         "n_files_after": count_files(path),
     }

@@ -16,11 +16,24 @@ top-k:
 
 Top-k is orderBy+limit — Spark plans it as TakeOrderedAndProject (a
 per-partition k-heap + driver merge), no global sort.
+
+Persisted ANN indexes, under index_dir:
+
+  vectors/bucket=B/    SRP inverted file (id, v)
+  vectors/cluster=C/   IVF inverted file (id, v, centroid_dist)
+  vectors/_schema.json read-back schema; the commit marker (plans/store.py)
+  meta.json            SRP: dim, bits
+  centroids.json       IVF: the coarse quantizer
+  stats.json           IVF: train-time mean quantization error, global
+                       and per cluster
 """
 
 from __future__ import annotations
 
+import os
+
 from ..functions.hashing import h32_col
+from ..plans.store import read_json, read_table, swap_dir, write_json, write_table
 
 SRP_BITS = 8
 
@@ -29,6 +42,26 @@ def _as_double(col):
     from pyspark.sql import functions as F
 
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _vectors(embeddings, id_col: str, vec_col: str):
+    """(id, v): each row's id and its vector as array<double>."""
+    from pyspark.sql import functions as F
+
+    return embeddings.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
+
+
+def _ranked(scores, k: int):
+    """(rank, id, cosine): the k best (id, cosine) rows, tie-break
+    (cosine DESC, id ASC) — a k-heap, then a window over those k rows."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    order = (F.desc("cosine"), F.asc("id"))
+    top = scores.orderBy(*order).limit(k)
+    return top.withColumn("rank", F.row_number().over(Window.orderBy(*order))).select(
+        "rank", "id", "cosine"
+    )
 
 
 def _dot(a, b):
@@ -60,11 +93,7 @@ def _cosine_expr(query_vec):
 
 def cosine_scores(embeddings, query_vec, id_col: str = "vec_id", vec_col: str = "embedding"):
     """(id, cosine) for every row vs a literal query vector."""
-    from pyspark.sql import functions as F
-
-    v = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    )
+    v = _vectors(embeddings, id_col, vec_col)
     return v.select("id", _cosine_expr(query_vec).alias("cosine"))
 
 
@@ -91,15 +120,12 @@ def _apply_allowed(embeddings, allowed, id_col: str):
 def cosine_topk(embeddings, query_vec, k: int, id_col: str = "vec_id", vec_col: str = "embedding", exclude_id=None, allowed=None):
     """Exact top-k by cosine, tie-break (cosine DESC, id ASC).
     allowed: optional allow-list DataFrame — see _apply_allowed."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     s = cosine_scores(_apply_allowed(embeddings, allowed, id_col), query_vec, id_col, vec_col)
     if exclude_id is not None:
         s = s.filter(F.col("id") != exclude_id)
-    top = s.orderBy(F.desc("cosine"), F.asc("id")).limit(k)
-    w = Window.orderBy(F.desc("cosine"), F.asc("id"))
-    return top.withColumn("rank", F.row_number().over(w)).select("rank", "id", "cosine")
+    return _ranked(s, k)
 
 
 def srp_hyperplanes(dim: int, bits: int = SRP_BITS) -> list[list[float]]:
@@ -160,7 +186,7 @@ def srp_lsh_buckets(embeddings, dim: int, bits: int = SRP_BITS, id_col: str = "v
     from pyspark.sql import functions as F
 
     planes = srp_hyperplanes(dim, bits)
-    v = embeddings.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
+    v = _vectors(embeddings, id_col, vec_col)
     return v.select("id", _srp_bucket_udf(planes)(F.col("v")).alias("bucket"))
 
 
@@ -189,12 +215,10 @@ def ivf_train_centroids(
     behavior for comparison."""
     from pyspark.sql import functions as F
 
-    v0 = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    )
+    v = _vectors(embeddings, id_col, vec_col)
     if seeding == "hash":
         seed_rows = (
-            v0.withColumn(
+            v.withColumn(
                 "_hk",
                 h32_col(F.concat(F.lit("ivfseed:"), F.col("id").cast("string"))),
             )
@@ -203,11 +227,10 @@ def ivf_train_centroids(
             .collect()
         )
     elif seeding == "lowest_id":
-        seed_rows = v0.orderBy("id").limit(n_centroids).collect()
+        seed_rows = v.orderBy("id").limit(n_centroids).collect()
     else:
         raise ValueError(f"unknown seeding: {seeding!r}")
     centroids = [[float(x) for x in r["v"]] for r in seed_rows]
-    v = embeddings.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
     for _ in range(iters):
         assign = _ivf_assign_expr(centroids)
         sums = (
@@ -237,7 +260,15 @@ def _ivf_assign_expr(centroids):
     first minimum)."""
     from pyspark.sql import functions as F
 
-    dists = F.array(
+    dists = _centroid_dists(centroids)
+    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+
+
+def _centroid_dists(centroids):
+    """Column expr: the squared L2 distance of `v` to each centroid."""
+    from pyspark.sql import functions as F
+
+    return F.array(
         *[
             F.aggregate(
                 F.zip_with(
@@ -251,14 +282,11 @@ def _ivf_assign_expr(centroids):
             for c in centroids
         ]
     )
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
 def ivf_assignments(embeddings, centroids, id_col: str = "vec_id", vec_col: str = "embedding"):
     """(id, cluster): inverted-file assignment of every vector."""
-    from pyspark.sql import functions as F
-
-    v = embeddings.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
+    v = _vectors(embeddings, id_col, vec_col)
     return v.select("id", _ivf_assign_expr(centroids).alias("cluster"))
 
 
@@ -285,23 +313,20 @@ def ivf_topk(
     projection, computing cosine for every vector.) For scan-time
     pruning on top, use persist_ivf_index + ivf_topk_persisted — the
     persisted layout is what survives 100 TB."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    probes = _nearest_centroids(query_vec, centroids, nprobe)
+    v = _vectors(_apply_allowed(embeddings, allowed, id_col), id_col, vec_col)
+    cand = v.filter(_ivf_assign_expr(centroids).isin(probes))
+    return _ranked(cand.select("id", _cosine_expr(query_vec).alias("cosine")), k)
 
+
+def _nearest_centroids(query_vec, centroids, nprobe: int) -> list[int]:
+    """Indexes of the nprobe centroids L2-nearest the query (driver-side;
+    ties to the lower index)."""
     q = [float(x) for x in query_vec]
     dists = sorted(
-        (sum((a - b) * (a - b) for a, b in zip(q, c)), i)
-        for i, c in enumerate(centroids)
+        (sum((a - b) * (a - b) for a, b in zip(q, c)), i) for i, c in enumerate(centroids)
     )
-    probes = [i for _, i in dists[:nprobe]]
-    v = _apply_allowed(embeddings, allowed, id_col).select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    cand = v.filter(_ivf_assign_expr(centroids).isin(probes))
-    s = cand.select("id", _cosine_expr(q).alias("cosine"))
-    top = s.orderBy(F.desc("cosine"), F.asc("id")).limit(k)
-    w = Window.orderBy(F.desc("cosine"), F.asc("id"))
-    return top.withColumn("rank", F.row_number().over(w)).select("rank", "id", "cosine")
+    return [i for _, i in dists[:nprobe]]
 
 
 def _ivf_assign_with_dist(v_df, centroids):
@@ -310,22 +335,8 @@ def _ivf_assign_with_dist(v_df, centroids):
     distance are a single evaluation of the centroid expressions."""
     from pyspark.sql import functions as F
 
-    dists = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    F.col("v"),
-                    F.array(*[F.lit(float(x)) for x in c]),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            for c in centroids
-        ]
-    )
     return (
-        v_df.withColumn("_dists", dists)
+        v_df.withColumn("_dists", _centroid_dists(centroids))
         .withColumn(
             "cluster",
             (F.array_position(F.col("_dists"), F.array_min("_dists")) - 1).cast("int"),
@@ -357,19 +368,10 @@ def persist_ivf_index(
     scans never read it — column-pruned), so the stats derive from a
     narrow 2-column scan of the freshly WRITTEN file, not a second pass
     over the source."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    v = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    assigned = _ivf_assign_with_dist(v, centroids)
+    v = _vectors(embeddings, id_col, vec_col)
+    write_json(os.path.join(index_dir, "centroids.json"), centroids)
     vec_dir = os.path.join(index_dir, "vectors")
-    assigned.write.mode("overwrite").partitionBy("cluster").parquet(vec_dir)
-    with open(os.path.join(index_dir, "centroids.json"), "w") as f:
-        json.dump(centroids, f)
+    write_table(_ivf_assign_with_dist(v, centroids), vec_dir, partition_by=("cluster",))
     _write_ivf_stats(embeddings.sparkSession, index_dir, vec_dir)
 
 
@@ -377,13 +379,10 @@ def _write_ivf_stats(spark, index_dir: str, vec_dir: str) -> dict:
     """Derive stats.json (global + per-cluster train-time mean
     quantization error) from a narrow 2-column scan of the written
     inverted file; shared by persist and retrain."""
-    import json
-    import os
-
     from pyspark.sql import functions as F
 
     per_cluster = (
-        spark.read.parquet(vec_dir)
+        read_table(spark, vec_dir)
         .groupBy("cluster")
         .agg(F.count("*").alias("n"), F.avg("centroid_dist").alias("mean_dist"))
         .collect()
@@ -398,8 +397,7 @@ def _write_ivf_stats(spark, index_dir: str, vec_dir: str) -> dict:
             for r in per_cluster
         },
     }
-    with open(os.path.join(index_dir, "stats.json"), "w") as f:
-        json.dump(stats, f)
+    write_json(os.path.join(index_dir, "stats.json"), stats)
     return stats
 
 
@@ -422,25 +420,18 @@ def retrain_ivf_index(
     nprobe returns to the pre-drift curve (test-pinned in
     tests/test_similarity.py).
 
-    Swap protocol (single-writer, same as the postings checkpoint
-    story): write vectors.retrain → rename vectors → vectors.old →
-    rename vectors.retrain → vectors → rewrite centroids.json +
-    stats.json → delete vectors.old. A crash before the first rename
-    leaves the old index intact; between the renames the orphan
-    .retrain/.old dirs are inert (readers resolve only `vectors/`) and
-    a re-run rewrites them.
+    Swap protocol (single-writer): stage vectors.retrain, swap it in
+    for vectors/ (plans/store.swap_dir), then rewrite centroids.json +
+    stats.json. A crash before the swap leaves the old index intact;
+    the orphan .retrain/.old dirs are inert (readers resolve only
+    `vectors/`) and a re-run rewrites them.
 
     Returns {n, n_centroids, train_mean_dist_before, train_mean_dist_after}.
     """
-    import json
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
     vec_dir = os.path.join(index_dir, "vectors")
-    with open(os.path.join(index_dir, "centroids.json")) as f:
-        old_centroids = json.load(f)
+    old_centroids = read_json(os.path.join(index_dir, "centroids.json"))
     if n_centroids is None:
         n_centroids = len(old_centroids)
     dim = len(old_centroids[0])
@@ -449,30 +440,23 @@ def retrain_ivf_index(
     # stored centroid_dist column makes this a narrow 1-column scan.
     # stats.json's train_mean_dist would understate it: appended drifted
     # batches are exactly what it excludes.
-    before = float(
-        spark.read.parquet(vec_dir).agg(F.avg("centroid_dist")).first()[0] or 0.0
-    )
+    vectors = read_table(spark, vec_dir)
+    before = float(vectors.agg(F.avg("centroid_dist")).first()[0] or 0.0)
 
-    merged = spark.read.parquet(vec_dir).select("id", "v")
+    merged = vectors.select("id", "v")
     centroids = ivf_train_centroids(
         merged, n_centroids, dim, iters=iters,
         id_col="id", vec_col="v", seeding=seeding,
     )
-    tmp_dir = os.path.join(index_dir, "vectors.retrain")
-    old_dir = os.path.join(index_dir, "vectors.old")
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    shutil.rmtree(old_dir, ignore_errors=True)
-    assigned = _ivf_assign_with_dist(merged, centroids)
-    assigned.write.mode("overwrite").partitionBy("cluster").parquet(tmp_dir)
-    n = spark.read.parquet(tmp_dir).count()
-    os.rename(vec_dir, old_dir)
-    os.rename(tmp_dir, vec_dir)
-    with open(os.path.join(index_dir, "centroids.json"), "w") as f:
-        json.dump(centroids, f)
+    stage = os.path.join(index_dir, "vectors.retrain")
+    n = write_table(
+        _ivf_assign_with_dist(merged, centroids), stage, partition_by=("cluster",)
+    )
+    swap_dir(stage, vec_dir)
+    write_json(os.path.join(index_dir, "centroids.json"), centroids)
     stats = _write_ivf_stats(spark, index_dir, vec_dir)
-    shutil.rmtree(old_dir, ignore_errors=True)
     return {
-        "n": int(n),
+        "n": n,
         "n_centroids": n_centroids,
         "train_mean_dist_before": before,
         "train_mean_dist_after": stats["train_mean_dist"],
@@ -512,20 +496,13 @@ def append_ivf_index(
     before AND after). The batch is cached around the write so the
     per-cluster stats agg is a second action over O(batch) cached rows,
     never a second pass over the source."""
-    import json
-    import os
-
     from pyspark.sql import functions as F
 
-    with open(os.path.join(index_dir, "centroids.json")) as f:
-        centroids = json.load(f)
-    v = new_embeddings.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    assigned = _ivf_assign_with_dist(v, centroids).persist()
+    centroids = read_json(os.path.join(index_dir, "centroids.json"))
+    assigned = _ivf_assign_with_dist(_vectors(new_embeddings, id_col, vec_col), centroids).persist()
     try:
-        assigned.write.mode("append").partitionBy("cluster").parquet(
-            os.path.join(index_dir, "vectors")
+        write_table(
+            assigned, os.path.join(index_dir, "vectors"), partition_by=("cluster",), mode="append"
         )
         per_cluster = (
             assigned.groupBy("cluster")
@@ -539,10 +516,8 @@ def append_ivf_index(
     batch_mean = (batch_total / batch_n) if batch_n else 0.0
     train_mean = None
     ratio = None
-    stats_path = os.path.join(index_dir, "stats.json")
-    if os.path.exists(stats_path):
-        with open(stats_path) as f:
-            stats = json.load(f)
+    stats = read_json(os.path.join(index_dir, "stats.json"), None)
+    if stats is not None:
         train_mean = stats.get("train_mean_dist")
         per_train = stats.get("cluster_mean_dist", {})
         num = den = 0.0
@@ -572,20 +547,12 @@ def append_srp_index(
     appended vectors land in exactly the buckets a full rebuild would
     give them — unlike IVF there is no drift; the appended index is
     IDENTICAL to a from-scratch persist over the union (test-pinned)."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        meta = json.load(f)
-    planes = srp_hyperplanes(meta["dim"], meta["bits"])
-    v = new_embeddings.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    withb = v.withColumn("bucket", _srp_bucket_udf(planes)(F.col("v")))
-    withb.write.mode("append").partitionBy("bucket").parquet(
-        os.path.join(index_dir, "vectors")
+    meta = read_json(os.path.join(index_dir, "meta.json"))
+    write_table(
+        _srp_vectors(new_embeddings, meta["dim"], meta["bits"], id_col, vec_col),
+        os.path.join(index_dir, "vectors"),
+        partition_by=("bucket",),
+        mode="append",
     )
 
 
@@ -593,32 +560,17 @@ def ivf_topk_persisted(spark, index_dir: str, query_vec, k: int, nprobe: int = 4
     """IVF-flat top-k over a persisted inverted file: load centroids,
     pick nprobe lists driver-side, scan ONLY those cluster directories
     (partition pruning — verify with .explain: PartitionFilters
-    [cluster IN (...)]), exact cosine inside."""
-    import json
-    import os
-
-    from pyspark.sql import Window
+    [cluster IN (...)]), exact cosine inside. Only the probed
+    directories are listed, with the recorded schema: constructing the
+    query runs no Spark job."""
     from pyspark.sql import functions as F
 
-    with open(os.path.join(index_dir, "centroids.json")) as f:
-        centroids = json.load(f)
-    q = [float(x) for x in query_vec]
-    dists = sorted(
-        (sum((a - b) * (a - b) for a, b in zip(q, c)), i)
-        for i, c in enumerate(centroids)
-    )
-    probes = [i for _, i in dists[:nprobe]]
-    vec = spark.read.parquet(os.path.join(index_dir, "vectors")).filter(
-        F.col("cluster").isin(probes)
-    )
-    qcol = F.array(*[F.lit(x) for x in q])
-    s = vec.select(
-        "id",
-        (_dot(F.col("v"), qcol) / (_norm(F.col("v")) * _norm(qcol))).alias("cosine"),
-    )
-    top = s.orderBy(F.desc("cosine"), F.asc("id")).limit(k)
-    w = Window.orderBy(F.desc("cosine"), F.asc("id"))
-    return top.withColumn("rank", F.row_number().over(w)).select("rank", "id", "cosine")
+    centroids = read_json(os.path.join(index_dir, "centroids.json"))
+    probes = _nearest_centroids(query_vec, centroids, nprobe)
+    vec = read_table(
+        spark, os.path.join(index_dir, "vectors"), parts=[("cluster", p) for p in probes]
+    ).filter(F.col("cluster").isin(probes))
+    return _ranked(vec.select("id", _cosine_expr(query_vec).alias("cosine")), k)
 
 
 def query_bucket(query_vec, dim: int, bits: int = SRP_BITS) -> int:
@@ -658,23 +610,17 @@ def srp_lsh_topk(
     EVERY vector and threw the LSH saving away.) For scan-time pruning
     on top, use persist_srp_index + srp_lsh_topk_persisted.
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     qbucket = query_bucket(query_vec, dim, bits)
     planes = srp_hyperplanes(dim, bits)
-    v = _apply_allowed(embeddings, allowed, id_col).select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    )
+    v = _vectors(_apply_allowed(embeddings, allowed, id_col), id_col, vec_col)
     cand = v.filter(
         F.bit_count(
             _srp_bucket_udf(planes)(F.col("v")).bitwiseXOR(F.lit(qbucket))
         ) <= probe_hamming
     )
-    s = cand.select("id", _cosine_expr(query_vec).alias("cosine"))
-    top = s.orderBy(F.desc("cosine"), F.asc("id")).limit(k)
-    w = Window.orderBy(F.desc("cosine"), F.asc("id"))
-    return top.withColumn("rank", F.row_number().over(w)).select("rank", "id", "cosine")
+    return _ranked(cand.select("id", _cosine_expr(query_vec).alias("cosine")), k)
 
 
 def probe_buckets(qbucket: int, bits: int, probe_hamming: int) -> list[int]:
@@ -701,26 +647,27 @@ def persist_srp_index(
     vec_col: str = "embedding",
 ):
     """Write the SRP-LSH inverted file to parquet PARTITIONED BY bucket
-    (plus a meta.json carrying dim/bits): a probe then prunes whole
-    bucket directories at scan time (PartitionFilters in the FileScan —
-    same layout trick as the IVF inverted file and the WAND term_bucket
+    (plus a meta.json carrying dim/bits, written first: committed
+    vectors always have their meta): a probe then prunes whole bucket
+    directories at scan time (PartitionFilters in the FileScan — same
+    layout trick as the IVF inverted file and the WAND term_bucket
     directories). Without this, every query re-derives buckets and
     scans the full embedding table."""
-    import json
-    import os
+    write_json(os.path.join(index_dir, "meta.json"), {"dim": dim, "bits": bits})
+    write_table(
+        _srp_vectors(embeddings, dim, bits, id_col, vec_col),
+        os.path.join(index_dir, "vectors"),
+        partition_by=("bucket",),
+    )
 
+
+def _srp_vectors(embeddings, dim: int, bits: int, id_col: str, vec_col: str):
+    """(id, v, bucket) rows of the persisted SRP inverted file; bucket
+    is an int, the type its directory name reads back as."""
     from pyspark.sql import functions as F
 
-    planes = srp_hyperplanes(dim, bits)
-    v = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    withb = v.withColumn("bucket", _srp_bucket_udf(planes)(F.col("v")))
-    withb.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(index_dir, "vectors")
-    )
-    with open(os.path.join(index_dir, "meta.json"), "w") as f:
-        json.dump({"dim": dim, "bits": bits}, f)
+    bucket = _srp_bucket_udf(srp_hyperplanes(dim, bits))(F.col("v")).cast("int")
+    return _vectors(embeddings, id_col, vec_col).withColumn("bucket", bucket)
 
 
 def srp_lsh_topk_persisted(
@@ -729,21 +676,15 @@ def srp_lsh_topk_persisted(
     """SRP-LSH top-k over a persisted bucket-partitioned inverted file:
     derive the probe bucket list driver-side (no Spark job), scan ONLY
     those bucket directories (partition pruning — verify with .explain:
-    PartitionFilters [bucket IN (...)]), exact cosine inside."""
-    import json
-    import os
-
-    from pyspark.sql import Window
+    PartitionFilters [bucket IN (...)]), exact cosine inside. Only the
+    probed directories are listed, with the recorded schema:
+    constructing the query runs no Spark job."""
     from pyspark.sql import functions as F
 
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        meta = json.load(f)
+    meta = read_json(os.path.join(index_dir, "meta.json"))
     qbucket = query_bucket(query_vec, meta["dim"], meta["bits"])
     probes = probe_buckets(qbucket, meta["bits"], probe_hamming)
-    vec = spark.read.parquet(os.path.join(index_dir, "vectors")).filter(
-        F.col("bucket").isin(probes)
-    )
-    s = vec.select("id", _cosine_expr(query_vec).alias("cosine"))
-    top = s.orderBy(F.desc("cosine"), F.asc("id")).limit(k)
-    w = Window.orderBy(F.desc("cosine"), F.asc("id"))
-    return top.withColumn("rank", F.row_number().over(w)).select("rank", "id", "cosine")
+    vec = read_table(
+        spark, os.path.join(index_dir, "vectors"), parts=[("bucket", b) for b in probes]
+    ).filter(F.col("bucket").isin(probes))
+    return _ranked(vec.select("id", _cosine_expr(query_vec).alias("cosine")), k)

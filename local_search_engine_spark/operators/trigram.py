@@ -55,18 +55,20 @@ def doc_trigrams(docs, text_col: str = "content", id_col: str = "doc_id"):
     )
 
 
-def build_trigram_index(docs, index_dir: str, text_col: str = "content", id_col: str = "doc_id"):
+def build_trigram_index(docs, index_dir: str, text_col: str = "content", id_col: str = "doc_id") -> int:
     """Write the trigram postings bucket-partitioned (pmod(h32(trigram),
     64)) so a query's trigram literals prune whole directories at scan
-    time — identical layout discipline to the WAND term_bucket dirs."""
+    time — identical layout discipline to the WAND term_bucket dirs. A
+    plans/store.py table (read it with read_table); returns its rows."""
     from pyspark.sql import functions as F
 
     from ..functions.hashing import h32_col
+    from ..plans.store import write_table
 
     tg = doc_trigrams(docs, text_col, id_col).withColumn(
         "bucket", F.pmod(h32_col(F.col("trigram")), F.lit(TRIGRAM_N_BUCKETS)).cast("int")
     )
-    tg.write.mode("overwrite").partitionBy("bucket").parquet(index_dir)
+    return write_table(tg, index_dir, partition_by=("bucket",))
 
 
 def literal_query_trigrams(literal: str) -> list[str]:

@@ -20,6 +20,9 @@ inside the wave and avg_idf from the idf unit; each postings group
 encodes only its own shards, and the manifest's row counts are read
 from the parquet footers each unit just wrote.
 
+Every table goes through plans/store.py: it is committed by the
+`_schema.json` written after its data, and read back with that schema.
+
 Replaces the reference's save_indices/load_indices JSON+pickle
 persistence (reference preprocessing.py:597-671) with schema-checked
 Parquet, and its incremental corpus append (reference
@@ -29,15 +32,16 @@ streaming/merge.py for the append path).
 Layout under index_dir/:
   _manifest.json        stage/group completion + lineage
   _metrics.jsonl        one line per completed unit (run_id, stage, rows, wall_ms)
-  stats.json            n_docs, avgdl, avg_idf, params, table schemas
+  stats.json            n_docs, avgdl, avg_idf, params
   docs/                 doc_id, repo, path, commit, lang, content_sha256, doc_len
   tf/                   doc_id, term, tf
   idf/                  term, df, idf_raw, idf
   postings/group=G/     compressed blocks (term_bucket, part_id, block_id, ...)
   shard_meta/           part_id, first_doc_id, n_docs, doc_lens
+  <table>/_schema.json  the table's read-back schema; its commit marker
 
-load_index reads every table with the schema stats.json recorded at
-build time, so loading an index runs no Spark job.
+load_index reads every table with its recorded schema, so loading an
+index runs no Spark job.
 """
 
 from __future__ import annotations
@@ -49,17 +53,16 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+from .store import committed, read_json, read_table, write_json, write_table
+
 
 class Manifest:
     def __init__(self, index_dir: str):
         self.dir = index_dir
         self.path = os.path.join(index_dir, "_manifest.json")
         self.metrics_path = os.path.join(index_dir, "_metrics.jsonl")
-        self.data = {"units": {}}
+        self.data = read_json(self.path, {"units": {}})
         self._lock = threading.Lock()  # stages write concurrently
-        if os.path.exists(self.path):
-            with open(self.path) as f:
-                self.data = json.load(f)
 
     def done(self, unit: str, fingerprint: str) -> bool:
         u = self.data["units"].get(unit)
@@ -74,11 +77,7 @@ class Manifest:
                 "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                 **metrics,
             }
-            os.makedirs(self.dir, exist_ok=True)
-            tmp = self.path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(self.data, f, indent=1, sort_keys=True)
-            os.replace(tmp, self.path)
+            write_json(self.path, self.data)
             with open(self.metrics_path, "a") as f:
                 f.write(json.dumps({"run_id": run_id, "unit": unit, **metrics}) + "\n")
 
@@ -113,25 +112,10 @@ def corpus_fingerprint(corpus, params, text_col: str | None = None):
     return fp, f"{fp};ch={row['ch']}"
 
 
-
-
 # Part of every layout fingerprint: bump it whenever what a build writes
 # changes shape, so an index written before misses the resume fast path
-# and every unit and is rebuilt. 2: stats.json records table schemas.
-INDEX_FORMAT = 2
-
-
-def _parquet_rows(path: str) -> int:
-    """Rows under a parquet directory, summed from the file footers in
-    this process (no Spark job)."""
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.read_metadata(os.path.join(d, f)).num_rows
-        for d, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
+# and every unit and is rebuilt. 3: tables are plans/store.py tables.
+INDEX_FORMAT = 3
 
 
 def _in_caller_context(spark, fn):
@@ -170,7 +154,6 @@ def build_persisted_index(
     Returns the manifest (with per-unit skip/build lineage).
     """
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     from ..functions.codec import DEFAULT_BLOCK_SPAN
     from ..operators.build import (
@@ -180,12 +163,7 @@ def build_persisted_index(
         index_tables,
         with_doc_ids,
     )
-    from ..operators.postings import (
-        POSTINGS_SCHEMA,
-        SHARD_META_SCHEMA,
-        posting_blocks,
-        shard_meta_table,
-    )
+    from ..operators.postings import posting_blocks, shard_meta_table
 
     params = params or BM25Params()
     span = block_span or DEFAULT_BLOCK_SPAN
@@ -211,18 +189,23 @@ def build_persisted_index(
     probe_fp = f"{content_fp};{layout}"
     side_units = ("docs", "tf", "idf", "shard_meta")
 
+    def path(unit: str) -> str:
+        return os.path.join(index_dir, unit)
+
+    def on_disk(unit: str) -> bool:
+        # a MANIFEST entry must never vouch for deleted data: the unit's
+        # table is committed and its directory exists
+        return committed(path(unit.split("/")[0])) and os.path.isdir(path(unit))
+
     def have(unit: str, fpr: str) -> bool:
-        # a unit counts as done only while its data directory exists:
-        # a MANIFEST entry must never vouch for deleted data
-        return man.done(unit, fpr) and os.path.isdir(os.path.join(index_dir, unit))
+        return man.done(unit, fpr) and on_disk(unit)
 
     # whole-build fast path: a build previously COMPLETED over exactly
     # this (keys, content, params, layout) — one scan-agg proves nothing
     # changed, so skip even the id-assignment jobs. Partial builds
     # (only_groups) never mark this unit.
     if man.done("resume_probe", probe_fp) and all(
-        os.path.isdir(os.path.join(index_dir, u))
-        for u in (*side_units, *(f"postings/group={g}" for g in range(n_groups)))
+        map(on_disk, (*side_units, *(f"postings/group={g}" for g in range(n_groups))))
     ):
         return man
 
@@ -292,66 +275,39 @@ def build_persisted_index(
                     totals.append(int(docs.agg(F.sum("doc_len")).first()[0] or 0))
             return totals[0]
 
-        def path(unit: str) -> str:
-            return os.path.join(index_dir, unit)
-
         def write_docs():
-            docs.write.mode("overwrite").parquet(path("docs"))
-            return {"rows": n_docs}
+            return {"rows": write_table(docs, path("docs"))}
 
         def write_tf():
-            tf.write.mode("overwrite").parquet(path("tf"))
-            return {"rows": _parquet_rows(path("tf")), "n_tokens": n_tokens()}
+            return {"rows": write_table(tf, path("tf")), "n_tokens": n_tokens()}
 
         def write_idf():
             idf, avg_idf = idf_table(doc_freqs(tf), n_docs, params.epsilon)
-            idf.write.mode("overwrite").parquet(path("idf"))
-            # postings as read back from postings/: the term_bucket data
-            # column becomes the last of the two directory columns
-            blocks = T._parse_datatype_string(POSTINGS_SCHEMA)
-            postings = T.StructType(
-                [f for f in blocks.fields if f.name != "term_bucket"]
-                + [T.StructField(c, T.IntegerType()) for c in ("group", "term_bucket")]
+            n_rows = write_table(idf, path("idf"))
+            write_json(
+                path("stats.json"),
+                {
+                    "n_docs": n_docs,
+                    "avgdl": n_tokens() / n_docs if n_docs else 0.0,
+                    "avg_idf": avg_idf,
+                    "k1": params.k1,
+                    "b": params.b,
+                    "epsilon": params.epsilon,
+                    "docs_per_shard": docs_per_shard,
+                    "block_span": span,
+                    "n_buckets": n_buckets,
+                    "bucket_hash": "h32",
+                    "n_groups": n_groups,
+                },
             )
-            schemas = {
-                "docs": docs.schema,
-                "tf": tf.schema,
-                "idf": idf.schema,
-                "shard_meta": T._parse_datatype_string(SHARD_META_SCHEMA),
-                "postings": postings,
-            }
-            with open(path("stats.json"), "w") as f:
-                json.dump(
-                    {
-                        "n_docs": n_docs,
-                        "avgdl": n_tokens() / n_docs if n_docs else 0.0,
-                        "avg_idf": avg_idf,
-                        "k1": params.k1,
-                        "b": params.b,
-                        "epsilon": params.epsilon,
-                        "docs_per_shard": docs_per_shard,
-                        "block_span": span,
-                        "n_buckets": n_buckets,
-                        "bucket_hash": "h32",
-                        "n_groups": n_groups,
-                        # a read with a given schema makes every field
-                        # nullable, as an inferring read does
-                        "schemas": {k: v.jsonValue() for k, v in schemas.items()},
-                    },
-                    f,
-                )
-            return {"rows": _parquet_rows(path("idf"))}
+            return {"rows": n_rows}
 
         def write_shard_meta():
-            shard_meta_table(docs, docs_per_shard).write.mode("overwrite").parquet(
-                path("shard_meta")
-            )
-            return {"rows": _parquet_rows(path("shard_meta"))}
+            return {"rows": write_table(shard_meta_table(docs, docs_per_shard), path("shard_meta"))}
 
         def write_group(g: int):
             # only this group's shards reach the encode
             in_group = group_of == g
-            gdir = path(f"postings/group={g}")
             blocks = posting_blocks(
                 tf.filter(in_group), docs.filter(in_group), docs_per_shard, span, n_buckets
             )
@@ -359,8 +315,10 @@ def build_persisted_index(
             # term-bucket literals prune whole directories at scan time
             # (make_wand_topk n_buckets arg), then Parquet min/max stats
             # on the sorted term column prune row groups within them
-            blocks.write.mode("overwrite").partitionBy("term_bucket").parquet(gdir)
-            return {"rows": _parquet_rows(gdir), "group": g}
+            n_rows = write_table(
+                blocks, path("postings"), partition_by=("term_bucket",), part=("group", g)
+            )
+            return {"rows": n_rows, "group": g}
 
         writers = {
             "docs": write_docs,
@@ -409,23 +367,14 @@ def build_persisted_index(
 def load_index(spark, index_dir: str):
     """Load a persisted index → (InvertedIndex, postings, shard_meta,
     stats dict). Query with operators.wand.make_wand_topk. Every table is
-    read with the schema stats.json recorded, so no Spark job runs."""
-    from pyspark.sql import types as T
-
+    read with its recorded schema, so no Spark job runs."""
     from ..operators.build import BM25Params, InvertedIndex
 
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
-    if "schemas" not in stats:
-        raise ValueError(
-            f"{index_dir} was written before stats.json recorded table "
-            "schemas; rebuild it with build_persisted_index"
-        )
+    stats = read_json(os.path.join(index_dir, "stats.json"))
     params = BM25Params(k1=stats["k1"], b=stats["b"], epsilon=stats["epsilon"])
 
     def read(name):
-        schema = T.StructType.fromJson(stats["schemas"][name])
-        return spark.read.schema(schema).parquet(os.path.join(index_dir, name))
+        return read_table(spark, os.path.join(index_dir, name))
 
     postings = read("postings")
     shard_meta = read("shard_meta")

@@ -30,10 +30,10 @@ Two shapes live here:
 
 from __future__ import annotations
 
-import json
 import os
 
 from ..operators.build import BM25Params, InvertedIndex, idf_table
+from ..plans.store import committed, read_json, read_table, swap_dir, write_json, write_table
 
 
 def merge_tf(tf_old, tf_new):
@@ -65,9 +65,11 @@ def merge_index(old: InvertedIndex, new_docs_with_id, text_col: str = "content")
     docs = old.docs.unionByName(new_idx.docs, allowMissingColumns=True)
     tf = merge_tf(old.tf, new_idx.tf)
     n_docs = old.n_docs + new_idx.n_docs
-    total_len = (
-        old.n_docs * old.avgdl + new_idx.n_docs * new_idx.avgdl
-    )
+    # each avgdl is its integer token total s over n, correctly rounded,
+    # so n·avgdl is within s·2^-52 of s and rounds back to s exactly
+    # (s < 2^51); dividing the exact merged total matches a from-scratch
+    # build bit for bit, where n_old·avgdl_old + n_new·avgdl_new need not
+    total_len = round(old.n_docs * old.avgdl) + round(new_idx.n_docs * new_idx.avgdl)
     avgdl = total_len / n_docs if n_docs else 0.0
     idf, avg_idf = idf_table(doc_freqs(tf), n_docs, old.params.epsilon)
     return InvertedIndex(
@@ -88,6 +90,11 @@ class PersistedIndexState:
       tf/batch=<id>/    (doc_id, term, tf) rows for that batch only
       docs/batch=<id>/  (doc_id, doc_len) rows for that batch only
       _batches.json     {batch_id: {"n_docs": .., "rows": ..}} commit log
+      _tombstones.json  logically deleted doc_ids
+
+    tf/ and docs/ are store tables (plans/store.py): the batch directory
+    column reads back as a string, before and after compact() writes its
+    batch=__base__ directory.
 
     append_batch(docs) tokenizes ONLY the batch and writes its deltas —
     per-batch cost is O(batch), independent of how much state exists
@@ -105,11 +112,9 @@ class PersistedIndexState:
         self.dir = state_dir
         self.params = params or BM25Params()
         self._log_path = os.path.join(state_dir, "_batches.json")
+        self._tomb_path = os.path.join(state_dir, "_tombstones.json")
         os.makedirs(state_dir, exist_ok=True)
-        self._log: dict[str, dict] = {}
-        if os.path.exists(self._log_path):
-            with open(self._log_path) as f:
-                self._log = json.load(f)
+        self._log: dict[str, dict] = read_json(self._log_path, {})
 
     def committed(self, batch_id: int) -> bool:
         return str(batch_id) in self._log
@@ -123,26 +128,20 @@ class PersistedIndexState:
 
         if self.committed(batch_id):
             return None
+        part = ("batch", str(batch_id))
         tf = term_frequencies(docs_with_id, text_col=text_col).cache()
-        tf.write.mode("overwrite").parquet(
-            os.path.join(self.dir, "tf", f"batch={batch_id}")
-        )
+        n_rows = write_table(tf, os.path.join(self.dir, "tf"), part=part)
         doc_lens = tf.groupBy("doc_id").agg(F.sum("tf").cast("int").alias("doc_len"))
         docs = (
             docs_with_id.select("doc_id")
             .join(doc_lens, "doc_id", "left")
             .withColumn("doc_len", F.coalesce(F.col("doc_len"), F.lit(0)))
         )
-        docs.write.mode("overwrite").parquet(
-            os.path.join(self.dir, "docs", f"batch={batch_id}")
-        )
-        entry = {"rows": tf.count(), "n_docs": docs_with_id.count()}
+        n_docs = write_table(docs, os.path.join(self.dir, "docs"), part=part)
         tf.unpersist()
+        entry = {"rows": n_rows, "n_docs": n_docs}
         self._log[str(batch_id)] = entry
-        tmp = self._log_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._log, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._log_path)
+        write_json(self._log_path, self._log)
         return entry
 
     def compact(self) -> dict:
@@ -150,51 +149,32 @@ class PersistedIndexState:
         and drop the per-batch dirs — bounds the small-file count after
         long ingest runs (the parquet equivalent of an Iceberg rewrite).
         The commit log keeps EVERY batch id it has seen, so re-delivered
-        batches stay no-ops after compaction. Safe to re-run; crash
-        between the new-base write and the old-dir removal leaves both
-        readable-but-duplicated only within the _compact staging dir,
-        never the live tree (stage → swap via os.replace)."""
-        import shutil
-
+        batches stay no-ops after compaction. Safe to re-run: the new
+        base is staged beside the live table and swapped in
+        (plans/store.swap_dir), so the live tree never holds it twice."""
         from pyspark.sql import functions as F
 
-        spark = self.spark
         stats = {}
         dead = self.tombstones()
         for sub in ("tf", "docs"):
             live = os.path.join(self.dir, sub)
-            if not os.path.isdir(live):
+            if not committed(live):
                 continue
             stage = os.path.join(self.dir, f"_compact_{sub}")
-            shutil.rmtree(stage, ignore_errors=True)
-            df = spark.read.parquet(live)
+            df = read_table(self.spark, live).drop("batch")
             if dead:
                 # the rewrite is the natural purge point: tombstoned
                 # rows leave the physical layout here
                 df = df.filter(~F.col("doc_id").isin(dead))
-            df.write.mode("overwrite").parquet(
-                os.path.join(stage, "batch=__base__")
-            )
-            stats[sub] = spark.read.parquet(stage).count()
-            old = os.path.join(self.dir, f"_old_{sub}")
-            shutil.rmtree(old, ignore_errors=True)
-            os.replace(live, old)
-            os.replace(stage, live)
-            shutil.rmtree(old, ignore_errors=True)
+            stats[sub] = write_table(df, stage, part=("batch", "__base__"))
+            swap_dir(stage, live)
         self._log["__compacted__"] = {"rows": stats.get("tf", 0)}
-        tmp = self._log_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._log, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._log_path)
+        write_json(self._log_path, self._log)
         if dead:
             # physically purged above — clear the tombstone log (crash
             # between the swap and this point only leaves a redundant
             # logical filter, never resurrected rows)
-            tpath = os.path.join(self.dir, "_tombstones.json")
-            tmp = tpath + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump([], f)
-            os.replace(tmp, tpath)
+            write_json(self._tomb_path, [])
         return stats
 
     def delete_docs(self, doc_ids) -> int:
@@ -207,25 +187,12 @@ class PersistedIndexState:
         fingerprints change) while untouched groups stay manifest hits.
         Idempotent: re-deleting an id is a no-op. Returns the total
         tombstone count."""
-        ids = sorted({int(i) for i in doc_ids})
-        path = os.path.join(self.dir, "_tombstones.json")
-        existing: list[int] = []
-        if os.path.exists(path):
-            with open(path) as f:
-                existing = json.load(f)
-        merged = sorted(set(existing) | set(ids))
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(merged, f)
-        os.replace(tmp, path)
+        merged = sorted(set(self.tombstones()) | {int(i) for i in doc_ids})
+        write_json(self._tomb_path, merged)
         return len(merged)
 
     def tombstones(self) -> list[int]:
-        path = os.path.join(self.dir, "_tombstones.json")
-        if not os.path.exists(path):
-            return []
-        with open(path) as f:
-            return json.load(f)
+        return read_json(self._tomb_path, [])
 
     def load_index(self) -> InvertedIndex:
         """Flat-scan the accumulated deltas → full InvertedIndex. Plan
@@ -238,8 +205,8 @@ class PersistedIndexState:
 
         from ..operators.build import doc_freqs
 
-        tf = self.spark.read.parquet(os.path.join(self.dir, "tf"))
-        docs = self.spark.read.parquet(os.path.join(self.dir, "docs"))
+        tf = read_table(self.spark, os.path.join(self.dir, "tf"))
+        docs = read_table(self.spark, os.path.join(self.dir, "docs"))
         dead = self.tombstones()
         if dead:
             # tombstone sets are user-sized; isin compiles to an
@@ -275,31 +242,17 @@ def stream_ingest(
     files; each micro-batch lands in the index via foreachBatch (the
     standard pattern for stateful sinks Spark doesn't ship).
 
-    index_state is either
-      * a PersistedIndexState — the scale path: each batch appends its
-        O(batch) delta; exactly-once via the per-batch commit log on top
-        of the streaming checkpoint; or
-      * a {"index": InvertedIndex} dict — the legacy in-memory merge
-        (bounded batch counts only: lineage grows per merge).
-    Returns the StreamingQuery (caller awaits/stops it).
+    index_state is a PersistedIndexState: each batch appends its
+    O(batch) delta, exactly-once via the per-batch commit log on top of
+    the streaming checkpoint. Returns the StreamingQuery (caller
+    awaits/stops it).
     """
     stream = spark.readStream.schema(schema).parquet(source_dir)
 
-    if isinstance(index_state, PersistedIndexState):
-
-        def on_batch(batch_df, batch_id: int):
-            if batch_df.isEmpty():
-                return
-            index_state.append_batch(batch_df, batch_id, text_col=text_col)
-
-    else:
-
-        def on_batch(batch_df, batch_id: int):
-            if batch_df.isEmpty():
-                return
-            index_state["index"] = merge_index(
-                index_state["index"], batch_df, text_col=text_col
-            )
+    def on_batch(batch_df, batch_id: int):
+        if batch_df.isEmpty():
+            return
+        index_state.append_batch(batch_df, batch_id, text_col=text_col)
 
     writer = stream.writeStream.foreachBatch(on_batch).trigger(availableNow=True)
     if checkpoint_dir:

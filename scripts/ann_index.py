@@ -25,6 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from local_search_engine_spark.operators import similarity as SIM
+from local_search_engine_spark.plans.store import rows
 from local_search_engine_spark.session import get_spark
 
 
@@ -68,7 +69,7 @@ def main() -> None:
                 )
             ]
             SIM.persist_ivf_index(emb, cents, args.index)
-        n = spark.read.parquet(os.path.join(args.index, "vectors")).count()
+        n = rows(os.path.join(args.index, "vectors"))
         print(json.dumps({"cmd": "build", "kind": args.kind, "vectors": n,
                           "wall_sec": round(time.time() - t0, 2)}))
     elif args.cmd == "append":
@@ -83,7 +84,7 @@ def main() -> None:
                 "drift_ratio": m["drift_ratio"],
                 "retrain_recommended": m["retrain_recommended"],
             }
-        n = spark.read.parquet(os.path.join(args.index, "vectors")).count()
+        n = rows(os.path.join(args.index, "vectors"))
         print(json.dumps({"cmd": "append", "kind": kind, "vectors": n,
                           "drift": drift,
                           "wall_sec": round(time.time() - t0, 2)}))

@@ -24,7 +24,8 @@ with RRF, then best-snippet extraction on the fused top-k — one
 command, all persisted-index pruning paths. On first use it builds
 ROOT/bm25 and ROOT/ann from the corpus (build_persisted_index is
 manifest-keyed, so re-running after an unchanged corpus is a no-op
-resume; the ANN index is rebuilt only if absent).
+resume; the ANN index is rebuilt only if its vectors table is not
+committed).
 
 On a real cluster: the same commands via spark-submit --py-files
 engine.zip.
@@ -40,12 +41,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from local_search_engine_spark.plans.store import (
+    committed,
+    read_json,
+    read_table,
+    write_json,
+    write_table,
+)
 from local_search_engine_spark.session import get_spark
 from local_search_engine_spark.sources.corpus import read_corpus
 
 # underscore prefix: Spark's parquet file listing ignores _-prefixed
 # files (same convention as _SUCCESS), so the sidecar can live inside a
-# partitioned index directory without breaking schema inference
+# partitioned index directory without entering its file listing
 FINGERPRINT_FILE = "_corpus_fingerprint.json"
 
 
@@ -72,8 +80,7 @@ def _write_fingerprint(docs, out_dir: str) -> dict:
     """Persist the corpus fingerprint next to a trigram index so grep
     can detect staleness."""
     fp = _corpus_fingerprint(docs)
-    with open(os.path.join(out_dir, FINGERPRINT_FILE), "w") as f:
-        json.dump(fp, f)
+    write_json(os.path.join(out_dir, FINGERPRINT_FILE), fp)
     return fp
 
 
@@ -84,14 +91,10 @@ def _load_fresh_index(spark, index_dir: str, docs):
     so the no-silent-truncation contract requires refusing the prune
     (the caller falls back to the exact full scan). A missing
     fingerprint file counts as stale."""
-    fp_path = os.path.join(index_dir, FINGERPRINT_FILE)
-    expected = None
-    if os.path.exists(fp_path):
-        with open(fp_path) as f:
-            expected = json.load(f)
+    expected = read_json(os.path.join(index_dir, FINGERPRINT_FILE), None)
     if expected != _corpus_fingerprint(docs):
         return None, True
-    return spark.read.parquet(index_dir), False
+    return read_table(spark, index_dir), False
 
 
 def _ensure_search_indexes(spark, corpus, root: str) -> dict:
@@ -105,7 +108,9 @@ def _ensure_search_indexes(spark, corpus, root: str) -> dict:
     ann_dir = os.path.join(root, "ann")
     # manifest-keyed: unchanged corpus => all units are manifest hits
     build_persisted_index(spark, corpus, bm25_dir, text_col="content")
-    built_ann = not os.path.exists(os.path.join(ann_dir, "meta.json"))
+    # the data decides, not a metadata file: persist_srp_index writes
+    # meta.json before it commits the vectors table
+    built_ann = not committed(os.path.join(ann_dir, "vectors"))
     if built_ann:
         from local_search_engine_spark.plans.checkpoint import load_index
 
@@ -140,8 +145,6 @@ def _ensure_phrase_filter(spark, corpus, idx, dirs):
     BM25 index (ids join back via content hash), persisted under
     ROOT/pos, fingerprint-keyed: stale or missing → rebuild. Returns
     the bound phrase-query object (only `matches` is used here)."""
-    import os
-
     from local_search_engine_spark.operators.positional import (
         build_positional_postings,
         load_positional_postings,
@@ -151,12 +154,8 @@ def _ensure_phrase_filter(spark, corpus, idx, dirs):
 
     n_buckets = 16
     pos_dir = os.path.join(os.path.dirname(dirs["bm25"]), "pos")
-    fp_path = os.path.join(pos_dir, FINGERPRINT_FILE)
     docs_fp = _with_file(corpus)
-    expected = None
-    if os.path.exists(fp_path):
-        with open(fp_path) as f:
-            expected = json.load(f)
+    expected = read_json(os.path.join(pos_dir, FINGERPRINT_FILE), None)
     if expected != _corpus_fingerprint(docs_fp):
         ids = _docs_with_ids(corpus, idx).select("doc_id", "content")
         persist_positional_postings(
@@ -369,11 +368,7 @@ def cmd_phrase(spark, corpus, args) -> dict:
     if args.index:
         pos_dir = os.path.join(args.index, "pos")
         ids_dir = os.path.join(args.index, "pos_ids")
-        fp_path = os.path.join(pos_dir, FINGERPRINT_FILE)
-        expected = None
-        if os.path.exists(fp_path):
-            with open(fp_path) as f:
-                expected = json.load(f)
+        expected = read_json(os.path.join(pos_dir, FINGERPRINT_FILE), None)
         if expected != _corpus_fingerprint(docs):
             ids, keys = with_doc_ids(docs)
             ids = ids.select("doc_id", "file", "content")
@@ -383,11 +378,11 @@ def cmd_phrase(spark, corpus, args) -> dict:
                 ),
                 pos_dir,
             )
-            ids.select("doc_id", "file").write.mode("overwrite").parquet(ids_dir)
+            write_table(ids.select("doc_id", "file"), ids_dir)
             _write_fingerprint(docs, pos_dir)
             built = True
         postings = load_positional_postings(spark, pos_dir)
-        idmap = spark.read.parquet(ids_dir)
+        idmap = read_table(spark, ids_dir)
     else:
         ids, keys = with_doc_ids(docs)
         ids = ids.select("doc_id", "file", "content")
@@ -731,11 +726,10 @@ def main() -> None:
         from local_search_engine_spark.operators.trigram import build_trigram_index
 
         docs = _with_file(corpus)
-        build_trigram_index(docs, args.out, text_col="content", id_col="file")
+        n = build_trigram_index(docs, args.out, text_col="content", id_col="file")
         # record what corpus this index describes, so grep can detect a
         # stale index instead of silently missing late-added docs
         fp = _write_fingerprint(docs, args.out)
-        n = spark.read.parquet(args.out).count()
         print(json.dumps({"cmd": "index", "postings": n, "fingerprint": fp,
                           "wall_sec": round(time.time() - t0, 2)}))
     elif args.cmd == "grep":

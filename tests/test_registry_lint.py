@@ -310,3 +310,73 @@ def test_one_tokenizer_lint_is_live(tmp_path):
         ("ops.py", 1),
         ("ops.py", 3),
     ]
+
+
+STORE_EXEMPT = (os.path.join("plans", "store.py"), os.path.join("sources", "corpus.py"))
+
+
+def store_bypass_sites(pkg_dir=PKG_DIR):
+    """(file, line) of every parquet read or write, every `json.dump` /
+    `json.load` and every write-mode `open(` in the package outside
+    plans/store.py, the one module that commits and reads index tables
+    and metadata (sources/corpus.py reads input corpora and is exempt).
+    A stream source (`readStream...parquet`) reads input files with the
+    caller's schema, and an append-mode `open` adds lines to a log
+    without touching what it holds; neither counts."""
+    import ast
+
+    def write_mode(call):
+        mode = call.args[1] if len(call.args) > 1 else None
+        mode = next((k.value for k in call.keywords if k.arg == "mode"), mode)
+        return isinstance(mode, ast.Constant) and any(c in str(mode.value) for c in "wx+")
+
+    sites = []
+    for root, _, files in os.walk(pkg_dir):
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg_dir)
+            if not name.endswith(".py") or rel in STORE_EXEMPT:
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                fn = node.func
+                if isinstance(fn, ast.Attribute) and fn.attr == "parquet":
+                    bad = not any(
+                        isinstance(n, ast.Attribute) and n.attr == "readStream"
+                        for n in ast.walk(fn.value)
+                    )
+                elif isinstance(fn, ast.Attribute) and fn.attr in ("dump", "load"):
+                    bad = isinstance(fn.value, ast.Name) and fn.value.id == "json"
+                else:
+                    bad = isinstance(fn, ast.Name) and fn.id == "open" and write_mode(node)
+                if bad:
+                    sites.append((rel, node.lineno))
+    return sorted(sites)
+
+
+def test_index_tables_go_through_the_store():
+    assert store_bypass_sites() == []
+
+
+def test_store_lint_is_live(tmp_path):
+    body = (
+        "import json\n"
+        "def f(spark, df, meta, p):\n"
+        '    df.write.mode("overwrite").parquet(p)\n'
+        "    t = spark.read.parquet(p)\n"
+        '    s = spark.readStream.schema("a int").parquet(p)\n'
+        '    with open(p, "w") as fh:\n'
+        "        json.dump(meta, fh)\n"
+        '    with open(p, mode="a") as fh:\n'
+        "        fh.write(json.dumps(meta))\n"
+        "    with open(p) as fh:\n"
+        "        return json.load(fh)\n"
+    )
+    for rel in (os.path.join("operators", "x.py"), *STORE_EXEMPT):
+        (tmp_path / os.path.dirname(rel)).mkdir(exist_ok=True)
+        (tmp_path / rel).write_text(body)
+    x = os.path.join("operators", "x.py")
+    assert store_bypass_sites(str(tmp_path)) == [(x, 3), (x, 4), (x, 6), (x, 7), (x, 11)]

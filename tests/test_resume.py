@@ -269,9 +269,9 @@ def test_deleted_side_table_is_rebuilt(spark, tmp_path):
 
 
 def test_index_of_an_older_format_is_rebuilt(spark, tmp_path):
-    """An index written before stats.json recorded table schemas (no
-    format tag in its fingerprints) misses the fast path and every unit,
-    is rebuilt, and then loads."""
+    """An index written before its tables were store tables (no
+    _schema.json sidecars, no format tag in its fingerprints) misses the
+    fast path and every unit, is rebuilt, and then loads."""
     corpus = gen_corpus_spark(spark, N_DOCS, partitions=8)
     d = str(tmp_path / "idx")
     build_persisted_index(spark, corpus, d, **KW)
@@ -279,13 +279,11 @@ def test_index_of_an_older_format_is_rebuilt(spark, tmp_path):
     with open(path) as f:
         man = json.load(f)
     for u in man["units"].values():
-        u["fingerprint"] = u["fingerprint"].replace(";format=2", "")
+        u["fingerprint"] = u["fingerprint"].replace(";format=3", "")
     with open(path, "w") as f:
         json.dump(man, f)
-    stats = _stats(d)
-    del stats["schemas"]
-    with open(os.path.join(d, "stats.json"), "w") as f:
-        json.dump(stats, f)
+    for name in ("docs", "tf", "idf", "shard_meta", "postings"):
+        os.remove(os.path.join(d, name, "_schema.json"))
 
     rebuilt = build_persisted_index(spark, corpus, d, **KW).data["units"]
     assert {u: v["run_id"] for u, v in rebuilt.items()} == {

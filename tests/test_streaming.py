@@ -8,7 +8,11 @@ import os
 
 
 from local_search_engine_spark.operators.build import build_index_from
-from local_search_engine_spark.streaming.merge import stream_ingest
+from local_search_engine_spark.streaming.merge import (
+    PersistedIndexState,
+    merge_index,
+    stream_ingest,
+)
 
 SCHEMA = "doc_id long, text string"
 
@@ -23,8 +27,9 @@ def test_stream_merge_equals_rebuild(spark, tmp_path):
     os.makedirs(watch, exist_ok=True)
     ckpt = str(tmp_path / "ckpt")
 
-    base = build_index_from(mkdocs(spark, 0, 40), text_col="text", cache=False)
-    state = {"index": base}
+    state = PersistedIndexState(spark, str(tmp_path / "state"))
+    # the base under a batch id the stream never assigns
+    state.append_batch(mkdocs(spark, 0, 40), batch_id=-1, text_col="text")
 
     # two file drops = two micro-batches under availableNow
     mkdocs(spark, 40, 70).write.mode("append").parquet(watch)
@@ -35,11 +40,11 @@ def test_stream_merge_equals_rebuild(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    merged = state["index"]
+    merged = state.load_index()
     full = build_index_from(mkdocs(spark, 0, 100), text_col="text", cache=False)
 
     assert merged.n_docs == full.n_docs == 100
-    assert abs(merged.avgdl - full.avgdl) < 1e-9
+    assert merged.avgdl == full.avgdl
     got = {
         (r.term): (r.df, round(r.idf, 12))
         for r in merged.idf.select("term", "df", "idf").collect()
@@ -51,10 +56,24 @@ def test_stream_merge_equals_rebuild(spark, tmp_path):
     assert got == want
 
     # restart with the same checkpoint: no files left -> no double merge
-    state2 = {"index": merged}
+    state2 = PersistedIndexState(spark, str(tmp_path / "state"))
     q2 = stream_ingest(spark, watch, state2, SCHEMA, text_col="text", checkpoint_dir=ckpt)
     q2.awaitTermination(60)
-    assert state2["index"].n_docs == 100
+    assert state2.load_index().n_docs == 100
+
+
+def test_merge_index_avgdl_is_bit_exact(spark):
+    """merge_index derives avgdl from the exact integer token total: on
+    this split, n_old·avgdl_old + n_new·avgdl_new is 1 ulp off a
+    from-scratch build, and the merged avgdl is not."""
+    old = build_index_from(mkdocs(spark, 0, 11), text_col="text", cache=False)
+    merged = merge_index(old, mkdocs(spark, 11, 65), text_col="text")
+    full = build_index_from(mkdocs(spark, 0, 65), text_col="text", cache=False)
+    new = build_index_from(mkdocs(spark, 11, 65), text_col="text", cache=False)
+    weighted = (old.n_docs * old.avgdl + new.n_docs * new.avgdl) / 65
+    assert weighted != full.avgdl  # the split still exposes the rounding
+    assert merged.n_docs == full.n_docs == 65
+    assert merged.avgdl == full.avgdl
 
 
 def test_persisted_state_many_batches_bounded(spark, tmp_path):
@@ -68,8 +87,6 @@ def test_persisted_state_many_batches_bounded(spark, tmp_path):
     - the loaded index's plan depth is a flat scan, not an N-deep union.
     """
     import time
-
-    from local_search_engine_spark.streaming.merge import PersistedIndexState
 
     state = PersistedIndexState(spark, str(tmp_path / "state"))
     n_batches, per = 12, 10
@@ -86,7 +103,7 @@ def test_persisted_state_many_batches_bounded(spark, tmp_path):
     merged = state.load_index()
     full = build_index_from(mkdocs(spark, 0, n_batches * per), text_col="text", cache=False)
     assert merged.n_docs == full.n_docs == n_batches * per
-    assert abs(merged.avgdl - full.avgdl) < 1e-9
+    assert merged.avgdl == full.avgdl
     got = {
         r.term: (r.df, round(r.idf, 12))
         for r in merged.idf.select("term", "df", "idf").collect()
@@ -113,10 +130,15 @@ def test_persisted_state_many_batches_bounded(spark, tmp_path):
 def test_persisted_state_compaction(spark, tmp_path):
     """compact() folds the delta dirs into one base batch: the loaded
     index is unchanged, re-delivered old batch ids stay no-ops, appends
-    after compaction still work, and the batch-dir count shrinks."""
+    after compaction still work, and the batch-dir count shrinks. The
+    deltas read with one recorded schema throughout: the batch column is
+    a string before and after compaction, where an inferring read types
+    it int until the batch=__base__ directory appears."""
     import os as _os
 
-    from local_search_engine_spark.streaming.merge import PersistedIndexState
+    from pyspark.sql import types as T
+
+    from local_search_engine_spark.plans.store import read_table
 
     state_dir = str(tmp_path / "state")
     state = PersistedIndexState(spark, state_dir)
@@ -126,7 +148,25 @@ def test_persisted_state_compaction(spark, tmp_path):
         r.term: (r.df, round(r.idf, 12))
         for r in state.load_index().idf.select("term", "df", "idf").collect()
     }
+
+    def schemas():
+        return {
+            sub: (
+                read_table(spark, _os.path.join(state_dir, sub)).schema,
+                spark.read.parquet(_os.path.join(state_dir, sub)).schema,
+            )
+            for sub in ("tf", "docs")
+        }
+
+    recorded = {}
+    for sub, (rec, inferred) in schemas().items():
+        assert rec["batch"].dataType == T.StringType()
+        assert inferred["batch"].dataType == T.IntegerType()
+        assert rec.fields[:-1] == inferred.fields[:-1], sub
+        recorded[sub] = rec
     state.compact()
+    for sub, (rec, inferred) in schemas().items():
+        assert rec == inferred == recorded[sub], sub
     dirs = [d for d in _os.listdir(_os.path.join(state_dir, "tf")) if d.startswith("batch=")]
     assert dirs == ["batch=__base__"]
     after = {
@@ -160,8 +200,6 @@ def test_persisted_state_delete_docs(spark, tmp_path):
     whose shards contained deleted docs."""
     import os as _os
 
-    from local_search_engine_spark.streaming.merge import PersistedIndexState
-
     state = PersistedIndexState(spark, str(tmp_path / "state"))
     for b in range(4):
         state.append_batch(mkdocs(spark, b * 10, (b + 1) * 10), b, text_col="text")
@@ -173,7 +211,7 @@ def test_persisted_state_delete_docs(spark, tmp_path):
     survivors = mkdocs(spark, 0, 40).filter(f"doc_id NOT IN ({','.join(map(str, dead))})")
     full = build_index_from(survivors, text_col="text", cache=False)
     assert merged.n_docs == full.n_docs == 37
-    assert abs(merged.avgdl - full.avgdl) < 1e-9
+    assert merged.avgdl == full.avgdl
     got = {
         r.term: (r.df, round(r.idf, 12))
         for r in merged.idf.select("term", "df", "idf").collect()

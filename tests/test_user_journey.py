@@ -84,6 +84,8 @@ def test_cli_search_composed_and_stale_grep(spark, tmp_path):
     stale-trigram-index refusal (r03 ADVICE): grep must fall back to
     the exact scan when the corpus outgrew the index fingerprint."""
     import argparse
+    import os
+    import shutil
 
     from scripts.code_search import (
         _load_fresh_index,
@@ -107,6 +109,13 @@ def test_cli_search_composed_and_stale_grep(spark, tmp_path):
     out2 = cmd_search(spark, corpus, args)
     assert out2["built_ann"] is False
     assert out2["results"] == out["results"]
+
+    # the ANN data, not its meta.json, decides: with the vectors table
+    # gone, the next search rebuilds it and answers the same
+    shutil.rmtree(os.path.join(args.index, "ann", "vectors"))
+    out3 = cmd_search(spark, corpus, args)
+    assert out3["built_ann"] is True
+    assert out3["results"] == out["results"]
 
     # stale-index refusal: fingerprint matches -> pruned; corpus grows
     # past the fingerprint -> the prune is refused (exact-scan fallback)
