@@ -21,35 +21,15 @@ import numpy as np
 DEFAULT_BLOCK_SPAN = 2048  # doc ids per block window
 
 
-def encode_vb(values) -> bytes:
-    """Vectorized varbyte encode of a non-negative int array."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    nb = np.ones(v.size, dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        nb += (tmp > 0).astype(np.int64)
-        tmp = tmp >> np.uint64(7)
-    starts = np.concatenate(([0], np.cumsum(nb)[:-1]))
-    out = np.zeros(int(nb.sum()), dtype=np.uint8)
-    for j in range(int(nb.max())):
-        m = nb > j
-        byte = ((v[m] >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nb[m] - 1 > j).astype(np.uint8)
-        out[starts[m] + j] = byte | (cont << 7)
-    return out.tobytes()
-
-
 def encode_vb_sliced(values, run_starts) -> list[bytes]:
     """Varbyte-encode a concatenation of runs in ONE vectorized pass and
     return the per-run byte strings.
 
     values: non-negative ints, the runs laid out back-to-back;
     run_starts: ascending start index of each run (first must be 0).
-    Byte-identical to encode_vb(values[s:e]) per run — asserted in
-    tests/test_codec.py — but costs one numpy pass for the whole group
-    instead of one Python call per run.
+    Each run's bytes equal tests/oracle.py's per-array encode_vb of
+    values[s:e] — asserted in tests/test_codec.py — but the whole group
+    costs one numpy pass instead of one Python call per run.
     """
     v = np.ascontiguousarray(values, dtype=np.uint64)
     if v.size == 0:
@@ -129,16 +109,6 @@ def decode_vb(buf: bytes) -> np.ndarray:
     vals = np.zeros(int(idx[-1]) + 1, dtype=np.uint64)
     np.add.at(vals, idx, (b & np.uint8(0x7F)).astype(np.uint64) << (np.uint64(7) * pos))
     return vals
-
-
-def encode_block(doc_ids: np.ndarray, tfs: np.ndarray, block_base: int) -> tuple[bytes, bytes]:
-    """doc_ids (sorted, all within one block window) → (doc_ids_vb, tfs_vb)."""
-    d = np.asarray(doc_ids, dtype=np.int64)
-    deltas = np.empty(d.size, dtype=np.uint64)
-    if d.size:
-        deltas[0] = d[0] - block_base
-        deltas[1:] = np.diff(d).astype(np.uint64)
-    return encode_vb(deltas), encode_vb(np.asarray(tfs, dtype=np.uint64))
 
 
 def decode_block(doc_ids_vb: bytes, tfs_vb: bytes, block_base: int) -> tuple[np.ndarray, np.ndarray]:

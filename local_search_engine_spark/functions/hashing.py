@@ -1,9 +1,9 @@
 """Portable deterministic hashing — identical results from Spark SQL
-expressions and ANSI-ish SQL (DuckDB oracle side).
+expressions, plain Python and ANSI-ish SQL (the DuckDB oracles).
 
 Everything the dedup / fingerprint / LSH operators need reduces to one
-primitive: a 32-bit unsigned integer hash of a string that BOTH engines
-compute bit-identically. We derive it from md5 (hex output is identical
+primitive: a 32-bit unsigned integer hash of a string that every engine
+computes bit-identically. We derive it from md5 (hex output is identical
 everywhere) instead of engine-native hashes (Spark xxhash64 and DuckDB
 hash() disagree):
 
@@ -17,7 +17,9 @@ On top of h32:
 
 SimHash uses a wider hash, h60(s) = the first 15 md5 hex digits
 ∈ [0, 2^60), and packs a 60-bit signature: bit j, for j in 0..59, is the
-majority vote of (h60(token) >> j) & 1 over the doc's tokens.
+majority vote of (h60(token) >> j) & 1 over the doc's tokens. The
+plain-Python h60 and occurrence-stream pack that the SimHash kernel is
+tested against live in tests/oracle.py.
 
 The reference has no content hashing at all (nearest analogue: chunk-id
 identity, reference retriever.py:191); these power the dedup operators a
@@ -60,21 +62,6 @@ def h32_col(col):
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def h32_sql(expr: str) -> str:
-    """Same hash as h32_col, as DuckDB SQL over a string expression."""
-    return f"(('0x' || substr(md5({expr}), 1, 8))::bigint)"
-
-
-def h60_py(s: str) -> int:
-    """h60(s) ∈ [0, 2^60): the first 15 md5 hex digits — the widest md5
-    prefix that stays inside a signed 64-bit long on every engine.
-    Hashlib only. The reference that simhash_text_udf's memoized digest
-    slice must equal (tests/test_dedup.py's SimHash oracle test)."""
-    import hashlib
-
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-
-
 def np_minhash_sigs(hh):
     """The per-row MinHash signature: given the h32 values of one doc's
     shingle set, return the N_PERMS min((a*h+b) mod P) signature. Exact
@@ -90,31 +77,16 @@ def np_minhash_sigs(hh):
     return ((a * h[None, :] + b) % MERSENNE_P).min(axis=1)
 
 
-def np_simhash_pack(hh, bits: int):
-    """The per-row SimHash majority-vote pack: given the h60 values of
-    one doc's token array, return the packed `bits`-wide signature long.
-    bit_j = 1 iff 2 * (#tokens with bit j set) > n, in one vectorized
-    (n, bits) pass. The occurrence-stream reference for
-    np_simhash_pack_weighted and the SimHash oracle test."""
-    import numpy as np
-
-    arr = np.asarray(hh, dtype=np.int64)
-    shifts = np.arange(bits, dtype=np.int64)
-    ones = ((arr[:, None] >> shifts) & 1).sum(axis=0)
-    return int(
-        ((2 * ones > arr.size).astype(np.int64) << shifts).sum()
-    )
-
-
 def np_simhash_pack_weighted(hh, weights, bits: int):
     """Tf-weighted majority-vote pack over DISTINCT term hashes:
     bit_j = 1 iff 2 · Σ_t w_t · bit_j(h_t) > Σ_t w_t. With w_t = tf of
-    term t this is EXACTLY np_simhash_pack over the raw occurrence
-    stream (summing a term's ±1 votes tf times ≡ one tf-weighted vote;
-    all-integer arithmetic, so no float-order concerns) — asserted in
-    tests/test_dedup.py. Hashing per distinct term instead of per
-    occurrence is what makes the text kernel linear in vocabulary, not
-    corpus length."""
+    term t this is EXACTLY the majority-vote pack over the raw
+    occurrence stream (summing a term's ±1 votes tf times ≡ one
+    tf-weighted vote; all-integer arithmetic, so no float-order
+    concerns) — asserted in tests/test_dedup.py against
+    tests/oracle.py's np_simhash_pack. Hashing per distinct term instead
+    of per occurrence is what makes the text kernel linear in
+    vocabulary, not corpus length."""
     import numpy as np
 
     arr = np.asarray(hh, dtype=np.int64)
@@ -158,9 +130,9 @@ def simhash_text_udf(bits: int):
     token-less docs). tokenize_py + per-distinct-term h60 + the
     tf-weighted majority-vote pack in one kernel pass. Each distinct
     term is md5-hashed at most once per worker and the pack is one
-    (vocab, bits) numpy pass. Bit-identical to np_simhash_pack over
-    [h60_py(t) for t in tokenize_py(text)] (tests/test_dedup.py's
-    SimHash oracle test); the simhash dedup gates check it end to end."""
+    (vocab, bits) numpy pass. Bit-identical to tests/oracle.py's
+    simhash_signature (tests/test_dedup.py's SimHash oracle test); the
+    simhash dedup gates check it end to end."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -185,7 +157,7 @@ def simhash_text_udf(bits: int):
                 h = memo.get(t)
                 if h is None:
                     # first 15 hex chars == high 60 bits of the first 8
-                    # digest bytes (identical to h60_py, no hex parse)
+                    # digest bytes (h60, without a hex parse)
                     h = int.from_bytes(md5(t.encode("utf-8")).digest()[:8], "big") >> 4
                     if len(memo) < _H60_MEMO_MAX:
                         memo[t] = h

@@ -1,6 +1,5 @@
 """Temporal NL query parsing — deterministic re-expression of the
-reference's TemporalQueryParser (reference query_parser.py:50-125) and
-SearchParameters priority rules (query_parser.py:32-48).
+reference's TemporalQueryParser (reference query_parser.py:50-125).
 
 Semantics mirrored (SURVEY.md F3-F6):
   * the six relative patterns (query_parser.py:55-62): `last/past/
@@ -10,7 +9,6 @@ Semantics mirrored (SURVEY.md F3-F6):
     new=1d, current=1d;
   * month=30d / year=365d approximations (query_parser.py:102-112);
   * day flooring for specific days (query_parser.py:124);
-  * UI constraints override NL constraints (query_parser.py:40-48);
   * matched expressions are stripped from the query.
 
 Deliberate divergences (documented, not cargo-culted):
@@ -118,12 +116,3 @@ def parse_temporal(query: str, now: datetime) -> tuple[str, TemporalConstraints]
     if start is None:
         return cleaned, TemporalConstraints(None, None, TimeFrame.ALL_TIME)
     return cleaned, TemporalConstraints(start, end, TimeFrame.FLEXIBLE)
-
-
-def effective_constraints(
-    ui: TemporalConstraints | None, nl: TemporalConstraints | None
-) -> TemporalConstraints:
-    """UI constraints take priority over NL (query_parser.py:40-48)."""
-    if ui is None and nl is None:
-        return TemporalConstraints(None, None, TimeFrame.ALL_TIME)
-    return ui if ui is not None else nl

@@ -600,9 +600,9 @@ def expand_synonyms(node, groups):
         weight (Elasticsearch query-time expansion semantics — blended
         SynonymQuery df is an index-time feature, deliberately not
         reproduced);
-      * expanded trees are for EVALUATION: they are not guaranteed to
-        round-trip through to_query_string (an Or child inside an
-        AtLeast re-flattens on parse).
+      * expanded trees are for EVALUATION, not for printing back to
+        query text (an Or child inside an AtLeast re-flattens on
+        parse).
 
     Overlapping groups are rejected — transitively merge them yourself
     if that is what you mean."""
@@ -649,60 +649,6 @@ def expand_synonyms(node, groups):
         return n  # Bool and every non-Term leaf kind pass through
 
     return walk(node)
-
-
-def to_query_string(node) -> str:
-    """Serialize an AST back to query-language text such that
-    parse_query(to_query_string(n)) == n for any PARSED tree (i.e. one
-    in the parser's normal form: And/Or flattened, double-NOT and
-    Bool constants folded, boosts merged). The inverse direction is
-    property-tested with hypothesis. Useful for query logging and
-    programmatic query rewriting."""
-
-    def wrap(n, tight: bool = False) -> str:
-        s = go(n)
-        if isinstance(n, (And, Or)) or (tight and isinstance(n, Not)):
-            return f"({s})"
-        return s
-
-    def go(n) -> str:
-        if isinstance(n, Bool):
-            if n.value:
-                return ""  # parse("") == Bool(True)
-            raise ValueError("Bool(False) has no surface syntax")
-        if isinstance(n, Term):
-            return n.term
-        if isinstance(n, Phrase):
-            return '"' + " ".join(n.tokens) + '"'
-        if isinstance(n, Near):
-            return '"' + " ".join(n.tokens) + f'"~{n.window}'
-        if isinstance(n, PhrasePrefix):
-            return '"' + " ".join((*n.tokens, n.stem)) + '*"'
-        if isinstance(n, Prefix):
-            return n.stem + "*"
-        if isinstance(n, Fuzzy):
-            return f"{n.stem}~{n.max_d}"
-        if isinstance(n, Regex):
-            return "/" + n.pattern + "/"
-        if isinstance(n, Field):
-            op = "" if n.op == "=" else n.op
-            if re.search(r'[\s()"]', n.value):
-                return f'{n.name}:"{n.value}"'
-            return f"{n.name}:{op}{n.value}"
-        if isinstance(n, Boost):
-            return f"{wrap(n.child, tight=True)}^{n.factor:g}"
-        if isinstance(n, Not):
-            return f"NOT {wrap(n.child)}"
-        if isinstance(n, And):
-            return " AND ".join(wrap(c) for c in n.children)
-        if isinstance(n, Or):
-            return " OR ".join(wrap(c) for c in n.children)
-        if isinstance(n, AtLeast):
-            inner = " OR ".join(wrap(c) for c in n.children)
-            return f"({inner})~{n.n}"
-        raise TypeError(f"unknown node {n!r}")
-
-    return go(node)
 
 
 # --------------------------------------------------------------------------

@@ -25,7 +25,6 @@ BM25Okapi semantics reproduced exactly (SURVEY.md §2.10):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
 
 from .. import BM25_B, BM25_EPSILON, BM25_K1
 from ..functions.tokenize import tokenize_py
@@ -176,16 +175,12 @@ def with_doc_ids(corpus, partitions: int | None = None):
     return out.join(ids, key), k
 
 
-def term_frequencies(
-    docs,
-    text_col: str = "content",
-    tokenizer: Callable[[str], list[str]] = tokenize_py,
-):
-    """Per-doc term frequencies (doc_id, term, tf) — the analyzer's one
-    index-time path, the same `Callable[[str], list[str]]` contract as
-    positional postings, percolate and the query side.
+def term_frequencies(docs, text_col: str = "content"):
+    """Per-doc term frequencies (doc_id, term, tf) — tokenize_py's one
+    index-time path; positional postings, percolate and the query side
+    call the same analyzer.
 
-    One mapInPandas kernel: per doc, tokenizer(text) → Counter → one row
+    One mapInPandas kernel: per doc, tokenize_py(text) → Counter → one row
     per distinct term, in ascending term order (code point order, which
     is Spark's string order), so a doc's rows and the written parquet do
     not depend on the analyzer's token order. A doc with null text or no tokens emits
@@ -215,7 +210,7 @@ def term_frequencies(
             for i, text in enumerate(pdf[text_col].tolist()):
                 if text is None:
                     continue
-                for term, n in sorted(Counter(tokenizer(text)).items()):
+                for term, n in sorted(Counter(tokenize_py(text)).items()):
                     rows.append(i)
                     terms.append(term)
                     tfs.append(n)
@@ -267,12 +262,7 @@ def idf_table(dfreq, n_docs: int, epsilon: float = BM25_EPSILON):
     return idf, avg_idf
 
 
-def index_tables(
-    docs_with_id,
-    text_col: str = "content",
-    cache: bool = True,
-    tokenizer: Callable[[str], list[str]] = tokenize_py,
-):
+def index_tables(docs_with_id, text_col: str = "content", cache: bool = True):
     """The (tf, docs) tables of build_index_from, planned but not run:
     no Spark job starts here. With cache=True both are cached, so the
     first action that reads them runs the tf kernel and every later
@@ -293,7 +283,6 @@ def index_tables(
     tf = term_frequencies(
         widen_for_kernel(docs_with_id.select("doc_id", text_col)),
         text_col=text_col,
-        tokenizer=tokenizer,
     )
     if cache:
         tf = tf.cache()
@@ -316,7 +305,6 @@ def build_index_from(
     text_col: str = "content",
     params: BM25Params | None = None,
     cache: bool = True,
-    tokenizer: Callable[[str], list[str]] = tokenize_py,
 ) -> InvertedIndex:
     """Index build over ANY table that already carries a unique doc_id
     bigint column + a text column (e.g. the testdata `documents` table).
@@ -324,16 +312,11 @@ def build_index_from(
     (column pruning — content is never carried past here).
 
     index_tables plans tf and docs; this adds the collected scalars
-    (n_docs, avgdl, avg_idf) and the idf table.
-
-    tokenizer: the analyzer, applied to every doc (e.g.
-    functions.tokenize.tokenize_code_py for camelCase/snake_case subtoken
-    indexing). Score the index with the SAME callable on the query side;
-    the pinned default tokenize_py is the oracle-gated contract."""
+    (n_docs, avgdl, avg_idf) and the idf table."""
     from pyspark.sql import functions as F
 
     params = params or BM25Params()
-    tf, docs = index_tables(docs_with_id, text_col, cache, tokenizer)
+    tf, docs = index_tables(docs_with_id, text_col, cache)
     row = docs.agg(F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")).first()
     n_docs, avgdl = int(row["n_docs"]), float(row["avgdl"] or 0.0)
     idf, avg_idf = idf_table(doc_freqs(tf), n_docs, params.epsilon)
@@ -355,7 +338,6 @@ def build_index_fields(
     field_weights: dict,
     params: BM25Params | None = None,
     cache: bool = True,
-    tokenizer: Callable[[str], list[str]] = tokenize_py,
 ) -> InvertedIndex:
     """BM25F multi-field index (Robertson & Zaragoza's simplified BM25F;
     Elasticsearch `combined_fields`): the fields are treated as ONE
@@ -383,7 +365,7 @@ def build_index_fields(
     hits outrank body hits).
 
     Scale shape: one tf kernel PER FIELD (each the same plan as the
-    single-field build over that column, with the same `tokenizer`), one
+    single-field build over that column), one
     unionByName (no shuffle), one (doc_id, term) groupBy — the blend
     shuffle replaces the single-field build's none, but it is keyed by
     (doc_id, term) so hot terms do not skew it. Weights that are exact
@@ -415,7 +397,7 @@ def build_index_fields(
     blended = None
     for fcol in sorted(field_weights):
         w = float(field_weights[fcol])
-        tf_f = term_frequencies(tok_src, text_col=fcol, tokenizer=tokenizer).select(
+        tf_f = term_frequencies(tok_src, text_col=fcol).select(
             "doc_id", "term", (F.col("tf") * F.lit(w)).alias("wtf")
         )
         blended = tf_f if blended is None else blended.unionByName(tf_f)
@@ -471,20 +453,15 @@ def build_index_fields(
     )
 
 
-def build_index(
-    corpus,
-    params: BM25Params | None = None,
-    cache: bool = True,
-) -> InvertedIndex:
+def build_index(corpus, params: BM25Params | None = None) -> InvertedIndex:
     """End-to-end logical index build over an input_hint-shaped corpus
     (repo, path, commit, lang, content): assigns the canonical doc_id,
-    then delegates. The compressed block-max postings layer is added by
-    operators/postings.py on top of this."""
+    then delegates to a cached build_index_from. The compressed
+    block-max postings layer is added by operators/postings.py on top
+    of this."""
     ids, keys = with_doc_ids(corpus)
-    idx = build_index_from(ids, text_col="content", params=params, cache=cache)
-    if cache:
-        # the n_docs aggregate has filled the docs and tf caches, and
-        # idf reads tf: nothing reads the key table again. An uncached
-        # index re-reads it on every action, so it stays persisted.
-        keys.unpersist()
+    idx = build_index_from(ids, text_col="content", params=params)
+    # the n_docs aggregate has filled the docs and tf caches, and idf
+    # reads tf: nothing reads the key table again
+    keys.unpersist()
     return idx

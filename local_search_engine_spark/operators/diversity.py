@@ -16,6 +16,9 @@ qid, one mapInPandas), so queries rerank in parallel.
 
 from __future__ import annotations
 
+# capped_topk's mega-group guard: salt shards per group
+PRESPLIT = 32
+
 
 def capped_topk(
     results,
@@ -24,23 +27,21 @@ def capped_topk(
     group_col: str,
     score_col: str = "score",
     id_col: str = "doc_id",
-    presplit: int | None = 32,
 ):
     """Top-k with at most `cap` rows per group: rank within group by
     (score desc, id asc — the engine's pinned tie-break), keep ranks
     <= cap, then global orderBy().limit(k) and final rank.
 
-    MEGA-GROUP GUARD (presplit, default 32): a pathological group
+    MEGA-GROUP GUARD (PRESPLIT = 32 salt shards): a pathological group
     holding most of the relation (one giant repo) would otherwise land
     in ONE window partition — AQE cannot split a window. The guard
     pre-cuts each (group, salt) shard to its local top-cap first, salt
-    = h32(id) mod presplit: any row in a group's TRUE top-cap has at
+    = h32(id) mod PRESPLIT: any row in a group's TRUE top-cap has at
     most cap-1 better group rows in its own shard, so its shard rank is
     <= cap and the pre-cut never discards a survivor. The final
-    per-group window then sees <= cap * presplit rows per group — a
-    constant — instead of the raw group size. Results are identical for
-    any presplit (deterministic salt; set presplit=None to skip the
-    extra shuffle when groups are known-bounded).
+    per-group window then sees <= cap * PRESPLIT rows per group — a
+    constant — instead of the raw group size, and the result is the
+    plain per-group cap's (deterministic salt).
 
     The global cut is TakeOrderedAndProject (per-partition k-heap +
     driver merge) and the final row_number runs over <= k rows — the
@@ -51,19 +52,18 @@ def capped_topk(
 
     from ..functions.hashing import h32_col
 
-    if presplit is not None and presplit > 1:
-        w1 = Window.partitionBy(group_col, "_salt").orderBy(
-            F.desc(score_col), F.asc(id_col)
+    w1 = Window.partitionBy(group_col, "_salt").orderBy(
+        F.desc(score_col), F.asc(id_col)
+    )
+    results = (
+        results.withColumn(
+            "_salt",
+            F.pmod(h32_col(F.col(id_col).cast("string")), F.lit(PRESPLIT)),
         )
-        results = (
-            results.withColumn(
-                "_salt",
-                F.pmod(h32_col(F.col(id_col).cast("string")), F.lit(presplit)),
-            )
-            .withColumn("_shard_rank", F.row_number().over(w1))
-            .filter(F.col("_shard_rank") <= cap)
-            .drop("_salt", "_shard_rank")
-        )
+        .withColumn("_shard_rank", F.row_number().over(w1))
+        .filter(F.col("_shard_rank") <= cap)
+        .drop("_salt", "_shard_rank")
+    )
     wg = Window.partitionBy(group_col).orderBy(
         F.desc(score_col), F.asc(id_col)
     )
@@ -75,41 +75,6 @@ def capped_topk(
     )
     w = Window.orderBy(F.desc(score_col), F.asc(id_col))
     return capped.withColumn("rank", F.row_number().over(w))
-
-
-def mmr_rerank_py(candidates, sims, k: int, lam: float = 0.5):
-    """Pure-python greedy Maximal Marginal Relevance over an ALREADY
-    top-n-cut candidate list (n ~ 10^2, driver-side by design — MMR is
-    inherently sequential, so the distributed part of the query ends at
-    the top-n cut and this reranks the small remainder).
-
-    candidates: list of (id, relevance) sorted any order;
-    sims: dict[(id_a, id_b)] -> similarity (symmetric lookups);
-    returns the ordered kept ids. Ties broken by ascending id — the
-    engine's pinned rule (and the DuckDB recursive-CTE oracle's).
-    """
-    remaining = dict(candidates)
-    picked: list = []
-    while remaining and len(picked) < k:
-        best_id, best_score = None, None
-        for cid, rel in remaining.items():
-            max_sim = max(
-                (
-                    sims.get((cid, p), sims.get((p, cid), 0.0))
-                    for p in picked
-                ),
-                default=0.0,
-            )
-            score = lam * rel - (1.0 - lam) * max_sim
-            if (
-                best_score is None
-                or score > best_score
-                or (score == best_score and cid < best_id)
-            ):
-                best_id, best_score = cid, score
-        picked.append(best_id)
-        del remaining[best_id]
-    return picked
 
 
 def mmr_rerank_batch(
@@ -132,7 +97,8 @@ def mmr_rerank_batch(
     in parallel, each group is top-n-bounded (~10^2 rows) so no group
     can exceed a task. Returns (qid, rank, doc_id, mmr_score ordering implied by
     rank). Cosine similarity over the embedding columns; ties broken by
-    ascending doc_id (the engine rule, matching mmr_rerank_py).
+    ascending doc_id (the engine rule; tests/oracle.py's mmr_rerank_py
+    is the per-query reference).
 
     round_sims: round pairwise similarities to N decimals before the
     greedy scores — makes the selection bit-reproducible across engines

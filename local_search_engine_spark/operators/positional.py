@@ -53,7 +53,6 @@ stream). np.intersect1d over sorted uint64 keys is the whole matcher.
 from __future__ import annotations
 
 import os
-from typing import Callable
 
 import numpy as np
 
@@ -102,7 +101,6 @@ def build_positional_postings(
     docs_per_shard: int = 50_000,
     block_span: int | None = None,
     n_buckets: int = 64,
-    tokenizer: Callable[[str], list[str]] = tokenize_py,
 ):
     """docs(id, text) → positional postings DF (POS_POSTINGS_SCHEMA).
 
@@ -152,7 +150,7 @@ def build_positional_postings(
             flat: list[int] = []
             run_starts: list[int] = []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = tokenizer(text if text is not None else "")
+                toks = tokenize_py(text)
                 if not toks:
                     continue
                 by_term = tokenize_with_positions(toks)
@@ -283,7 +281,6 @@ def append_positional_postings(
     new_docs,
     text_col: str = "text",
     id_col: str = "doc_id",
-    tokenizer: Callable[[str], list[str]] = tokenize_py,
 ) -> dict:
     """Incrementally extend a persisted positional index with a TAIL
     batch (all new doc_ids strictly greater than the stored max — the
@@ -328,7 +325,6 @@ def append_positional_postings(
         docs_per_shard=meta["docs_per_shard"],
         block_span=meta["block_span"],
         n_buckets=meta["n_buckets"],
-        tokenizer=tokenizer,
     )
     write_table(delta, path, partition_by=("term_bucket",), mode="append")
     mx = new_docs.agg(F.max(id_col).alias("m")).first()["m"]
@@ -610,7 +606,6 @@ def make_phrase_topk(
     postings,
     block_span: int | None = None,
     n_buckets: int | None = None,
-    tokenizer: Callable[[str], list[str]] = tokenize_py,
 ):
     """Bind a positional index to phrase/proximity query functions.
 
@@ -730,7 +725,7 @@ def make_phrase_topk(
         window=None → exact phrase; window=w → proximity match."""
         specs = []
         for pid, text, k in phrases:
-            q_terms = tokenizer(text)
+            q_terms = tokenize_py(text)
             if q_terms and k > 0:
                 specs.append((int(pid), q_terms, int(k)))
         count_col = "phrase_tf" if window is None else "n_anchors"
@@ -755,7 +750,7 @@ def make_phrase_topk(
         partition — no shuffle for it (query_set's per-phrase window
         needs one)."""
         count_col = "phrase_tf" if window is None else "n_anchors"
-        q_terms, k = tokenizer(text), int(k)
+        q_terms, k = tokenize_py(text), int(k)
         if not q_terms or k <= 0:
             return local_rows(spark, [], f"rank int, doc_id long, {count_col} long")
         per_shard = _per_shard_matches(
@@ -781,7 +776,7 @@ def make_phrase_topk(
         FILTER shape (semi-join side): (doc_id, phrase_tf|n_anchors).
         No rank window at all, so a hot phrase costs one scan + one
         shuffle and streams straight into the consuming join."""
-        q_terms = tokenizer(text)
+        q_terms = tokenize_py(text)
         count_col = "phrase_tf" if window is None else "n_anchors"
         if not q_terms:
             return local_rows(spark, [], f"doc_id long, {count_col} long")
@@ -812,7 +807,7 @@ def make_phrase_topk(
             pid, text = spec[0], spec[1]
             win = spec[2] if len(spec) > 2 else None
             stem = spec[3] if len(spec) > 3 else None
-            q_terms = tokenizer(text)
+            q_terms = tokenize_py(text)
             if q_terms or stem:
                 specs.append((int(pid), q_terms, None))
                 win_of[int(pid)] = win

@@ -17,7 +17,7 @@ column expressions — zero shuffle, embarrassingly parallel.
 
 from __future__ import annotations
 
-from ..functions.hashing import h32_col, h32_sql
+from ..functions.hashing import h32_col
 
 # h32 is uniform on [0, 2^32); the cutoff is rate * 2^32
 _H32_SPAN = float(2**32)
@@ -68,10 +68,3 @@ def stratified_hash_sample(
         )
     key = F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))
     return docs.filter(h32_col(key) < cutoff)
-
-
-def hash_sample_sql(rate: float, salt: str = "s0", id_expr: str = "doc_id") -> str:
-    """DuckDB WHERE-clause twin of hash_sample's predicate."""
-    cutoff = int(rate * _H32_SPAN)
-    key_sql = f"'{salt}:' || {id_expr}::varchar"
-    return f"{h32_sql(key_sql)} < {cutoff}"

@@ -284,12 +284,6 @@ def _centroid_dists(centroids):
     )
 
 
-def ivf_assignments(embeddings, centroids, id_col: str = "vec_id", vec_col: str = "embedding"):
-    """(id, cluster): inverted-file assignment of every vector."""
-    v = _vectors(embeddings, id_col, vec_col)
-    return v.select("id", _ivf_assign_expr(centroids).alias("cluster"))
-
-
 def ivf_topk(
     embeddings,
     query_vec,
@@ -375,27 +369,44 @@ def persist_ivf_index(
     _write_ivf_stats(embeddings.sparkSession, index_dir, vec_dir)
 
 
+def _dist_sums(assigned, *by) -> list:
+    """(*by, n, s) rows: the count and the DECIMAL(38,18) sum of
+    centroid_dist per `by` group (one row without `by`). The decimal sum
+    is exact and associative, and _mean_dist divides on the driver (the
+    avg_idf pattern of build.idf_table), so a mean depends neither on
+    the partition layout nor on how the rows were grouped."""
+    from pyspark.sql import functions as F
+
+    return (
+        assigned.groupBy(*by)
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("centroid_dist").cast("decimal(38,18)")).alias("s"),
+        )
+        .collect()
+    )
+
+
+def _mean_dist(sums) -> float:
+    """Σ s / Σ n over _dist_sums rows, summed without rounding."""
+    import decimal
+
+    n = sum(int(r["n"]) for r in sums)
+    with decimal.localcontext() as ctx:
+        ctx.prec = 80
+        s = sum((r["s"] or 0 for r in sums), decimal.Decimal(0))
+        return float(s / n) if n else 0.0
+
+
 def _write_ivf_stats(spark, index_dir: str, vec_dir: str) -> dict:
     """Derive stats.json (global + per-cluster train-time mean
     quantization error) from a narrow 2-column scan of the written
     inverted file; shared by persist and retrain."""
-    from pyspark.sql import functions as F
-
-    per_cluster = (
-        read_table(spark, vec_dir)
-        .groupBy("cluster")
-        .agg(F.count("*").alias("n"), F.avg("centroid_dist").alias("mean_dist"))
-        .collect()
-    )
-    n_train = sum(int(r["n"]) for r in per_cluster)
-    total = sum(int(r["n"]) * float(r["mean_dist"] or 0.0) for r in per_cluster)
+    per_cluster = _dist_sums(read_table(spark, vec_dir), "cluster")
     stats = {
-        "n_train": n_train,
-        "train_mean_dist": (total / n_train) if n_train else 0.0,
-        "cluster_mean_dist": {
-            str(int(r["cluster"])): float(r["mean_dist"] or 0.0)
-            for r in per_cluster
-        },
+        "n_train": sum(int(r["n"]) for r in per_cluster),
+        "train_mean_dist": _mean_dist(per_cluster),
+        "cluster_mean_dist": {str(int(r["cluster"])): _mean_dist([r]) for r in per_cluster},
     }
     write_json(os.path.join(index_dir, "stats.json"), stats)
     return stats
@@ -428,8 +439,6 @@ def retrain_ivf_index(
 
     Returns {n, n_centroids, train_mean_dist_before, train_mean_dist_after}.
     """
-    from pyspark.sql import functions as F
-
     vec_dir = os.path.join(index_dir, "vectors")
     old_centroids = read_json(os.path.join(index_dir, "centroids.json"))
     if n_centroids is None:
@@ -441,7 +450,7 @@ def retrain_ivf_index(
     # stats.json's train_mean_dist would understate it: appended drifted
     # batches are exactly what it excludes.
     vectors = read_table(spark, vec_dir)
-    before = float(vectors.agg(F.avg("centroid_dist")).first()[0] or 0.0)
+    before = _mean_dist(_dist_sums(vectors))
 
     merged = vectors.select("id", "v")
     centroids = ivf_train_centroids(
@@ -496,24 +505,15 @@ def append_ivf_index(
     before AND after). The batch is cached around the write so the
     per-cluster stats agg is a second action over O(batch) cached rows,
     never a second pass over the source."""
-    from pyspark.sql import functions as F
-
     centroids = read_json(os.path.join(index_dir, "centroids.json"))
     assigned = _ivf_assign_with_dist(_vectors(new_embeddings, id_col, vec_col), centroids).persist()
     try:
         write_table(
             assigned, os.path.join(index_dir, "vectors"), partition_by=("cluster",), mode="append"
         )
-        per_cluster = (
-            assigned.groupBy("cluster")
-            .agg(F.count("*").alias("n"), F.avg("centroid_dist").alias("mean_dist"))
-            .collect()
-        )
+        per_cluster = _dist_sums(assigned, "cluster")
     finally:
         assigned.unpersist()
-    batch_n = sum(int(r["n"]) for r in per_cluster)
-    batch_total = sum(int(r["n"]) * float(r["mean_dist"] or 0.0) for r in per_cluster)
-    batch_mean = (batch_total / batch_n) if batch_n else 0.0
     train_mean = None
     ratio = None
     stats = read_json(os.path.join(index_dir, "stats.json"), None)
@@ -524,12 +524,12 @@ def append_ivf_index(
         for r in per_cluster:
             base = per_train.get(str(int(r["cluster"]))) or train_mean
             if base:
-                num += int(r["n"]) * (float(r["mean_dist"] or 0.0) / base)
+                num += int(r["n"]) * (_mean_dist([r]) / base)
                 den += int(r["n"])
         ratio = (num / den) if den else None
     return {
-        "batch_n": batch_n,
-        "batch_mean_dist": batch_mean,
+        "batch_n": sum(int(r["n"]) for r in per_cluster),
+        "batch_mean_dist": _mean_dist(per_cluster),
         "train_mean_dist": train_mean,
         "drift_ratio": ratio,
         "retrain_recommended": bool(ratio is not None and ratio > drift_threshold),

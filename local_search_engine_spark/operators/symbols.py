@@ -1,5 +1,6 @@
 """Code-symbol extraction: per-language definition harvesting (the
-jump-to-definition layer of a code-search engine) and symbol lookup.
+jump-to-definition layer of a code-search engine) and the definition
+index.
 
 The reference indexes code as flat text only; symbol awareness is part
 of what makes a CODE search engine usable (query `merge_shards` →
@@ -16,7 +17,7 @@ Design constraints at 100 TB:
     no language grammar dependency, documented misses (dynamic defs,
     macros) rather than a pretend-AST;
   * the symbol table is (symbol, doc_id, lang, kind) — groupBy(symbol)
-    gives the definition index; `lookup_symbol` is a filter + join.
+    gives the definition index.
 """
 
 from __future__ import annotations
@@ -105,15 +106,3 @@ def symbol_definitions(symbols):
         F.count("*").alias("n_defs"),
         F.sort_array(F.collect_set("doc_id")).alias("doc_ids"),
     )
-
-
-def lookup_symbol(symbols, docs, name: str, id_col: str = "doc_id"):
-    """Docs DEFINING `name`, with their metadata — the
-    jump-to-definition query. Filter pushes to the symbol relation;
-    the join is candidate-sized."""
-    from pyspark.sql import functions as F
-
-    hits = symbols.filter(F.col("symbol") == name).select(
-        F.col("doc_id").alias("_def_id"), "kind"
-    )
-    return docs.join(hits, docs[id_col] == F.col("_def_id")).drop("_def_id")

@@ -171,16 +171,9 @@ def build_persisted_index(
     man = Manifest(index_dir)
     run_id = uuid.uuid4().hex[:12]
     _, content_fp = corpus_fingerprint(corpus, params, text_col=text_col)
-    # "analyzer=default" is part of the layout ON PURPOSE even though
-    # build_persisted_index only builds with the pinned default
-    # tokenizer today: if a tokenizer option (already supported by
-    # build_index_from) is ever threaded through here, the identifier
-    # must change with it and every fingerprint auto-invalidates —
-    # without this, switching analyzers would silently reuse stale
-    # postings groups (r03 ADVICE).
     layout = (
         f"dps={docs_per_shard};span={span};nb={n_buckets};ng={n_groups};"
-        f"analyzer=default;format={INDEX_FORMAT}"
+        f"format={INDEX_FORMAT}"
     )
     # the side tables — docs / tf / idf / stats / shard_meta — are keyed
     # on the global content fingerprint plus the layout: idf and stats

@@ -131,6 +131,12 @@ def get_spark(
         # must stay inside whole-stage codegen; the default 100-field cap
         # silently drops them to interpreted eval (measured 1.4x slower)
         .config("spark.sql.codegen.maxFields", "500")
+        # list up to 4096 paths on the driver instead of in a Spark job:
+        # the store's tables (local file system) have up to a few hundred
+        # partition directories (64 positional or trigram buckets, 256
+        # SRP buckets at bits 8), and past the default cut-off of 32
+        # opening each would run a listing job
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.ui.enabled", "false")

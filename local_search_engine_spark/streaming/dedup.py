@@ -1,21 +1,14 @@
-"""Streaming deduplication — drop re-arrivals of already-seen content
-as a corpus streams in, with BOUNDED state.
+"""Content deduplication by first arrival: which arrival of each
+distinct content a corpus keeps when copies stream in.
 
-Two semantically-aligned shapes (same pattern as streaming/sessions.py):
+  * first_seen — one row per distinct content digest, the (min
+    event-time, then min doc_id) arrival, with the arrival count.
+    SQL-expressible, hence the driver gate's oracle. One digest-keyed
+    shuffle (uniform 16-byte key, map-side combinable struct-min).
 
-  * first_seen — the batch twin: one row per distinct content digest,
-    the (min event-time, then min doc_id) arrival. SQL-expressible,
-    hence the driver gate's oracle. One digest-keyed shuffle (uniform
-    16-byte key, map-side combinable struct-min).
-  * dedup_stream — the streaming shape: md5 digest →
-    withWatermark(event-time) → dropDuplicatesWithinWatermark(digest).
-    This is Spark's watermark-evicting dedup state store: a digest is
-    remembered only until the watermark passes it, so state is bounded
-    by (arrival rate × watermark), NOT by corpus size — the only viable
-    contract at 100 TB/day. Within the watermark the first arrival wins
-    and re-arrivals are dropped; duplicates farther apart than the
-    watermark are a documented miss (catch them with the batch dedup
-    operators downstream — the standard two-tier design).
+On a stream, Spark's own `withWatermark(ts)` +
+`dropDuplicatesWithinWatermark` over `md5(text)` drops re-arrivals with
+bounded state; the package does not wrap it.
 
 No reference analogue (the reference's incremental add re-indexes
 whatever it is given, reference retriever.py:268-310); part of the
@@ -26,7 +19,7 @@ from __future__ import annotations
 
 
 def first_seen(docs, text_col: str = "text", id_col: str = "doc_id", ts_col: str = "ts"):
-    """(text_md5, doc_id, ts, n_arrivals): the batch twin — earliest
+    """(text_md5, doc_id, ts, n_arrivals): the earliest
     (ts, doc_id) arrival per distinct content, with the arrival count.
     min_by over a (ts, doc_id) struct keeps winner selection in ONE
     map-side-combinable aggregation (no join back)."""
@@ -50,24 +43,3 @@ def first_seen(docs, text_col: str = "text", id_col: str = "doc_id", ts_col: str
         )
     )
 
-
-def dedup_stream(
-    stream,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-):
-    """Streaming first-arrival dedup: the input streaming DataFrame
-    gains a content digest, a watermark on ts_col, and a
-    dropDuplicatesWithinWatermark on the digest. Returns the deduped
-    streaming DataFrame (caller attaches the sink); state per key is
-    evicted once the watermark passes — bounded, restart-safe via the
-    sink's checkpoint."""
-    from pyspark.sql import functions as F
-
-    return (
-        stream.withColumn("text_md5", F.md5(F.col(text_col)))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["text_md5"])
-    )

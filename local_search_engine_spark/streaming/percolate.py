@@ -41,8 +41,6 @@ per-document with NO index and NO state:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from ..functions.tokenize import tokenize_py
 from ..plans.layout import local_rows
 
@@ -61,7 +59,6 @@ def _match_batches_fn(
     specs: list[tuple[int, list[str]]],
     text_col: str,
     id_col: str,
-    tokenizer: Callable[[str], list[str]],
 ):
     """mapInPandas kernel shared by the batch and streaming shapes.
     specs: [(query_id, phrase_tokens)] — pre-tokenized, non-empty.
@@ -82,7 +79,7 @@ def _match_batches_fn(
             flat_toks: list[str] = []
             doc_lens: list[int] = []
             for text in texts:
-                toks = tokenizer(text if text is not None else "")
+                toks = tokenize_py(text)
                 flat_toks.extend(toks)
                 doc_lens.append(len(toks))
             if not flat_toks:
@@ -134,10 +131,10 @@ def _match_batches_fn(
     return fn
 
 
-def _tokenize_specs(phrases, tokenizer) -> list[tuple[int, list[str]]]:
+def _tokenize_specs(phrases) -> list[tuple[int, list[str]]]:
     specs = []
     for qid, text in phrases:
-        q = tokenizer(text)
+        q = tokenize_py(text)
         if q:
             specs.append((int(qid), q))
     return specs
@@ -148,19 +145,18 @@ def percolate(
     phrases: list[tuple[int, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    tokenizer: Callable[[str], list[str]] = tokenize_py,
 ):
     """Batch twin: (doc_id, query_id, phrase_tf) for every document
     containing each standing phrase at least once. Narrow plan — one
     Arrow pass over the scan, no shuffle (plan pinned in tests)."""
-    specs = _tokenize_specs(phrases, tokenizer)
+    specs = _tokenize_specs(phrases)
     spark = docs.sparkSession
     if not specs:
         return local_rows(spark, [], _out_schema(docs, id_col))
     from ..plans.layout import widen_for_kernel
 
     return widen_for_kernel(docs.select(id_col, text_col)).mapInPandas(
-        _match_batches_fn(specs, text_col, id_col, tokenizer),
+        _match_batches_fn(specs, text_col, id_col),
         _out_schema(docs, id_col),
     )
 
@@ -170,17 +166,16 @@ def percolate_stream(
     phrases: list[tuple[int, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    tokenizer: Callable[[str], list[str]] = tokenize_py,
 ):
     """Streaming shape: the identical stateless transformation over a
     streaming DataFrame (caller attaches the sink). No watermark, no
     state store — restart safety comes entirely from the sink's
     checkpoint + source offsets."""
-    specs = _tokenize_specs(phrases, tokenizer)
+    specs = _tokenize_specs(phrases)
     if not specs:
         raise ValueError("percolate_stream needs at least one non-empty phrase")
     return stream.select(id_col, text_col).mapInPandas(
-        _match_batches_fn(specs, text_col, id_col, tokenizer),
+        _match_batches_fn(specs, text_col, id_col),
         _out_schema(stream, id_col),
     )
 
@@ -206,7 +201,6 @@ def _bool_batches_fn(
     text_col: str,
     id_col: str,
     field_cols: list[str],
-    tokenizer: Callable[[str], list[str]],
 ):
     """mapInPandas kernel for boolean percolation. Per Arrow batch it
     builds the SAME batch-level posting map as the phrase kernel, then
@@ -226,9 +220,7 @@ def _bool_batches_fn(
             n = len(pdf)
             if n == 0:
                 continue
-            toks_per_doc = [
-                tokenizer(t if t is not None else "") for t in pdf[text_col]
-            ]
+            toks_per_doc = [tokenize_py(t) for t in pdf[text_col]]
             lens = np.asarray([len(t) for t in toks_per_doc], dtype=np.int64)
             flat = [t for toks in toks_per_doc for t in toks]
             doc_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
@@ -467,7 +459,6 @@ def percolate_bool(
     queries: list[tuple[int, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    tokenizer: Callable[[str], list[str]] = tokenize_py,
 ):
     """Boolean percolation (batch twin): standing saved-searches in the
     FULL boolean query language (operators/boolquery.py — AND/OR/NOT,
@@ -490,7 +481,7 @@ def percolate_bool(
     from ..plans.layout import widen_for_kernel
 
     return widen_for_kernel(docs.select(*cols)).mapInPandas(
-        _bool_batches_fn(standing, leaves, text_col, id_col, field_cols, tokenizer),
+        _bool_batches_fn(standing, leaves, text_col, id_col, field_cols),
         out_schema,
     )
 
@@ -500,7 +491,6 @@ def percolate_bool_stream(
     queries: list[tuple[int, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    tokenizer: Callable[[str], list[str]] = tokenize_py,
 ):
     """Streaming shape of percolate_bool — stateless, no watermark, the
     caller attaches the sink (foreachBatch/append) exactly as with
@@ -512,6 +502,6 @@ def percolate_bool_stream(
         raise ValueError("percolate_bool_stream needs at least one query")
     cols = [id_col, text_col, *field_cols]
     return stream.select(*cols).mapInPandas(
-        _bool_batches_fn(standing, leaves, text_col, id_col, field_cols, tokenizer),
+        _bool_batches_fn(standing, leaves, text_col, id_col, field_cols),
         out_schema,
     )

@@ -1,18 +1,11 @@
 """Event sessionization — gap-based sessions over a (user, ts) event
-stream, in two semantically-identical shapes:
+table:
 
-  * sessionize — the batch DataFrame twin: lag-gap flag → running count
-    per user → per-session aggregate. Two window passes over
-    user-partitioned data (scale-safe: partition key is user_id; a
-    pathological hot user skews one partition — AQE skew handling or a
-    per-user salt+re-merge applies). SQL-expressible, hence the driver
-    gate's oracle.
-  * sessionize_stream — the streaming shape via applyInPandasWithState
-    (the brief's custom-stateful-operator seam): per-user GroupState
-    carries the open session across micro-batches; CLOSED sessions emit
-    as soon as the gap that closes them arrives. The batch twin defines
-    the semantics; tests/test_sessions.py asserts closed-session
-    equality across a two-batch split.
+  * sessionize — lag-gap flag → running count per user → per-session
+    aggregate. Two window passes over user-partitioned data
+    (scale-safe: partition key is user_id; a pathological hot user
+    skews one partition — AQE skew handling or a per-user salt+re-merge
+    applies). SQL-expressible, hence the driver gate's oracle.
 
 The reference has no event analytics at all — this is part of the
 engine's beyond-reference pipeline surface (events table, TESTDATA.md).
@@ -74,84 +67,3 @@ def sessionize(
         F.sum("value").alias("sum_value"),
     )
 
-
-SESSION_OUT_SCHEMA = (
-    "user_id long, session_start_us long, session_end_us long, "
-    "n_events long, sum_value double"
-)
-SESSION_STATE_SCHEMA = "start_us long, last_us long, n long, s double"
-
-
-def sessionize_stream(
-    stream,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    value_col: str = "value",
-    gap_minutes: int = DEFAULT_GAP_MINUTES,
-):
-    """Streaming sessionization via applyInPandasWithState: one
-    GroupState row per user holds the OPEN session (start, last event,
-    count, sum); each micro-batch's events (sorted by ts inside the
-    group) extend it or close it. Emits CLOSED sessions only — the open
-    tail stays in state across batches (update-mode semantics; a
-    production pipeline adds a state timeout to flush idle users).
-
-    Ordering contract: event time must be non-decreasing PER USER across
-    micro-batches (the log-ingest case; within a batch any order is fine
-    — the group sorts). A late event older than the user's open-session
-    tail folds into that session rather than splitting retroactively —
-    the standard streaming-sessionization compromise; the batch twin is
-    the order-free reference semantics. Returns a DataFrame to
-    writeStream."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gap_us = int(gap_minutes) * 60_000_000
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        (user_id,) = key
-        if state.exists:
-            start_us, last_us, n, s = state.get
-        else:
-            start_us = last_us = None
-            n, s = 0, 0.0
-        closed = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("ts_us")
-            for ts_us, v in zip(pdf["ts_us"], pdf["value"]):
-                ts_us = int(ts_us)
-                if start_us is None:
-                    start_us, last_us, n, s = ts_us, ts_us, 1, float(v)
-                elif ts_us - last_us > gap_us:
-                    closed.append((user_id, start_us, last_us, n, s))
-                    start_us, last_us, n, s = ts_us, ts_us, 1, float(v)
-                else:
-                    last_us, n, s = ts_us, n + 1, s + float(v)
-        state.update((start_us, last_us, n, s))
-        if closed:
-            yield pd.DataFrame(
-                closed,
-                columns=[
-                    "user_id",
-                    "session_start_us",
-                    "session_end_us",
-                    "n_events",
-                    "sum_value",
-                ],
-            )
-
-    from pyspark.sql import functions as F
-
-    ev = stream.select(
-        F.col(user_col).alias("user_id"),
-        _ts_us_col(stream, ts_col).alias("ts_us"),
-        F.col(value_col).alias("value"),
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=SESSION_OUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -8,7 +8,9 @@ SAME tokenizer (local_search_engine_spark.functions.tokenize.tokenize_py)
 and the SAME tie-break (score DESC, doc_id ASC) and summation order
 (ascending term) — the rank-identity contract is engine vs this oracle.
 
-The functions after it are the references for the dedup and LSH kernels.
+The functions after it are the references for the dedup, LSH, sampling,
+IVF, diversity and posting-codec kernels, and the query-language printer
+behind the parse_query round-trip property.
 """
 
 from __future__ import annotations
@@ -132,11 +134,28 @@ def minhash_signature(shingles: list[str]) -> list[int]:
     return [min((a * h + b) % MERSENNE_P for h in hs) for a, b in zip(MINHASH_A, MINHASH_B)]
 
 
+def h60_py(s: str) -> int:
+    """h60(s) ∈ [0, 2^60): the first 15 md5 hex digits — the widest md5
+    prefix that stays inside a signed 64-bit long on every engine."""
+    import hashlib
+
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+
+def np_simhash_pack(hh, bits: int) -> int:
+    """The SimHash majority-vote pack over one doc's token occurrence
+    stream of h60 values: bit_j = 1 iff 2 * (#tokens with bit j set) > n."""
+    import numpy as np
+
+    arr = np.asarray(hh, dtype=np.int64)
+    shifts = np.arange(bits, dtype=np.int64)
+    ones = ((arr[:, None] >> shifts) & 1).sum(axis=0)
+    return int(((2 * ones > arr.size).astype(np.int64) << shifts).sum())
+
+
 def simhash_signature(text: str | None, bits: int = 60) -> int | None:
     """Majority-vote pack of h60 over the token occurrence stream; None
     for a doc without tokens."""
-    from local_search_engine_spark.functions.hashing import h60_py, np_simhash_pack
-
     toks = tokenize_py(text) if text is not None else []
     if not toks:
         return None
@@ -175,3 +194,147 @@ def connected_components(pairs) -> dict:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return {x: find(x) for x in parent}
+
+
+def hash_sampled(ids, rate: float, salt: str) -> list:
+    """The ids hash_sample keeps: h32(f"{salt}:{id}") < int(rate * 2^32)."""
+    from local_search_engine_spark.functions.hashing import h32_py
+
+    cutoff = int(rate * 2**32)
+    return sorted(i for i in ids if h32_py(f"{salt}:{i}") < cutoff)
+
+
+def nearest_centroid(v, centroids) -> int:
+    """Index of the L2-nearest centroid, by the sequential fold
+    s = 0.0; s += (a - b)^2; ties go to the lowest index."""
+    best, best_d = 0, None
+    for i, c in enumerate(centroids):
+        d = 0.0
+        for a, b in zip(v, c):
+            d += (a - b) * (a - b)
+        if best_d is None or d < best_d:
+            best, best_d = i, d
+    return best
+
+
+def capped_topk(rows, k: int, cap: int) -> list[tuple]:
+    """[(rank, doc_id, group, score)]: the best `cap` rows of each group
+    by (score desc, doc_id asc), then the best k of those in the same
+    order. rows: (doc_id, group, score)."""
+    order = sorted(rows, key=lambda r: (-r[2], r[0]))
+    seen: Counter = Counter()
+    kept = []
+    for doc_id, group, score in order:
+        seen[group] += 1
+        if seen[group] <= cap:
+            kept.append((doc_id, group, score))
+    return [(rank, *r) for rank, r in enumerate(kept[:k], 1)]
+
+
+def mmr_rerank_py(candidates, sims, k: int, lam: float = 0.5) -> list:
+    """Greedy Maximal Marginal Relevance over one query's candidates.
+    candidates: (id, relevance) in any order; sims: {(id_a, id_b):
+    similarity}, looked up both ways. Returns the kept ids in order;
+    ties go to the lower id (the engine's rule)."""
+    remaining = dict(candidates)
+    picked: list = []
+    while remaining and len(picked) < k:
+        best_id, best_score = None, None
+        for cid, rel in remaining.items():
+            max_sim = max(
+                (sims.get((cid, p), sims.get((p, cid), 0.0)) for p in picked),
+                default=0.0,
+            )
+            score = lam * rel - (1.0 - lam) * max_sim
+            if (
+                best_score is None
+                or score > best_score
+                or (score == best_score and cid < best_id)
+            ):
+                best_id, best_score = cid, score
+        picked.append(best_id)
+        del remaining[best_id]
+    return picked
+
+
+def encode_vb(values) -> bytes:
+    """Varbyte encode, one value at a time: little-endian 7-bit groups,
+    the high bit set on every byte but a value's last."""
+    out = bytearray()
+    for v in values:
+        v = int(v)
+        while v >= 0x80:
+            out.append((v & 0x7F) | 0x80)
+            v >>= 7
+        out.append(v)
+    return bytes(out)
+
+
+def to_query_string(node) -> str:
+    """Print a query AST back as query-language text, such that
+    parse_query(to_query_string(n)) == n for any tree in the parser's
+    normal form (And/Or flattened, double-NOT and Bool constants folded,
+    boosts merged)."""
+    import re
+
+    from local_search_engine_spark.operators.boolquery import (
+        And,
+        AtLeast,
+        Bool,
+        Boost,
+        Field,
+        Fuzzy,
+        Near,
+        Not,
+        Or,
+        Phrase,
+        PhrasePrefix,
+        Prefix,
+        Regex,
+        Term,
+    )
+
+    def wrap(n, tight: bool = False) -> str:
+        s = go(n)
+        if isinstance(n, (And, Or)) or (tight and isinstance(n, Not)):
+            return f"({s})"
+        return s
+
+    def go(n) -> str:
+        if isinstance(n, Bool):
+            if n.value:
+                return ""  # parse("") == Bool(True)
+            raise ValueError("Bool(False) has no surface syntax")
+        if isinstance(n, Term):
+            return n.term
+        if isinstance(n, Phrase):
+            return '"' + " ".join(n.tokens) + '"'
+        if isinstance(n, Near):
+            return '"' + " ".join(n.tokens) + f'"~{n.window}'
+        if isinstance(n, PhrasePrefix):
+            return '"' + " ".join((*n.tokens, n.stem)) + '*"'
+        if isinstance(n, Prefix):
+            return n.stem + "*"
+        if isinstance(n, Fuzzy):
+            return f"{n.stem}~{n.max_d}"
+        if isinstance(n, Regex):
+            return "/" + n.pattern + "/"
+        if isinstance(n, Field):
+            op = "" if n.op == "=" else n.op
+            if re.search(r'[\s()"]', n.value):
+                return f'{n.name}:"{n.value}"'
+            return f"{n.name}:{op}{n.value}"
+        if isinstance(n, Boost):
+            return f"{wrap(n.child, tight=True)}^{n.factor:g}"
+        if isinstance(n, Not):
+            return f"NOT {wrap(n.child)}"
+        if isinstance(n, And):
+            return " AND ".join(wrap(c) for c in n.children)
+        if isinstance(n, Or):
+            return " OR ".join(wrap(c) for c in n.children)
+        if isinstance(n, AtLeast):
+            inner = " OR ".join(wrap(c) for c in n.children)
+            return f"({inner})~{n.n}"
+        raise TypeError(f"unknown node {n!r}")
+
+    return go(node)

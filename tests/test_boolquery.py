@@ -696,7 +696,7 @@ def test_bool_leaf_filters_push_to_parquet(spark, tmp_path):
 
 
 # --------------------------------------------------------------------------
-# to_query_string round-trip (hypothesis)
+# parse_query round-trip through the oracle printer (hypothesis)
 # --------------------------------------------------------------------------
 
 
@@ -705,8 +705,6 @@ def _ast_strategy():
     child), no double-NOT, no Bool constants, boosts merged (no nested
     Boost) with round-trippable factors, analyzable term charset."""
     import hypothesis.strategies as st
-
-    from local_search_engine_spark.operators.boolquery import to_query_string
 
     word = st.from_regex(r"[a-z][a-z0-9_]{1,7}", fullmatch=True).filter(
         lambda w: w.upper() not in ("AND", "OR", "NOT")
@@ -777,7 +775,7 @@ def test_to_query_string_roundtrip():
     import hypothesis
     from hypothesis import given
 
-    from local_search_engine_spark.operators.boolquery import to_query_string
+    from .oracle import to_query_string
 
     @given(_ast_strategy())
     @hypothesis.settings(max_examples=300, deadline=None)

@@ -1,25 +1,45 @@
 """Codec unit tests: round-trip, boundary values, seeded fuzz +
-hypothesis property tests when available (SURVEY.md §5.2 item 3)."""
+hypothesis property tests when available (SURVEY.md §5.2 item 3). The
+engine's encoders (encode_vb_sliced, and encode_runs for blocks) are
+checked against tests/oracle.py's one-value-at-a-time encode_vb and
+round-tripped through decode_vb / decode_block."""
 
 import numpy as np
+import pandas as pd
 
 from local_search_engine_spark.functions.codec import (
     decode_block,
     decode_vb,
-    encode_block,
-    encode_vb,
+    encode_runs,
+    encode_vb_sliced,
     pack_i32,
     unpack_i32,
 )
 
+from .oracle import encode_vb
+
 
 def rt(vals):
-    got = decode_vb(encode_vb(np.array(vals, dtype=np.uint64)))
-    assert got.tolist() == [int(v) for v in vals]
+    v = np.array(vals, dtype=np.uint64)
+    (buf,) = encode_vb_sliced(v, [0])
+    assert buf == encode_vb(v)
+    assert decode_vb(buf).tolist() == [int(x) for x in vals]
+
+
+def encode_block(doc_ids, tfs, span):
+    """One (term, block) run through the postings run encoder: its
+    block id and (doc_ids_vb, tfs_vb)."""
+    pdf = pd.DataFrame(
+        {"term": "t", "doc_id": doc_ids, "tf": tfs, "term_bucket": 0, "part_id": 0}
+    )
+    _, starts, _, cols = encode_runs(pdf, span)
+    assert len(starts) == 1
+    return int(cols["block_id"][0]), cols["doc_ids_vb"][0], cols["tfs_vb"][0]
 
 
 def test_empty():
-    assert encode_vb(np.array([], dtype=np.uint64)) == b""
+    assert encode_vb_sliced(np.array([], dtype=np.uint64), [0]) == [b""]
+    assert encode_vb([]) == b""
     assert decode_vb(b"").size == 0
 
 
@@ -40,7 +60,9 @@ def test_seeded_fuzz():
 def test_block_roundtrip():
     doc_ids = np.array([4096, 4100, 4101, 5000, 6143], dtype=np.int64)
     tfs = np.array([1, 50, 2, 7, 1], dtype=np.int64)
-    dvb, tvb = encode_block(doc_ids, tfs, block_base=4096)
+    block_id, dvb, tvb = encode_block(doc_ids, tfs, span=2048)
+    assert block_id == 2
+    assert dvb == encode_vb([0, 4, 1, 899, 1143]) and tvb == encode_vb(tfs)
     d2, t2 = decode_block(dvb, tvb, block_base=4096)
     assert d2.tolist() == doc_ids.tolist()
     assert t2.tolist() == tfs.tolist()
@@ -71,14 +93,15 @@ try:
             max_size=200,
             unique_by=lambda x: x[0],
         ),
-        st.integers(min_value=0, max_value=2**40),
+        st.integers(min_value=0, max_value=2**29),
     )
-    def test_property_block(postings, base_mult):
-        base = base_mult
+    def test_property_block(postings, block):
+        base = block * 2048
         postings = sorted(postings)
         doc_ids = np.array([base + off for off, _ in postings], dtype=np.int64)
         tfs = np.array([tf for _, tf in postings], dtype=np.int64)
-        dvb, tvb = encode_block(doc_ids, tfs, block_base=base)
+        block_id, dvb, tvb = encode_block(doc_ids, tfs, span=2048)
+        assert block_id == block and tvb == encode_vb(tfs)
         d2, t2 = decode_block(dvb, tvb, block_base=base)
         assert d2.tolist() == doc_ids.tolist()
         assert t2.tolist() == tfs.tolist()
@@ -88,10 +111,6 @@ except ImportError:  # pragma: no cover
 
 
 def test_vb_sliced_matches_per_run():
-    import numpy as np
-
-    from local_search_engine_spark.functions.codec import encode_vb, encode_vb_sliced
-
     rng = np.random.default_rng(7)
     for trial in range(20):
         n_runs = int(rng.integers(1, 12))

@@ -1,9 +1,11 @@
 """Diversity operators: per-group result collapsing (capped_topk) and
-greedy MMR re-ranking (pure-python kernel)."""
+greedy MMR re-ranking, each against its plain-Python oracle."""
 
 from __future__ import annotations
 
-from local_search_engine_spark.operators.diversity import capped_topk, mmr_rerank_py
+from local_search_engine_spark.operators.diversity import capped_topk
+
+from . import oracle
 
 
 def test_capped_topk_collapses_groups(spark):
@@ -37,34 +39,25 @@ def test_capped_topk_tiebreak_by_id(spark):
 
 
 def test_capped_topk_megagroup_guard(spark):
-    """With one group holding >50% of all rows, the presplit guard
+    """With one group holding >50% of all rows, the mega-group guard
     pre-cuts each (group, salt) shard to its local top-cap, so NO
     window over the full relation is partitioned by group alone — and
-    results are identical with the guard on, off, and at any presplit."""
+    the result equals the plain per-group cap of the oracle."""
     rows = [(i, "MEGA", float(1000 - i)) for i in range(600)] + [
         (1000 + i, f"g{i % 7}", float(500 - i)) for i in range(400)
     ]
     df = spark.createDataFrame(rows, "doc_id long, source string, score double")
-    base = [
-        tuple(r)
-        for r in capped_topk(df, k=20, cap=3, group_col="source", presplit=None)
-        .orderBy("rank")
-        .collect()
+    guarded = capped_topk(df, k=20, cap=3, group_col="source")
+    got = [
+        (r["rank"], r["doc_id"], r["source"], r["score"])
+        for r in guarded.orderBy("rank").collect()
     ]
-    for ps in (2, 32):
-        got = [
-            tuple(r)
-            for r in capped_topk(df, k=20, cap=3, group_col="source", presplit=ps)
-            .orderBy("rank")
-            .collect()
-        ]
-        assert got == base, ps
-    guarded = capped_topk(df, k=20, cap=3, group_col="source", presplit=32)
+    assert got == oracle.capped_topk(rows, k=20, cap=3)
     plan = guarded._jdf.queryExecution().executedPlan().toString()
     # the guard's salted window must be in the executed plan: the only
     # window that sees the FULL relation partitions by (source, _salt),
     # so the mega-group splits across 32 shard partitions; the
-    # group-only window upstream of it sees <= cap*presplit rows/group
+    # group-only window upstream of it sees <= cap*32 rows/group
     assert "_salt" in plan, plan
     assert plan.count("Window") >= 3, plan  # salted + per-group + final rank
 
@@ -74,11 +67,11 @@ def test_mmr_rerank_balances_relevance_and_redundancy():
     # prefer the less-relevant-but-novel c over b at position 2
     cands = [("a", 1.0), ("b", 0.95), ("c", 0.6)]
     sims = {("a", "b"): 0.99, ("a", "c"): 0.1, ("b", "c"): 0.1}
-    assert mmr_rerank_py(cands, sims, k=3, lam=0.5) == ["a", "c", "b"]
+    assert oracle.mmr_rerank_py(cands, sims, k=3, lam=0.5) == ["a", "c", "b"]
     # lambda 1.0 = pure relevance order
-    assert mmr_rerank_py(cands, sims, k=3, lam=1.0) == ["a", "b", "c"]
+    assert oracle.mmr_rerank_py(cands, sims, k=3, lam=1.0) == ["a", "b", "c"]
     # ties break by ascending id
-    assert mmr_rerank_py([("x", 1.0), ("w", 1.0)], {}, k=2, lam=1.0) == ["w", "x"]
+    assert oracle.mmr_rerank_py([("x", 1.0), ("w", 1.0)], {}, k=2, lam=1.0) == ["w", "x"]
 
 
 def test_mmr_batch_matches_python_kernel(spark):
@@ -99,10 +92,7 @@ def test_mmr_batch_matches_python_kernel(spark):
     ]
     emb = spark.createDataFrame(emb_rows, "vec_id long, embedding array<double>")
     cands = spark.createDataFrame(cand_rows, "qid long, doc_id long, score double")
-    from local_search_engine_spark.operators.diversity import (
-        mmr_rerank_batch,
-        mmr_rerank_py,
-    )
+    from local_search_engine_spark.operators.diversity import mmr_rerank_batch
 
     got = {
         (r["qid"], r["rank"]): r["doc_id"]
@@ -125,7 +115,7 @@ def test_mmr_batch_matches_python_kernel(spark):
             (a, b): cos(a, b)
             for a, b in itertools.combinations([d for d, _ in cl], 2)
         }
-        for rank, d in enumerate(mmr_rerank_py(cl, sims, k=2, lam=0.5), 1):
+        for rank, d in enumerate(oracle.mmr_rerank_py(cl, sims, k=2, lam=0.5), 1):
             want[(qid, rank)] = d
     assert got == want
     # novelty actually matters: query 0 must skip the near-dup doc 2

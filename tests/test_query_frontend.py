@@ -10,9 +10,7 @@ from local_search_engine_spark.functions.classify import (
     type_scores,
 )
 from local_search_engine_spark.functions.temporal import (
-    TemporalConstraints,
     TimeFrame,
-    effective_constraints,
     parse_temporal,
 )
 
@@ -76,14 +74,6 @@ def test_no_temporal_all_time():
     assert q == "binary search tree"
     assert not c.has_constraints
     assert c.time_frame is TimeFrame.ALL_TIME
-
-
-def test_ui_overrides_nl():
-    ui = TemporalConstraints(datetime(2024, 1, 1), datetime(2024, 1, 2), TimeFrame.STRICT)
-    nl = TemporalConstraints(datetime(2023, 1, 1), None)
-    assert effective_constraints(ui, nl) is ui
-    assert effective_constraints(None, nl) is nl
-    assert not effective_constraints(None, None).has_constraints
 
 
 # --- classification -------------------------------------------------------

@@ -92,7 +92,7 @@ def test_partition_count_invariance(spark, oracle):
     """Same corpus at a different generation parallelism + shuffle width
     → identical ranks (doc_id contract is partition-independent)."""
     corpus = gen_corpus_spark(spark, N_DOCS, partitions=3)
-    idx = build_index(corpus, cache=False)
+    idx = build_index(corpus)
     got = [
         (r["rank"], r["doc_id"])
         for r in topk(idx, "def merge shard", 10).collect()

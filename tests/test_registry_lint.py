@@ -195,12 +195,16 @@ REPO_DIR = os.path.dirname(PKG_DIR)
 
 def unreferenced_package_defs(repo_dir=REPO_DIR):
     """(file, name) of every top-level def/class in the package whose
-    name no `.py` file in the repo references: no Name, no Attribute
-    and no `from ... import` of it (strings and docstrings do not
-    count). A function only its own definition names is dead code."""
+    name no `.py` file in the repo outside `tests/` references: no
+    Name, no Attribute and no `from ... import` of it (strings and
+    docstrings do not count). A function only its own definition names
+    is dead code, and one only tests name is kept for the tests alone:
+    an oracle belongs in tests/oracle.py, a twin of an engine path
+    goes."""
     import ast
 
     pkg = os.path.join(repo_dir, "local_search_engine_spark")
+    tests = os.path.join(repo_dir, "tests")
     defs, used = [], set()
     for root, dirs, files in os.walk(repo_dir):
         dirs[:] = sorted(d for d in dirs if not d.startswith("."))
@@ -208,6 +212,8 @@ def unreferenced_package_defs(repo_dir=REPO_DIR):
             if not name.endswith(".py"):
                 continue
             path = os.path.join(root, name)
+            if path.startswith(tests + os.sep):
+                continue
             with open(path) as f:
                 tree = ast.parse(f.read(), path)
             for node in ast.walk(tree):
@@ -246,20 +252,41 @@ def test_unreferenced_function_lint_is_live(tmp_path):
     assert unreferenced_package_defs(str(tmp_path)) == [(x, "dead")]
 
 
+def test_test_only_function_lint_is_live(tmp_path):
+    ops = tmp_path / "local_search_engine_spark" / "operators"
+    ops.mkdir(parents=True)
+    (ops / "x.py").write_text("def engine():\n    return 1\n\n\ndef for_tests():\n    return 2\n")
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_x.py").write_text(
+        "from local_search_engine_spark.operators.x import for_tests\n\n"
+        "def test_x():\n    assert for_tests() == 2\n"
+    )
+    (tmp_path / "caller.py").write_text(
+        "from local_search_engine_spark.operators import x\n\nx.engine()\n"
+    )
+    x = os.path.join("local_search_engine_spark", "operators", "x.py")
+    assert unreferenced_package_defs(str(tmp_path)) == [(x, "for_tests")]
+
+
 TOKENIZE_PY = os.path.join("local_search_engine_spark", "functions", "tokenize.py")
 
 
 def second_tokenizer_sites(repo_dir=REPO_DIR):
     """(file, line) of every use of the tokenizer's split regex
     TOKEN_SPLIT_RE in a repo `.py` file other than functions/tokenize.py,
-    and of every name of a JVM-expression tokenizer (`tokenize*_expr`)
-    anywhere: a def, an import, a Name or an Attribute. tokenize_py is
-    the engine's one analyzer; a second tokenizer built on the same
-    regex drifts from it (strings and comments do not count)."""
+    of every name of a JVM-expression tokenizer (`tokenize*_expr`)
+    anywhere (a def, an import, a Name or an Attribute), of every
+    `tokenize*` def in functions/tokenize.py other than tokenize_py, and
+    of every package def parameter named `tokenizer`. tokenize_py is the
+    engine's one analyzer: a second tokenizer built on the same regex
+    drifts from it, and an analyzer argument lets an index be built with
+    one analyzer and queried with another (strings and comments do not
+    count)."""
     import ast
     import re
 
     jvm_tokenizer = re.compile(r"^tokenize\w*_expr$")
+    pkg = "local_search_engine_spark" + os.sep
     sites = []
     for root, dirs, files in os.walk(repo_dir):
         dirs[:] = sorted(d for d in dirs if not d.startswith("."))
@@ -271,6 +298,17 @@ def second_tokenizer_sites(repo_dir=REPO_DIR):
             with open(path) as f:
                 tree = ast.parse(f.read(), path)
             for node in ast.walk(tree):
+                if isinstance(node, ast.arg):
+                    if node.arg == "tokenizer" and rel.startswith(pkg):
+                        sites.append((rel, node.lineno))
+                    continue
+                if (
+                    isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and rel == TOKENIZE_PY
+                    and node.name.startswith("tokenize")
+                    and node.name != "tokenize_py"
+                ):
+                    sites.append((rel, node.lineno))
                 if isinstance(node, ast.Name):
                     names = [node.id]
                 elif isinstance(node, ast.Attribute):
@@ -297,16 +335,27 @@ def test_one_tokenizer_lint_is_live(tmp_path):
     fns = tmp_path / "local_search_engine_spark" / "functions"
     fns.mkdir(parents=True)
     (fns / "tokenize.py").write_text(
-        'TOKEN_SPLIT_RE = "[^a-z0-9_]+"\n\n\ndef tokenize_code_expr(col):\n    return col\n'
+        'TOKEN_SPLIT_RE = "[^a-z0-9_]+"\n\n\ndef tokenize_code_expr(col):\n    return col\n\n\n'
+        "def tokenize_py(text):\n    return []\n\n\n"
+        "def tokenize_code_py(text):\n    return []\n"
     )
     (tmp_path / "ops.py").write_text(
         "from local_search_engine_spark.functions.tokenize import TOKEN_SPLIT_RE\n"
         "import local_search_engine_spark.functions.tokenize as T\n"
         "toks = T.tokenize_code_expr(col)\n"
         "# TOKEN_SPLIT_RE in a comment is fine\n"
+        "def outside_the_package(tokenizer):\n    return tokenizer\n"
+    )
+    ops = tmp_path / "local_search_engine_spark" / "operators"
+    ops.mkdir()
+    (ops / "build.py").write_text(
+        "def build(docs, text_col, tokenizer=None):\n    return docs\n\n\n"
+        "def index(docs, *, analyzer=None):\n    return docs\n"
     )
     assert second_tokenizer_sites(str(tmp_path)) == [
         (TOKENIZE_PY, 4),
+        (TOKENIZE_PY, 12),
+        (os.path.join("local_search_engine_spark", "operators", "build.py"), 1),
         ("ops.py", 1),
         ("ops.py", 3),
     ]

@@ -107,22 +107,15 @@ def test_clean_corpus_planted_verdicts(spark):
     assert rows_nb[5]["decontam_ok"] and rows_nb[5]["keep"]
 
 
-def test_hash_sample_sql_twin_matches(spark):
-    """The DuckDB WHERE-clause twin selects exactly the same rows as the
-    Spark predicate (the consistent-sampling cross-engine contract)."""
-    import duckdb
+def test_hash_sample_matches_python_oracle(spark):
+    """hash_sample keeps exactly the rows whose plain-Python
+    h32(f"{salt}:{id}") falls under int(rate * 2^32) (the
+    consistent-sampling cross-engine contract)."""
+    from .oracle import hash_sampled
 
-    got = sorted(
-        r["doc_id"] for r in S.hash_sample(_docs(spark), 0.3, salt="tw").collect()
-    )
-    con = duckdb.connect()
-    want = [
-        r[0]
-        for r in con.execute(
-            f"SELECT doc_id FROM read_parquet('{SF0001}/documents.parquet') "
-            f"WHERE {S.hash_sample_sql(0.3, salt='tw')} ORDER BY doc_id"
-        ).fetchall()
-    ]
+    docs = _docs(spark)
+    got = sorted(r["doc_id"] for r in S.hash_sample(docs, 0.3, salt="tw").collect())
+    want = hash_sampled([r["doc_id"] for r in docs.select("doc_id").collect()], 0.3, "tw")
     assert got == want and len(got) > 0
 
 

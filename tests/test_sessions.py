@@ -1,16 +1,11 @@
-"""Sessionization: the applyInPandasWithState streaming operator must
-agree with its batch DataFrame twin on CLOSED sessions, with the state
-carrying open sessions across micro-batch boundaries."""
+"""Sessionization: gap-based sessions per user, a session breaking
+where the gap to the user's previous event exceeds the threshold."""
 
 from __future__ import annotations
 
 import datetime
-import os
 
-from local_search_engine_spark.streaming.sessions import (
-    sessionize,
-    sessionize_stream,
-)
+from local_search_engine_spark.streaming.sessions import sessionize
 
 SCHEMA = "user_id long, ts timestamp, value double"
 T0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
@@ -45,62 +40,3 @@ def test_batch_sessionize_semantics(spark):
     assert out[(2, 1)] == (4, 4.0)
     assert out[(3, 1)] == (1, 1.0)
 
-
-def test_stream_matches_batch_closed_sessions(spark, tmp_path):
-    """Split the events MID-SESSION across two files/micro-batches: the
-    state must stitch user 1's second session back together. The stream
-    emits closed sessions only, so compare against the batch twin minus
-    each user's final (still-open) session."""
-    src = str(tmp_path / "incoming")
-    os.makedirs(src, exist_ok=True)
-    # batch 1 ends inside user 1's second session (event at minute 530)
-    b1 = [e for e in EVENTS if e[1] <= T0 + datetime.timedelta(minutes=530)]
-    b2 = [e for e in EVENTS if e[1] > T0 + datetime.timedelta(minutes=530)]
-    # one file per micro-batch: the stream operator's contract is
-    # non-decreasing event time per user ACROSS batches (log-ingest
-    # order); multi-part writes would interleave files arbitrarily
-    spark.createDataFrame(b1, SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(b2, SCHEMA).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = sessionize_stream(stream, gap_minutes=360)
-    name = "sessions_sink"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["user_id"], r["session_start_us"]): (r["n_events"], r["sum_value"])
-        for r in spark.table(name).collect()
-    }
-
-    batch = sessionize(
-        spark.createDataFrame(EVENTS, SCHEMA), gap_minutes=360
-    ).collect()
-    last_start = {}
-    for r in batch:
-        last_start[r["user_id"]] = max(
-            last_start.get(r["user_id"], -1), r["session_start_us"]
-        )
-    want = {
-        (r["user_id"], r["session_start_us"]): (r["n_events"], r["sum_value"])
-        for r in batch
-        if r["session_start_us"] != last_start[r["user_id"]]  # open tails stay in state
-    }
-    assert got == want
-    # the mid-session split must NOT have broken session 2 of user 1:
-    # its closed record spans both micro-batches (2 events)
-    u1_s2_start = [
-        r["session_start_us"]
-        for r in batch
-        if r["user_id"] == 1 and r["session_idx"] == 2
-    ][0]
-    assert got[(1, u1_s2_start)] == (2, 2.0)

@@ -52,9 +52,11 @@ def test_ivf_topk_structure_and_recall(spark):
             emb.filter("vec_id <> 0"), q, k, cents, nprobe=4
         ).collect()
     ]
+    from .oracle import nearest_centroid
+
     assigns = {
-        r["id"]: r["cluster"]
-        for r in SIM.ivf_assignments(emb, cents).collect()
+        r["vec_id"]: nearest_centroid(r["embedding"], cents)
+        for r in emb.select("vec_id", "embedding").collect()
     }
     # structure: every returned candidate sits in one of the 4 probed lists
     qd = sorted(

@@ -22,8 +22,11 @@ from __future__ import annotations
 
 import math
 import os
+from collections import Counter
 
 from local_search_engine_spark.operators import similarity as SIM
+
+from .oracle import nearest_centroid
 
 
 def _mk(spark, rows):
@@ -68,10 +71,7 @@ def test_ivf_retrain_and_swap_restores_recall(spark, tmp_path):
     m = SIM.append_ivf_index(idx, shifted)
     assert m["retrain_recommended"] and m["drift_ratio"] > 10, m
     # the drifted batch straddles two OLD clusters — the recall failure mode
-    split = {
-        int(r["cluster"]): int(r["count"])
-        for r in SIM.ivf_assignments(shifted, cents).groupBy("cluster").count().collect()
-    }
+    split = Counter(nearest_centroid(r["embedding"], cents) for r in shifted.collect())
     assert len(split) == 2 and all(v == 16 for v in split.values()), split
 
     qv = [50.0] + [0.0] * 7
@@ -103,3 +103,25 @@ def test_ivf_retrain_and_swap_restores_recall(spark, tmp_path):
     # drift baseline reset: the same shifted distribution no longer trips
     m2 = SIM.append_ivf_index(idx, _shifted(spark, range(300, 332)))
     assert not m2["retrain_recommended"], m2
+
+
+def test_retrain_with_an_unchanged_quantizer_keeps_the_mean_distance(spark, tmp_path):
+    """Persist, then retrain on the same set: the quantizer comes out
+    unchanged, so the mean quantization error after the retrain equals
+    the one before bit for bit. Both are one exact decimal sum and a
+    count, divided on the driver; a mean of per-cluster means against
+    Spark's avg was 1 ulp off for some of these sizes."""
+    from local_search_engine_spark.plans.store import read_json
+
+    from .test_similarity import _emb
+
+    emb = _emb(spark)
+    for n_centroids in (8, 10, 16):
+        cents = SIM.ivf_train_centroids(emb, n_centroids, 64, iters=1)
+        idx = str(tmp_path / f"ivf{n_centroids}")
+        SIM.persist_ivf_index(emb, cents, idx)
+        info = SIM.retrain_ivf_index(spark, idx, iters=1)
+        assert read_json(os.path.join(idx, "centroids.json")) == cents
+        assert info["train_mean_dist_after"] == info["train_mean_dist_before"], info
+        stats = read_json(os.path.join(idx, "stats.json"))
+        assert stats["train_mean_dist"] == info["train_mean_dist_before"]

@@ -81,22 +81,41 @@ def test_swap_dir_leaves_live_readable(spark, tmp_path):
 def test_index_kinds_read_their_recorded_schema_without_jobs(spark, tmp_path):
     """Positional, SRP, IVF and trigram tables read back with the schema
     an inferring read reports (the BM25 tables: test_resume; the
-    PersistedIndexState deltas: test_streaming), and opening positional
-    postings or constructing a persisted ANN query runs no job."""
+    PersistedIndexState deltas: test_streaming), and opening or probing
+    any of them runs no job. Over more than 32 directories Spark's
+    default parallelPartitionDiscovery.threshold lists paths with a job;
+    get_spark sets it to 4096, so these also open on the driver alone:
+    positional postings at the default 64 buckets (the read
+    make_phrase_topk binds), the SRP `vectors/` table whole at bits 8, a
+    37-part SRP probe (probe_hamming=2) and a trigram index at 64
+    buckets."""
     emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
     docs = spark.read.parquet(f"{SF0001}/documents.parquet").select("doc_id", "text")
-    q = [float(x) for x in emb.first()["embedding"]]
+    # a vocabulary wide enough to fill all 64 positional term buckets
+    wide = spark.range(200).selectExpr("id AS doc_id", "concat_ws(' ', 'w' || id, 'v' || (id * 7)) AS text")
     srp, ivf, pos, tri = (str(tmp_path / d) for d in ("srp", "ivf", "pos", "tri"))
     SIM.persist_srp_index(emb, 64, srp, bits=8)
     SIM.persist_ivf_index(emb, SIM.ivf_train_centroids(emb, 8, 64, iters=1), ivf)
-    P.persist_positional_postings(P.build_positional_postings(docs, n_buckets=8), pos)
+    P.persist_positional_postings(P.build_positional_postings(wide), pos)
     build_trigram_index(docs, tri, text_col="text")
-    for root in (os.path.join(srp, "vectors"), os.path.join(ivf, "vectors"), pos, tri):
+    vec = os.path.join(srp, "vectors")
+    for root in (vec, os.path.join(ivf, "vectors"), pos, tri):
         assert read_table(spark, root).schema == spark.read.parquet(root).schema, root
 
-    _, jobs = _jobs_during(spark, lambda: P.load_positional_postings(spark, pos))
-    assert jobs == 0
-    _, jobs = _jobs_during(spark, lambda: SIM.srp_lsh_topk_persisted(spark, srp, q, 5, probe_hamming=1))
-    assert jobs == 0
-    _, jobs = _jobs_during(spark, lambda: SIM.ivf_topk_persisted(spark, ivf, q, 5, nprobe=2))
-    assert jobs == 0
+    def dirs(root):
+        return {int(d.split("=")[1]) for d in os.listdir(root) if "=" in d}
+
+    # the query vector whose 37 probed buckets are (nearly) all on disk
+    q = [float(x) for x in emb.filter("vec_id = 21").first()["embedding"]]
+    probed = SIM.probe_buckets(SIM.query_bucket(q, 64, 8), 8, 2)
+    assert len(probed) == 37 and len(dirs(vec) & set(probed)) > 32
+    assert len(dirs(pos)) == 64 and len(dirs(tri)) == 64 and len(dirs(vec)) > 32
+
+    opens = {
+        "positional": lambda: P.make_phrase_topk(P.load_positional_postings(spark, pos), n_buckets=64),
+        "srp whole": lambda: read_table(spark, vec),
+        "srp 37 parts": lambda: SIM.srp_lsh_topk_persisted(spark, srp, q, 5, probe_hamming=2),
+        "ivf": lambda: SIM.ivf_topk_persisted(spark, ivf, q, 5, nprobe=2),
+        "trigram": lambda: read_table(spark, tri),
+    }
+    assert {name: _jobs_during(spark, fn)[1] for name, fn in opens.items()} == dict.fromkeys(opens, 0)

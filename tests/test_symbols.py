@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from local_search_engine_spark.operators.symbols import (
     extract_symbols,
-    lookup_symbol,
     symbol_definitions,
 )
 
@@ -80,17 +79,18 @@ def test_extract_per_language(spark):
 
 
 def test_definition_index_and_lookup(spark):
-    docs, syms = _symbols(spark)
+    """Jump-to-definition is a lookup in the definition index."""
+    _, syms = _symbols(spark)
     defs = {
         (r["symbol"], r["kind"]): (r["n_defs"], r["doc_ids"])
         for r in symbol_definitions(syms).collect()
     }
     # merge_shards is defined in python (0) AND rust (3)
     assert defs[("merge_shards", "function")] == (2, [0, 3])
-    hit = lookup_symbol(syms, docs, "ShardWriter")
-    rows = hit.collect()
-    assert [r["doc_id"] for r in rows] == [0] and rows[0]["kind"] == "class"
-    assert lookup_symbol(syms, docs, "nonexistent_zz").count() == 0
+    assert [(k, v) for k, v in defs.items() if k[0] == "ShardWriter"] == [
+        (("ShardWriter", "class"), (1, [0]))
+    ]
+    assert not [k for k in defs if k[0] == "nonexistent_zz"]
 
 
 def test_extract_zero_shuffle(spark):
