@@ -1004,9 +1004,7 @@ def q_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from local_search_engine_spark.operators.query import score_all as _sa
 
     fidx = build_index_fields(
-        _docs(spark, sf_dir).select("doc_id", "text", "source"),
-        BM25F_WEIGHTS,
-        cache=False,
+        _docs(spark, sf_dir).select("doc_id", "text", "source"), BM25F_WEIGHTS
     )
     out = out.unionByName(
         _ranked_topk(_sa(fidx, BM25F_QUERY), BM25F_K).select(

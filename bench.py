@@ -121,8 +121,7 @@ def main() -> None:
     )
     from local_search_engine_spark.operators.query import score_all as _SAF
 
-    _wf = _BIF(mini.select("doc_id", "text", "source"),
-               {"text": 1.0, "source": 2.0}, cache=False)
+    _wf = _BIF(mini.select("doc_id", "text", "source"), {"text": 1.0, "source": 2.0})
     _SAF(_wf, "warm table").orderBy("doc_id").limit(3).collect()
     from local_search_engine_spark.streaming.percolate import percolate as _perc
 
@@ -284,9 +283,7 @@ def main() -> None:
 
     def _bm25f():
         fi = build_index_fields(
-            docs.select("doc_id", "text", "source"),
-            {"text": 1.0, "source": 2.0},
-            cache=False,
+            docs.select("doc_id", "text", "source"), {"text": 1.0, "source": 2.0}
         )
         return (
             score_all_fn(fi, "fast table")

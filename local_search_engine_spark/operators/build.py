@@ -11,11 +11,15 @@ aggregation, broadcast joins, pushdown, AQE):
 
   corpus (repo,path,commit,lang,content)
     → tf        (doc_id, term) → tf                 [one mapInPandas, no shuffle]
-    → docs      doc_id, content_sha256, doc_len     [doc_len = sum(tf) per doc]
+    → docs      doc_id, content_sha256, doc_len     [with_doc_lens: sum(tf) per doc]
+    → stats     n_docs, avgdl                       [doc_len_stats: tiny agg, collected]
     → dfreq     term → df                           [map-side partial agg]
-    → stats     n_docs, avgdl                       [tiny agg, collected]
-    → idf       two-pass epsilon floor (needs the global mean of raw idf,
-                summed exactly so it does not depend on partition layout)
+    → idf       two-pass epsilon floor (needs the global mean of raw idf)
+
+Every sum is exact (exact_sum), so no value depends on the partition
+layout. Every builder derives doc_len with with_doc_lens, n_docs and
+avgdl with doc_len_stats and idf with idf_table; every in-memory index
+is built by assemble_index, which runs the last two.
 
 BM25Okapi semantics reproduced exactly (SURVEY.md §2.10):
   idf_raw(t) = ln(N - df + 0.5) - ln(df + 0.5)
@@ -233,6 +237,19 @@ def doc_freqs(tf):
     return tf.groupBy("term").agg(F.count("*").alias("df"))
 
 
+def exact_sum(df, col: str):
+    """sum(col) whose value does not depend on the summation order, so
+    not on the partition layout: an integer column sums as it is, any
+    other as DECIMAL(38,18), which is exact and associative."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    c = F.col(col)
+    if not isinstance(df.schema[col].dataType, T.IntegralType):
+        c = c.cast("decimal(38,18)")
+    return F.sum(c)
+
+
 def idf_table(dfreq, n_docs: int, epsilon: float = BM25_EPSILON):
     """A5: two-pass epsilon-floored IDF (SURVEY.md §4.3 item 3).
 
@@ -247,12 +264,8 @@ def idf_table(dfreq, n_docs: int, epsilon: float = BM25_EPSILON):
         F.log(F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
         - F.log(F.col("df") + F.lit(0.5)),
     )
-    # summed as DECIMAL(38,18), which is exact and associative, and
-    # divided on the driver: a double avg would depend on the partition
-    # layout's summation order
-    total, n = raw.agg(
-        F.sum(F.col("idf_raw").cast("decimal(38,18)")), F.count("*")
-    ).first()
+    # summed exactly and divided on the driver
+    total, n = raw.agg(exact_sum(raw, "idf_raw"), F.count("*")).first()
     avg_idf = float(total / n) if n else 0.0
     eps = epsilon * avg_idf
     idf = raw.withColumn(
@@ -262,6 +275,60 @@ def idf_table(dfreq, n_docs: int, epsilon: float = BM25_EPSILON):
     return idf, avg_idf
 
 
+def with_doc_lens(meta, tf):
+    """The docs table: meta (one row per doc_id) plus doc_len, the exact
+    sum of the doc's tf (tf counts every kept token), 0 for a doc
+    without tf rows. doc_len is an int over an integer tf and a double
+    otherwise (BM25F's blended tf).
+
+    The join is a sort-merge join whatever the planner would pick, so
+    the rows always land in doc_id hash partitions, each in doc_id
+    order: a broadcast join would keep meta's layout instead, and the
+    written docs table's bytes would follow the join strategy."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    integral = isinstance(tf.schema["tf"].dataType, T.IntegralType)
+    lens = tf.groupBy("doc_id").agg(
+        exact_sum(tf, "tf").cast("int" if integral else "double").alias("doc_len")
+    )
+    return meta.join(lens.hint("merge"), "doc_id", "left").withColumn(
+        "doc_len", F.coalesce(F.col("doc_len"), F.lit(0))
+    )
+
+
+def doc_len_stats(docs) -> tuple[int, float]:
+    """(n_docs, avgdl) of a docs table (with_doc_lens) from one
+    aggregate: a count and the exact doc_len total, divided on the
+    driver and correctly rounded."""
+    from fractions import Fraction
+
+    from pyspark.sql import functions as F
+
+    n_docs, total = docs.agg(F.count("*"), exact_sum(docs, "doc_len")).first()
+    avgdl = float(Fraction(total) / n_docs) if n_docs else 0.0
+    return n_docs, avgdl
+
+
+def assemble_index(docs, tf, params: BM25Params) -> InvertedIndex:
+    """The index over a docs table (with_doc_lens) and its tf table:
+    n_docs and avgdl from doc_len_stats, then df and the
+    epsilon-floored idf from tf. Every in-memory builder ends here, so
+    no statistic depends on the partition layout or on how the tables
+    were assembled."""
+    n_docs, avgdl = doc_len_stats(docs)
+    idf, avg_idf = idf_table(doc_freqs(tf), n_docs, params.epsilon)
+    return InvertedIndex(
+        docs=docs,
+        tf=tf,
+        idf=idf,
+        n_docs=n_docs,
+        avgdl=avgdl,
+        avg_idf=avg_idf,
+        params=params,
+    )
+
+
 def index_tables(docs_with_id, text_col: str = "content", cache: bool = True):
     """The (tf, docs) tables of build_index_from, planned but not run:
     no Spark job starts here. With cache=True both are cached, so the
@@ -269,15 +336,13 @@ def index_tables(docs_with_id, text_col: str = "content", cache: bool = True):
     reader (idf, postings, the persisted writes) shares that one run.
 
     Tokenization happens exactly ONCE, inside the term_frequencies
-    kernel. doc_len is recovered as sum(tf) per doc (tf counts every
-    kept token), and the docs side-table is a tokenize-free projection
-    (sha256 + metadata) left-joined to it, doc_len 0 for token-less docs."""
+    kernel; the docs side-table is a tokenize-free projection (sha256 +
+    metadata) with_doc_lens."""
     from pyspark.sql import functions as F
 
     # widen a thin scan before the tf kernel (single-row-group inputs
     # otherwise run the whole build on 1-2 cores). Row placement changes
-    # no result: doc_len/df/tf are integers, avgdl averages integers and
-    # idf_table sums avg_idf exactly.
+    # no result: every sum downstream is exact.
     from ..plans.layout import widen_for_kernel
 
     tf = term_frequencies(
@@ -289,12 +354,7 @@ def index_tables(docs_with_id, text_col: str = "content", cache: bool = True):
     meta = docs_with_id
     if "content_sha256" not in meta.columns:
         meta = meta.withColumn("content_sha256", F.sha2(F.col(text_col), 256))
-    doc_lens = tf.groupBy("doc_id").agg(F.sum("tf").cast("int").alias("doc_len"))
-    docs = (
-        meta.drop(text_col)
-        .join(doc_lens, "doc_id", "left")
-        .withColumn("doc_len", F.coalesce(F.col("doc_len"), F.lit(0)))
-    )
+    docs = with_doc_lens(meta.drop(text_col), tf)
     if cache:
         docs = docs.cache()
     return tf, docs
@@ -311,33 +371,19 @@ def build_index_from(
     The InvertedIndex.docs keeps every input column except the raw text
     (column pruning — content is never carried past here).
 
-    index_tables plans tf and docs; this adds the collected scalars
-    (n_docs, avgdl, avg_idf) and the idf table."""
-    from pyspark.sql import functions as F
-
-    params = params or BM25Params()
+    index_tables plans tf and docs; assemble_index adds the collected
+    scalars (n_docs, avgdl, avg_idf) and the idf table."""
     tf, docs = index_tables(docs_with_id, text_col, cache)
-    row = docs.agg(F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")).first()
-    n_docs, avgdl = int(row["n_docs"]), float(row["avgdl"] or 0.0)
-    idf, avg_idf = idf_table(doc_freqs(tf), n_docs, params.epsilon)
+    idx = assemble_index(docs, tf, params or BM25Params())
     if cache:
-        idf = idf.cache()
-    return InvertedIndex(
-        docs=docs,
-        tf=tf,
-        idf=idf,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        avg_idf=avg_idf,
-        params=params,
-    )
+        idx.idf.cache()
+    return idx
 
 
 def build_index_fields(
     docs_with_id,
     field_weights: dict,
     params: BM25Params | None = None,
-    cache: bool = True,
 ) -> InvertedIndex:
     """BM25F multi-field index (Robertson & Zaragoza's simplified BM25F;
     Elasticsearch `combined_fields`): the fields are treated as ONE
@@ -368,16 +414,14 @@ def build_index_fields(
     single-field build over that column), one
     unionByName (no shuffle), one (doc_id, term) groupBy — the blend
     shuffle replaces the single-field build's none, but it is keyed by
-    (doc_id, term) so hot terms do not skew it. Weights that are exact
-    binary fractions (1.0, 2.0, 0.5, 2.5 …) keep every product and the
-    ≤|fields|-term sums exact in double, so results are bit-stable
-    across partitionings; arbitrary weights are stable to float
-    ulp-noise (the 6dp rounded-rank rule absorbs it)."""
+    (doc_id, term) so hot terms do not skew it. The blend, doc_len and
+    avgdl are exact decimal sums of the w·tf products, so tf, doc_len,
+    avgdl and idf are bit-identical across partitionings for any
+    weights."""
     from pyspark.sql import functions as F
 
     if not field_weights:
         raise ValueError("field_weights must name at least one column")
-    params = params or BM25Params()
     for fcol in sorted(field_weights):
         w = float(field_weights[fcol])
         if w <= 0:
@@ -401,19 +445,19 @@ def build_index_fields(
             "doc_id", "term", (F.col("tf") * F.lit(w)).alias("wtf")
         )
         blended = tf_f if blended is None else blended.unionByName(tf_f)
-    tf = blended.groupBy("doc_id", "term").agg(F.sum("wtf").alias("tf"))
-    if cache:
-        tf = tf.cache()
-    else:
-        # the blended tf is consumed by FIVE downstream subtrees (doc_lens,
-        # the stats aggregate, doc_freqs→avg_idf, and the caller's scoring
-        # join references tf + idf + docs — each a full copy of this
-        # pipeline when uncached). Materialize it exactly ONCE with an
-        # eager localCheckpoint (guide §5: cheap lineage cut): unlike
-        # .cache() this never registers with the CacheManager, so a
-        # repeated cold build re-executes the whole pipeline instead of
-        # silently reusing a previous run's plan-equality cache entry.
-        tf = tf.localCheckpoint(eager=True)
+    # the blended tf is consumed by FIVE downstream subtrees (doc_lens,
+    # the stats aggregate, doc_freqs→avg_idf, and the caller's scoring
+    # join references tf + idf + docs — each a full copy of this
+    # pipeline when uncached). Materialize it exactly ONCE with an
+    # eager localCheckpoint (guide §5: cheap lineage cut): unlike
+    # .cache() this never registers with the CacheManager, so a
+    # repeated cold build re-executes the whole pipeline instead of
+    # silently reusing a previous run's plan-equality cache entry.
+    tf = (
+        blended.groupBy("doc_id", "term")
+        .agg(exact_sum(blended, "wtf").cast("double").alias("tf"))
+        .localCheckpoint(eager=True)
+    )
     meta = docs_with_id
     if "content_sha256" not in meta.columns:
         # per-row invariant over the COMBINED content: fields joined by
@@ -425,32 +469,8 @@ def build_index_fields(
                 256,
             ),
         )
-    doc_lens = tf.groupBy("doc_id").agg(
-        F.sum("tf").cast("double").alias("doc_len")
-    )
-    docs = (
-        meta.drop(*field_weights)
-        .join(doc_lens, "doc_id", "left")
-        .withColumn("doc_len", F.coalesce(F.col("doc_len"), F.lit(0.0)))
-    )
-    if cache:
-        docs = docs.cache()
-    row = docs.agg(
-        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
-    ).first()
-    n_docs, avgdl = int(row["n_docs"]), float(row["avgdl"] or 0.0)
-    idf, avg_idf = idf_table(doc_freqs(tf), n_docs, params.epsilon)
-    if cache:
-        idf = idf.cache()
-    return InvertedIndex(
-        docs=docs,
-        tf=tf,
-        idf=idf,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        avg_idf=avg_idf,
-        params=params,
-    )
+    docs = with_doc_lens(meta.drop(*field_weights), tf)
+    return assemble_index(docs, tf, params or BM25Params())
 
 
 def build_index(corpus, params: BM25Params | None = None) -> InvertedIndex:

@@ -370,19 +370,18 @@ def persist_ivf_index(
 
 
 def _dist_sums(assigned, *by) -> list:
-    """(*by, n, s) rows: the count and the DECIMAL(38,18) sum of
-    centroid_dist per `by` group (one row without `by`). The decimal sum
-    is exact and associative, and _mean_dist divides on the driver (the
-    avg_idf pattern of build.idf_table), so a mean depends neither on
-    the partition layout nor on how the rows were grouped."""
+    """(*by, n, s) rows: the count and the exact (DECIMAL(38,18)) sum of
+    centroid_dist per `by` group (one row without `by`). _mean_dist
+    divides on the driver (the avg_idf pattern of build.idf_table), so a
+    mean depends neither on the partition layout nor on how the rows
+    were grouped."""
     from pyspark.sql import functions as F
+
+    from .build import exact_sum
 
     return (
         assigned.groupBy(*by)
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("centroid_dist").cast("decimal(38,18)")).alias("s"),
-        )
+        .agg(F.count("*").alias("n"), exact_sum(assigned, "centroid_dist").alias("s"))
         .collect()
     )
 

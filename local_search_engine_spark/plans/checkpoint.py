@@ -1,6 +1,6 @@
 """Resumable index build: manifest-keyed stage/partition checkpoints +
-lineage and token/posting-count metrics (north-rule requirement;
-SURVEY.md §4.3 item 5).
+lineage and row-count metrics (the tf unit's rows are the posting
+count; north-rule requirement, SURVEY.md §4.3 item 5).
 
 Spark's own df.checkpoint() is not resumable across applications, so
 resumability is manifest-based: every stage (and, inside the postings
@@ -15,10 +15,11 @@ when every unit is a manifest hit the build ends there. Otherwise every
 unit that misses — docs, tf, idf (+ stats.json), shard_meta and each
 postings group — runs as its own Spark job chain, all of them
 concurrently, with no Spark action between the prelude and the wave.
-n_docs comes from the prelude, avgdl from one token-total aggregate
-inside the wave and avg_idf from the idf unit; each postings group
-encodes only its own shards, and the manifest's row counts are read
-from the parquet footers each unit just wrote.
+n_docs and avgdl come from one build.doc_len_stats aggregate inside the
+wave and the idf table from build.idf_table, the two steps of every
+in-memory build's assemble_index; each postings group encodes only its
+own shards, and the manifest's row counts are read from the parquet
+footers each unit just wrote.
 
 Every table goes through plans/store.py: it is committed by the
 `_schema.json` written after its data, and read back with that schema.
@@ -159,6 +160,7 @@ def build_persisted_index(
     from ..operators.build import (
         BM25Params,
         doc_freqs,
+        doc_len_stats,
         idf_table,
         index_tables,
         with_doc_ids,
@@ -229,7 +231,6 @@ def build_persisted_index(
             (F.col("doc_id") / F.lit(docs_per_shard)).cast("long"), F.lit(n_groups)
         )
         gfp = {g: f"n=0;h=0;{layout}" for g in range(n_groups)}
-        n_docs = 0
         for r in (
             ids_df.select(group_of.alias("g"), "doc_id", "content_sha256")
             .groupBy("g")
@@ -240,7 +241,6 @@ def build_persisted_index(
             .collect()
         ):
             gfp[int(r["g"])] = f"n={r['n']};h={r['h']};{layout}"
-            n_docs += int(r["n"])
 
         group_ids = list(only_groups) if only_groups is not None else list(range(n_groups))
         fingerprints = {u: probe_fp for u in side_units}
@@ -257,31 +257,31 @@ def build_persisted_index(
         # first unit to read them runs the tf kernel once, and the
         # others wait for its cached blocks.
         tf, docs = index_tables(ids_df, text_col=text_col)
-        total_lock = threading.Lock()
-        totals: list[int] = []
+        stats_lock = threading.Lock()
+        stats = []
 
-        def n_tokens() -> int:
-            # sum(doc_len): one aggregate per build, run by whichever
-            # unit asks first; the others wait for its value
-            with total_lock:
-                if not totals:
-                    totals.append(int(docs.agg(F.sum("doc_len")).first()[0] or 0))
-            return totals[0]
+        def run_stats() -> None:
+            # n_docs and avgdl: one aggregate per build, run by whichever
+            # unit asks first; the others wait for it
+            with stats_lock:
+                if not stats:
+                    stats.append(doc_len_stats(docs))
 
         def write_docs():
             return {"rows": write_table(docs, path("docs"))}
 
         def write_tf():
-            return {"rows": write_table(tf, path("tf")), "n_tokens": n_tokens()}
+            return {"rows": write_table(tf, path("tf"))}
 
         def write_idf():
+            n_docs, avgdl = stats[0]  # run_unit ran run_stats first
             idf, avg_idf = idf_table(doc_freqs(tf), n_docs, params.epsilon)
             n_rows = write_table(idf, path("idf"))
             write_json(
                 path("stats.json"),
                 {
                     "n_docs": n_docs,
-                    "avgdl": n_tokens() / n_docs if n_docs else 0.0,
+                    "avgdl": avgdl,
                     "avg_idf": avg_idf,
                     "k1": params.k1,
                     "b": params.b,
@@ -322,13 +322,13 @@ def build_persisted_index(
 
         def run_unit(unit: str) -> None:
             t0 = time.time()
-            if unit not in ("tf", "idf"):
-                # The docs readers first wait for the token total: its
+            if unit != "tf":
+                # The docs readers first wait for the statistics: their
                 # aggregate fills the tf and docs caches, so their plans
-                # see materialized caches (a broadcast doc_len join, no
-                # cache-materializing jobs of their own). tf and idf
-                # read only tf and start at once.
-                n_tokens()
+                # see materialized caches (no cache-materializing jobs of
+                # their own), and the idf unit reads n_docs and avgdl.
+                # tf reads only tf and starts at once.
+                run_stats()
             if unit.startswith("postings/group="):
                 metrics = write_group(int(unit.split("=")[1]))
             else:

@@ -15,11 +15,11 @@ repartition to default parallelism; anything else is returned untouched
 (post-shuffle layouts are already spread by shuffle.partitions plus
 AQE's parallelism-first coalescing). Callers apply it only where row
 placement cannot change results: per-row kernels, exact aggregations,
-per-pair verification. A double aggregate is exact when its inputs are
-(integer doc lengths under avgdl, binary-fraction BM25F weights) or when
-it sums as a decimal (build.idf_table's avg_idf); any other double sum
-depends on summation order, so never widen upstream of one whose value
-feeds a result.
+per-pair verification. build.exact_sum is the index's exact sum: an
+integer column as it is, a double as DECIMAL(38,18), so doc_len, avgdl,
+avg_idf and BM25F's blended tf do not depend on the layout for any
+field weights. A double sum depends on summation order, so never widen
+upstream of one whose value feeds a result.
 
 `group_in_partitions` is the engine's one way to run a Python kernel
 per key group (postings encode, shard_meta pack, WAND and phrase

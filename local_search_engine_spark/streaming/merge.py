@@ -3,14 +3,15 @@
 corpus dict and chunk-id space) re-expressed as batch index-merge
 algebra, plus a Structured Streaming ingest wrapper.
 
-The index state that must merge is exactly three associative pieces:
-  tf     (doc_id, term, tf)      — disjoint doc ranges: plain union
-  df     (term, df)              — union + groupBy(term).sum
-  stats  (n_docs, total_len)     — scalar sums
-idf/avgdl are DERIVED (non-associative: epsilon floor needs the global
-avg of raw idf), so they are recomputed from merged df/stats — cheap
-(vocabulary-sized), and the result is IDENTICAL to a from-scratch build
-over the union corpus (tests/test_streaming.py asserts this).
+The index state that must merge is two tables over disjoint doc
+ranges, each a plain union:
+  tf     (doc_id, term, tf)
+  docs   (doc_id, ..., doc_len)
+n_docs, avgdl, df and idf are DERIVED (the epsilon floor needs the
+global mean of raw idf), by the same build.assemble_index a
+from-scratch build runs — one docs aggregate plus vocabulary-sized idf
+work, with exact sums — so the result is IDENTICAL to a from-scratch
+build over the union corpus (tests/test_streaming.py asserts this).
 
 Two shapes live here:
 
@@ -32,15 +33,22 @@ from __future__ import annotations
 
 import os
 
-from ..operators.build import BM25Params, InvertedIndex, idf_table
+from ..operators.build import (
+    BM25Params,
+    InvertedIndex,
+    assemble_index,
+    index_tables,
+    term_frequencies,
+    with_doc_lens,
+)
 from ..plans.store import committed, read_json, read_table, swap_dir, write_json, write_table
 
 
 def merge_tf(tf_old, tf_new):
     """Union of tf tables. Doc ranges are disjoint by construction
-    (appended docs get new ids), so no re-aggregation is needed; a
-    groupBy-sum is used anyway to make the merge idempotent under
-    re-delivered batches (exactly-once via idempotent re-agg)."""
+    (appended docs get new ids); the (doc_id, term) groupBy keeps the
+    max tf, so a re-delivered batch, whose rows equal the ones already
+    merged, leaves every tf as it was (a sum would double it)."""
     from pyspark.sql import functions as F
 
     return (
@@ -53,33 +61,13 @@ def merge_tf(tf_old, tf_new):
 def merge_index(old: InvertedIndex, new_docs_with_id, text_col: str = "content") -> InvertedIndex:
     """Merge an already-built index with a batch of NEW docs (unique new
     doc_ids) → a full InvertedIndex equal to a from-scratch build over
-    the union. Only the new docs are tokenized; df/idf/avgdl are
-    recomputed from merged aggregates (vocabulary-scale work)."""
-    from pyspark.sql import functions as F
-
-    from ..operators.build import build_index_from, doc_freqs
-
-    new_idx = build_index_from(
-        new_docs_with_id, text_col=text_col, params=old.params, cache=False
-    )
-    docs = old.docs.unionByName(new_idx.docs, allowMissingColumns=True)
-    tf = merge_tf(old.tf, new_idx.tf)
-    n_docs = old.n_docs + new_idx.n_docs
-    # each avgdl is its integer token total s over n, correctly rounded,
-    # so n·avgdl is within s·2^-52 of s and rounds back to s exactly
-    # (s < 2^51); dividing the exact merged total matches a from-scratch
-    # build bit for bit, where n_old·avgdl_old + n_new·avgdl_new need not
-    total_len = round(old.n_docs * old.avgdl) + round(new_idx.n_docs * new_idx.avgdl)
-    avgdl = total_len / n_docs if n_docs else 0.0
-    idf, avg_idf = idf_table(doc_freqs(tf), n_docs, old.params.epsilon)
-    return InvertedIndex(
-        docs=docs,
-        tf=tf,
-        idf=idf,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        avg_idf=avg_idf,
-        params=old.params,
+    the union. Only the new docs are tokenized; n_docs, avgdl and
+    df/idf are derived from the merged tables (assemble_index)."""
+    tf, docs = index_tables(new_docs_with_id, text_col=text_col, cache=False)
+    return assemble_index(
+        old.docs.unionByName(docs, allowMissingColumns=True),
+        merge_tf(old.tf, tf),
+        old.params,
     )
 
 
@@ -122,21 +110,12 @@ class PersistedIndexState:
     def append_batch(self, docs_with_id, batch_id: int, text_col: str = "content"):
         """Tokenize + write this batch's tf/docs deltas. Idempotent per
         batch_id; returns the commit-log entry (None if already done)."""
-        from pyspark.sql import functions as F
-
-        from ..operators.build import term_frequencies
-
         if self.committed(batch_id):
             return None
         part = ("batch", str(batch_id))
         tf = term_frequencies(docs_with_id, text_col=text_col).cache()
         n_rows = write_table(tf, os.path.join(self.dir, "tf"), part=part)
-        doc_lens = tf.groupBy("doc_id").agg(F.sum("tf").cast("int").alias("doc_len"))
-        docs = (
-            docs_with_id.select("doc_id")
-            .join(doc_lens, "doc_id", "left")
-            .withColumn("doc_len", F.coalesce(F.col("doc_len"), F.lit(0)))
-        )
+        docs = with_doc_lens(docs_with_id.select("doc_id"), tf)
         n_docs = write_table(docs, os.path.join(self.dir, "docs"), part=part)
         tf.unpersist()
         entry = {"rows": n_rows, "n_docs": n_docs}
@@ -203,8 +182,6 @@ class PersistedIndexState:
         from-scratch build over the surviving docs (test-pinned)."""
         from pyspark.sql import functions as F
 
-        from ..operators.build import doc_freqs
-
         tf = read_table(self.spark, os.path.join(self.dir, "tf"))
         docs = read_table(self.spark, os.path.join(self.dir, "docs"))
         dead = self.tombstones()
@@ -213,20 +190,7 @@ class PersistedIndexState:
             # in-filter pushed to the scan, no join or shuffle
             tf = tf.filter(~F.col("doc_id").isin(dead))
             docs = docs.filter(~F.col("doc_id").isin(dead))
-        row = docs.agg(
-            F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
-        ).first()
-        n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
-        idf, avg_idf = idf_table(doc_freqs(tf), n_docs, self.params.epsilon)
-        return InvertedIndex(
-            docs=docs,
-            tf=tf,
-            idf=idf,
-            n_docs=n_docs,
-            avgdl=avgdl,
-            avg_idf=avg_idf,
-            params=self.params,
-        )
+        return assemble_index(docs, tf, self.params)
 
 
 def stream_ingest(

@@ -155,10 +155,10 @@ def test_field_weight_reorders(spark):
         *[(i, "x1", "x2 x3 x4 x5") for i in range(2, 10)],
     ]
     df = spark.createDataFrame(rows, "doc_id long, title string, body string")
-    boosted = build_index_fields(df, {"title": 3.0, "body": 1.0}, cache=False)
+    boosted = build_index_fields(df, {"title": 3.0, "body": 1.0})
     got = _engine_topk(boosted, "merge", 2)
     assert [d for _, d, _ in got] == [0, 1]
-    flat = build_index_fields(df, {"title": 1.0, "body": 1.0}, cache=False)
+    flat = build_index_fields(df, {"title": 1.0, "body": 1.0})
     flat_scores = {d: s for _, d, s in _engine_topk(flat, "merge", 2)}
     assert flat_scores[0] == flat_scores[1]  # symmetric under flat weights
 

@@ -740,29 +740,24 @@ def _ast_strategy():
             return node
         return cls(node, f)
 
+    def flat(cls):
+        # a same-type child's children are spliced in, the parser's
+        # flattening: a filter rejecting such lists would make hypothesis
+        # print the whole recursive strategy on every retried draw
+        return lambda cs: tuple(
+            g for c in cs for g in (c.children if isinstance(c, cls) else (c,))
+        )
+
     def extend(children):
+        # children never yields a Not (only And children are negated),
+        # so no double NOT is built
         flat_and = st.lists(
-            st.one_of(
-                children,
-                children.map(Not).filter(
-                    lambda n: not isinstance(n.child, Not)
-                ),
-            ),
-            min_size=2,
-            max_size=3,
-        ).filter(
-            lambda cs: not any(isinstance(c, And) for c in cs)
-        ).map(lambda cs: And(tuple(cs)))
-        flat_or = st.lists(children, min_size=2, max_size=3).filter(
-            lambda cs: not any(isinstance(c, Or) for c in cs)
-        ).map(lambda cs: Or(tuple(cs)))
+            st.one_of(children, children.map(Not)), min_size=2, max_size=3
+        ).map(flat(And)).map(And)
+        flat_or = st.lists(children, min_size=2, max_size=3).map(flat(Or)).map(Or)
         # AtLeast normal form: children OR-flattened, 1 < n < len
-        at_least = st.lists(children, min_size=3, max_size=4).filter(
-            lambda cs: not any(isinstance(c, Or) for c in cs)
-        ).flatmap(
-            lambda cs: st.integers(2, len(cs) - 1).map(
-                lambda n: AtLeast(tuple(cs), n)
-            )
+        at_least = st.lists(children, min_size=3, max_size=4).map(flat(Or)).flatmap(
+            lambda cs: st.integers(2, len(cs) - 1).map(lambda n: AtLeast(cs, n))
         )
         return st.one_of(
             boostable(flat_and), boostable(flat_or), boostable(at_least)

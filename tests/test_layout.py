@@ -254,19 +254,60 @@ def test_plans_use_one_mapinpandas_per_grouping(spark, tmp_path, monkeypatch):
     assert "MapInPandas" in p and "FlatMapGroupsInPandas" not in p, p
 
 
+def _index_bits(idx):
+    """Every statistic of an index as exact bits: n_docs, avgdl and
+    avg_idf, every idf row and every doc_len."""
+    idf = tuple(
+        (r["term"], r["df"], r["idf_raw"].hex(), r["idf"].hex())
+        for r in idx.idf.orderBy("term").collect()
+    )
+    doc_lens = tuple(
+        (r["doc_id"], float(r["doc_len"]).hex())
+        for r in idx.docs.select("doc_id", "doc_len").orderBy("doc_id").collect()
+    )
+    return idx.n_docs, idx.avgdl.hex(), idx.avg_idf.hex(), idf, doc_lens
+
+
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-def test_idf_is_bit_identical_across_layouts(spark, sf):
-    """avg_idf — and through the epsilon floor the idf table — does not
-    depend on how the corpus is partitioned: input repartition(1) vs
-    repartition(7), each under two shuffle-partition counts."""
+def test_idf_is_bit_identical_across_layouts(spark, sf, tmp_path):
+    """An index's statistics do not depend on how the corpus is
+    partitioned: input repartition(1) vs repartition(7), each under two
+    shuffle-partition counts, for every builder — the single-field
+    build, a three-field BM25F build with weights that are not binary
+    fractions, merge_index and PersistedIndexState."""
     import os
-    import struct
+    import uuid
 
     from __spark_entry__ import SF0001
-    from local_search_engine_spark.operators.build import build_index_from
+    from local_search_engine_spark.operators.build import (
+        build_index_fields,
+        build_index_from,
+    )
+    from local_search_engine_spark.streaming.merge import PersistedIndexState, merge_index
 
     path = os.path.join(os.path.dirname(SF0001), sf, "documents.parquet")
-    docs = spark.read.parquet(path).select("doc_id", "text")
+    docs = spark.read.parquet(path).select("doc_id", "text", "source", "lang")
+
+    def halves(d):
+        text = d.select("doc_id", "text")
+        return text.filter("doc_id % 2 = 0"), text.filter("doc_id % 2 = 1")
+
+    def persisted(d):
+        state = PersistedIndexState(spark, str(tmp_path / uuid.uuid4().hex))
+        for batch_id, half in enumerate(halves(d)):
+            state.append_batch(half, batch_id, text_col="text")
+        return state.load_index()
+
+    def merged(d):
+        even, odd = halves(d)
+        return merge_index(build_index_from(even, text_col="text", cache=False), odd, text_col="text")
+
+    builders = {
+        "bm25": lambda d: build_index_from(d.select("doc_id", "text"), text_col="text", cache=False),
+        "bm25f": lambda d: build_index_fields(d, {"text": 0.3, "source": 1.7, "lang": 0.9}),
+        "merge": merged,
+        "persisted": persisted,
+    }
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
     seen = {}
@@ -274,12 +315,13 @@ def test_idf_is_bit_identical_across_layouts(spark, sf):
         for parts in (1, 7):
             for shuffle in (4, 13):
                 spark.conf.set(key, str(shuffle))
-                idx = build_index_from(docs.repartition(parts), text_col="text", cache=False)
-                idf = tuple(
-                    (r["term"], r["df"], struct.pack("<dd", r["idf_raw"], r["idf"]))
-                    for r in idx.idf.orderBy("term").collect()
-                )
-                seen[(parts, shuffle)] = (struct.pack("<d", idx.avg_idf), idf)
+                layout = docs.repartition(parts)
+                for name, build in builders.items():
+                    seen[(name, parts, shuffle)] = _index_bits(build(layout))
     finally:
         spark.conf.set(key, saved)
-    assert len(set(seen.values())) == 1, {k: v[0].hex() for k, v in seen.items()}
+    for name in builders:
+        bits = {k[1:]: v for k, v in seen.items() if k[0] == name}
+        assert len(set(bits.values())) == 1, (name, {k: v[:3] for k, v in bits.items()})
+    # the merged and persisted indexes equal the single-field build
+    assert seen[("merge", 1, 4)] == seen[("persisted", 1, 4)] == seen[("bm25", 1, 4)]

@@ -429,3 +429,141 @@ def test_store_lint_is_live(tmp_path):
         (tmp_path / rel).write_text(body)
     x = os.path.join("operators", "x.py")
     assert store_bypass_sites(str(tmp_path)) == [(x, 3), (x, 4), (x, 6), (x, 7), (x, 11)]
+
+
+BUILD_PY = os.path.join("operators", "build.py")
+# kind -> the (file, function) pairs where that part of an index is made
+ASSEMBLY = {
+    "InvertedIndex": {(BUILD_PY, "assemble_index"), (os.path.join("plans", "checkpoint.py"), "load_index")},
+    "doc_len": {(BUILD_PY, "with_doc_lens")},
+    "avgdl": {(BUILD_PY, "doc_len_stats")},
+}
+
+
+def index_assembly_sites(pkg_dir=PKG_DIR):
+    """(file, line, kind) of every place in the package that assembles
+    part of an index outside the functions ASSEMBLY allows:
+
+      * InvertedIndex — an `InvertedIndex(...)` call. build.assemble_index
+        builds every index; checkpoint.load_index reads one back from its
+        stored statistics.
+      * doc_len — a column named doc_len made by `.alias`, `.withColumn`
+        or `.withColumnRenamed`; build.with_doc_lens derives it.
+      * avgdl — an `avg`/`mean` call over doc_len; a value bound to a
+        name, attribute, keyword or dict key `avgdl` that holds an
+        operator or a call other than doc_len_stats(...); or an operator
+        applied to avgdl other than dividing by it (scoring divides a
+        length by avgdl). Only build.doc_len_stats derives avgdl; the
+        others receive it from there or from stored statistics.
+
+    Strings and comments do not count."""
+    import ast
+
+    def named(node, name):
+        return (isinstance(node, ast.Name) and node.id == name) or (
+            isinstance(node, ast.Attribute) and node.attr == name
+        )
+
+    def computed(node):
+        return node is not None and any(
+            isinstance(n, ast.BinOp) or (isinstance(n, ast.Call) and not named(n.func, "doc_len_stats"))
+            for n in ast.walk(node)
+        )
+
+    def kinds(node):
+        if isinstance(node, ast.Call):
+            fn = node.func
+            attr = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if attr == "InvertedIndex":
+                yield "InvertedIndex"
+            pos = {"alias": 0, "withColumn": 0, "withColumnRenamed": 1}.get(attr)
+            if pos is not None and len(node.args) > pos:
+                arg = node.args[pos]
+                if isinstance(arg, ast.Constant) and arg.value == "doc_len":
+                    yield "doc_len"
+            if attr in ("avg", "mean") and "doc_len" in ast.unparse(node):
+                yield "avgdl"
+            if any(k.arg == "avgdl" and computed(k.value) for k in node.keywords):
+                yield "avgdl"
+        elif isinstance(node, ast.BinOp):
+            if named(node.left, "avgdl") or (
+                named(node.right, "avgdl") and not isinstance(node.op, ast.Div)
+            ):
+                yield "avgdl"
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = getattr(node, "targets", None) or [node.target]
+            flat = [e for t in targets for e in (t.elts if isinstance(t, ast.Tuple) else [t])]
+            if any(named(t, "avgdl") for t in flat) and (
+                isinstance(node, ast.AugAssign) or computed(node.value)
+            ):
+                yield "avgdl"
+        elif isinstance(node, ast.Dict):
+            if any(
+                isinstance(k, ast.Constant) and k.value == "avgdl" and computed(v)
+                for k, v in zip(node.keys, node.values)
+            ):
+                yield "avgdl"
+
+    sites = []
+
+    def visit(node, rel, funcs):
+        for kind in kinds(node):
+            if not any((rel, f) in ASSEMBLY[kind] for f in funcs):
+                sites.append((rel, node.lineno, kind))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            funcs = funcs + (node.name,)
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, funcs)
+
+    for root, _, files in os.walk(pkg_dir):
+        for name in sorted(files):
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as f:
+                    visit(ast.parse(f.read(), path), os.path.relpath(path, pkg_dir), ())
+    return sorted(sites)
+
+
+def test_one_index_assembly():
+    assert index_assembly_sites() == []
+
+
+def test_index_assembly_lint_is_live(tmp_path):
+    (tmp_path / "operators").mkdir()
+    (tmp_path / "plans").mkdir()
+    (tmp_path / "streaming").mkdir()
+    (tmp_path / BUILD_PY).write_text(
+        "def with_doc_lens(meta, lens):\n"
+        '    return meta.join(lens.alias("doc_len"), "doc_id")\n\n\n'
+        "def doc_len_stats(docs, n, total):\n"
+        "    avgdl = total / n\n"
+        "    return n, avgdl\n\n\n"
+        "def assemble_index(docs, tf):\n"
+        "    n, avgdl = doc_len_stats(docs)\n"
+        "    return InvertedIndex(docs, tf, avgdl=avgdl)\n\n\n"
+        "def build_fields(docs):\n"
+        '    return docs.withColumn("doc_len", docs.tf * 2)\n'
+    )
+    (tmp_path / "plans" / "checkpoint.py").write_text(
+        "def load_index(stats):\n"
+        '    return InvertedIndex(avgdl=stats["avgdl"])\n'
+    )
+    (tmp_path / "streaming" / "merge.py").write_text(
+        "class State:\n"
+        "    def load_index(self, docs, old, n):\n"
+        '        row = docs.agg(F.avg("doc_len")).first()\n'
+        "        total = round(old.n_docs * old.avgdl)\n"
+        '        stats = {"avgdl": total / n, "n": n}\n'
+        "        score = 1.2 * docs.dl / old.avgdl\n"
+        "        n, avgdl = doc_len_stats(docs)\n"
+        "        return InvertedIndex(docs, avgdl=float(row[0]))\n"
+    )
+    merge = os.path.join("streaming", "merge.py")
+    assert index_assembly_sites(str(tmp_path)) == [
+        (BUILD_PY, 16, "doc_len"),
+        (merge, 3, "avgdl"),
+        (merge, 4, "avgdl"),
+        (merge, 5, "avgdl"),
+        (merge, 8, "InvertedIndex"),
+        (merge, 8, "avgdl"),
+    ]

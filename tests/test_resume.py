@@ -6,6 +6,7 @@ and that queries over the loaded index stay rank-identical to the oracle.
 
 import json
 import os
+from pathlib import Path
 
 
 from local_search_engine_spark.operators.wand import make_wand_topk
@@ -292,3 +293,26 @@ def test_index_of_an_older_format_is_rebuilt(spark, tmp_path):
     assert set(rebuilt) == set(man["units"])
     idx, _, _, _ = load_index(spark, d)
     assert idx.docs.count() == N_DOCS
+
+
+def test_docs_table_bytes_do_not_follow_the_join_strategy(spark, tmp_path):
+    """The docs/ table is written byte for byte the same whether the
+    planner may broadcast the doc-length join or not."""
+    corpus = gen_corpus_spark(spark, N_DOCS, partitions=4)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+
+    def docs_parts(d):
+        # (part number, bytes); the rest of a part's name is per write
+        return [(f.name.split("-")[1], f.read_bytes()) for f in sorted(Path(d, "docs").glob("part-*"))]
+
+    parts = []
+    try:
+        for threshold in (saved, "-1"):
+            spark.conf.set(key, threshold)
+            d = str(tmp_path / f"idx{len(parts)}")
+            build_persisted_index(spark, corpus, d, **KW)
+            parts.append(docs_parts(d))
+    finally:
+        spark.conf.set(key, saved)
+    assert parts[0] and parts[0] == parts[1], [[(p, len(b)) for p, b in ps] for ps in parts]
