@@ -61,19 +61,25 @@ class InvertedIndex:
     postings: object | None = None  # compressed blocks (operators/postings.py)
 
 
-def with_doc_ids(corpus, partitions: int | None = None):
+# monotonically_increasing_id keeps a row's position in its partition
+# in the low 33 bits and the partition index above them
+LOCAL_BITS = 33
+
+
+def assign_doc_ids(corpus, partitions: int | None = None):
     """Deterministic doc_id = 0-based global rank by the unique corpus
     key (repo, path, commit) — the identity contract shared with the
     oracle (SURVEY.md §7.2) — computed scalably:
 
       range-shuffle on the key into P ordered partitions
         → sortWithinPartitions(key)
-        → persist  (pins the partitioning: the offset pass and the main
-           pass must see identical partition boundaries — range sampling
-           must not re-run per action)
-        → one tokenize-free count-per-partition job → driver prefix sums
-        → JVM enumeration: row_number() windowed WITHIN each range
-           partition (parallel) + the prefix offset via a broadcast map;
+        → persist  (pins the partitioning: the counting pass and the
+           id pass must see identical partition boundaries — range
+           sampling must not re-run per action)
+        → one tokenize-free count-per-partition job, which also fills
+           the cache and checks the enumeration → driver prefix sums
+        → JVM enumeration: each row's position within its range
+           partition (parallel) + the prefix offset via a literal map;
            doc_id = offset + local row position.
 
     The v0 shape — row_number() over a global ORDER BY window — funneled
@@ -94,10 +100,34 @@ def with_doc_ids(corpus, partitions: int | None = None):
     anti-scaled; the keys-only JVM rank is also what survives 10^12
     files — the persisted rank state is keys, not corpus.)
 
+    The local position is monotonically_increasing_id's low LOCAL_BITS
+    bits and the partition is spark_partition_id(), both projected over
+    the cached key table, so both come from the task reading one cached
+    partition: no window, no exchange of the key table. (A row_number()
+    over Window.partitionBy(partition) was semantically identical, but
+    Catalyst cannot see that the column matches the physical
+    partitioning, so it hash-exchanged the whole key table first.)
+
+    The enumeration check is sound and needs no second action. The one
+    job that counts the partitions also aggregates, per partition, the
+    min and max of the local position, projected first (Spark rejects a
+    nondeterministic expression inside an aggregate). Within one
+    partition monotonically_increasing_id is strictly increasing from
+    0, so a partition of count < 2^LOCAL_BITS rows has local positions
+    exactly 0..count−1; doc_id_offsets raises unless every partition
+    shows count < 2^LOCAL_BITS, min == 0 and max == count − 1, which is
+    what dense, distinct ids [0, n_keys) need (a larger partition wraps
+    its positions into repeats, and max falls short). The id pass reads
+    the same cached blocks; an evicted block recomputes the same rows in
+    the same order, because the unique key totally orders a partition.
+
     Returns (the corpus with doc_id + content_sha256, the persisted key
-    table). Every action over the first re-reads the second, so the
-    caller unpersists the key table once those actions have run or
-    their results are cached.
+    table, n_keys, the number of key rows). Every action over the first
+    re-reads the second, so the caller unpersists the key table once
+    those actions have run or their results are cached. A key that
+    names several corpus rows gets several ids and the join fans out, so
+    such a corpus yields more than n_keys docs: check_unique_keys
+    catches it from a count the caller runs anyway.
     """
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
@@ -110,73 +140,69 @@ def with_doc_ids(corpus, partitions: int | None = None):
         corpus.select(*key)
         .repartitionByRange(partitions, *key)
         .sortWithinPartitions(*key)
-        .withColumn("_pid", F.spark_partition_id())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    counts = {
-        int(r["_pid"]): int(r["n"])
-        for r in k.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    local = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << LOCAL_BITS) - 1))
+    parts = (
+        k.select(F.spark_partition_id().alias("pid"), local.alias("local"))
+        .groupBy("pid")
+        .agg(F.count("*"), F.min("local"), F.max("local"))
+        .collect()
+    )
+    offsets, n_keys = doc_id_offsets(map(tuple, parts))
 
-    # enumeration is pure JVM and EXCHANGE-FREE: the persisted partitions
-    # are already sorted by the (unique) key, so the 0-based in-partition
-    # row position IS the local rank. monotonically_increasing_id packs
-    # exactly that position into its low 33 bits (partition id in the
-    # high bits), evaluated as a narrow projection over the cached
-    # layout — no window, no hash exchange of the key table. (An earlier
-    # row_number() over Window.partitionBy(_pid) was semantically
-    # identical but Catalyst cannot see that _pid matches the physical
-    # partitioning, so it inserted a full hash Exchange of the key table
-    # before the window; an earlier-still mapInPandas version put an
-    # Arrow round trip in the hot path.) Determinism: the key is unique,
-    # so sortWithinPartitions pins a total order per partition even if a
-    # cached block is evicted and recomputed.
     off = F.create_map(
         *[F.lit(x) for pid, o in sorted(offsets.items()) for x in (pid, o)]
     )
-    ids = (
-        k.withColumn(
-            "_local",
-            F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)),
-        )
-        .withColumn("doc_id", off[F.col("_pid")] + F.col("_local"))
-        .drop("_pid", "_local")
-    )
-    # Runtime invariant (r03 ADVICE): the low-33-bit in-partition counter
-    # assumes < 2^33 rows per partition and deterministic recompute of any
-    # evicted cache partition. Verify the finished enumeration outright —
-    # one agg job over the slim cached key relation (never the content) —
-    # so a violated assumption fails loudly instead of silently producing
-    # duplicate/shifted ids.
-    chk = ids.agg(
-        F.count("*").alias("n"),
-        F.count_distinct("doc_id").alias("nd"),
-        F.min("doc_id").alias("mn"),
-        F.max("doc_id").alias("mx"),
-    ).first()
-    if not (
-        chk["n"] == chk["nd"] == acc
-        and (acc == 0 or (chk["mn"] == 0 and chk["mx"] == acc - 1))
-    ):
-        raise RuntimeError(
-            f"doc-id enumeration invariant violated: {chk.asDict()}, expected "
-            f"dense [0, {acc}) — a partition likely exceeded 2^33 rows or a "
-            "cache recompute changed the layout"
-        )
-    # acc (total docs) is already known exactly — broadcast the id table
-    # outright when it is small so the CONTENT never shuffles: tokenize
-    # then runs straight off the (column-pruned) source scan at full
-    # width. Past the threshold this is a sort-merge join on the key —
-    # the same cost class as the range shuffle, and cluster-scalable.
-    if acc <= BROADCAST_IDS_MAX_ROWS:
+    ids = k.withColumn("doc_id", off[F.spark_partition_id()] + local)
+    # n_keys is known exactly — broadcast the id table outright when it
+    # is small so the CONTENT never shuffles: tokenize then runs
+    # straight off the (column-pruned) source scan at full width. Past
+    # the threshold this is a sort-merge join on the key — the same cost
+    # class as the range shuffle, and cluster-scalable.
+    if n_keys <= BROADCAST_IDS_MAX_ROWS:
         ids = F.broadcast(ids)
     out = corpus.withColumn("content_sha256", F.sha2(F.col("content"), 256))
-    return out.join(ids, key), k
+    return out.join(ids, key), k, n_keys
+
+
+def with_doc_ids(corpus, partitions: int | None = None):
+    """(the corpus with doc_id + content_sha256, the persisted key
+    table): assign_doc_ids without the key count."""
+    out, keys, _ = assign_doc_ids(corpus, partitions)
+    return out, keys
+
+
+def doc_id_offsets(parts) -> tuple[dict[int, int], int]:
+    """(first doc id of each partition, total rows) from the
+    (partition, count, min, max) of the local positions of every
+    non-empty partition. Raises RuntimeError unless each partition's
+    positions are exactly 0..count−1 (assign_doc_ids argues why these
+    three numbers prove it)."""
+    offsets: dict[int, int] = {}
+    total = 0
+    for pid, n, lo, hi in sorted(parts):
+        if not (n < 1 << LOCAL_BITS and lo == 0 and hi == n - 1):
+            raise RuntimeError(
+                f"doc-id enumeration invariant violated in partition {pid}: "
+                f"{n} rows at local positions [{lo}, {hi}], expected [0, {n - 1}] "
+                f"— a partition likely reached 2^{LOCAL_BITS} rows or a cache "
+                "recompute changed the layout"
+            )
+        offsets[pid] = total
+        total += n
+    return offsets, total
+
+
+def check_unique_keys(n_docs: int, n_keys: int) -> None:
+    """Raise ValueError when an index over assign_doc_ids' corpus has
+    more docs than the key table has rows: a (repo, path, commit) key
+    names several corpus rows, and the id join fanned them out."""
+    if n_docs != n_keys:
+        raise ValueError(
+            f"duplicate corpus keys: {n_keys} (repo, path, commit) rows "
+            f"became {n_docs} docs — each key must name one corpus row"
+        )
 
 
 def term_frequencies(docs, text_col: str = "content"):
@@ -297,17 +323,26 @@ def with_doc_lens(meta, tf):
     )
 
 
-def doc_len_stats(docs) -> tuple[int, float]:
-    """(n_docs, avgdl) of a docs table (with_doc_lens) from one
-    aggregate: a count and the exact doc_len total, divided on the
-    driver and correctly rounded."""
+def doc_len_stats(docs, by, aggs) -> tuple[int, float, list]:
+    """(n_docs, avgdl, rows) of a docs table (with_doc_lens) from one
+    aggregate grouped by the columns `by` (none: one group): per group
+    its row count `n`, its exact doc_len total `len` and the extra
+    aggregates `aggs`, which are the collected rows. The driver sums
+    the groups exactly and divides, correctly rounded, so n_docs and
+    avgdl do not depend on the grouping."""
     from fractions import Fraction
 
     from pyspark.sql import functions as F
 
-    n_docs, total = docs.agg(F.count("*"), exact_sum(docs, "doc_len")).first()
-    avgdl = float(Fraction(total) / n_docs) if n_docs else 0.0
-    return n_docs, avgdl
+    rows = (
+        docs.groupBy(*by)
+        .agg(F.count("*").alias("n"), exact_sum(docs, "doc_len").alias("len"), *aggs)
+        .collect()
+    )
+    n_docs = sum(r["n"] for r in rows)
+    total = sum(Fraction(r["len"]) for r in rows if r["n"])
+    avgdl = float(total / n_docs) if n_docs else 0.0
+    return n_docs, avgdl, rows
 
 
 def assemble_index(docs, tf, params: BM25Params) -> InvertedIndex:
@@ -316,7 +351,7 @@ def assemble_index(docs, tf, params: BM25Params) -> InvertedIndex:
     epsilon-floored idf from tf. Every in-memory builder ends here, so
     no statistic depends on the partition layout or on how the tables
     were assembled."""
-    n_docs, avgdl = doc_len_stats(docs)
+    n_docs, avgdl, _ = doc_len_stats(docs, (), ())
     idf, avg_idf = idf_table(doc_freqs(tf), n_docs, params.epsilon)
     return InvertedIndex(
         docs=docs,
@@ -478,10 +513,16 @@ def build_index(corpus, params: BM25Params | None = None) -> InvertedIndex:
     (repo, path, commit, lang, content): assigns the canonical doc_id,
     then delegates to a cached build_index_from. The compressed
     block-max postings layer is added by operators/postings.py on top
-    of this."""
-    ids, keys = with_doc_ids(corpus)
+    of this. Raises ValueError when two corpus rows share a key."""
+    ids, keys, n_keys = assign_doc_ids(corpus)
     idx = build_index_from(ids, text_col="content", params=params)
     # the n_docs aggregate has filled the docs and tf caches, and idf
     # reads tf: nothing reads the key table again
     keys.unpersist()
+    try:
+        check_unique_keys(idx.n_docs, n_keys)
+    except ValueError:
+        for df in (idx.tf, idx.docs, idx.idf):
+            df.unpersist()
+        raise
     return idx

@@ -9,16 +9,22 @@ records (stage, group, input_fingerprint, rows, wall_ms) in
 _manifest.json. A re-run with the same fingerprint skips completed
 units; a changed fingerprint invalidates everything downstream.
 
-A build is a prelude and one wave. The prelude assigns doc ids and
-fingerprints every postings group from the tokenize-free id projection;
-when every unit is a manifest hit the build ends there. Otherwise every
-unit that misses — docs, tf, idf (+ stats.json), shard_meta and each
-postings group — runs as its own Spark job chain, all of them
-concurrently, with no Spark action between the prelude and the wave.
-n_docs and avgdl come from one build.doc_len_stats aggregate inside the
-wave and the idf table from build.idf_table, the two steps of every
-in-memory build's assemble_index; each postings group encodes only its
-own shards, and the manifest's row counts are read from the parquet
+A build is a prelude and one wave. The prelude fingerprints the corpus
+(one scan; an unchanged corpus of a certified build ends there) and
+assigns doc ids (build.assign_doc_ids: a range sample and one
+count-per-partition job over the keys). Then every side unit that
+misses — docs, tf, idf (+ stats.json), shard_meta — starts as its own
+Spark job chain, all of them concurrently, while the calling thread
+runs the wave's one docs aggregate: build.doc_len_stats grouped by
+postings group, which returns n_docs and avgdl (idf_table's inputs,
+the two steps of every in-memory build's assemble_index), each group's
+content fingerprint, and the docs count that catches duplicate corpus
+keys. When it returns, the postings groups that miss are chosen and
+start too; each encodes only its own shards. When every side unit is
+a hit but the build was not certified (an only_groups build, or an
+older manifest), the group fingerprints come from the same formula over
+the tokenize-free id projection instead, so finding nothing to do runs
+no tf kernel. The manifest's row counts are read from the parquet
 footers each unit just wrote.
 
 Every table goes through plans/store.py: it is committed by the
@@ -52,7 +58,7 @@ import os
 import threading
 import time
 import uuid
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 
 from .store import committed, read_json, read_table, write_json, write_table
 
@@ -159,11 +165,12 @@ def build_persisted_index(
     from ..functions.codec import DEFAULT_BLOCK_SPAN
     from ..operators.build import (
         BM25Params,
+        assign_doc_ids,
+        check_unique_keys,
         doc_freqs,
         doc_len_stats,
         idf_table,
         index_tables,
-        with_doc_ids,
     )
     from ..operators.postings import posting_blocks, shard_meta_table
 
@@ -204,13 +211,8 @@ def build_persisted_index(
     ):
         return man
 
-    # Prelude. Identity (doc_id + content_sha256) is computable WITHOUT
-    # tokenizing — and group fingerprints depend on nothing else — so
-    # resolve ids first and probe the manifest before planning the
-    # index: an unchanged corpus (every unit a hit) must not pay the
-    # tokenize+tf build just to discover there is nothing to do. This is
-    # the cmd_search query path's per-invocation resume check.
-    keys = None
+    # Prelude: doc ids, which need no tokenizing.
+    keys = n_keys = None
     if pre_identified:
         ids_df = corpus
         if "content_sha256" not in ids_df.columns:
@@ -218,7 +220,7 @@ def build_persisted_index(
                 "content_sha256", F.sha2(F.col(text_col), 256)
             )
     else:
-        ids_df, keys = with_doc_ids(corpus)
+        ids_df, keys, n_keys = assign_doc_ids(corpus)
     tf = docs = None
     try:
         # Each postings group is keyed on its OWN content fingerprint,
@@ -230,42 +232,45 @@ def build_persisted_index(
         group_of = F.pmod(
             (F.col("doc_id") / F.lit(docs_per_shard)).cast("long"), F.lit(n_groups)
         )
-        gfp = {g: f"n=0;h=0;{layout}" for g in range(n_groups)}
-        for r in (
-            ids_df.select(group_of.alias("g"), "doc_id", "content_sha256")
-            .groupBy("g")
-            .agg(
-                F.count("*").alias("n"),
-                F.expr("bit_xor(xxhash64(doc_id, content_sha256))").alias("h"),
-            )
-            .collect()
-        ):
-            gfp[int(r["g"])] = f"n={r['n']};h={r['h']};{layout}"
-
+        by = (group_of.alias("g"),)
+        group_hash = (F.expr("bit_xor(xxhash64(doc_id, content_sha256))").alias("h"),)
         group_ids = list(only_groups) if only_groups is not None else list(range(n_groups))
+
+        def group_fingerprints(rows) -> dict[str, str]:
+            # rows: per group g, its doc count n and content hash h
+            gfp = {g: f"n=0;h=0;{layout}" for g in range(n_groups)}
+            for r in rows:
+                gfp[int(r["g"])] = f"n={r['n']};h={r['h']};{layout}"
+            return {f"postings/group={g}": gfp[g] for g in group_ids}
+
         fingerprints = {u: probe_fp for u in side_units}
-        fingerprints.update({f"postings/group={g}": gfp[g] for g in group_ids})
-        missing = [u for u, fpr in fingerprints.items() if not have(u, fpr)]
-        if not missing:
-            if only_groups is None:
-                # upgrade older manifests: certify the completed build so
-                # the next invocation takes the one-scan fast path
-                man.mark("resume_probe", probe_fp, run_id)
-            return man
+        missing = [u for u in side_units if not have(u, probe_fp)]
+        groups_from_stats = bool(missing)
+        if not groups_from_stats:
+            # Every side table is current but the build is not certified
+            # (after an only_groups build, or an older manifest):
+            # fingerprint the groups from the tokenize-free id
+            # projection, so finding nothing to do runs no tf kernel.
+            fingerprints.update(
+                group_fingerprints(
+                    ids_df.groupBy(*by).agg(F.count("*").alias("n"), *group_hash).collect()
+                )
+            )
+            missing = [u for u, fpr in fingerprints.items() if not have(u, fpr)]
+            if not missing:
+                if only_groups is None:
+                    # certify the completed build so the next invocation
+                    # takes the one-scan fast path
+                    man.mark("resume_probe", probe_fp, run_id)
+                return man
 
         # The wave. tf and docs are cached and planned, not run: the
         # first unit to read them runs the tf kernel once, and the
         # others wait for its cached blocks.
         tf, docs = index_tables(ids_df, text_col=text_col)
-        stats_lock = threading.Lock()
-        stats = []
-
-        def run_stats() -> None:
-            # n_docs and avgdl: one aggregate per build, run by whichever
-            # unit asks first; the others wait for it
-            with stats_lock:
-                if not stats:
-                    stats.append(doc_len_stats(docs))
+        # n_docs, avgdl and the group fingerprints: one docs aggregate,
+        # run by this thread once the side units are submitted
+        stats_f = Future()
 
         def write_docs():
             return {"rows": write_table(docs, path("docs"))}
@@ -274,7 +279,8 @@ def build_persisted_index(
             return {"rows": write_table(tf, path("tf"))}
 
         def write_idf():
-            n_docs, avgdl = stats[0]  # run_unit ran run_stats first
+            stats = stats_f.result()
+            n_docs, avgdl, _ = stats
             idf, avg_idf = idf_table(doc_freqs(tf), n_docs, params.epsilon)
             n_rows = write_table(idf, path("idf"))
             write_json(
@@ -328,7 +334,7 @@ def build_persisted_index(
                 # see materialized caches (no cache-materializing jobs of
                 # their own), and the idf unit reads n_docs and avgdl.
                 # tf reads only tf and starts at once.
-                run_stats()
+                stats_f.result()
             if unit.startswith("postings/group="):
                 metrics = write_group(int(unit.split("=")[1]))
             else:
@@ -343,9 +349,29 @@ def build_persisted_index(
         # across executors; sequential submission left executors idle
         # between small jobs, a measured ~2x overhead at 8 executors).
         # Each unit runs under its own copy of the caller's local
-        # properties, so its jobs carry the caller's job group.
-        with ThreadPoolExecutor(max_workers=len(missing)) as pool:
-            futs = [pool.submit(_in_caller_context(spark, run_unit), u) for u in missing]
+        # properties, so its jobs carry the caller's job group. The
+        # side units start at once; the postings groups are chosen when
+        # the docs aggregate has returned their fingerprints, unless the
+        # id projection gave them above.
+        with ThreadPoolExecutor(max_workers=len(side_units) + len(group_ids)) as pool:
+
+            def submit(units):
+                return [pool.submit(_in_caller_context(spark, run_unit), u) for u in units]
+
+            futs = submit(missing)
+            try:
+                stats = doc_len_stats(docs, by, group_hash)
+                if n_keys is not None:
+                    check_unique_keys(stats[0], n_keys)
+            except BaseException as e:
+                stats_f.set_exception(e)
+                raise
+            stats_f.set_result(stats)
+            if groups_from_stats:
+                fingerprints.update(group_fingerprints(stats[2]))
+                futs += submit(
+                    u for u in fingerprints if u not in side_units and not have(u, fingerprints[u])
+                )
             for f in futs:
                 f.result()
     finally:

@@ -243,6 +243,27 @@ def test_doc_id_enumeration_dense_deterministic_no_window(spark):
     keys.unpersist()
 
 
+def test_doc_id_offsets_check():
+    """The driver-side enumeration check (no Spark): good per-partition
+    (partition, count, min, max) rows give prefix offsets and the total
+    in partition order; a gap, a repeat, a counter not starting at 0 and
+    a partition of 2^33 rows each raise."""
+    from local_search_engine_spark.operators.build import LOCAL_BITS, doc_id_offsets
+
+    assert doc_id_offsets([(2, 4, 0, 3), (0, 3, 0, 2), (5, 1, 0, 0)]) == ({0: 0, 2: 3, 5: 7}, 8)
+    assert doc_id_offsets([]) == ({}, 0)
+    big = 1 << LOCAL_BITS
+    assert doc_id_offsets([(0, big - 1, 0, big - 2)]) == ({0: 0}, big - 1)
+    for bad in (
+        (1, 3, 0, 3),  # gap: positions 0, 1, 3
+        (1, 3, 0, 1),  # repeat: positions 0, 1, 1
+        (1, 3, 1, 2),  # min != 0
+        (1, big, 0, big - 1),  # 2^33 rows: positions wrap
+    ):
+        with pytest.raises(RuntimeError, match="enumeration invariant violated in partition 1"):
+            doc_id_offsets([(0, 2, 0, 1), bad])
+
+
 def test_term_frequencies_kernel_matches_oracle(spark):
     """The index-time tf kernel emits, per doc and in ascending term
     order, exactly sorted(Counter(tokenize_py(text)).items()); docs with

@@ -161,14 +161,17 @@ def test_job_counts(spark, indexes):
 
 
 def test_load_and_refresh_job_budget(spark, tmp_path):
-    """load_index reads stored schemas, so it runs no job; rebuilding
-    after a one-file content edit stays within 38 jobs (the id prelude
-    plus one concurrent wave) and re-encodes exactly one postings group."""
+    """Doc-id assignment runs at most 5 jobs; load_index reads stored
+    schemas, so it runs no job; an identical rerun takes the one-scan
+    fast path (at most 2 jobs); rebuilding after a one-file content
+    edit stays within 28 jobs (the id prelude plus one concurrent wave)
+    and re-encodes exactly one postings group."""
     import json
     import os
 
     from pyspark.sql import functions as F
 
+    from local_search_engine_spark.operators.build import with_doc_ids
     from local_search_engine_spark.plans.checkpoint import build_persisted_index, load_index
     from local_search_engine_spark.sources.corpus import gen_corpus_spark
 
@@ -177,11 +180,18 @@ def test_load_and_refresh_job_budget(spark, tmp_path):
             return {u: v["run_id"] for u, v in json.load(f)["units"].items()}
 
     corpus = gen_corpus_spark(spark, 100, partitions=4)
+    (_, keys), jobs = _jobs_during(spark, lambda: with_doc_ids(corpus))
+    keys.unpersist()
+    assert jobs <= 5, jobs
     d = str(tmp_path / "idx")
     layout = dict(docs_per_shard=16, block_span=8, n_buckets=8, n_groups=4)
     build_persisted_index(spark, corpus, d, **layout)
     _, jobs = _jobs_during(spark, lambda: load_index(spark, d))
     assert jobs == 0, jobs
+    before = units()
+    _, jobs = _jobs_during(spark, lambda: build_persisted_index(spark, corpus, d, **layout))
+    assert jobs <= 2, jobs
+    assert units() == before
 
     path = corpus.first()["path"]
     edited = corpus.withColumn(
@@ -189,9 +199,8 @@ def test_load_and_refresh_job_budget(spark, tmp_path):
         F.when(F.col("path") == path, F.concat(F.col("content"), F.lit(" zzzedit")))
         .otherwise(F.col("content")),
     )
-    before = units()
     _, jobs = _jobs_during(spark, lambda: build_persisted_index(spark, edited, d, **layout))
     after = units()
-    assert jobs <= 38, jobs
+    assert jobs <= 28, jobs
     regrouped = [u for u in after if u.startswith("postings/") and after[u] != before[u]]
     assert len(regrouped) == 1, regrouped

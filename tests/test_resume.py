@@ -316,3 +316,74 @@ def test_docs_table_bytes_do_not_follow_the_join_strategy(spark, tmp_path):
     finally:
         spark.conf.set(key, saved)
     assert parts[0] and parts[0] == parts[1], [[(p, len(b)) for p, b in ps] for ps in parts]
+
+
+def _plans_during(spark, fn):
+    """Run fn() under a fresh job group; the physical plan of every SQL
+    execution that ran one of its jobs."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"resume-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if any(e.jobs().contains(j) for j in jobs)
+    ]
+
+
+def test_uncertified_complete_build_reruns_without_the_tf_kernel(spark, tmp_path):
+    """A build of every group through only_groups completes the index
+    but never marks resume_probe. The full rerun finds every unit
+    current from the tokenize-free id projection: it marks resume_probe
+    and nothing else, and none of its jobs runs the tf kernel (a
+    MapInPandas plan; the corpus is local rows, not the generator's
+    own MapInPandas)."""
+    from local_search_engine_spark.sources.corpus import CORPUS_SCHEMA
+
+    corpus = spark.createDataFrame(gen_corpus_spark(spark, N_DOCS).collect(), CORPUS_SCHEMA)
+    d = str(tmp_path / "idx")
+    build_persisted_index(spark, corpus, d, only_groups=list(range(KW["n_groups"])), **KW)
+    before = _units(d)
+    assert "resume_probe" not in before, sorted(before)
+
+    plans = _plans_during(spark, lambda: build_persisted_index(spark, corpus, d, **KW))
+    after = _units(d)
+    assert sorted(u for u in after if after[u] != before.get(u)) == ["resume_probe"]
+    assert plans and not [p for p in plans if "MapInPandas" in p], plans
+
+
+def test_duplicate_corpus_keys_raise(spark, tmp_path):
+    """Two corpus rows under one (repo, path, commit) key would share
+    their doc ids and fan out in the id join; both builders raise
+    instead of indexing them, and release their caches."""
+    import pytest
+
+    from local_search_engine_spark.operators.build import build_index
+    from local_search_engine_spark.sources.corpus import CORPUS_SCHEMA
+
+    corpus = spark.createDataFrame(
+        [
+            ("r", "a.py", "c1", "python", "def alpha"),
+            ("r", "a.py", "c1", "python", "def beta"),
+            ("r", "b.py", "c1", "python", "def gamma"),
+        ],
+        CORPUS_SCHEMA,
+    )
+    jsc = spark.sparkContext._jsc
+    persisted = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(ValueError, match="duplicate corpus keys: 3 .* 5 docs"):
+        build_index(corpus)
+    d = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match="duplicate corpus keys: 3 .* 5 docs"):
+        build_persisted_index(spark, corpus, d, **KW)
+    assert set(jsc.getPersistentRDDs().keySet()) - persisted == set()
+    assert "resume_probe" not in _units(d)
