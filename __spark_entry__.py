@@ -2487,7 +2487,6 @@ def q_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs_per_shard=DOCS_PER_SHARD,
         block_span=BLOCK_SPAN,
         n_buckets=8,
-        pre_identified=True,
         text_col="text",
     )
     idx, postings, shard_meta, _stats = load_index(spark, idx_dir)

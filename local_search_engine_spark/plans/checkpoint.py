@@ -89,34 +89,27 @@ class Manifest:
                 f.write(json.dumps({"run_id": run_id, "unit": unit, **metrics}) + "\n")
 
 
-def corpus_fingerprint(corpus, params, text_col: str | None = None):
-    """Cheap-but-honest input lineage: row count + order-independent XOR
-    of per-row key hashes + build params. One extra scan at build start.
-    Keys on (repo, path, commit) for input_hint corpora; for
-    pre-identified tables the unique doc_id IS the key.
+def corpus_fingerprint(corpus, text_col: str = "content") -> str:
+    """Cheap-but-honest input lineage in one scan: the row count, the
+    order-independent XOR of per-row key hashes, and the same XOR over
+    (key, text). The key is (repo, path, commit) when the corpus has a
+    repo column, else its unique doc_id.
 
-    With text_col set, returns (key_fp, content_fp) from the SAME single
-    scan: content_fp additionally XORs the row's content into the hash.
     Because doc-id assignment is a deterministic function of the keys
     and every stage/group fingerprint is a deterministic function of
-    (ids, content, layout params), an unchanged content_fp certifies a
-    completed build outright — the whole-resume fast path."""
+    (ids, content, layout params), an unchanged fingerprint certifies a
+    completed build outright — the whole-resume fast path. The trigram
+    index's staleness sidecar (scripts/code_search.py) records the same
+    value."""
     from pyspark.sql import functions as F
 
-    key = (
-        "xxhash64(repo, path, commit)"
-        if "repo" in corpus.columns
-        else "xxhash64(doc_id)"
-    )
-    aggs = [F.count("*").alias("n"), F.expr(f"bit_xor({key})").alias("h")]
-    if text_col is not None:
-        ckey = key[:-1] + f", {text_col})"
-        aggs.append(F.expr(f"bit_xor({ckey})").alias("ch"))
-    row = corpus.agg(*aggs).first()
-    fp = f"n={row['n']};h={row['h']};k1={params.k1};b={params.b};eps={params.epsilon}"
-    if text_col is None:
-        return fp
-    return fp, f"{fp};ch={row['ch']}"
+    key = "repo, path, commit" if "repo" in corpus.columns else "doc_id"
+    row = corpus.agg(
+        F.count("*").alias("n"),
+        F.expr(f"bit_xor(xxhash64({key}))").alias("h"),
+        F.expr(f"bit_xor(xxhash64({key}, {text_col}))").alias("ch"),
+    ).first()
+    return f"n={row['n']};h={row['h']};ch={row['ch']}"
 
 
 # Part of every layout fingerprint: bump it whenever what a build writes
@@ -145,7 +138,6 @@ def build_persisted_index(
     n_buckets: int = 64,
     n_groups: int = 8,
     only_groups: list[int] | None = None,
-    pre_identified: bool = False,
     text_col: str = "content",
 ):
     """Build (or resume) the full compressed index at index_dir.
@@ -154,9 +146,9 @@ def build_persisted_index(
     — used by the resume test to simulate a killed build; production use
     is per-group retry isolation.
 
-    pre_identified: the corpus already carries a unique doc_id bigint +
-    text_col (e.g. the testdata `documents` table) — skip the canonical
-    (repo, path, commit) id assignment and index it as-is.
+    A corpus without a repo column (e.g. the testdata `documents` table)
+    must carry a unique doc_id bigint and text_col, and is indexed by
+    that doc_id; any other gets the canonical (repo, path, commit) ids.
 
     Returns the manifest (with per-unit skip/build lineage).
     """
@@ -179,16 +171,19 @@ def build_persisted_index(
     os.makedirs(index_dir, exist_ok=True)
     man = Manifest(index_dir)
     run_id = uuid.uuid4().hex[:12]
-    _, content_fp = corpus_fingerprint(corpus, params, text_col=text_col)
     layout = (
         f"dps={docs_per_shard};span={span};nb={n_buckets};ng={n_groups};"
         f"format={INDEX_FORMAT}"
     )
     # the side tables — docs / tf / idf / stats / shard_meta — are keyed
-    # on the global content fingerprint plus the layout: idf and stats
-    # change with every append, a content-only edit under unchanged keys
-    # changes tf/idf/doc_len, and shard_meta and stats follow the layout
-    probe_fp = f"{content_fp};{layout}"
+    # on the global corpus fingerprint plus the params and layout: idf
+    # and stats change with every append, a content-only edit under
+    # unchanged keys changes tf/idf/doc_len, and shard_meta and stats
+    # follow the layout
+    probe_fp = (
+        f"{corpus_fingerprint(corpus, text_col)};"
+        f"k1={params.k1};b={params.b};eps={params.epsilon};{layout}"
+    )
     side_units = ("docs", "tf", "idf", "shard_meta")
 
     def path(unit: str) -> str:
@@ -211,9 +206,10 @@ def build_persisted_index(
     ):
         return man
 
-    # Prelude: doc ids, which need no tokenizing.
+    # Prelude: doc ids, which need no tokenizing. A table without a repo
+    # column carries its own (corpus_fingerprint keys it the same way).
     keys = n_keys = None
-    if pre_identified:
+    if "repo" not in corpus.columns:
         ids_df = corpus
         if "content_sha256" not in ids_df.columns:
             ids_df = ids_df.withColumn(

@@ -10,22 +10,36 @@ engine's operators.
   python scripts/code_search.py search  --corpus DIR --index ROOT --query '"merge shard" fast -test'
   python scripts/code_search.py phrase  --corpus DIR --index ROOT --query 'merge batch' [--near 4]
   python scripts/code_search.py bool    --corpus DIR --index ROOT --query '"merge batch"~3 AND lang:python AND merg*^2 AND /shard_[0-9]/ AND NOT test'
+  python scripts/code_search.py like    --corpus DIR --index ROOT --file 'org0/repo1:src/mod5/file_56.py'
 
-`index` persists the trigram inverted file plus a corpus fingerprint;
-`grep` uses the index when given (bucket-pruned candidate AND + exact
-verify) and falls back to the full verify scan without it — or when the
-fingerprint shows the index is STALE relative to the corpus (docs added
-after indexing would otherwise be silently missing from candidate sets;
-the no-silent-truncation contract requires refusing the stale prune).
+`index` persists the trigram inverted file plus the corpus fingerprint
+(plans/checkpoint.corpus_fingerprint); `grep` uses the index when given
+(bucket-pruned candidate AND + exact verify) and falls back to the full
+verify scan without it — or when the fingerprint shows the index is
+STALE relative to the corpus (docs added after indexing would otherwise
+be silently missing from candidate sets; the no-silent-truncation
+contract requires refusing the stale prune).
+
+`search`, `phrase --index`, `bool` and `like` share one document-id
+contract: the persisted BM25 index under ROOT/bm25 (built on first use;
+build_persisted_index is manifest-keyed, so an unchanged corpus is a
+one-scan no-op resume). Its doc_id is the dense rank of the unique
+(repo, path, commit) key, and its docs table carries that key. File
+names come from the docs table; a hit reaches its text by joining its
+key against the corpus, and the corpus is never hashed for it.
+
+The other persisted indexes use those ids. `search` alone builds ROOT/ann,
+the SRP-LSH ANN index over stub embeddings (rebuilt only when its vectors
+table is not committed). ROOT/pos, the positional index behind quoted
+phrases, is built in one place (_ensure_phrase_filter). It records the
+fingerprint of the BM25 build it was built from, and it is rebuilt
+whenever that differs from the BM25 build the command has just checked,
+so checking it costs no scan.
 
 `search` is the composed flagship query path: persisted block-max WAND
-(sparse) + persisted SRP-LSH ANN over stub embeddings (dense) fused
-with RRF, then best-snippet extraction on the fused top-k — one
-command, all persisted-index pruning paths. On first use it builds
-ROOT/bm25 and ROOT/ann from the corpus (build_persisted_index is
-manifest-keyed, so re-running after an unchanged corpus is a no-op
-resume; the ANN index is rebuilt only if its vectors table is not
-committed).
+(sparse) + persisted SRP-LSH ANN (dense) fused with RRF, then
+best-snippet extraction on the fused top-k — one command, all
+persisted-index pruning paths.
 
 On a real cluster: the same commands via spark-submit --py-files
 engine.zip.
@@ -46,7 +60,6 @@ from local_search_engine_spark.plans.store import (
     read_json,
     read_table,
     write_json,
-    write_table,
 )
 from local_search_engine_spark.session import get_spark
 from local_search_engine_spark.sources.corpus import read_corpus
@@ -54,7 +67,11 @@ from local_search_engine_spark.sources.corpus import read_corpus
 # underscore prefix: Spark's parquet file listing ignores _-prefixed
 # files (same convention as _SUCCESS), so the sidecar can live inside a
 # partitioned index directory without entering its file listing
-FINGERPRINT_FILE = "_corpus_fingerprint.json"
+FINGERPRINT_FILE = "_fingerprint.json"
+# the corpus key the BM25 doc ids rank
+KEY = ["repo", "path", "commit"]
+POS_BUCKETS = 16
+FUSED_SCHEMA = "fused_rank int, id long, rank_d int, rank_s int, rrf_score double"
 
 
 def _with_file(corpus):
@@ -63,24 +80,24 @@ def _with_file(corpus):
     return corpus.withColumn("file", F.concat_ws(":", F.col("repo"), F.col("path")))
 
 
-def _corpus_fingerprint(docs) -> dict:
-    """Order-independent corpus identity: row count + bit_xor of
-    xxhash64(file, md5(content)) — one cheap agg job, no shuffle of
-    content."""
-    from pyspark.sql import functions as F
-
-    r = docs.agg(
-        F.count("*").alias("n"),
-        F.expr("bit_xor(xxhash64(file, md5(content)))").alias("h"),
-    ).first()
-    return {"n": int(r["n"]), "h": int(r["h"] or 0)}
+def _is_fresh(index_dir: str, fingerprint: str) -> bool:
+    """The committed table at index_dir records this fingerprint."""
+    return committed(index_dir) and read_json(
+        os.path.join(index_dir, FINGERPRINT_FILE), None
+    ) == {"fingerprint": fingerprint}
 
 
-def _write_fingerprint(docs, out_dir: str) -> dict:
+def _record_fingerprint(index_dir: str, fingerprint: str) -> None:
+    write_json(os.path.join(index_dir, FINGERPRINT_FILE), {"fingerprint": fingerprint})
+
+
+def _write_fingerprint(docs, out_dir: str) -> str:
     """Persist the corpus fingerprint next to a trigram index so grep
     can detect staleness."""
-    fp = _corpus_fingerprint(docs)
-    write_json(os.path.join(out_dir, FINGERPRINT_FILE), fp)
+    from local_search_engine_spark.plans.checkpoint import corpus_fingerprint
+
+    fp = corpus_fingerprint(docs)
+    _record_fingerprint(out_dir, fp)
     return fp
 
 
@@ -91,30 +108,45 @@ def _load_fresh_index(spark, index_dir: str, docs):
     so the no-silent-truncation contract requires refusing the prune
     (the caller falls back to the exact full scan). A missing
     fingerprint file counts as stale."""
-    expected = read_json(os.path.join(index_dir, FINGERPRINT_FILE), None)
-    if expected != _corpus_fingerprint(docs):
+    from local_search_engine_spark.plans.checkpoint import corpus_fingerprint
+
+    if not _is_fresh(index_dir, corpus_fingerprint(docs)):
         return None, True
     return read_table(spark, index_dir), False
 
 
-def _ensure_search_indexes(spark, corpus, root: str) -> dict:
-    """Build (or resume) ROOT/bm25 + ROOT/ann from the corpus. Returns
-    {'bm25': dir, 'ann': dir, 'built_ann': bool}."""
-    from local_search_engine_spark.functions.embed import embed_docs
-    from local_search_engine_spark.operators.similarity import persist_srp_index
-    from local_search_engine_spark.plans.checkpoint import build_persisted_index
+def _ensure_bm25(spark, corpus, root: str):
+    """Build (or resume) ROOT/bm25 from the corpus and load it. Returns
+    (load_index's tuple, the build's certified fingerprint)."""
+    from local_search_engine_spark.plans.checkpoint import (
+        build_persisted_index,
+        load_index,
+    )
 
     bm25_dir = os.path.join(root, "bm25")
+    man = build_persisted_index(spark, corpus, bm25_dir, text_col="content")
+    fingerprint = man.data["units"]["resume_probe"]["fingerprint"]
+    return load_index(spark, bm25_dir), fingerprint
+
+
+def _docs_with_ids(corpus, idx):
+    """Corpus rows with the persisted BM25 index's doc_id, joined on the
+    (repo, path, commit) key the ids rank. build_persisted_index raises
+    on a duplicate key, so every corpus row gets exactly one id."""
+    return corpus.join(idx.docs.select("doc_id", *KEY), KEY)
+
+
+def _ensure_ann(corpus, idx, root: str) -> tuple[str, bool]:
+    """Build ROOT/ann over the BM25 ids unless its vectors table is
+    committed. Returns (its directory, whether it was built)."""
+    from local_search_engine_spark.functions.embed import embed_docs
+    from local_search_engine_spark.operators.similarity import persist_srp_index
+
     ann_dir = os.path.join(root, "ann")
-    # manifest-keyed: unchanged corpus => all units are manifest hits
-    build_persisted_index(spark, corpus, bm25_dir, text_col="content")
     # the data decides, not a metadata file: persist_srp_index writes
     # meta.json before it commits the vectors table
-    built_ann = not committed(os.path.join(ann_dir, "vectors"))
-    if built_ann:
-        from local_search_engine_spark.plans.checkpoint import load_index
-
-        idx, _, _, _ = load_index(spark, bm25_dir)
+    built = not committed(os.path.join(ann_dir, "vectors"))
+    if built:
         emb = embed_docs(
             _docs_with_ids(corpus, idx).select("doc_id", "content"),
             "content",
@@ -122,29 +154,15 @@ def _ensure_search_indexes(spark, corpus, root: str) -> dict:
             dim=64,
         )
         persist_srp_index(emb, 64, ann_dir, bits=8, id_col="doc_id")
-    return {"bm25": bm25_dir, "ann": ann_dir, "built_ann": built_ann}
+    return ann_dir, built
 
 
-def _docs_with_ids(corpus, idx):
-    """Corpus rows keyed by the persisted index's doc_id space: the
-    index docs table carries content_sha256, not raw content, so join
-    the text back by content hash (dedup on doc_id — exact-dup contents
-    map to one id). Full-corpus join on slim columns; no broadcast hint
-    (both sides are corpus-sized — AQE picks the strategy)."""
-    from pyspark.sql import functions as F
-
-    return (
-        corpus.withColumn("content_sha256", F.sha2("content", 256))
-        .join(idx.docs.select("doc_id", "content_sha256"), "content_sha256")
-        .dropDuplicates(["doc_id"])
-    )
-
-
-def _ensure_phrase_filter(spark, corpus, idx, dirs):
-    """Positional postings over the SAME doc_id space as the persisted
-    BM25 index (ids join back via content hash), persisted under
-    ROOT/pos, fingerprint-keyed: stale or missing → rebuild. Returns
-    the bound phrase-query object (only `matches` is used here)."""
+def _ensure_phrase_filter(spark, corpus, idx, root: str, fingerprint: str):
+    """Positional postings over the BM25 index's doc ids, persisted under
+    ROOT/pos — the one place that writes it. ROOT/pos is fresh when it
+    records the fingerprint of the BM25 build its ids come from;
+    otherwise it is rebuilt. Returns (the bound phrase-query object,
+    whether it was built)."""
     from local_search_engine_spark.operators.positional import (
         build_positional_postings,
         load_positional_postings,
@@ -152,27 +170,19 @@ def _ensure_phrase_filter(spark, corpus, idx, dirs):
         persist_positional_postings,
     )
 
-    n_buckets = 16
-    pos_dir = os.path.join(os.path.dirname(dirs["bm25"]), "pos")
-    docs_fp = _with_file(corpus)
-    expected = read_json(os.path.join(pos_dir, FINGERPRINT_FILE), None)
-    if expected != _corpus_fingerprint(docs_fp):
+    pos_dir = os.path.join(root, "pos")
+    built = not _is_fresh(pos_dir, fingerprint)
+    if built:
         ids = _docs_with_ids(corpus, idx).select("doc_id", "content")
         persist_positional_postings(
-            build_positional_postings(
-                ids, text_col="content", n_buckets=n_buckets
-            ),
+            build_positional_postings(ids, text_col="content", n_buckets=POS_BUCKETS),
             pos_dir,
-            params={
-                "docs_per_shard": 50_000,
-                "block_span": 2048,
-                "n_buckets": n_buckets,
-            },
         )
-        _write_fingerprint(docs_fp, pos_dir)
-    return make_phrase_topk(
-        load_positional_postings(spark, pos_dir), n_buckets=n_buckets
+        _record_fingerprint(pos_dir, fingerprint)
+    pq = make_phrase_topk(
+        load_positional_postings(spark, pos_dir), n_buckets=POS_BUCKETS
     )
+    return pq, built
 
 
 def cmd_search(spark, corpus, args) -> dict:
@@ -199,10 +209,12 @@ def cmd_search(spark, corpus, args) -> dict:
     )
     from local_search_engine_spark.operators.snippets import best_snippets
     from local_search_engine_spark.operators.wand import make_wand_topk
-    from local_search_engine_spark.plans.checkpoint import load_index
+    from local_search_engine_spark.plans.layout import local_rows
 
-    dirs = _ensure_search_indexes(spark, corpus, args.index)
-    idx, postings, shard_meta, stats = load_index(spark, dirs["bm25"])
+    (idx, postings, shard_meta, stats), fingerprint = _ensure_bm25(
+        spark, corpus, args.index
+    )
+    ann_dir, built_ann = _ensure_ann(corpus, idx, args.index)
     wand = make_wand_topk(
         idx, postings, shard_meta, n_buckets=stats.get("n_buckets")
     )
@@ -224,7 +236,7 @@ def cmd_search(spark, corpus, args) -> dict:
     qv = [float(x) for x in stub_encoder_factory(64)([free_query])[0]]
     # srp_lsh_topk_persisted already emits (rank, id, cosine)
     dense = srp_lsh_topk_persisted(
-        spark, dirs["ann"], qv, fetch_k, probe_hamming=1
+        spark, ann_dir, qv, fetch_k, probe_hamming=1
     ).select("id", "rank")
     fused = rrf_fuse(dense, sparse, topk=fetch_k)
     if excl_toks:
@@ -242,17 +254,18 @@ def cmd_search(spark, corpus, args) -> dict:
             # no quoted branch downstream to re-densify: cut the
             # over-fetched survivor pool at k with dense ranks here
             surv = fused.orderBy("fused_rank").limit(k).collect()
-            fused = spark.createDataFrame(
+            fused = local_rows(
+                spark,
                 [
                     (i + 1, r["id"], r["rank_d"], r["rank_s"], float(r["rrf_score"]))
                     for i, r in enumerate(surv)
                 ],
-                "fused_rank int, id long, rank_d int, rank_s int, rrf_score double",
+                FUSED_SCHEMA,
             )
     if quoted:
         from functools import reduce
 
-        pq = _ensure_phrase_filter(spark, corpus, idx, dirs)
+        pq, _ = _ensure_phrase_filter(spark, corpus, idx, args.index, fingerprint)
         # docs containing EVERY quoted phrase, with the summed phrase tf
         # (one matches() row per phrase per doc; n_ph == len(quoted)
         # keeps only full conjunctions)
@@ -297,24 +310,16 @@ def cmd_search(spark, corpus, args) -> dict:
                 (nd + j + 1, r["doc_id"], None, None, 0.0)
                 for j, r in enumerate(extra)
             ]
-        fused = spark.createDataFrame(
-            rows,
-            "fused_rank int, id long, rank_d int, rank_s int, rrf_score double",
-        )
-    # fetch metadata + text for the fused TOP-K ONLY: broadcast the
-    # k-row fused side against the index doc table, then broadcast the
-    # k-row result against the corpus scan for the raw text — the
-    # corpus never shuffles for a query, whatever its size
-    hit_meta = idx.docs.select(
-        "doc_id",
-        "content_sha256",
-        F.concat_ws(":", F.col("repo"), F.col("path")).alias("file"),
-    ).join(F.broadcast(fused), F.col("doc_id") == fused["id"])
-    hits = (
-        corpus.withColumn("content_sha256", F.sha2("content", 256))
-        .join(F.broadcast(hit_meta), "content_sha256")
-        .dropDuplicates(["doc_id"])
+        fused = local_rows(spark, rows, FUSED_SCHEMA)
+    # metadata + text for the fused TOP-K ONLY: the k-row fused side
+    # broadcast against the index doc table names each hit's file and
+    # key, and that k-row table broadcast against the corpus scan picks
+    # the raw text by key — the corpus never shuffles for a query,
+    # whatever its size
+    hit_meta = _with_file(idx.docs.select("doc_id", *KEY)).join(
+        F.broadcast(fused), F.col("doc_id") == fused["id"]
     )
+    hits = corpus.select(*KEY, "content").join(F.broadcast(hit_meta), KEY)
     snips = best_snippets(
         hits.select("doc_id", "content"),
         tokenize_py(query),  # positive terms only — exclusions stripped
@@ -322,7 +327,7 @@ def cmd_search(spark, corpus, args) -> dict:
         id_col="doc_id",
     )
     out = (
-        hits.join(snips, "doc_id")
+        hit_meta.join(snips, "doc_id")
         .orderBy("fused_rank")
         .select("fused_rank", "file", "rrf_score", "n_hits", "snippet")
         .collect()
@@ -330,7 +335,7 @@ def cmd_search(spark, corpus, args) -> dict:
     return {
         "cmd": "search",
         "query": args.query,
-        "built_ann": dirs["built_ann"],
+        "built_ann": built_ann,
         "results": [
             {
                 "rank": int(r["fused_rank"]),
@@ -347,50 +352,32 @@ def cmd_search(spark, corpus, args) -> dict:
 def cmd_phrase(spark, corpus, args) -> dict:
     """Exact-phrase (or --near W proximity) top-k over the POSITIONAL
     index (operators/positional.py) — index-only matching, document text
-    is never read at query time. With --index ROOT the positional
-    postings persist under ROOT/pos (bucket-partitioned, scan-time
-    directory pruning) keyed by the corpus fingerprint: a stale or
-    missing index is rebuilt, never silently reused."""
+    is never read at query time. With --index ROOT the postings are
+    ROOT/pos (_ensure_phrase_filter: bucket-partitioned, scan-time
+    directory pruning, rebuilt unless it records the current ROOT/bm25
+    build) over the BM25 doc ids, and file names come from the BM25
+    docs table. Without it they are built in memory over the same
+    key-ranked ids."""
     from pyspark.sql import functions as F
 
-    from local_search_engine_spark.operators.build import with_doc_ids
-    from local_search_engine_spark.operators.positional import (
-        build_positional_postings,
-        load_positional_postings,
-        make_phrase_topk,
-        persist_positional_postings,
-    )
-
-    n_buckets = 16
-    docs = _with_file(corpus)
-    built = False
-    keys = None  # with_doc_ids' key table, unpersisted once the answer is in
     if args.index:
-        pos_dir = os.path.join(args.index, "pos")
-        ids_dir = os.path.join(args.index, "pos_ids")
-        expected = read_json(os.path.join(pos_dir, FINGERPRINT_FILE), None)
-        if expected != _corpus_fingerprint(docs):
-            ids, keys = with_doc_ids(docs)
-            ids = ids.select("doc_id", "file", "content")
-            persist_positional_postings(
-                build_positional_postings(
-                    ids, text_col="content", n_buckets=n_buckets
-                ),
-                pos_dir,
-            )
-            write_table(ids.select("doc_id", "file"), ids_dir)
-            _write_fingerprint(docs, pos_dir)
-            built = True
-        postings = load_positional_postings(spark, pos_dir)
-        idmap = read_table(spark, ids_dir)
+        (idx, _, _, _), fingerprint = _ensure_bm25(spark, corpus, args.index)
+        q, built = _ensure_phrase_filter(spark, corpus, idx, args.index, fingerprint)
+        files = idx.docs
+        keys = None
     else:
-        ids, keys = with_doc_ids(docs)
-        ids = ids.select("doc_id", "file", "content")
-        postings = build_positional_postings(
-            ids, text_col="content", n_buckets=n_buckets
+        from local_search_engine_spark.operators.build import with_doc_ids
+        from local_search_engine_spark.operators.positional import (
+            build_positional_postings,
+            make_phrase_topk,
         )
-        idmap = ids.select("doc_id", "file")
-    q = make_phrase_topk(postings, n_buckets=n_buckets)
+
+        files, keys = with_doc_ids(corpus)
+        postings = build_positional_postings(
+            files.select("doc_id", "content"), text_col="content", n_buckets=POS_BUCKETS
+        )
+        q = make_phrase_topk(postings, n_buckets=POS_BUCKETS)
+        built = False
     if args.near is not None:
         res = q.near(args.query, args.k, window=args.near)
         count_col = "n_anchors"
@@ -399,12 +386,14 @@ def cmd_phrase(spark, corpus, args) -> dict:
         count_col = "phrase_tf"
     # k-row result broadcast against the id map — the map never shuffles
     rows = (
-        idmap.join(F.broadcast(res), "doc_id")
+        _with_file(files.select("doc_id", "repo", "path"))
+        .join(F.broadcast(res), "doc_id")
         .orderBy("rank")
         .select("rank", "file", count_col)
         .collect()
     )
     if keys is not None:
+        # with_doc_ids' key table, unpersisted once the answer is in
         keys.unpersist()
     return {
         "cmd": "phrase",
@@ -424,47 +413,39 @@ def cmd_like(spark, corpus, args) -> dict:
     `--file REPO:PATH` names the source document; its top tf·idf terms
     (from the persisted index — the text is not re-tokenized) become a
     BM25 OR query and the k most similar OTHER files come back, with
-    the derived terms disclosed so the result is explainable."""
+    the derived terms disclosed so the result is explainable.
+
+    The source resolves by key from the BM25 docs table alone: the
+    (repo, path) rows there give its doc_id, and no corpus row is read.
+    A path indexed at several commits is ambiguous and raises a
+    ValueError naming them. Result files come from the docs table too,
+    so documents with identical content keep their own names."""
     from pyspark.sql import functions as F
 
     from local_search_engine_spark.operators.morelike import (
         interesting_terms,
         more_like_this,
     )
-    from local_search_engine_spark.plans.checkpoint import load_index
 
     repo, _, path = args.file.partition(":")
     if not path:
         raise ValueError(f"--file expects REPO:PATH, got {args.file!r}")
-    dirs = _ensure_search_indexes(spark, corpus, args.index)
-    idx, _p, _m, _s = load_index(spark, dirs["bm25"])
-    ids = _docs_with_ids(corpus, idx)
-    # resolve by content hash (the CLI-wide id contract): a file whose
-    # content exactly duplicates another still resolves to the one
-    # doc_id the index kept for that content
+    (idx, _, _, _), _ = _ensure_bm25(spark, corpus, args.index)
     src = (
-        corpus.filter((F.col("repo") == repo) & (F.col("path") == path))
-        .select(F.sha2("content", 256).alias("content_sha256"))
+        idx.docs.filter((F.col("repo") == repo) & (F.col("path") == path))
+        .select("doc_id", "commit")
         .collect()
     )
     if not src:
-        raise ValueError(f"no corpus file {args.file!r}")
-    doc = (
-        idx.docs.filter(F.col("content_sha256") == src[0]["content_sha256"])
-        .select("doc_id")
-        .collect()
-    )
-    if not doc:
-        raise ValueError(f"{args.file!r} is not in the index")
-    doc_id = int(doc[0]["doc_id"])
+        raise ValueError(f"no corpus file {args.file!r} in the index")
+    if len(src) > 1:
+        commits = ", ".join(sorted(r["commit"] for r in src))
+        raise ValueError(f"{args.file!r} is indexed at {len(src)} commits: {commits}")
+    doc_id = int(src[0]["doc_id"])
     terms = interesting_terms(idx, doc_id, max_query_terms=args.terms)
     res = more_like_this(idx, doc_id, args.k, max_query_terms=args.terms)
     rows = (
-        ids.select(
-            "doc_id",
-            F.concat_ws(":", F.col("repo"), F.col("path")).alias("file"),
-            "lang",
-        )
+        _with_file(idx.docs.select("doc_id", "repo", "path", "lang"))
         .join(F.broadcast(res), "doc_id")
         .orderBy("rank")
         .collect()
@@ -498,7 +479,6 @@ def cmd_bool(spark, corpus, args) -> dict:
     from pyspark.sql import functions as F
 
     from local_search_engine_spark.operators import boolquery as bq
-    from local_search_engine_spark.plans.checkpoint import load_index
 
     node = bq.parse_query(args.query)
     raw_syn = getattr(args, "synonyms", None)
@@ -534,14 +514,17 @@ def cmd_bool(spark, corpus, args) -> dict:
     leaves = bq.collect_leaves(node)
     has_phrase = any(isinstance(l, (bq.Phrase, bq.Near)) for l in leaves)
     has_regex = any(isinstance(l, bq.Regex) for l in leaves)
-    dirs = _ensure_search_indexes(spark, corpus, args.index)
-    idx, _postings, _shard_meta, _stats = load_index(spark, dirs["bm25"])
-    pq = _ensure_phrase_filter(spark, corpus, idx, dirs) if has_phrase else None
+    (idx, _, _, _), fingerprint = _ensure_bm25(spark, corpus, args.index)
+    pq = (
+        _ensure_phrase_filter(spark, corpus, idx, args.index, fingerprint)[0]
+        if has_phrase
+        else None
+    )
     rq = None
     if has_regex:
-        # /regex/ leaves read raw content: join the corpus back onto
-        # the index's doc_id space by content hash (the id contract all
-        # CLI paths share), then in-plan trigram pruning + rlike verify
+        # /regex/ leaves read raw content: the corpus joined onto the
+        # index's doc ids by key, then in-plan trigram pruning + rlike
+        # verify
         from local_search_engine_spark.operators.trigram import doc_trigrams
 
         content = _docs_with_ids(corpus, idx).select("doc_id", "content")
@@ -552,11 +535,7 @@ def cmd_bool(spark, corpus, args) -> dict:
     )
     # ≤k result rows broadcast against the doc table — it never shuffles
     rows = (
-        idx.docs.select(
-            "doc_id",
-            F.concat_ws(":", F.col("repo"), F.col("path")).alias("file"),
-            "lang",
-        )
+        _with_file(idx.docs.select("doc_id", "repo", "path", "lang"))
         .join(F.broadcast(res), "doc_id")
         .orderBy("rank")
         .collect()
@@ -682,7 +661,6 @@ def main() -> None:
     ap.add_argument("--query")
     ap.add_argument("--regex", action="store_true")
     ap.add_argument("--symbol")
-    ap.add_argument("--file")
     ap.add_argument("--prefix")
     ap.add_argument("--k", type=int, default=20)
     ap.add_argument("--near", type=int, default=None,
@@ -712,7 +690,7 @@ def main() -> None:
                          "';'-separated groups of ','-separated terms "
                          "(e.g. --synonyms 'fast,quick;tbl,table')")
     ap.add_argument("--file", default=None,
-                    help="like: source document as REPO:PATH")
+                    help="related, like: source document as REPO:PATH")
     ap.add_argument("--terms", type=int, default=25,
                     help="like: max derived query terms (tf-idf top-M)")
     ap.add_argument("--cores", type=int, default=None)

@@ -71,36 +71,36 @@ def test_registry_schemas_are_canon_safe(spark):
     assert not failures, f"driver-canon-unsafe gate outputs: {failures}"
 
 
-PKG_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "local_search_engine_spark",
-)
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG_DIR = os.path.join(REPO_DIR, "local_search_engine_spark")
 
 
-def create_dataframe_sites(pkg_dir=PKG_DIR):
-    """(file, line) of every `createDataFrame(` in the package that is
-    not inside plans/layout.local_rows — the one place driver-built
-    rows may become a DataFrame (an Arrow LocalTableScan; a Python-list
-    createDataFrame plans a Scan ExistingRDD of defaultParallelism
-    Python tasks)."""
+def create_dataframe_sites(repo_dir=REPO_DIR):
+    """(file, line) of every `createDataFrame(` in the package or in
+    scripts/ that is not inside plans/layout.local_rows — the one place
+    driver-built rows may become a DataFrame (an Arrow LocalTableScan; a
+    Python-list createDataFrame plans a Scan ExistingRDD of
+    defaultParallelism Python tasks)."""
     import ast
 
+    local_rows_file = os.path.join("local_search_engine_spark", "plans", "layout.py")
     sites = []
-    for root, _, files in os.walk(pkg_dir):
-        for name in sorted(files):
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(root, name)
-            with open(path) as f:
-                src = f.read()
-            allowed = set()
-            if os.path.relpath(path, pkg_dir) == os.path.join("plans", "layout.py"):
-                for node in ast.walk(ast.parse(src)):
-                    if isinstance(node, ast.FunctionDef) and node.name == "local_rows":
-                        allowed.update(range(node.lineno, node.end_lineno + 1))
-            for no, line in enumerate(src.splitlines(), 1):
-                if "createDataFrame(" in line and no not in allowed:
-                    sites.append((os.path.relpath(path, pkg_dir), no))
+    for top in ("local_search_engine_spark", "scripts"):
+        for root, _, files in os.walk(os.path.join(repo_dir, top)):
+            for name in sorted(files):
+                if not name.endswith(".py"):
+                    continue
+                path = os.path.join(root, name)
+                with open(path) as f:
+                    src = f.read()
+                allowed = set()
+                if os.path.relpath(path, repo_dir) == local_rows_file:
+                    for node in ast.walk(ast.parse(src)):
+                        if isinstance(node, ast.FunctionDef) and node.name == "local_rows":
+                            allowed.update(range(node.lineno, node.end_lineno + 1))
+                for no, line in enumerate(src.splitlines(), 1):
+                    if "createDataFrame(" in line and no not in allowed:
+                        sites.append((os.path.relpath(path, repo_dir), no))
     return sites
 
 
@@ -109,10 +109,15 @@ def test_driver_rows_go_through_local_rows():
 
 
 def test_create_dataframe_lint_is_live(tmp_path):
-    ops = tmp_path / "operators"
-    ops.mkdir()
+    ops = tmp_path / "local_search_engine_spark" / "operators"
+    ops.mkdir(parents=True)
     (ops / "x.py").write_text('def f(spark):\n    return spark.createDataFrame([], "a int")\n')
-    assert create_dataframe_sites(str(tmp_path)) == [(os.path.join("operators", "x.py"), 2)]
+    (tmp_path / "scripts").mkdir()
+    (tmp_path / "scripts" / "y.py").write_text('import x\ndf = spark.createDataFrame(rows, "a int")\n')
+    assert create_dataframe_sites(str(tmp_path)) == [
+        (os.path.join("local_search_engine_spark", "operators", "x.py"), 2),
+        (os.path.join("scripts", "y.py"), 2),
+    ]
 
 
 QUERY_MODULES = tuple(

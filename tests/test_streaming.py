@@ -247,13 +247,11 @@ def test_persisted_build_reencodes_only_deleted_groups(spark, tmp_path):
     kw = dict(docs_per_shard=16, block_span=8, n_buckets=8, n_groups=4)
     corpus = mkdocs(spark, 0, 64)
     d = str(tmp_path / "idx")
-    build_persisted_index(spark, corpus, d, pre_identified=True, text_col="text", **kw)
+    build_persisted_index(spark, corpus, d, text_col="text", **kw)
     run1 = {u: v["run_id"] for u, v in Manifest(d).data["units"].items()}
     # delete one doc from shard 1 (doc 17) -> group 1 only
     survivors = corpus.filter("doc_id <> 17")
-    man2 = build_persisted_index(
-        spark, survivors, d, pre_identified=True, text_col="text", **kw
-    )
+    man2 = build_persisted_index(spark, survivors, d, text_col="text", **kw)
     run2 = {u: v["run_id"] for u, v in man2.data["units"].items()}
     assert run2["postings/group=1"] != run1["postings/group=1"]
     for g in (0, 2, 3):

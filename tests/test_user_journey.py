@@ -7,6 +7,8 @@ lining up across operators)."""
 
 from __future__ import annotations
 
+import pytest
+
 from local_search_engine_spark.operators.query import suggest_terms
 from local_search_engine_spark.operators.snippets import best_snippets
 from local_search_engine_spark.operators.trigram import (
@@ -581,3 +583,126 @@ def test_cli_search_minus_exclusion(spark, tmp_path):
     qf = {r["file"] for r in quoted_only["results"]}
     bf = {r["file"] for r in both["results"]}
     assert bf <= qf or len(bf) == 50  # subset unless both sets hit the k cap
+
+
+@pytest.fixture(scope="module")
+def searched_root(spark, tmp_path_factory):
+    """(corpus, ROOT) after one cold quoted `search`: ROOT/bm25,
+    ROOT/ann and ROOT/pos all exist."""
+    import argparse
+
+    from scripts.code_search import cmd_search
+
+    corpus = gen_corpus_spark(spark, 120, partitions=4).cache()
+    root = str(tmp_path_factory.mktemp("searched") / "root")
+    cmd_search(
+        spark, corpus, argparse.Namespace(query='"self return" merge', index=root, k=5)
+    )
+    yield corpus, root
+    corpus.unpersist()
+
+
+def test_cli_phrase_reuses_the_pos_index_search_built(spark, searched_root, tmp_path):
+    """ROOT/pos has one builder and one id space: `phrase --index` on a
+    root where a quoted `search` built ROOT/pos reuses it and answers
+    exactly as `phrase` on a fresh root does."""
+    import argparse
+
+    from scripts.code_search import cmd_phrase
+
+    corpus, root = searched_root
+    ns = dict(query="self return", k=5, near=None)
+    reused = cmd_phrase(spark, corpus, argparse.Namespace(index=root, **ns))
+    fresh = cmd_phrase(spark, corpus, argparse.Namespace(index=str(tmp_path / "r"), **ns))
+    assert reused["built_index"] is False and fresh["built_index"] is True
+    assert reused["results"] and reused["results"] == fresh["results"]
+
+
+def test_cli_like_names_each_identical_content_file(spark, searched_root):
+    """`like` on a doc whose content several files share verbatim (the
+    corpus's tie docs): the k results are k distinct files, each one of
+    those tie docs, and never the source itself."""
+    import argparse
+
+    from scripts.code_search import cmd_like
+
+    from local_search_engine_spark.sources.corpus import TIE_DOC
+
+    corpus, root = searched_root
+    ties = {
+        r["file"]
+        for r in corpus.selectExpr("concat_ws(':', repo, path) AS file", "content").collect()
+        if r["content"] == TIE_DOC
+    }
+    src = "org0/repo0:src/mod0/file_0.py"
+    assert src in ties and len(ties) > 5
+    out = cmd_like(spark, corpus, argparse.Namespace(file=src, index=root, k=5, terms=25))
+    files = [r["file"] for r in out["results"]]
+    assert len(files) == 5 and len(set(files)) == 5, files
+    assert set(files) <= ties - {src}, files
+
+
+def test_cli_warm_quoted_search_job_budget(spark, searched_root):
+    """A warm quoted `search` with a `-term` over an unchanged corpus
+    runs at most 19 Spark jobs: one fingerprint scan proves the BM25
+    index current, ROOT/pos is checked against that build's
+    fingerprint without a scan, and the hits reach their text by key
+    with no hash of the corpus."""
+    import argparse
+    import uuid
+
+    from scripts.code_search import cmd_search
+
+    corpus, root = searched_root
+    sc = spark.sparkContext
+    group = f"journey-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = cmd_search(
+            spark, corpus, argparse.Namespace(query='"self return" merge -kw3', index=root, k=5)
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out["built_ann"] is False and out["results"]
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 19, jobs
+
+
+def test_cli_like_refuses_a_path_at_several_commits(spark, tmp_path):
+    """`like --file REPO:PATH` resolves from the index docs table; when
+    that path is indexed at several commits it raises and names them
+    instead of picking one."""
+    import argparse
+
+    from scripts.code_search import cmd_like
+
+    corpus = spark.createDataFrame(
+        [
+            ("r0", "a.py", "c1", "python", "merge shard alpha"),
+            ("r0", "a.py", "c2", "python", "merge shard beta"),
+            ("r0", "b.py", "c1", "python", "merge gamma"),
+        ],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    with pytest.raises(ValueError, match="2 commits: c1, c2"):
+        cmd_like(
+            spark, corpus,
+            argparse.Namespace(file="r0:a.py", index=str(tmp_path / "root"), k=5, terms=5),
+        )
+
+
+def test_cli_parser_builds():
+    """The command line parses: every option is declared once (a second
+    `--file` made argparse raise before any command ran)."""
+    import os
+    import subprocess
+    import sys
+
+    script = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts", "code_search.py"
+    )
+    out = subprocess.run(
+        [sys.executable, script, "--help"], capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    assert "--file" in out.stdout
